@@ -11,19 +11,26 @@ only missing stages/groups — the north rule's per-partition resumability):
    ``PlanetSearchProfile.java:967-975``).
 2. **doc_store + corpus stats** — hydration columns + precomputed
    function-score prior; N/avgdl.
-3a. **raw positions** (optional, phrase paths only) — analyze (native JVM
-   column expressions) -> posexplode -> bucket repartition -> write. A pure
-   map + one shuffle; no aggregation, no collect_list, no Python. The hot
+3a. **raw positions** (phrase paths; also the encode source of positional
+   builds) — analyze (native JVM column expressions) -> posexplode ->
+   in-task sort by (bucket, field, term, doc_id, pos) -> bucket-partitioned
+   write. A pure map; no aggregation, no collect_list, no Python. The hot
    scoring path never reads this table.
-3b. **tf partials** — count-only groupBy (map-side partial aggregation;
-   the shuffle carries ints only), bucket-partitioned parquet. Materializing
-   these partials is what makes every later stage partition-prunable and
-   resumable.
-4. **term_dict** — df/cf + WAND term upper bound, from stage 3's output.
-5. **block encode** — per bucket-group jobs (G independent jobs, each with
-   its own marker): join df, salt hot terms (nsalt scales with df — explicit
-   stopword-skew handling at 10^12-turn scale), groupBy(bucket, term, salt)
-   -> applyInPandas numpy varbyte encoder. dl is stored inside the block
+3b. **tf partials** (no-positions builds only) — count-only groupBy
+   (map-side partial aggregation; the shuffle carries ints only),
+   bucket-partitioned parquet sorted by (field, term, doc_id) within each
+   file. Materializing these partials is what makes every later stage
+   partition-prunable and resumable.
+4+5. **term_dict + block encode** — per bucket-group jobs (G independent
+   jobs, each ONE mapInArrow with one task per bucket and its own marker).
+   A task k-way merges its bucket's sorted source files in bounded batches
+   and encodes chunks of at most ``_CHUNK_ROWS`` postings cut at term
+   boundaries, writing postings and term_dict rows itself; a term bigger
+   than a chunk is folded once for its df, then re-read alone and encoded
+   a salt group at a time. Salt = posting rank // salt_target within the
+   term's doc_id order — explicit hot-term skew handling at 10^12-turn
+   scale: no block group outgrows salt_target, and task memory is bounded
+   by a constant, not by bucket size. dl is stored inside the block
    (``dls_bin``) so query-time scoring needs NO join against doc stats.
 6. **metrics + lineage** tables (``IndexingStats.java:6-23`` analogue), then
    the atomic ``live.json`` pointer — the blue/green alias swap analogue
@@ -37,8 +44,8 @@ from __future__ import annotations
 
 import contextlib
 import fcntl
+import itertools
 import json
-import math
 import os
 import shutil
 import threading
@@ -53,48 +60,15 @@ from .. import analysis as A
 from .. import scoring as S
 from . import codec
 
-POSTINGS_SCHEMA = (
-    "bucket int, field int, term string, block_id long, n_docs int, "
-    "first_doc long, last_doc long, max_score double, "
-    "max_tf double, min_dl double, min_tf double, max_dl double, "
-    "docs_bin binary, tfs_bin binary, dls_bin binary"
-)
-
-# Round-7: the encoder emits POSTINGS_SCHEMA directly (term string rides
-# the merge shuffle). The round-1 int64 ``term_id`` indirection saved sort
-# bytes but required a second 5M-row join to re-attach the string on block
-# rows — and that join re-shuffled every encoded block PAYLOAD, which
-# measured ~2x the cost of the wider string sort key it avoided.
-
-# Per-bucket cap for the DIRECT encoder when /proc/meminfo is
-# unavailable. The in-task peak is ~20x the compressed source bytes for
-# the pos-derived path (numeric copies + sort temps + dedup), and up to
-# `cores` tasks run concurrently — measured: 10M turns at n_buckets=32
-# (156 MiB/bucket) OOM-killed a 125 GiB box when every bucket ran
-# direct under a naive 512 MiB bound.
-_DIRECT_BUCKET_MAX_BYTES = 128 << 20
-
-
-def _direct_bucket_cap(cores: int, n_buckets: int) -> int:
-    """Memory-aware on-disk size cap per DIRECT-encoded bucket: budget
-    half of MemAvailable across min(cores, n_buckets) concurrent tasks
-    at the measured ~20x in-memory blow-up. Scale-adaptive (guide §2):
-    the same code picks ~90 MiB on an idle 125 GiB box and shrinks under
-    pressure; buckets above the cap take the salt-bounded shuffled path
-    instead (see the mixed strategy in _term_dict_and_postings)."""
-    avail = None
-    try:
-        with open("/proc/meminfo") as f:
-            for line in f:
-                if line.startswith("MemAvailable:"):
-                    avail = int(line.split()[1]) * 1024
-                    break
-    except OSError:
-        pass
-    if avail is None:
-        return _DIRECT_BUCKET_MAX_BYTES
-    per_task = (avail // 2) // (20 * max(1, min(cores, n_buckets)))
-    return max(32 << 20, min(per_task, 1 << 30))
+# Posting rows one encode task holds at a time: a chunk of whole terms,
+# or — for a term with more postings than this — whole salt groups of
+# that one term (so the bound is max(_CHUNK_ROWS, salt_target) postings).
+# A constant of the layout, not of bucket size or of the host.
+_CHUNK_ROWS = 4_000_000
+# rows per parquet row group of the encoder's outputs: both are
+# term-sorted, so small row groups give query-time term filters tight
+# min/max pruning
+_ROW_GROUP_ROWS = 65_536
 
 # Multi-field indexing (B8): every document contributes one token stream per
 # FIELD, each with its own posting lists, df, dl, and corpus stats — the
@@ -174,7 +148,7 @@ def assign_doc_ids(tx: DataFrame, num_partitions: int = 0,
 def _prewarm_python_workers(spark: SparkSession) -> threading.Thread:
     """Spawn + warm the Python worker pool (numpy/pyarrow imports, one
     trivial task per slot) on a background job while the JVM-only build
-    stages run. The direct per-bucket encode is otherwise the session's
+    stages run. The per-bucket encode is otherwise the session's
     FIRST Python stage and pays the whole pool's spawn + imports serially
     on its critical path (~7 s at 32 cores, measured round 7); overlapped
     with the doc_store/positions jobs it costs nothing (guide §2.6)."""
@@ -206,39 +180,225 @@ def _prewarm_python_workers(spark: SparkSession) -> threading.Thread:
     return t
 
 
-def _encoder_core(field_stats: dict, block_size: int, n_levels: int,
-                  salt_target: int, with_bucket: bool, n_buckets: int):
-    """Shared vectorized block-encode core (round-7 v3). Takes one
-    COMPLETE-GROUPS slice of posting rows as numpy/Arrow arrays, sorts it
-    in Python on lexicographic dictionary ranks (sorted strings are never
-    materialized), derives ``df`` / ``salt`` / ``lvl`` locally, and
-    encodes every (field, term, salt, lvl) group fully vectorized
-    (codec.encode_blocks_multi_buffers) — each binary stream becomes ONE
-    Arrow binary column built zero-copy from (buffer, offsets).
+def _reset_peak_rss() -> None:
+    """Restart this process's VmHWM at its current RSS (Python workers are
+    reused across tasks); a no-op where /proc/self/clear_refs is absent."""
+    with contextlib.suppress(OSError), open("/proc/self/clear_refs", "w") as f:
+        f.write("5")
 
-    ``process(num, terms_all)`` yields RecordBatches of block rows.
-    ``num`` carries int64 field/doc_id/dl/tf, plus OPTIONAL float64 ``df``
-    (NaN = derive from the group's row count — tf rows are one per
-    (field, term, doc), so a complete group's size IS its df) and OPTIONAL
-    int64 ``salt`` (absent = derive ``doc_id % ceil(df / salt_target)``,
-    the exact JVM salting formula). Impact levels (df ≥ 8·block_size
-    only — stratifying a tail term would fragment its single block into
-    metadata bloat) and the final (field, term, salt, lvl desc, doc_id)
-    order are computed here, so callers never pre-sort.
 
-    Rows are sorted by the dictionary's LEXICOGRAPHIC rank, which both
-    keeps groups contiguous and leaves the written postings term-ordered —
-    parquet row-group min/max stats on ``term`` then prune query-time
-    block scans to the queried terms' row groups.
+def _peak_rss_bytes() -> int:
+    with contextlib.suppress(OSError), open("/proc/self/status") as f:
+        for line in f:
+            if line.startswith("VmHWM:"):
+                return int(line.split()[1]) * 1024
+    return 0
 
-    ``field_stats``: field_id -> (n_docs, avgdl) — BM25 block bounds are
-    computed under each FIELD's own corpus statistics, exactly like
-    per-field Lucene similarities.
-    """
-    import hashlib
 
-    import pyarrow as pa
+def _run_starts(p: dict, by_doc: bool = False) -> np.ndarray:
+    """Row indices (0 included) where the (field, term[, doc_id]) key of
+    ``p``'s sorted, non-empty rows changes."""
     import pyarrow.compute as pc
+    f, t = p["field"], p["term"]
+    brk = ((f[1:] != f[:-1])
+           | pc.not_equal(t[1:], t[:-1]).to_numpy(zero_copy_only=False))
+    if by_doc:
+        brk |= p["doc_id"][1:] != p["doc_id"][:-1]
+    return np.flatnonzero(np.concatenate(([True], brk)))
+
+
+def _lead(p: dict, st: dict) -> int:
+    """Count of ``p``'s leading rows that belong to the term of ``st``."""
+    import pyarrow.compute as pc
+    m = ((p["field"] == st["field"][0])
+         & pc.equal(p["term"], st["term"][0]).to_numpy(zero_copy_only=False))
+    return len(m) if m.all() else int(np.argmin(m))
+
+
+def _cat(parts: list) -> dict:
+    import pyarrow as pa
+    return {k: (pa.concat_arrays([p[k] for p in parts]) if k == "term"
+                else np.concatenate([p[k] for p in parts]))
+            for k in parts[0]}
+
+
+def _sl(p: dict, a: int, b: int | None = None) -> dict:
+    return {k: v[a:b] for k, v in p.items()}
+
+
+def _read_sorted(path: str, columns: list, batch_rows: int,
+                 key: tuple | None = None):
+    """Stream one (field, term, doc_id)-sorted source file in RecordBatches
+    of ``batch_rows``. With ``key=(field, term)`` only that term's rows
+    come back: row groups whose term min/max excludes it are skipped and
+    the read stops at the first row past it."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as papq
+    # buffered column-chunk reads: memory follows the batch, not the row
+    # group size the source writer picked
+    pf = papq.ParquetFile(path, buffer_size=1 << 20)
+    groups = list(range(pf.num_row_groups))
+    if key is not None:
+        ti = pf.schema_arrow.get_field_index("term")
+
+        def may_hold(i: int) -> bool:
+            st = pf.metadata.row_group(i).column(ti).statistics
+            return (st is None or not st.has_min_max
+                    or st.min <= key[1] <= st.max)
+        groups = [i for i in groups if may_hold(i)]
+    if not groups:
+        return
+    for rb in pf.iter_batches(batch_size=batch_rows, row_groups=groups,
+                              columns=columns):
+        past = False
+        if key is not None:
+            past = (rb["field"][-1].as_py(), rb["term"][-1].as_py()) > key
+            rb = rb.filter(pc.and_(pc.equal(rb["field"], key[0]),
+                                   pc.equal(rb["term"], key[1])))
+        if rb.num_rows:
+            yield rb
+        if past:
+            return
+
+
+def _merge_sorted(streams: list):
+    """k-way merge of RecordBatch streams, each sorted by
+    (field, term, doc_id), into sorted Arrow tables. A window takes every
+    buffered row below the smallest last-buffered key of the streams not
+    yet exhausted, so it holds about one batch per stream and never splits
+    a (field, term, doc_id) run (the positions of one doc)."""
+    import pyarrow as pa
+
+    def key_at(t, i: int) -> tuple:
+        return (t["field"][i].as_py(), t["term"][i].as_py(),
+                t["doc_id"][i].as_py())
+
+    its = [iter(s) for s in streams]
+    bufs = [None] * len(its)
+
+    def fill(i: int) -> None:        # append a batch; None marks the end
+        rb = next(its[i], None)
+        if rb is None:
+            its[i] = None
+        else:
+            t = pa.Table.from_batches([rb])
+            bufs[i] = t if bufs[i] is None else pa.concat_tables([bufs[i], t])
+
+    for i in range(len(its)):
+        fill(i)
+    while True:
+        open_ = [i for i in range(len(its)) if its[i] is not None]
+        frontier = min((key_at(bufs[i], bufs[i].num_rows - 1)
+                        for i in open_), default=None)
+        parts = []
+        for i, t in enumerate(bufs):
+            if t is None:
+                continue
+            # first row whose key >= frontier (all rows once none is open)
+            lo, hi = (0, t.num_rows) if open_ else (t.num_rows,) * 2
+            while lo < hi:
+                mid = (lo + hi) // 2
+                if key_at(t, mid) < frontier:
+                    lo = mid + 1
+                else:
+                    hi = mid
+            parts.append(t.slice(0, lo))
+            bufs[i] = t.slice(lo) if lo < t.num_rows else None
+        if sum(t.num_rows for t in parts):
+            yield pa.concat_tables(parts).sort_by(
+                [("field", "ascending"), ("term", "ascending"),
+                 ("doc_id", "ascending")])
+        elif frontier is None:
+            return
+        for i in open_:                  # the frontier stream(s) read on
+            if bufs[i] is None or key_at(
+                    bufs[i], bufs[i].num_rows - 1) == frontier:
+                fill(i)
+
+
+def _postings(win) -> dict:
+    """Sorted raw source rows -> posting rows (field, term, doc_id, dl, tf),
+    tf = the (field, term, doc_id) run's summed ``tf`` column (1 per
+    positional row)."""
+    import pyarrow as pa
+    w = {k: win.column(k).to_numpy().astype(np.int64)
+         for k in ("field", "doc_id", "dl")}
+    tf = (win.column("tf").to_numpy().astype(np.int64)
+          if "tf" in win.column_names
+          else np.ones(win.num_rows, dtype=np.int64))
+    w["term"] = win.column("term").combine_chunks()
+    starts = _run_starts(w, by_doc=True)
+    return {"field": w["field"][starts],
+            "term": w["term"].take(pa.array(starts)),
+            "doc_id": w["doc_id"][starts], "dl": w["dl"][starts],
+            "tf": np.add.reduceat(tf, starts)}
+
+
+class _PartWriter:
+    """``<d>/part-0.parquet``, written as batches arrive: snappy, row groups
+    of exactly _ROW_GROUP_ROWS rows (the layout depends on the rows alone,
+    not on how the encoder chunked them), tmp-then-rename. No rows, no
+    file."""
+
+    def __init__(self, d: str):
+        self.d, self.w, self.parts, self.pending, self.rows = d, None, [], 0, 0
+
+    def add(self, rb) -> None:
+        self.parts.append(rb)
+        self.pending += rb.num_rows
+        self.rows += rb.num_rows
+        while self.pending >= _ROW_GROUP_ROWS:
+            self._flush(_ROW_GROUP_ROWS)
+
+    def _flush(self, n: int) -> None:
+        import pyarrow as pa
+        import pyarrow.parquet as papq
+        t = pa.Table.from_batches(self.parts)
+        if self.w is None:
+            os.makedirs(self.d, exist_ok=True)
+            self.w = papq.ParquetWriter(
+                os.path.join(self.d, "part-0.parquet.tmp"), t.schema,
+                compression="snappy")
+        self.w.write_table(t.slice(0, n), row_group_size=n)
+        rest = t.slice(n)
+        self.parts, self.pending = rest.to_batches(), rest.num_rows
+
+    def close(self) -> None:
+        if self.pending:
+            self._flush(self.pending)
+        if self.w is not None:
+            self.w.close()
+            os.replace(os.path.join(self.d, "part-0.parquet.tmp"),
+                       os.path.join(self.d, "part-0.parquet"))
+
+
+def _encoder_core(field_stats: dict, block_size: int, n_levels: int,
+                  salt_target: int):
+    """Vectorized term_dict and block encoder over chunks of posting rows
+    ``p`` (int64 field/doc_id/dl/tf numpy columns plus the ``term`` Arrow
+    array) sorted by (field, term, doc_id); ``starts`` are the row indices
+    where each term begins. Returns three functions:
+
+    * ``term_stats(p, starts)`` — per-term df, cf, max_tf, min_dl and
+      max_tfn_real, all mergeable (sums, maxima, minima), so a term bigger
+      than a chunk folds its stats piece by piece (see _STAT_FOLD).
+    * ``term_batch(st, first_id)`` — term_dict rows from (folded) stats,
+      plus max_score_ub and a dense term_id from ``first_id``.
+    * ``blocks(p, starts, term_df, rank0=0)`` — one RecordBatch of block
+      rows; ``rank0`` counts the (single) term's postings before this
+      chunk. Salt = posting rank in the term's doc_id order // salt_target:
+      contiguous doc-id ranges, so the layout depends on the data alone,
+      never on how it was chunked. Impact levels (df ≥ 8·block_size only —
+      stratifying a tail term would fragment its single block into
+      metadata bloat) and the (field, term, salt, lvl desc, doc_id) order
+      are computed here.
+
+    Term-ordered outputs let parquet row-group min/max stats on ``term``
+    prune query-time scans. ``field_stats``: field_id -> (n_docs, avgdl) —
+    BM25 bounds use each FIELD's own corpus statistics, like per-field
+    Lucene similarities.
+    """
+    import pyarrow as pa
 
     k1, b = S.K1, S.B
     max_f = max(field_stats) + 1
@@ -246,393 +406,272 @@ def _encoder_core(field_stats: dict, block_size: int, n_levels: int,
     avgdl_arr = np.ones(max_f)
     for fid, (n_f, avgdl_f) in field_stats.items():
         n_arr[fid], avgdl_arr[fid] = n_f, avgdl_f
-    fields_schema = [
-        ("bucket", pa.int32()), ("field", pa.int32()),
-        ("term", pa.string()), ("block_id", pa.int64()),
-        ("n_docs", pa.int32()), ("first_doc", pa.int64()),
-        ("last_doc", pa.int64()), ("max_score", pa.float64()),
+    tdict_schema = pa.schema([
+        ("field", pa.int32()), ("term", pa.string()),
+        ("df", pa.float64()), ("cf", pa.int64()),
         ("max_tf", pa.float64()), ("min_dl", pa.float64()),
-        ("min_tf", pa.float64()), ("max_dl", pa.float64()),
-        ("docs_bin", pa.binary()), ("tfs_bin", pa.binary()),
-        ("dls_bin", pa.binary())]
-    if not with_bucket:      # bucket rides the hive directory, not the file
-        fields_schema = fields_schema[1:]
-    out_schema = pa.schema(fields_schema)
+        ("max_tfn_real", pa.float64()),
+        ("max_score_ub", pa.float64()), ("term_id", pa.int64())])
+    # bucket rides the hive directory, not the file
+    out_schema = pa.schema([
+        ("field", pa.int32()), ("term", pa.string()),
+        ("block_id", pa.int64()), ("n_docs", pa.int32()),
+        ("first_doc", pa.int64()), ("last_doc", pa.int64()),
+        ("max_score", pa.float64()), ("max_tf", pa.float64()),
+        ("min_dl", pa.float64()), ("min_tf", pa.float64()),
+        ("max_dl", pa.float64()), ("docs_bin", pa.binary()),
+        ("tfs_bin", pa.binary()), ("dls_bin", pa.binary())])
     lvl_min_df = float(8 * block_size)
-    # bound one output RecordBatch (and one kernel call) to ~4M posting
-    # rows, cut at group boundaries — keeps the Arrow binary columns far
-    # under the 2 GiB cap however large an input slice gets
-    chunk_rows = 4_000_000
+
+    def tfn_of(tf: np.ndarray, dl: np.ndarray, f: np.ndarray) -> np.ndarray:
+        # real tf-normalization tf / (tf + k1 * (1 - b + b * dl / avgdl))
+        return tf / (tf + k1 * ((1.0 - b) + b * dl / avgdl_arr[f]))
+
+    def term_stats(p: dict, starts: np.ndarray) -> dict:
+        tf, dl = p["tf"], p["dl"]
+        return {
+            "field": p["field"][starts],
+            "term": p["term"].take(pa.array(starts)),
+            "df": np.diff(np.append(starts, len(tf))).astype(np.float64),
+            "cf": np.add.reduceat(tf, starts),
+            "max_tf": np.maximum.reduceat(tf, starts).astype(np.float64),
+            "min_dl": np.minimum.reduceat(dl, starts).astype(np.float64),
+            "max_tfn_real": np.maximum.reduceat(
+                tfn_of(tf, dl, p["field"]), starts)}
+
+    def term_batch(st: dict, first_id: int) -> pa.RecordBatch:
+        df, max_tf, min_dl = st["df"], st["max_tf"], st["min_dl"]
+        n_f, avg_f = n_arr[st["field"]], avgdl_arr[st["field"]]
+        idf = np.log(1.0 + (n_f - df + 0.5) / (df + 0.5))
+        # upper bound: max tf paired with min dl dominates any real (tf, dl)
+        smax = idf * max_tf / (max_tf + k1 * (1 - b + b * min_dl / avg_f))
+        return pa.RecordBatch.from_arrays([
+            pa.array(st["field"].astype(np.int32), type=pa.int32()),
+            st["term"], pa.array(df, type=pa.float64()),
+            pa.array(st["cf"], type=pa.int64()),
+            pa.array(max_tf, type=pa.float64()),
+            pa.array(min_dl, type=pa.float64()),
+            pa.array(st["max_tfn_real"], type=pa.float64()),
+            pa.array(smax, type=pa.float64()),
+            pa.array(np.arange(first_id, first_id + len(df), dtype=np.int64)),
+        ], schema=tdict_schema)
 
     def _bin_col(buf: bytes, offs: np.ndarray) -> pa.Array:
         return pa.Array.from_buffers(
             pa.binary(), len(offs) - 1,
             [None, pa.py_buffer(offs), pa.py_buffer(buf)])
 
-    def process(num: dict, terms_all: pa.Array):
-        n = len(terms_all)
-        if n == 0:
-            return
-        denc = terms_all.dictionary_encode()
-        codes = denc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-        dictionary = denc.dictionary
-        # lexicographic rank per code: sorting on ranks orders rows by
-        # term BYTES without ever moving strings
-        sort_idx = pc.sort_indices(dictionary).to_numpy(
-            zero_copy_only=False).astype(np.int64)
-        rank_of_code = np.empty(len(dictionary), dtype=np.int64)
-        rank_of_code[sort_idx] = np.arange(len(dictionary))
-        ranks = rank_of_code[codes]
-        fields = num["field"].astype(np.int64)
-        doc_ids = num["doc_id"].astype(np.int64)
-        dls = num["dl"].astype(np.int64)
-        tfs = num["tf"].astype(np.int64)
-        dfs = (num["df"].astype(np.float64) if num.get("df") is not None
-               else np.full(n, np.nan))
-        missing = np.isnan(dfs)
-        if missing.any():
-            # df = group size — sort once by (field, rank) and scatter the
-            # run lengths back
-            gk = fields * np.int64(len(dictionary)) + ranks
-            order1 = np.argsort(gk, kind="stable")
-            gks = gk[order1]
-            st = np.ones(n, dtype=bool)
-            st[1:] = gks[1:] != gks[:-1]
-            sidx = np.flatnonzero(st)
-            runlen = np.diff(np.append(sidx, n))
-            run_df = np.empty(n, dtype=np.float64)
-            run_df[order1] = np.repeat(runlen, runlen)
-            dfs = np.where(missing, run_df, dfs)
-        if num.get("salt") is not None:
-            salts = num["salt"].astype(np.int64)
-        else:
-            nsalt = np.maximum(
-                np.int64(1),
-                np.ceil(dfs / float(salt_target)).astype(np.int64))
-            salts = doc_ids % nsalt
+    def blocks(p: dict, starts: np.ndarray, term_df: np.ndarray,
+               rank0: int = 0) -> pa.RecordBatch:
+        n = len(p["doc_id"])
+        sizes = np.diff(np.append(starts, n))
+        gids = np.repeat(np.arange(starts.size), sizes)
+        ranks = np.arange(n) - np.repeat(starts, sizes) + rank0
+        salts = ranks // salt_target
+        dfs = np.repeat(term_df, sizes)
+        fields, doc_ids, dls, tfs = p["field"], p["doc_id"], p["dl"], p["tf"]
         if n_levels > 1:
-            avg = avgdl_arr[fields]
-            tfn = tfs / (tfs + k1 * ((1.0 - b) + b * dls / avg))
             lvls = np.where(
                 dfs >= lvl_min_df,
-                np.minimum(n_levels - 1, np.floor(tfn * n_levels)),
+                np.minimum(n_levels - 1,
+                           np.floor(tfn_of(tfs, dls, fields) * n_levels)),
                 0.0).astype(np.int64)
         else:
             lvls = np.zeros(n, dtype=np.int64)
-        # final order: (field, term-rank, salt, lvl desc, doc_id)
-        perm = np.lexsort((doc_ids, -lvls, salts, ranks, fields))
-        fields, ranks, codes = fields[perm], ranks[perm], codes[perm]
-        doc_ids, dls, tfs = doc_ids[perm], dls[perm], tfs[perm]
-        dfs, salts, lvls = dfs[perm], salts[perm], lvls[perm]
+        # final order: (field, term, salt, lvl desc, doc_id)
+        perm = np.lexsort((doc_ids, -lvls, salts, gids))
+        fields, doc_ids, dls, tfs = (fields[perm], doc_ids[perm], dls[perm],
+                                     tfs[perm])
+        gids, salts, lvls, dfs = gids[perm], salts[perm], lvls[perm], dfs[perm]
         gs = np.ones(n, dtype=bool)
-        gs[1:] = ((ranks[1:] != ranks[:-1]) | (fields[1:] != fields[:-1])
-                  | (salts[1:] != salts[:-1]) | (lvls[1:] != lvls[:-1]))
-        if with_bucket:
-            # bucket per UNIQUE dictionary term (the md5 mapping of
-            # bucket_of) — ~#vocab/partition short hashes per task instead
-            # of one int32 per posting row over the boundary
-            buckets_by_code = np.fromiter(
-                (int.from_bytes(hashlib.md5(t).digest()[:4], "big")
-                 % n_buckets
-                 for t in dictionary.cast(pa.binary()).to_pylist()),
-                dtype=np.int32, count=len(dictionary))
+        gs[1:] = ((gids[1:] != gids[:-1]) | (salts[1:] != salts[:-1])
+                  | (lvls[1:] != lvls[:-1]))
+        enc = codec.encode_blocks_multi_buffers(doc_ids, tfs, dls, gs,
+                                                block_size)
+        rs = enc["row_start"]
+        n_f, avg = n_arr[fields], avgdl_arr[fields]
+        idf = np.log(1.0 + (n_f - dfs + 0.5) / (dfs + 0.5))
+        scores = idf * tfs / (tfs + k1 * (1 - b + b * dls / avg))
+        return pa.RecordBatch.from_arrays([
+            pa.array(fields[rs].astype(np.int32), type=pa.int32()),
+            p["term"].take(pa.array(starts[gids[rs]])),
+            pa.array((salts[rs] * n_levels + lvls[rs]) * 1_000_000
+                     + enc["seq"], type=pa.int64()),
+            pa.array(enc["n_docs"], type=pa.int32()),
+            pa.array(enc["first_doc"], type=pa.int64()),
+            pa.array(enc["last_doc"], type=pa.int64()),
+            pa.array(np.maximum.reduceat(scores, rs), type=pa.float64()),
+            # per-block (max_tf, min_dl) -> upper bound, (min_tf, max_dl)
+            # -> lower bound; both recomputable under *global* corpus
+            # stats by multi-segment readers (θ derives from real decoded
+            # scores; the lower-bound pair is retained for min-score skip
+            # strategies and reader compatibility)
+            pa.array(np.maximum.reduceat(tfs, rs).astype(np.float64)),
+            pa.array(np.minimum.reduceat(dls, rs).astype(np.float64)),
+            pa.array(np.minimum.reduceat(tfs, rs).astype(np.float64)),
+            pa.array(np.maximum.reduceat(dls, rs).astype(np.float64)),
+            _bin_col(enc["docs_buf"], enc["docs_off"]),
+            _bin_col(enc["tfs_buf"], enc["tfs_off"]),
+            _bin_col(enc["dls_buf"], enc["dls_off"]),
+        ], schema=out_schema)
 
-        def emit(a: int, e: int) -> pa.RecordBatch:
-            sl = slice(a, e)
-            f_s, c_s, d_s = fields[sl], codes[sl], doc_ids[sl]
-            dl_s, tf_s, df_s = dls[sl], tfs[sl], dfs[sl]
-            sa_s, lv_s = salts[sl], lvls[sl]
-            blocks = codec.encode_blocks_multi_buffers(
-                d_s, tf_s, dl_s, gs[sl], block_size)
-            rs = blocks["row_start"]
-            n_f, avg = n_arr[f_s], avgdl_arr[f_s]
-            idf = np.log(1.0 + (n_f - df_s + 0.5) / (df_s + 0.5))
-            scores = idf * tf_s / (tf_s + k1 * (1 - b + b * dl_s / avg))
-            bc = c_s[rs]
-            cols = [
-                pa.array(f_s[rs].astype(np.int32), type=pa.int32()),
-                pc.take(dictionary, pa.array(bc, type=pa.int64())),
-                pa.array((sa_s[rs] * n_levels + lv_s[rs]) * 1_000_000
-                         + blocks["seq"], type=pa.int64()),
-                pa.array(blocks["n_docs"], type=pa.int32()),
-                pa.array(blocks["first_doc"], type=pa.int64()),
-                pa.array(blocks["last_doc"], type=pa.int64()),
-                pa.array(np.maximum.reduceat(scores, rs),
-                         type=pa.float64()),
-                # per-block (max_tf, min_dl) -> upper bound, (min_tf,
-                # max_dl) -> lower bound; both recomputable under *global*
-                # corpus stats by multi-segment readers (θ derives from
-                # real decoded scores; the lower-bound pair is retained
-                # for min-score skip strategies and reader compatibility)
-                pa.array(np.maximum.reduceat(tf_s, rs).astype(np.float64)),
-                pa.array(np.minimum.reduceat(dl_s, rs).astype(np.float64)),
-                pa.array(np.minimum.reduceat(tf_s, rs).astype(np.float64)),
-                pa.array(np.maximum.reduceat(dl_s, rs).astype(np.float64)),
-                _bin_col(blocks["docs_buf"], blocks["docs_off"]),
-                _bin_col(blocks["tfs_buf"], blocks["tfs_off"]),
-                _bin_col(blocks["dls_buf"], blocks["dls_off"]),
-            ]
-            if with_bucket:
-                cols.insert(0, pa.array(buckets_by_code[bc],
-                                        type=pa.int32()))
-            return pa.RecordBatch.from_arrays(cols, schema=out_schema)
+    return term_stats, term_batch, blocks
 
-        if n <= chunk_rows:
-            yield emit(0, n)
-            return
-        gidx = np.flatnonzero(gs)
-        cuts = np.unique(gidx[np.searchsorted(
-            gidx, np.arange(chunk_rows, n, chunk_rows), side="left")])
-        prev = 0
-        for c in cuts.tolist() + [n]:
-            if c > prev:
-                yield emit(prev, c)
-                prev = c
 
-    return process
+# how each term_stats column folds across the pieces of one term
+_STAT_FOLD = {"df": np.add, "cf": np.add, "max_tf": np.maximum,
+              "min_dl": np.minimum, "max_tfn_real": np.maximum}
 
 
 def _encode_bucket_task_fn(src_dir: str, src_kind: str, out_dir: str,
                            term_dict_dir: str, buckets: list,
                            field_stats: dict, block_size: int,
                            n_levels: int, salt_target: int):
-    """Per-BUCKET direct encode (round-7 v3/v4, the default path): the
-    task reads its bucket's posting source straight from parquet with
-    pyarrow (columnar, no JVM row conversion) and writes the finished
-    posting blocks — AND the bucket's term-dictionary rows — straight
-    back as parquet. The posting rows never cross the JVM↔Python
-    boundary at all.
-
-    ``src_kind``:
-
-    * ``"tf"`` — the bucket dir holds materialized (field, term, doc_id,
-      dl, tf) rows (no-positions builds).
-    * ``"pos"`` — the bucket dir holds raw positional rows; tf is derived
-      here as the (field, term, doc_id) multiplicity (one lexsort + run
-      lengths). This removes the build's LAST wide operation: the 50M+-row
-      tf groupBy shuffle existed only to materialize what one in-task
-      run-length pass computes (round-7 v4).
+    """Per-BUCKET encode, the build's one encode path: the task streams its
+    bucket's posting source straight from parquet with pyarrow and streams
+    the finished posting blocks — AND the bucket's term_dict rows —
+    straight back as parquet, so posting rows never cross the JVM↔Python
+    boundary. ``src_kind`` is ``"tf"`` (materialized (field, term, doc_id,
+    dl, tf) rows, no-positions builds) or ``"pos"`` (raw positional rows;
+    tf is the (field, term, doc_id) run length).
 
     Why this is sound: ``bucket = md5(term) % n_buckets``, so a bucket
-    directory holds EVERY row of its terms — groups are complete by
-    construction (df = run length, salting derived locally, term_dict
-    aggregates exact), and the per-task working set is
-    total_postings / n_buckets, the same quantity that already sizes the
-    index's file layout (n_buckets scales with the cluster). The round-7
-    probes measured the JVM→Python Arrow conversion at ~12-15 s per
-    1M-turn build (≈15 µs/row even for 4 narrow numeric columns) while
-    the numpy encode kernel costs ~0.2 s: the boundary WAS the stage.
-    Guide §8's rule, taken to its limit: the heavy rows move zero times.
-
-    The emitted term_dict rows replicate the JVM aggregation EXACTLY
-    (same expression order on IEEE doubles: df/cf/max_tf/min_dl are exact
-    reductions, max_tfn_real and max_score_ub mirror the column formulas,
-    term_id is the (field, term)-ordered row number plus the bucket
-    prefix) — verified bit-identical against the JVM term_dict in the
-    round-7 A/B. Only the term_bounds sidecar keeps its (tiny) Spark job:
-    its percentile_approx sketch is not worth re-implementing.
+    directory holds EVERY row of its terms, and every source file is
+    sorted by (field, term, doc_id). The task k-way merges the files in
+    bounded batches and encodes chunks of at most _CHUNK_ROWS postings cut
+    at term boundaries — usually the whole bucket is one chunk, read once.
+    A term with more postings than a chunk is folded as it streams past
+    (df is needed before encoding: idf in ``max_score``, impact levels,
+    salt), then re-read alone and encoded whole salt groups per chunk.
 
     Returns a mapInArrow function over a one-row-per-partition range
-    frame; partition i encodes ``buckets[i]`` and yields one stats row.
-    Output files are written tmp-then-rename with a pre-clean, so task
-    retries and resume re-runs stay idempotent.
+    frame; partition i encodes ``buckets[i]`` and yields one stats row
+    (blocks, chunks, the task's peak RSS). Outputs are written
+    tmp-then-rename after a pre-clean, so task retries and resume re-runs
+    stay idempotent.
     """
+
+    # read when the task is built: its closure carries the bound to the
+    # Python workers, which import this module afresh
+    chunk_rows = _CHUNK_ROWS
 
     def task(batches):
         import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.dataset as pads
-        import pyarrow.parquet as papq
-        k1, b = S.K1, S.B
-        max_f = max(field_stats) + 1
-        n_arr = np.zeros(max_f)
-        avgdl_arr = np.ones(max_f)
-        for fid, (n_f, avgdl_f) in field_stats.items():
-            n_arr[fid], avgdl_arr[fid] = n_f, avgdl_f
-        process = _encoder_core(field_stats, block_size, n_levels,
-                                salt_target, with_bucket=False, n_buckets=0)
-        tdict_schema = pa.schema([
-            ("field", pa.int32()), ("term", pa.string()),
-            ("df", pa.float64()), ("cf", pa.int64()),
-            ("max_tf", pa.float64()), ("min_dl", pa.float64()),
-            ("max_tfn_real", pa.float64()),
-            ("max_score_ub", pa.float64()), ("term_id", pa.int64())])
-
-        def write_dir(d: str, table) -> None:
-            os.makedirs(d, exist_ok=True)
-            tmp = os.path.join(d, "part-0.parquet.tmp")
-            # snappy + 64k-row groups: both outputs are term-sorted, so
-            # small row groups give query-time term filters tight min/max
-            # pruning (the old single-row-group layout decoded the whole
-            # bucket file per queried term)
-            papq.write_table(table, tmp, compression="snappy",
-                             row_group_size=65536)
-            os.replace(tmp, os.path.join(d, "part-0.parquet"))
-
-        def term_dict_table(num: dict, terms: pa.Array, bkt: int):
-            """Exact replica of the JVM term_dict aggregation for this
-            bucket's (field, term, doc, dl, tf) rows."""
-            n = len(terms)
-            denc = terms.dictionary_encode()
-            codes = denc.indices.to_numpy(
-                zero_copy_only=False).astype(np.int64)
-            dictionary = denc.dictionary
-            sort_idx = pc.sort_indices(dictionary).to_numpy(
-                zero_copy_only=False).astype(np.int64)
-            rank_of_code = np.empty(len(dictionary), dtype=np.int64)
-            rank_of_code[sort_idx] = np.arange(len(dictionary))
-            ranks = rank_of_code[codes]
-            fields = num["field"].astype(np.int64)
-            dls = num["dl"].astype(np.int64)
-            tfs = num["tf"].astype(np.int64)
-            gk = fields * np.int64(len(dictionary)) + ranks
-            order = np.argsort(gk, kind="stable")
-            gks = gk[order]
-            st = np.ones(n, dtype=bool)
-            st[1:] = gks[1:] != gks[:-1]
-            starts = np.flatnonzero(st)
-            dfs = np.diff(np.append(starts, n)).astype(np.float64)
-            f_s = fields[order]
-            tf_s, dl_s = tfs[order], dls[order]
-            avg = avgdl_arr[f_s]
-            # per-row real tf-normalization (same expression order as the
-            # JVM column: tf / (tf + k1 * (1 - b + b * dl / avgdl)))
-            tfn = tf_s / (tf_s + k1 * ((1.0 - b) + b * dl_s / avg))
-            g_field = f_s[starts]
-            max_tf = np.maximum.reduceat(tf_s, starts).astype(np.float64)
-            min_dl = np.minimum.reduceat(dl_s, starts).astype(np.float64)
-            cf = np.add.reduceat(tf_s, starts)
-            mtr = np.maximum.reduceat(tfn, starts)
-            n_f = n_arr[g_field]
-            avg_f = avgdl_arr[g_field]
-            idf = np.log(1.0 + (n_f - dfs + 0.5) / (dfs + 0.5))
-            smax = (idf * max_tf
-                    / (max_tf + k1 * (1 - b + b * min_dl / avg_f)))
-            g_codes = codes[order][starts]
-            # dense 1-based (field, term)-ordered id + the bucket prefix —
-            # the JVM row_number() window replica
-            term_id = (np.arange(1, starts.size + 1, dtype=np.int64)
-                       + (np.int64(bkt) << np.int64(40)))
-            return pa.Table.from_arrays([
-                pa.array(g_field.astype(np.int32), type=pa.int32()),
-                pc.take(dictionary, pa.array(g_codes, type=pa.int64())),
-                pa.array(dfs, type=pa.float64()),
-                pa.array(cf, type=pa.int64()),
-                pa.array(max_tf, type=pa.float64()),
-                pa.array(min_dl, type=pa.float64()),
-                pa.array(mtr, type=pa.float64()),
-                pa.array(smax, type=pa.float64()),
-                pa.array(term_id, type=pa.int64()),
-            ], schema=tdict_schema)
+        term_stats, term_batch, blocks = _encoder_core(
+            field_stats, block_size, n_levels, salt_target)
+        cols = ["field", "term", "doc_id", "dl"] + (
+            ["tf"] if src_kind == "tf" else [])
+        one = np.zeros(1, dtype=np.int64)      # starts of a one-term chunk
+        # a big term's chunk: whole salt groups, as many as fit
+        big_step = max(1, chunk_rows // salt_target) * salt_target
 
         for batch in batches:
             for i in batch.column(0).to_pylist():
                 bkt = buckets[int(i)]
+                _reset_peak_rss()
                 src = os.path.join(src_dir, f"bucket={bkt}")
-                dst = os.path.join(out_dir, f"bucket={bkt}")
-                tdst = os.path.join(term_dict_dir, f"bucket={bkt}")
-                for d in (dst, tdst):
-                    if os.path.isdir(d):
-                        shutil.rmtree(d)
-                if not os.path.isdir(src):
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array([bkt], type=pa.int32()),
-                         pa.array([0], type=pa.int64())],
-                        names=["bucket", "n_blocks"])
-                    continue
-                if src_kind == "tf":
-                    tbl = pads.dataset(src, format="parquet").to_table(
-                        columns=["field", "term", "doc_id", "dl", "tf"])
-                    num = {k: tbl.column(k).to_numpy(zero_copy_only=False)
-                           for k in ("field", "doc_id", "dl", "tf")}
-                    terms = tbl.column("term").combine_chunks()
-                else:
-                    # positional rows -> tf = (field, term, doc)
-                    # multiplicity via one lexsort + run lengths (the
-                    # ``pos`` column itself is pruned at the scan)
-                    tbl = pads.dataset(src, format="parquet").to_table(
-                        columns=["field", "term", "doc_id", "dl"])
-                    f0 = tbl.column("field").to_numpy(
-                        zero_copy_only=False).astype(np.int64)
-                    d0 = tbl.column("doc_id").to_numpy(
-                        zero_copy_only=False).astype(np.int64)
-                    l0 = tbl.column("dl").to_numpy(
-                        zero_copy_only=False).astype(np.int64)
-                    t0 = tbl.column("term").combine_chunks()
-                    denc0 = t0.dictionary_encode()
-                    c0 = denc0.indices.to_numpy(
-                        zero_copy_only=False).astype(np.int64)
-                    order = np.lexsort((d0, c0, f0))
-                    f1, c1 = f0[order], c0[order]
-                    d1, l1 = d0[order], l0[order]
-                    st = np.ones(len(f1), dtype=bool)
-                    st[1:] = ((f1[1:] != f1[:-1]) | (c1[1:] != c1[:-1])
-                              | (d1[1:] != d1[:-1]))
-                    starts = np.flatnonzero(st)
-                    num = {"field": f1[starts], "doc_id": d1[starts],
-                           "dl": l1[starts],
-                           "tf": np.diff(np.append(
-                               starts, len(f1))).astype(np.int64)}
-                    terms = pc.take(denc0.dictionary, pa.array(
-                        c1[starts], type=pa.int64()))
-                write_dir(tdst, term_dict_table(num, terms, bkt))
-                out_batches = list(process(num, terms))
-                n_blocks = 0
-                if out_batches:
-                    out = pa.Table.from_batches(out_batches)
-                    n_blocks = out.num_rows
-                    write_dir(dst, out)
+                post_w = _PartWriter(os.path.join(out_dir, f"bucket={bkt}"))
+                term_w = _PartWriter(os.path.join(term_dict_dir,
+                                                  f"bucket={bkt}"))
+                for w in (post_w, term_w):
+                    if os.path.isdir(w.d):
+                        shutil.rmtree(w.d)
+                files = (sorted(os.path.join(src, f) for f in os.listdir(src)
+                                if not f.startswith((".", "_")))
+                         if os.path.isdir(src) else [])
+                read_rows = max(16, chunk_rows // (4 * max(1, len(files))))
+
+                def stream(key=None):
+                    return map(_postings, _merge_sorted(
+                        [_read_sorted(f, cols, read_rows, key)
+                         for f in files]))
+
+                # dense 1-based (field, term)-ordered id + the bucket prefix
+                next_id = (bkt << 40) + 1
+                n_chunks = 0
+
+                def put_terms(st):
+                    nonlocal next_id
+                    term_w.add(term_batch(st, next_id))
+                    next_id += len(st["df"])
+
+                def put_blocks(p, starts, term_df, rank0=0):
+                    nonlocal n_chunks
+                    post_w.add(blocks(p, starts, term_df, rank0))
+                    n_chunks += 1
+
+                def whole_terms(p):
+                    starts = _run_starts(p)
+                    st = term_stats(p, starts)
+                    put_terms(st)
+                    put_blocks(p, starts, st["df"])
+
+                def big_term(st):
+                    # second pass: the term alone, whole salt groups a chunk
+                    put_terms(st)
+                    key = (int(st["field"][0]), st["term"][0].as_py())
+                    acc, n_done = None, 0
+                    for w in itertools.chain(stream(key), [None]):
+                        if w is not None:
+                            acc = w if acc is None else _cat([acc, w])
+                        while acc is not None and (
+                                w is None or len(acc["doc_id"]) >= big_step):
+                            m = min(big_step, len(acc["doc_id"]))
+                            put_blocks(_sl(acc, 0, m), one, st["df"], n_done)
+                            n_done += m
+                            acc = (_sl(acc, m) if m < len(acc["doc_id"])
+                                   else None)
+                    if n_done != st["df"][0]:
+                        raise RuntimeError(
+                            f"bucket {bkt}: term {key} re-read {n_done} "
+                            f"postings, folded df {st['df'][0]}")
+
+                # pend: streamed postings not yet encoded, whole terms
+                # except (until the stream ends) the last one
+                src = itertools.chain(stream(), [None])
+                pend = None
+                for w in src:
+                    if w is not None:
+                        pend = w if pend is None else _cat([pend, w])
+                    while pend is not None and (
+                            w is None or len(pend["doc_id"]) > chunk_rows):
+                        n = len(pend["doc_id"])
+                        if n <= chunk_rows:   # end of stream: terms whole
+                            whole_terms(pend)
+                            pend = None
+                            break
+                        starts = _run_starts(pend)
+                        fit = starts[(starts > 0) & (starts <= chunk_rows)]
+                        if fit.size:
+                            whole_terms(_sl(pend, 0, fit[-1]))
+                            pend = _sl(pend, fit[-1])
+                            continue
+                        # the head term alone exceeds a chunk: fold it as
+                        # it streams past (it may go on for many windows)
+                        end = int(starts[1]) if starts.size > 1 else n
+                        st = term_stats(_sl(pend, 0, end), one)
+                        pend = _sl(pend, end) if end < n else None
+                        while pend is None and w is not None:
+                            w = next(src)
+                            e = 0 if w is None else _lead(w, st)
+                            if e:
+                                s = term_stats(_sl(w, 0, e), one)
+                                st = {k: (_STAT_FOLD[k](v, s[k])
+                                          if k in _STAT_FOLD else v)
+                                      for k, v in st.items()}
+                            if w is not None and e < len(w["doc_id"]):
+                                pend = _sl(w, e)
+                        big_term(st)
+                post_w.close()
+                term_w.close()
                 yield pa.RecordBatch.from_arrays(
                     [pa.array([bkt], type=pa.int32()),
-                     pa.array([n_blocks], type=pa.int64())],
-                    names=["bucket", "n_blocks"])
+                     pa.array([post_w.rows], type=pa.int64()),
+                     pa.array([n_chunks], type=pa.int64()),
+                     pa.array([_peak_rss_bytes()], type=pa.int64())],
+                    names=["bucket", "n_blocks", "chunks", "peak_rss_bytes"])
 
     return task
-
-
-def _encode_stream_fn(field_stats: dict, block_size: int,
-                      n_levels: int = 1, n_buckets: int = 32,
-                      salt_target: int = 1 << 16):
-    """mapInArrow block encoder over a (field, term, salt)-partitioned
-    posting stream — the bounded-memory FALLBACK path (the default
-    per-bucket path is :func:`_encode_bucket_task_fn`): per-task memory is
-    capped by ``salt_target`` via the shuffle regardless of how large one
-    bucket's postings grow. Input columns (field, term, doc_id, dl, tf,
-    df, salt) with df NULLABLE — null rows are un-salted, their group is
-    complete in the partition and the core derives df from the run
-    length; salted rows carry df/salt from the JVM because one task sees
-    only one salt slice.
-    """
-
-    def gen(batches):
-        import pyarrow as pa
-        NUM = ("field", "doc_id", "dl", "tf", "df", "salt")
-        num_parts = {k: [] for k in NUM}
-        term_parts = []
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            by_name = {batch.schema.names[i]: batch.column(i)
-                       for i in range(batch.num_columns)}
-            for k in NUM:
-                num_parts[k].append(
-                    by_name[k].to_numpy(zero_copy_only=False))
-            t = by_name["term"]
-            if isinstance(t, pa.ChunkedArray):
-                t = t.combine_chunks()
-            term_parts.append(t)
-        if not term_parts:
-            return
-        terms_all = (pa.concat_arrays(term_parts)
-                     if len(term_parts) > 1 else term_parts[0])
-        num = {k: (np.concatenate(v) if len(v) > 1 else v[0])
-               for k, v in num_parts.items()}
-        process = _encoder_core(field_stats, block_size, n_levels,
-                                salt_target, with_bucket=True,
-                                n_buckets=n_buckets)
-        yield from process(num, terms_all)
-
-    return gen
 
 
 def build_index(spark: SparkSession, tx: DataFrame, out_dir: str, *,
@@ -641,7 +680,6 @@ def build_index(spark: SparkSession, tx: DataFrame, out_dir: str, *,
                 n_groups: int = 4, resume: bool = False,
                 segment: str = "seg_1", doc_base: int = 0,
                 append: bool = False,
-                broadcast_term_limit: int = 2_000_000,
                 impact_order: bool = True,
                 fail_after_group: int = -1) -> dict:
     """Build (or resume) one index segment; returns build metrics.
@@ -774,7 +812,8 @@ def build_index(spark: SparkSession, tx: DataFrame, out_dir: str, *,
         # direct dynamic-partition write — no shuffle at all for the
         # positions table (the tf groupBy below is the build's only wide
         # operation). In-task sort by (bucket, field, term) so parquet
-        # row-group min/max stats on term let phrase queries prune row groups.
+        # row-group min/max stats on term let phrase queries prune row
+        # groups; the encoder merges each bucket's files in this order.
         (exploded
          .coalesce(write_par)
          .sortWithinPartitions("bucket", "field", "term", "doc_id", "pos")
@@ -851,19 +890,19 @@ def build_index(spark: SparkSession, tx: DataFrame, out_dir: str, *,
             # write dynamic-partitioned straight off the aggregation — a
             # repartition(n_buckets) would re-shuffle every tf row a
             # second time purely for file layout; the writer's internal
-            # partition-column sort achieves the same hive layout
-            (tf.sortWithinPartitions("bucket", "field", "term")
+            # partition-column sort achieves the same hive layout. Files
+            # are (field, term, doc_id)-sorted: the encoder merges them.
+            (tf.sortWithinPartitions("bucket", "field", "term", "doc_id")
                .write.mode("overwrite").partitionBy("bucket")
                .parquet(tf_path))
             mark("stage_tf.done")
         lap("tf_partial")
     ids._cached_base.unpersist()
 
-    n_terms_total, built_groups = _term_dict_and_postings(
+    n_terms_total, built_groups, encode_stats = _term_dict_and_postings(
         spark, seg_dir, field_stats, n_buckets=n_buckets,
         block_size=block_size, salt_target=salt_target, n_groups=n_groups,
-        broadcast_term_limit=broadcast_term_limit, done=done, mark=mark,
-        lap=lap, impact_order=impact_order,
+        done=done, mark=mark, lap=lap, impact_order=impact_order,
         fail_after_group=fail_after_group)
     groups = [sorted(range(n_buckets))[i::n_groups] for i in range(n_groups)]
     postings_path = os.path.join(seg_dir, "postings")
@@ -872,15 +911,14 @@ def build_index(spark: SparkSession, tx: DataFrame, out_dir: str, *,
     return _finalize_segment(
         spark, out_dir, seg_dir, segment, term_df, groups, postings_path,
         n_docs=n_docs, avgdl=avgdl, n_terms_total=n_terms_total,
-        built_groups=built_groups, resume=resume, append=append,
-        t0=t0, stage_t=stage_t)
+        built_groups=built_groups, encode_stats=encode_stats,
+        resume=resume, append=append, t0=t0, stage_t=stage_t)
 
 
 def _term_dict_and_postings(spark: SparkSession, seg_dir: str,
                             field_stats: dict, *, n_buckets: int,
                             block_size: int, salt_target: int,
-                            n_groups: int, broadcast_term_limit: int,
-                            done, mark, lap,
+                            n_groups: int, done, mark, lap,
                             impact_order: bool = False,
                             fail_after_group: int = -1) -> tuple:
     """Stages 4+5 (term dictionary + block encode) — shared by
@@ -888,222 +926,45 @@ def _term_dict_and_postings(spark: SparkSession, seg_dir: str,
     rebuilds the dictionary and postings from the UNION of the input
     segments' partials under the merged corpus stats). The source is the
     segment's ``tf_partial`` table when it exists (no-positions builds),
-    else the raw ``pos_partial`` table with tf derived in-task (round-7
-    v4: positional builds skip the tf shuffle entirely). Returns
-    ``(n_terms_total, built_groups)``."""
+    else the raw ``pos_partial`` table with tf derived in-task. Each
+    bucket group is ONE mapInArrow job of per-bucket tasks
+    (:func:`_encode_bucket_task_fn`) that write both the postings and the
+    term_dict. Returns ``(n_terms_total, built_groups, encode_stats)``,
+    the last one stats row per bucket encoded in this run."""
     tf_dir = os.path.join(seg_dir, "tf_partial")
-    pos_dir = os.path.join(seg_dir, "pos_partial")
-    have_tf = os.path.isdir(tf_dir)
-    src_dir, src_kind = (tf_dir, "tf") if have_tf else (pos_dir, "pos")
-    # tf rows as a DataFrame — only the FALLBACK paths evaluate this (the
-    # derived form re-aggregates from positions on the fly)
-    tf_stored = (spark.read.parquet(tf_dir) if have_tf else
-                 spark.read.parquet(pos_dir).drop("pos")
-                 .groupBy("bucket", "field", "term", "doc_id", "dl")
-                 .agg(F.count("*").alias("tf")))
-
-    # -- stage 4: term dictionary + WAND term upper bounds ------------------
+    src_dir, src_kind = ((tf_dir, "tf") if os.path.isdir(tf_dir)
+                         else (os.path.join(seg_dir, "pos_partial"), "pos"))
     term_dict_path = os.path.join(seg_dir, "term_dict")
-
-    def _write_term_dict(fb_buckets: list):
-        """JVM term-dictionary aggregation for the SHUFFLED-path buckets
-        only (the direct per-bucket tasks emit their own dictionary
-        rows); dynamic partition overwrite touches just these bucket
-        dirs."""
-        if done("stage_termdict_fb.done"):
-            return
-        k1, b = S.K1, S.B
-        # per-FIELD corpus stats drive the bounds (literal-map lookup)
-        n_col = F.create_map(*[x for fid, (nf, _af) in field_stats.items()
-                               for x in (F.lit(fid), F.lit(nf))])[F.col("field")]
-        avgdl_col = F.create_map(*[x for fid, (_nf, af) in field_stats.items()
-                                   for x in (F.lit(fid), F.lit(af))])[F.col("field")]
-        idf = F.log(F.lit(1.0) + (n_col - F.col("df") + 0.5)
-                    / (F.col("df") + 0.5))
-        # upper bound: max tf paired with min dl dominates any real (tf, dl)
-        smax = (idf * F.col("max_tf")
-                / (F.col("max_tf") + k1 * (1 - b + b * F.col("min_dl")
-                                           / avgdl_col)))
-        from pyspark.sql.window import Window
-        # dense int64 term_id per bucket (deterministic: ordered by
-        # (field, term); globally unique via the bucket prefix). The encode
-        # shuffle carries this id instead of the term string; per-bucket
-        # windows stay bounded because n_buckets scales with the cluster.
-        w_tid = Window.partitionBy("bucket").orderBy("field", "term")
-        # max REAL tf-normalization over actual (tf, dl) postings — a far
-        # tighter cap on the achievable WAND θ than the (max_tf, min_dl)
-        # pairing (θ_t can never exceed idf·max_tfn_real); free here since
-        # tf_stored rows carry the real pairs
-        tfn_real = (F.col("tf")
-                    / (F.col("tf") + k1 * (1 - b + b * F.col("dl")
-                                           / avgdl_col)))
-        _po_key = "spark.sql.sources.partitionOverwriteMode"
-        _po_prev = spark.conf.get(_po_key, "static")
-        spark.conf.set(_po_key, "dynamic")
-        try:
-            (tf_stored.where(F.col("bucket").isin(fb_buckets))
-               .groupBy("bucket", "field", "term")
-               .agg(F.count("*").cast("double").alias("df"),
-                    F.sum("tf").cast("long").alias("cf"),
-                    F.max("tf").cast("double").alias("max_tf"),
-                    F.min("dl").cast("double").alias("min_dl"),
-                    F.max(tfn_real).alias("max_tfn_real"))
-               .withColumn("max_score_ub", smax)
-               .withColumn("term_id",
-                           F.row_number().over(w_tid).cast("long")
-                           + F.col("bucket").cast("long") * F.lit(1 << 40))
-               .sortWithinPartitions("bucket", "field", "term")
-               .write.mode("overwrite").partitionBy("bucket")
-               # small row groups: the serving reader's prefix/fuzzy
-               # expansion scans term_dict by term RANGE — with sorted
-               # rows the parquet min/max stats prune the dictionary scan
-               # to a handful of row groups instead of decoding the whole
-               # vocabulary (measured 10 s/call at a 5M-term dict; 4 MiB
-               # balances prune granularity against write overhead)
-               .option("parquet.block.size", str(4 << 20))
-               .parquet(term_dict_path))
-        finally:
-            spark.conf.set(_po_key, _po_prev)
-        mark("stage_termdict_fb.done")
-
-    # -- stage 5: block encode, per bucket-group jobs -----------------------
     groups = [sorted(range(n_buckets))[i::n_groups] for i in range(n_groups)]
     postings_path = os.path.join(seg_dir, "postings")
     n_levels = 8 if impact_order else 1
     built_groups = 0
-    # PER-BUCKET MIXED STRATEGY (round-7 v4): buckets whose on-disk
-    # source fits the memory-aware per-task cap encode DIRECT (pyarrow
-    # in-task — no shuffle, no JVM↔Python row conversion, term_dict rows
-    # emitted by the task; see _encode_bucket_task_fn); oversized buckets
-    # — typically the one holding a planet-scale stopword, whose rows no
-    # bucketing can split — go through the SHUFFLED encoder whose
-    # per-task memory is capped by salt_target via the
-    # (field, term, salt) repartition (this also removes the straggler a
-    # single giant direct task would be). broadcast_term_limit <= 0
-    # forces everything onto the shuffled path (tests).
-    sizes: dict[int, int] = {}
-    if os.path.isdir(src_dir):
-        for d in os.listdir(src_dir):
-            p = os.path.join(src_dir, d)
-            if d.startswith("bucket=") and os.path.isdir(p):
-                sizes[int(d.split("=", 1)[1])] = sum(
-                    os.path.getsize(os.path.join(p, f))
-                    for f in os.listdir(p))
-    # the split is PERSISTED per segment: MemAvailable changes between a
-    # crash and its resume must not flip a bucket's path (a flipped
-    # bucket could skip both term_dict writers)
-    split_path = os.path.join(seg_dir, "_ckpt", "encode_split.json")
-    if os.path.exists(split_path):
-        with open(split_path) as f:
-            fb_all = json.load(f)["fb_buckets"]
-        direct_set = set(range(n_buckets)) - set(fb_all)
-    else:
-        cap = _direct_bucket_cap(spark.sparkContext.defaultParallelism,
-                                 n_buckets)
-        if broadcast_term_limit > 0:
-            direct_set = {b for b in range(n_buckets)
-                          if sizes.get(b, 0) <= cap}
-        else:
-            direct_set = set()
-        fb_all = [b for b in range(n_buckets) if b not in direct_set]
-        with open(split_path, "w") as f:
-            json.dump({"fb_buckets": fb_all}, f)
-    if fb_all:
-        _write_term_dict(fb_all)          # the shuffled path's dim side
-        lap("term_dict_fb")
-    term_df = (spark.read.parquet(term_dict_path)
-               .select("term", "field", "bucket", "df")
-               if fb_all else None)
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    enc = _encode_stream_fn(field_stats, block_size, n_levels,
-                            n_buckets, salt_target)
-    # Arrow batch size for the shuffled boundary: measured U-shape —
-    # 64k-row batches allocate ~33 MB bursts JVM-side and stall on
-    # GCLocker, 4k pays per-batch overhead; 16k is the sweet spot for
-    # these narrow rows (guide §4.2). Restored after the encode jobs.
-    _arrow_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    _arrow_prev = spark.conf.get(_arrow_key)
-    spark.conf.set(_arrow_key, "16384")
-    lean = ["field", "term", "doc_id",
-            F.col("dl").cast("int").alias("dl"),
-            F.col("tf").cast("int").alias("tf")]
-    try:
-        for gi, buckets in enumerate(groups):
-            if done(f"group_{gi}.done"):
-                continue
-            d_buckets = [b for b in buckets if b in direct_set]
-            f_buckets = [b for b in buckets if b not in direct_set]
-            if d_buckets:
-                spark.sparkContext.setJobDescription(
-                    f"encode group {gi}: direct per-bucket "
-                    f"({len(d_buckets)} tasks)")
-                task = _encode_bucket_task_fn(
-                    src_dir, src_kind,
-                    os.path.join(postings_path, f"group={gi}"),
-                    term_dict_path, d_buckets, field_stats, block_size,
-                    n_levels, salt_target)
-                res = (spark.range(0, len(d_buckets), 1, len(d_buckets))
-                       .mapInArrow(task, schema="bucket int, n_blocks long")
-                       .collect())
-                spark.sparkContext.setJobDescription(None)
-                if len(res) != len(d_buckets):
-                    raise RuntimeError(
-                        f"encode group {gi}: {len(res)}/{len(d_buckets)} "
-                        "bucket tasks reported")
-            if f_buckets:
-                spark.sparkContext.setJobDescription(
-                    f"encode group {gi}: shuffled fallback "
-                    f"(buckets {f_buckets})")
-                tf_g = tf_stored.where(F.col("bucket").isin(f_buckets))
-                n_part = max(n_shuffle // n_groups, len(buckets),
-                             2 * spark.sparkContext.defaultParallelism)
-                # attach df to every row with a SHUFFLE_HASH dim join
-                # (sort-merge would string-sort every posting row; the
-                # hash join builds only per-partition dictionary tables),
-                # then the ONE wide operation: co-locate each
-                # (field, term, salt) group — hot terms salted so no task
-                # sees more than ~salt_target rows of one term
-                dim = (term_df.where(F.col("bucket").isin(f_buckets))
-                       .select("field", "term", "df"))
-                stream = (tf_g.join(dim.hint("SHUFFLE_HASH"),
-                                    ["field", "term"])
-                          .withColumn("nsalt", F.greatest(
-                              F.lit(1),
-                              F.ceil(F.col("df")
-                                     / F.lit(float(salt_target)))
-                          ).cast("int"))
-                          .withColumn("salt", (F.col("doc_id")
-                                               % F.col("nsalt"))
-                                      .cast("int"))
-                          .select(*lean, "df", "salt")
-                          .repartition(n_part, "field", "term", "salt"))
-                blocks = stream.mapInArrow(enc, schema=POSTINGS_SCHEMA)
-                # compact: block rows are ~1000x fewer than postings, so
-                # this tiny extra shuffle buys one file per bucket —
-                # query-time file listing and footer reads stay
-                # O(buckets), not O(buckets x encode tasks). Dynamic
-                # partition overwrite: the direct buckets of this group
-                # live in the same dir.
-                _po_key = "spark.sql.sources.partitionOverwriteMode"
-                _po_prev = spark.conf.get(_po_key, "static")
-                spark.conf.set(_po_key, "dynamic")
-                try:
-                    (blocks.repartition(max(len(f_buckets), 1), "bucket")
-                           .write.mode("overwrite").partitionBy("bucket")
-                           .parquet(os.path.join(postings_path,
-                                                 f"group={gi}")))
-                finally:
-                    spark.conf.set(_po_key, _po_prev)
-                spark.sparkContext.setJobDescription(None)
-            mark(f"group_{gi}.done")
-            lap(f"encode_g{gi}")
-            built_groups += 1
-            if fail_after_group >= 0 and built_groups >= fail_after_group:
-                raise RuntimeError(f"injected failure after group {gi}")
-    finally:
-        spark.conf.set(_arrow_key, _arrow_prev)
-    if not done("stage_termdict.done"):
-        mark("stage_termdict.done")
+    encode_stats = []
+    for gi, buckets in enumerate(groups):
+        if done(f"group_{gi}.done"):
+            continue
+        if buckets:
+            spark.sparkContext.setJobDescription(
+                f"encode group {gi}: {len(buckets)} bucket tasks")
+            task = _encode_bucket_task_fn(
+                src_dir, src_kind, os.path.join(postings_path, f"group={gi}"),
+                term_dict_path, buckets, field_stats, block_size, n_levels,
+                salt_target)
+            res = (spark.range(0, len(buckets), 1, len(buckets))
+                   .mapInArrow(task, schema="bucket int, n_blocks long, "
+                               "chunks long, peak_rss_bytes long")
+                   .collect())
+            spark.sparkContext.setJobDescription(None)
+            if len(res) != len(buckets):
+                raise RuntimeError(
+                    f"encode group {gi}: {len(res)}/{len(buckets)} "
+                    "bucket tasks reported")
+            encode_stats += res
+        mark(f"group_{gi}.done")
+        lap(f"encode_g{gi}")
+        built_groups += 1
+        if fail_after_group >= 0 and built_groups >= fail_after_group:
+            raise RuntimeError(f"injected failure after group {gi}")
     n_terms_total = spark.read.parquet(term_dict_path).count()
     if not done("term_bounds.done"):
         # per-(field, term) MIN over blocks of the block upper-bound's
@@ -1145,7 +1006,7 @@ def _term_dict_and_postings(spark: SparkSession, seg_dir: str,
              .parquet(os.path.join(seg_dir, "term_bounds")))
         mark("term_bounds.done")
         lap("term_bounds")
-    return n_terms_total, built_groups
+    return n_terms_total, built_groups, encode_stats
 
 
 def _seg_id_of(name: str) -> int:
@@ -1193,7 +1054,8 @@ def _live_lock(out_dir: str):
 def _finalize_segment(spark: SparkSession, out_dir: str, seg_dir: str,
                       segment: str, term_df: DataFrame, groups: list,
                       postings_path: str, *, n_docs: int, avgdl: float,
-                      n_terms_total: int, built_groups: int, resume: bool,
+                      n_terms_total: int, built_groups: int,
+                      encode_stats: list, resume: bool,
                       append: bool, t0: float, stage_t: dict,
                       replace_segments: list | None = None) -> dict:
     """Stage 6: metrics + lineage + atomic live.json publish. With
@@ -1214,6 +1076,10 @@ def _finalize_segment(spark: SparkSession, out_dir: str, seg_dir: str,
         "skew_ratio": float(_sk["mx"]) / max(float(_sk["av"]), 1e-9),
         "groups_built": built_groups, "resumed": resume,
         "stage_sec": json.dumps(stage_t),
+        # over the buckets encoded in THIS run (a resume skips done groups)
+        "encode_chunks": sum(r["chunks"] for r in encode_stats),
+        "encode_peak_rss_bytes": max(
+            (r["peak_rss_bytes"] for r in encode_stats), default=0),
     }
     pd.DataFrame([metrics]).to_parquet(os.path.join(seg_dir, "metrics.parquet"))
     pd.DataFrame([{"group": gi, "buckets": json.dumps(g),
@@ -1422,7 +1288,6 @@ def maybe_compact(spark: SparkSession, out_dir: str, *,
 
 def compact_index(spark: SparkSession, out_dir: str, *,
                   n_groups: int = 1, resume: bool = False,
-                  broadcast_term_limit: int = 2_000_000,
                   segments: list | None = None) -> dict:
     """Merge live segments into one — the Lucene merge analogue for the
     incremental (LSM) index: query-time cost grows with segment count
@@ -1533,9 +1398,11 @@ def compact_index(spark: SparkSession, out_dir: str, *,
     lap("pos_partial")
     if not with_positions:
         # positional segments carry no tf_partial (round-7 v4: tf derives
-        # from the unified pos_partial in the per-bucket encode)
+        # from the unified pos_partial in the per-bucket encode); the
+        # encoder merges (field, term, doc_id)-sorted files
         if not done("stage_tf.done"):
             (union_read("tf_partial").repartition(n_buckets, "bucket")
+             .sortWithinPartitions("bucket", "field", "term", "doc_id")
              .write.mode("overwrite").partitionBy("bucket")
              .parquet(os.path.join(seg_dir, "tf_partial")))
             mark("stage_tf.done")
@@ -1552,11 +1419,10 @@ def compact_index(spark: SparkSession, out_dir: str, *,
                        "impact_order": impact_order,
                        "with_positions": with_positions}, f)
 
-    n_terms_total, built_groups = _term_dict_and_postings(
+    n_terms_total, built_groups, encode_stats = _term_dict_and_postings(
         spark, seg_dir, field_stats, n_buckets=n_buckets,
         block_size=block_size, salt_target=salt_target, n_groups=n_groups,
-        broadcast_term_limit=broadcast_term_limit, done=done, mark=mark,
-        lap=lap, impact_order=impact_order)
+        done=done, mark=mark, lap=lap, impact_order=impact_order)
     groups = [sorted(range(n_buckets))[i::n_groups] for i in range(n_groups)]
     term_df = spark.read.parquet(
         os.path.join(seg_dir, "term_dict")).select("field", "df")
@@ -1564,7 +1430,8 @@ def compact_index(spark: SparkSession, out_dir: str, *,
         spark, out_dir, seg_dir, segment, term_df, groups,
         os.path.join(seg_dir, "postings"), n_docs=n_docs,
         avgdl=sum_dl / n_docs, n_terms_total=n_terms_total,
-        built_groups=built_groups, resume=resume, append=False,
+        built_groups=built_groups, encode_stats=encode_stats,
+        resume=resume, append=False,
         t0=t0, stage_t=stage_t, replace_segments=in_segs)
     m["merged_segments"] = in_segs
     return m

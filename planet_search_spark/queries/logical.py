@@ -661,6 +661,9 @@ def _field_scores(tx: DataFrame, terms: list[str]) -> DataFrame:
     """
     uniq = list(dict.fromkeys(terms))
     fdocs = field_docs(tx)
+    if not uniq:              # no query terms: no (doc, field) scores
+        return fdocs.select("conv_id", "turn_idx", "field",
+                            F.lit(0.0).alias("score")).limit(0)
     stats = fdocs.groupBy("field").agg(
         F.count("*").cast("double").alias("n"),
         F.avg("dl").alias("avgdl"),

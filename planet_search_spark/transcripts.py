@@ -152,10 +152,12 @@ def clustered_corpus(spark: SparkSession, n_turns: int,
     BM25) while the long tail carries tf=1 in a LONG turn (low BM25) —
     real corpora look like this: topical documents cluster in doc-id space
     when ingest is stream/source ordered. With doc-ordered blocks the hot
-    prefix fills whole blocks per salt group, so θ (from the pure-hot
-    blocks' lower bounds) exceeds every cold block's upper bound and the
-    tail is never decoded. hot_docs=8192 keeps >=4 full 128-doc blocks per
-    salt group even at nsalt=16 (df=10^6 at the default salt_target).
+    prefix fills whole blocks, so θ (from the pure-hot blocks' lower
+    bounds) exceeds every cold block's upper bound and the tail is never
+    decoded. Salt groups are contiguous doc_id ranges of salt_target
+    postings, so the hot prefix lands in the first salt group(s):
+    hot_docs=8192 is 64 full 128-doc blocks at the head of salt group 0 at
+    the default salt_target (65,536), at any corpus size.
     """
     d = F.col("id")
     key = F.md5(d.cast("string"))

@@ -5,7 +5,6 @@ and crash-resume == single-shot build (the double-build E2E analogue,
 from __future__ import annotations
 
 import glob
-import json
 import os
 
 import pytest
@@ -228,6 +227,15 @@ def test_dismax_fields_segment_matches_logical(spark, corpus, index_dir, query):
         got[cols].sort_values(cols).reset_index(drop=True), check_dtype=False)
 
 
+def test_field_scores_empty_terms(spark, corpus):
+    """An empty term list scores nothing: an empty frame with the normal
+    schema, not an error."""
+    from planet_search_spark.queries.logical import _field_scores
+    empty = _field_scores(corpus, [])
+    assert empty.dtypes == _field_scores(corpus, ["error"]).dtypes
+    assert empty.count() == 0
+
+
 def test_meta_field_only_terms_rank(spark, index_dir):
     """A term that never occurs in any text body (the role 'system') must
     still be retrievable through the meta field."""
@@ -306,16 +314,59 @@ def test_doc_ids_stable_and_dense(spark, corpus):
     assert a.sort_values(["conv_id", "turn_idx"]).doc_id.is_monotonic_increasing
 
 
-def test_resume_after_crash_identical(spark, corpus, index_dir, tmp_path):
+# the build settings the crash/resume and tiny-chunk tests share: tiny
+# salt_target + small blocks, so the hottest terms span several salt groups
+BUILD_KW = dict(n_buckets=8, block_size=16, salt_target=64, n_groups=3)
+# below both salt_target and the largest term's posting count: every bucket
+# streams in many chunks and the hottest terms take the big-term path
+TINY_CHUNK_ROWS = 5
+
+
+@pytest.fixture(scope="module")
+def single_shot_dir(spark, corpus, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("single"))
+    build_index(spark, corpus, out, **BUILD_KW)
+    return out
+
+
+def _assert_artifacts_identical(spark, dir_a, dir_b):
+    """postings and term_dict equal as row multisets on every column
+    (bucket and group ride the hive directories)."""
+    seg_a = glob.glob(os.path.join(dir_a, "segments", "*"))[0]
+    seg_b = glob.glob(os.path.join(dir_b, "segments", "*"))[0]
+    for sub in ("postings", "term_dict"):
+        a = spark.read.parquet(os.path.join(seg_a, sub))
+        b = spark.read.parquet(os.path.join(seg_b, sub))
+        assert sorted(a.columns) == sorted(b.columns), sub
+        b = b.select(a.columns)
+        assert a.count() > 0, sub
+        assert a.exceptAll(b).count() == 0, sub
+        assert b.exceptAll(a).count() == 0, sub
+
+
+@pytest.mark.parametrize("chunk_rows", [None, TINY_CHUNK_ROWS],
+                         ids=["default_chunks", "tiny_chunks"])
+def test_resume_after_crash_identical(spark, corpus, index_dir,
+                                      single_shot_dir, tmp_path,
+                                      monkeypatch, chunk_rows):
+    import planet_search_spark.indexing.build as B
+    if chunk_rows:           # every bucket encodes in many chunks
+        monkeypatch.setattr(B, "_CHUNK_ROWS", chunk_rows)
     out2 = str(tmp_path / "idx2")
     with pytest.raises(RuntimeError, match="injected failure"):
-        build_index(spark, corpus, out2, n_buckets=8, block_size=16,
-                    salt_target=64, n_groups=3, fail_after_group=1)
+        build_index(spark, corpus, out2, fail_after_group=1, **BUILD_KW)
     assert not os.path.exists(os.path.join(out2, "live.json")), \
         "crashed build must not publish"
-    m = build_index(spark, corpus, out2, n_buckets=8, block_size=16,
-                    salt_target=64, n_groups=3, resume=True)
+    # a bucket task killed mid-write leaves a partial file behind in a
+    # group the crash did not finish
+    stale = os.path.join(out2, "segments", "seg_1", "postings", "group=1",
+                         "bucket=1")
+    os.makedirs(stale, exist_ok=True)
+    with open(os.path.join(stale, "part-0.parquet.tmp"), "wb") as f:
+        f.write(b"partial")
+    m = build_index(spark, corpus, out2, resume=True, **BUILD_KW)
     assert m["groups_built"] == 2  # only the missing groups were rebuilt
+    _assert_artifacts_identical(spark, single_shot_dir, out2)
     # resumed index answers identically to the single-shot one
     for q in ["error timeout retry", "spark merge"]:
         a = E.bm25_topk(spark, index_dir, q, k=10, hydrate=False).toPandas()
@@ -324,78 +375,51 @@ def test_resume_after_crash_identical(spark, corpus, index_dir, tmp_path):
         assert (a.score - b.score).abs().max() < 1e-12
 
 
-def test_bigvocab_join_fused_encode_identical(spark, corpus, index_dir,
-                                              tmp_path):
-    """The bounded-memory SHUFFLED encode path (shuffled-hash dim join
-    attaches df, the (field, term, salt) repartition co-locates groups,
-    the JVM term dictionary is the dim side) must produce an index
-    answering identically to the default direct per-bucket path."""
-    out2 = str(tmp_path / "bigvocab")
-    build_index(spark, corpus, out2, n_buckets=8, block_size=16,
-                n_groups=3, broadcast_term_limit=0)  # force the SHJ path
+@pytest.mark.parametrize("with_positions", [True, False],
+                         ids=["pos_partial", "tf_partial"])
+def test_tiny_chunks_artifact_identical(spark, corpus, single_shot_dir,
+                                        tmp_path, monkeypatch,
+                                        with_positions):
+    """The encoder's memory bound is a chunk of postings, and the chunk
+    size must not show in the index. With _CHUNK_ROWS below both the
+    largest term's posting count and salt_target, every bucket streams in
+    many chunks and the hottest terms are folded, then re-read and encoded
+    a salt group per chunk (one term split across chunks). The result
+    must be artifact-identical to a default build, from either source
+    (sorted pos_partial, or sorted tf_partial without positions), and
+    answer identically."""
+    import planet_search_spark.indexing.build as B
+    kw = dict(BUILD_KW, with_positions=with_positions)
+    if with_positions:
+        out_a = single_shot_dir
+    else:
+        out_a = str(tmp_path / "default")
+        build_index(spark, corpus, out_a, **kw)
+    monkeypatch.setattr(B, "_CHUNK_ROWS", TINY_CHUNK_ROWS)
+    out_b = str(tmp_path / "tiny")
+    m = build_index(spark, corpus, out_b, **kw)
+    seg_a = glob.glob(os.path.join(out_a, "segments", "*"))[0]
+    max_df = (spark.read.parquet(os.path.join(seg_a, "term_dict"))
+              .agg(F.max("df")).first()[0])
+    assert max_df > kw["salt_target"] > TINY_CHUNK_ROWS, max_df
+    import pandas as pd
+    default_chunks = pd.read_parquet(
+        os.path.join(seg_a, "metrics.parquet")).encode_chunks.iloc[0]
+    assert default_chunks == kw["n_buckets"]   # one chunk per bucket
+    assert m["encode_chunks"] > 10 * default_chunks, m
+    _assert_artifacts_identical(spark, out_a, out_b)
     for q in ["error timeout retry", "spark merge", "the data",
               "null pointer exception"]:
-        a = E.bm25_topk(spark, index_dir, q, k=15, hydrate=False).toPandas()
-        b = E.bm25_topk(spark, out2, q, k=15, hydrate=False).toPandas()
-        assert list(a.doc_id) == list(b.doc_id), q
-        assert (a.score - b.score).abs().max() < 1e-12
-    # positional phrase reads pos_partial — unaffected but assert anyway
-    pa = sorted(r.doc_id for r in
-                E.phrase_match(spark, index_dir, "out of memory").collect())
-    pb = sorted(r.doc_id for r in
-                E.phrase_match(spark, out2, "out of memory").collect())
-    assert pa == pb and len(pa) > 0
-
-
-def test_mixed_direct_fallback_encode_identical(spark, corpus, tmp_path,
-                                                monkeypatch):
-    """Round-7 mixed strategy: when SOME buckets exceed the memory-aware
-    direct cap (the planet-scale-stopword bucket case), those buckets
-    take the shuffled path while the rest encode direct — in the SAME
-    build. The mixed index must be artifact-identical to an all-direct
-    build (term_dict compared minus the stored max_score_ub, which
-    carries a documented 1-ulp Math.log-vs-libm drift between the JVM
-    and numpy writers)."""
-    import planet_search_spark.indexing.build as B
-    out_a = str(tmp_path / "alldirect")
-    build_index(spark, corpus, out_a, n_buckets=8, block_size=16,
-                salt_target=64, n_groups=2)
-    # pick a cap between the smallest and largest bucket so the split is
-    # genuinely mixed
-    seg = glob.glob(os.path.join(out_a, "segments", "*"))[0]
-    pos = os.path.join(seg, "pos_partial")
-    sizes = sorted(
-        sum(os.path.getsize(os.path.join(pos, d, f))
-            for f in os.listdir(os.path.join(pos, d)))
-        for d in os.listdir(pos) if d.startswith("bucket="))
-    cap = sizes[len(sizes) // 2]
-    monkeypatch.setattr(B, "_direct_bucket_cap", lambda cores, nb: cap)
-    out_b = str(tmp_path / "mixed")
-    build_index(spark, corpus, out_b, n_buckets=8, block_size=16,
-                salt_target=64, n_groups=2)
-    split = json.load(open(glob.glob(os.path.join(
-        out_b, "segments", "*", "_ckpt", "encode_split.json"))[0]))
-    assert 0 < len(split["fb_buckets"]) < 8, split  # genuinely mixed
-    seg_a = glob.glob(os.path.join(out_a, "segments", "*"))[0]
-    seg_b = glob.glob(os.path.join(out_b, "segments", "*"))[0]
-    cols = ["bucket", "field", "term", "block_id", "n_docs", "first_doc",
-            "last_doc", "max_score", "max_tf", "min_dl", "min_tf",
-            "max_dl", "docs_bin", "tfs_bin", "dls_bin"]
-    pa_ = spark.read.parquet(os.path.join(seg_a, "postings")).select(cols)
-    pb_ = spark.read.parquet(os.path.join(seg_b, "postings")).select(cols)
-    assert pa_.exceptAll(pb_).count() == 0
-    assert pb_.exceptAll(pa_).count() == 0
-    ta = spark.read.parquet(os.path.join(seg_a, "term_dict")) \
-        .drop("max_score_ub")
-    tb = spark.read.parquet(os.path.join(seg_b, "term_dict")) \
-        .drop("max_score_ub")
-    assert ta.exceptAll(tb).count() == 0
-    assert tb.exceptAll(ta).count() == 0
-    for q in ["error timeout retry", "the data"]:
         a = E.bm25_topk(spark, out_a, q, k=15, hydrate=False).toPandas()
         b = E.bm25_topk(spark, out_b, q, k=15, hydrate=False).toPandas()
         assert list(a.doc_id) == list(b.doc_id), q
-        assert (a.score - b.score).abs().max() < 1e-12
+        assert list(a.score) == list(b.score), q
+    if with_positions:
+        pa_ = sorted(r.doc_id for r in
+                     E.phrase_match(spark, out_a, "out of memory").collect())
+        pb_ = sorted(r.doc_id for r in
+                     E.phrase_match(spark, out_b, "out of memory").collect())
+        assert pa_ == pb_ and len(pa_) > 0
 
 
 def test_metrics_and_lineage_written(index_dir):
@@ -406,6 +430,10 @@ def test_metrics_and_lineage_written(index_dir):
     assert m.skew_ratio.iloc[0] >= 1.0
     lin = pd.read_parquet(os.path.join(seg, "lineage.parquet"))
     assert len(lin) == 3
+    # encode observability: chunks summed, peak task RSS maxed over buckets
+    assert m.encode_chunks.iloc[0] >= 8        # >= one chunk per bucket
+    if os.path.exists("/proc/self/status"):
+        assert m.encode_peak_rss_bytes.iloc[0] > 0
 
 
 # -- impact-ordered block layout (round 3): WAND prunes on UNIFORM corpora ---
