@@ -20,16 +20,13 @@ reference's Elasticsearch analyzer chain (planet-search
 * ``edge_ngram_2_15`` prefix field   — index-time edge n-grams, min 2 max 15
   (``ElasticsearchHelper.java:115-127``); the search analyzer omits it
 
-Three equivalent implementations, golden-tested against each other:
+Two equivalent implementations, golden-tested against each other:
 
 1. :func:`py_tokens` / :func:`py_keyword` — pure Python, used on the driver
    for query-string analysis (tiny input).
 2. :func:`tokens_col` / :func:`keyword_col` — native Spark Column
    expressions (JVM-side, whole-stage-codegen; the fast path for the index
    build — zero Python in the hot loop).
-3. :func:`tokens_pandas_udf` — Arrow-vectorized pandas UDF, the explicit
-   "vectorized UDF" variant for environments where the expression form is
-   not available; also the template for heavier per-token work.
 
 Plus :func:`sql_tokens_expr` / :func:`sql_keyword_expr` which emit the exact
 same chain as ANSI/DuckDB SQL, so the driver's DuckDB oracle applies the
@@ -41,7 +38,6 @@ from __future__ import annotations
 
 import re
 import unicodedata
-from functools import lru_cache
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -181,30 +177,7 @@ def edge_ngrams_col(token_col: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# 3. Arrow-vectorized pandas UDF variant
-# ---------------------------------------------------------------------------
-
-
-@lru_cache(maxsize=1)
-def tokens_pandas_udf():
-    """Vectorized (Arrow) analyzer UDF: string series -> array<string>.
-
-    Equivalent to :func:`tokens_col`; kept for heavier per-token work and as
-    the mandated vectorized-UDF form. Lazily created so importing this module
-    never requires an active SparkSession.
-    """
-    import pandas as pd  # noqa: F401 — needed at runtime for the hint eval
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    def _analyze(s):
-        return s.map(py_tokens)
-
-    _analyze.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    return pandas_udf(_analyze, "array<string>")
-
-
-# ---------------------------------------------------------------------------
-# 4. DuckDB/ANSI SQL emitters (oracle side — same frozen chain)
+# 3. DuckDB/ANSI SQL emitters (oracle side — same frozen chain)
 # ---------------------------------------------------------------------------
 
 

@@ -400,7 +400,6 @@ def _encoder_core(field_stats: dict, block_size: int, n_levels: int,
     """
     import pyarrow as pa
 
-    k1, b = S.K1, S.B
     max_f = max(field_stats) + 1
     n_arr = np.zeros(max_f)
     avgdl_arr = np.ones(max_f)
@@ -423,10 +422,6 @@ def _encoder_core(field_stats: dict, block_size: int, n_levels: int,
         ("tfs_bin", pa.binary()), ("dls_bin", pa.binary())])
     lvl_min_df = float(8 * block_size)
 
-    def tfn_of(tf: np.ndarray, dl: np.ndarray, f: np.ndarray) -> np.ndarray:
-        # real tf-normalization tf / (tf + k1 * (1 - b + b * dl / avgdl))
-        return tf / (tf + k1 * ((1.0 - b) + b * dl / avgdl_arr[f]))
-
     def term_stats(p: dict, starts: np.ndarray) -> dict:
         tf, dl = p["tf"], p["dl"]
         return {
@@ -437,14 +432,13 @@ def _encoder_core(field_stats: dict, block_size: int, n_levels: int,
             "max_tf": np.maximum.reduceat(tf, starts).astype(np.float64),
             "min_dl": np.minimum.reduceat(dl, starts).astype(np.float64),
             "max_tfn_real": np.maximum.reduceat(
-                tfn_of(tf, dl, p["field"]), starts)}
+                S.tfn(tf, dl, avgdl_arr[p["field"]]), starts)}
 
     def term_batch(st: dict, first_id: int) -> pa.RecordBatch:
         df, max_tf, min_dl = st["df"], st["max_tf"], st["min_dl"]
-        n_f, avg_f = n_arr[st["field"]], avgdl_arr[st["field"]]
-        idf = np.log(1.0 + (n_f - df + 0.5) / (df + 0.5))
         # upper bound: max tf paired with min dl dominates any real (tf, dl)
-        smax = idf * max_tf / (max_tf + k1 * (1 - b + b * min_dl / avg_f))
+        smax = S.bm25(max_tf, min_dl, df, n_arr[st["field"]],
+                      avgdl_arr[st["field"]])
         return pa.RecordBatch.from_arrays([
             pa.array(st["field"].astype(np.int32), type=pa.int32()),
             st["term"], pa.array(df, type=pa.float64()),
@@ -474,7 +468,8 @@ def _encoder_core(field_stats: dict, block_size: int, n_levels: int,
             lvls = np.where(
                 dfs >= lvl_min_df,
                 np.minimum(n_levels - 1,
-                           np.floor(tfn_of(tfs, dls, fields) * n_levels)),
+                           np.floor(S.tfn(tfs, dls, avgdl_arr[fields])
+                                    * n_levels)),
                 0.0).astype(np.int64)
         else:
             lvls = np.zeros(n, dtype=np.int64)
@@ -489,9 +484,7 @@ def _encoder_core(field_stats: dict, block_size: int, n_levels: int,
         enc = codec.encode_blocks_multi_buffers(doc_ids, tfs, dls, gs,
                                                 block_size)
         rs = enc["row_start"]
-        n_f, avg = n_arr[fields], avgdl_arr[fields]
-        idf = np.log(1.0 + (n_f - dfs + 0.5) / (dfs + 0.5))
-        scores = idf * tfs / (tfs + k1 * (1 - b + b * dls / avg))
+        scores = S.bm25(tfs, dls, dfs, n_arr[fields], avgdl_arr[fields])
         return pa.RecordBatch.from_arrays([
             pa.array(fields[rs].astype(np.int32), type=pa.int32()),
             p["term"].take(pa.array(starts[gids[rs]])),

@@ -9,9 +9,12 @@ Read path (mirrors the ES search template execution, SURVEY.md §3.2):
 2. bucket-prune + term-filter the block table (partition pruning on
    ``bucket=``, min/max row-group stats on ``term``);
 3. [optional] block-max WAND prune (below);
-4. Arrow-vectorized block decode (numpy varbyte) -> (term, doc_id, tf, dl);
-   dl ships inside the block so scoring needs NO doc-stats join;
-5. per-term BM25 column math (broadcast df join), groupBy(doc_id).sum;
+4. one ``mapInArrow`` UDF decodes each (field, term)'s blocks and scores
+   them with the numpy code the serving reader runs (:mod:`.kernel`
+   decode, :func:`scoring.bm25` under the field's own corpus stats and the
+   collected global df) -> (field, term, doc_id, s); dl ships inside the
+   block so scoring needs NO doc-stats join;
+5. per-doc aggregation in the JVM: groupBy(doc_id).sum;
 6. top-k via orderBy(...).limit(k) — Spark's distributed
    TakeOrderedAndProject heap — then a broadcast hydration join against
    doc_store for the k winners only.
@@ -44,10 +47,11 @@ main job):
   never changes results.
 * θ = max over terms t of θ_t, where θ_t is the k-th largest REAL decoded
   per-term score among the postings of t's best blocks by descending
-  UPPER bound (phase 1 is metadata-only; phase 2 fetches only the winning
-  blocks' tf/dl payloads, bounded by the same row limit). ANY subset of
-  t's postings yields a valid θ_t — adding postings only raises the k-th
-  largest — and picking high-ub blocks finds the best real postings. Any
+  stored max REAL score (:func:`kernel.theta_blocks`; phase 1 is
+  metadata-only; phase 2 fetches only the winning blocks' tf/dl payloads,
+  bounded by the same row limit). ANY subset of t's postings yields a
+  valid θ_t — adding postings only raises the k-th largest — and picking
+  high-max-score blocks finds the best real postings. Any
   k real docs' total scores are ≥ their t-contributions ≥ θ_t, so θ
   lower-bounds the true k-th best total.
   Blocks of ONE term are doc-disjoint (each doc appears once per posting
@@ -77,19 +81,17 @@ in tests (including a multi-segment index where blocks provably drop).
 from __future__ import annotations
 
 import json
-import math
 import os
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import analysis as A
 from .. import scoring as S
-from ..indexing import codec
 from ..indexing.build import FIELDS, FIELD_BOOSTS, bucket_of
+from . import kernel as K
 
 TEXT_FIELD = FIELDS["text"]
 
@@ -191,42 +193,6 @@ def _load_blocks(spark: SparkSession, idx: IndexMeta, terms: list[str],
             .where(F.col("term").isin(list(set(terms)))))
 
 
-def _decode_blocks(blocks: DataFrame) -> DataFrame:
-    """Arrow-batched block decode -> one row per (term, doc_id).
-
-    Vectorized per TERM, not per block: within each Arrow batch all of a
-    term's block payloads are byte-concatenated and decoded in ONE varbyte
-    pass per stream (varbyte is self-delimiting). Absolute doc_ids come from
-    :func:`codec.decode_positions`'s segmented cumsum with per-block doc
-    counts as segment lengths — the delta chain restarts with an absolute id
-    at every block start by construction. Same trick as ``serve.py``;
-    ~#query-terms iterations per batch instead of ~#blocks.
-    """
-
-    def decode(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            outs = []
-            for (fid, t), g in pdf.groupby(["field", "term"], sort=False):
-                n_docs = g["n_docs"].to_numpy(np.int64)
-                ids = codec.decode_positions(b"".join(g["docs_bin"]), n_docs)
-                outs.append(pd.DataFrame({
-                    "field": np.repeat(np.int32(fid), ids.size),
-                    "term": np.repeat(t, ids.size),
-                    "doc_id": ids,
-                    "tf": codec.varbyte_decode(
-                        b"".join(g["tfs_bin"])).astype(np.float64),
-                    "dl": codec.varbyte_decode(
-                        b"".join(g["dls_bin"])).astype(np.float64)}))
-            yield pd.concat(outs, ignore_index=True)
-
-    return (blocks.select("field", "term", "n_docs",
-                          "docs_bin", "tfs_bin", "dls_bin")
-            .mapInPandas(decode, schema="field int, term string, "
-                                        "doc_id long, tf double, dl double"))
-
-
 # indexes whose θ machinery already ran once in this process (key =
 # tuple(seg_dirs)); the first run fuses the θ payload fetch into the
 # metadata heap job to halve cold-path job count — see _wand_prune_blocks
@@ -253,15 +219,50 @@ def _scored_postings(idx: IndexMeta, blocks: DataFrame,
                      df_map: dict[str, float]) -> DataFrame:
     """(field, term, doc_id, s) with exact per-field BM25 contributions.
 
-    ``df_map`` holds the GLOBAL per-(field, term) doc frequencies (summed
-    across segments, collected once — one tiny row per query term); lookups
-    are literal map projections, so scoring adds no join to the plan, and
-    each field is scored under its OWN corpus stats (per-field Lucene
-    similarity semantics)."""
-    decoded = _decode_blocks(blocks)
-    return decoded.withColumn("s", S.bm25_term_score(
-        F.col("tf"), _df_map_col(df_map), F.col("dl"),
-        _field_lit_col(idx, 0), _field_lit_col(idx, 1)))
+    One Arrow UDF decodes and scores: per (field, term) in each Arrow batch
+    it decodes the term's blocks with :func:`kernel.decode_blocks` (one
+    vectorized pass per stream, not per block) and scores them with
+    :func:`scoring.bm25` — the serving reader's exact code. ``df_map``
+    holds the GLOBAL per-(field, term) doc frequencies (summed across
+    segments, collected once — one tiny row per query term) and each field
+    is scored under its OWN corpus stats (per-field Lucene similarity
+    semantics); both ride the closure, so scoring adds no join to the
+    plan. Block payloads cross the JVM↔Python boundary once and only
+    (doc_id, s) rows come back."""
+    field_stats = idx.field_stats()
+
+    def score(batches):
+        import pyarrow as pa
+        for b in batches:
+            c = b.to_pydict()
+            rows: dict = {}
+            for i, key in enumerate(zip(c["field"], c["term"])):
+                rows.setdefault(key, []).append(i)
+            keys, ids, ss = list(rows), [], []
+            for fid, t in keys:
+                ix = rows[(fid, t)]
+                d, tfs, dls = K.decode_blocks(
+                    *([c[n][i] for i in ix] for n in
+                      ("n_docs", "docs_bin", "tfs_bin", "dls_bin")))
+                ids.append(d)
+                # _fkey inlined: a module-level reference would import
+                # this whole module into every Python worker
+                ss.append(S.bm25(tfs, dls, df_map[f"{fid}:{t}"],
+                                 *field_stats[fid]))
+            if not keys:
+                continue
+            owner = np.repeat(np.arange(len(keys)), [a.size for a in ids])
+            yield pa.RecordBatch.from_arrays([
+                pa.array(np.array([f for f, _ in keys],
+                                  dtype=np.int32)[owner]),
+                pa.array([t for _, t in keys]).take(pa.array(owner)),
+                pa.array(np.concatenate(ids)), pa.array(np.concatenate(ss))],
+                names=["field", "term", "doc_id", "s"])
+
+    return (blocks.select("field", "term", "n_docs",
+                          "docs_bin", "tfs_bin", "dls_bin")
+            .mapInArrow(score, "field int, term string, doc_id long, "
+                               "s double"))
 
 
 def _collect_term_stats(spark: SparkSession, idx: IndexMeta,
@@ -334,12 +335,8 @@ def _collect_term_stats(spark: SparkSession, idx: IndexMeta,
     for a in acc.values():
         if a["_mtr_nulls"] > 0:
             a["max_tfn_real"] = None
-        n_f, avgdl_f = field_stats[a["field"]]
-        df, tf, dl = a["df"], a["max_tf"], a["min_dl"]
-        # same expression order as scoring.bm25_term_score (JVM doubles)
-        idf = math.log(1.0 + (n_f - df + 0.5) / (df + 0.5))
-        tfn = tf / (tf + S.K1 * ((1.0 - S.B) + S.B * dl / avgdl_f))
-        a["max_score_ub"] = idf * tfn
+        a["max_score_ub"] = float(S.bm25(a["max_tf"], a["min_dl"], a["df"],
+                                         *field_stats[a["field"]]))
         del a["_mtr_nulls"], a["max_tf"], a["min_dl"]
         out.append(a)
     return out
@@ -394,9 +391,8 @@ def _wand_prune_blocks(blocks: DataFrame, stats: list, idx: IndexMeta,
     # tfn cannot affect correctness. NULL min_tfn / max_tfn_real
     # (pre-sidecar segments) disables the gate.
     def _idf(fk):
-        n_f, _af = field_stats[int(fk.split(":", 1)[0])]
-        dfv = df_map[fk]
-        return math.log(1.0 + (n_f - dfv + 0.5) / (dfv + 0.5))
+        return float(S.idf(df_map[fk],
+                           field_stats[int(fk.split(":", 1)[0])][0]))
     by_fk = {_fkey(r["field"], r["term"]): r for r in stats}
     if not force:
         caps = [(_idf(fk) * float(r["max_tfn_real"]))
@@ -454,47 +450,35 @@ def _wand_prune_blocks(blocks: DataFrame, stats: list, idx: IndexMeta,
     top = (blocks.select(*(meta_cols + ["tfs_bin", "dls_bin"] if fused
                            else meta_cols))
            .orderBy(F.desc("max_score")).limit(max(64, 4 * k))
-           .toPandas())
+           .collect())
+    by_term: dict = {}
+    for r in top:
+        by_term.setdefault((r["field"], r["term"]), []).append(r)
+    need = {}
+    for key_t, rs in by_term.items():
+        sel = K.theta_blocks([r["max_score"] for r in rs],
+                             [r["n_docs"] for r in rs], k)
+        if sel is not None:   # else < k postings in the collected top
+            need[key_t] = [rs[i] for i in sel]
+    if need and not fused:    # fused: the payloads already rode phase 1
+        want = {(f, t, r["block_id"]) for (f, t), rs in need.items()
+                for r in rs}
+        need = {}
+        for r in (blocks.where(
+                      F.col("term").isin(sorted({t for _f, t, _b in want}))
+                      & F.col("block_id").isin(
+                          sorted({b for _f, _t, b in want})))
+                  .select("field", "term", "block_id", "tfs_bin", "dls_bin")
+                  .collect()):
+            if (r["field"], r["term"], r["block_id"]) in want:
+                need.setdefault((r["field"], r["term"]), []).append(r)
     theta = 0.0
-    top["fkey"] = top["field"].astype(str) + ":" + top["term"]
-    need = []
-    for fk, g in top.groupby("fkey", sort=False):
-        cum = g["n_docs"].cumsum()
-        take = int(np.searchsorted(cum.to_numpy(), k) + 1)
-        sel = g.iloc[:take]
-        if int(sel["n_docs"].sum()) < k:
-            continue          # term has < k postings in the collected top
-        need.append(sel)
-    pay = None
-    if need:
-        want = pd.concat(need)
-        if fused:
-            pay = want        # payloads already rode phase 1
-        else:
-            keys = set(zip(want["field"], want["term"], want["block_id"]))
-            pay = (blocks.where(
-                       F.col("term").isin(sorted(set(want["term"])))
-                       & F.col("block_id").isin(
-                           sorted({int(b) for b in want["block_id"]})))
-                   .select("field", "term", "block_id",
-                           "tfs_bin", "dls_bin")
-                   .toPandas())
-            pay = pay[[(f, t, b) in keys for f, t, b in
-                       zip(pay["field"], pay["term"], pay["block_id"])]]
-            pay["fkey"] = pay["field"].astype(str) + ":" + pay["term"]
-    if pay is not None:
-        for fk, g in pay.groupby("fkey", sort=False):
-            tfs = codec.varbyte_decode(b"".join(g["tfs_bin"])).astype(float)
-            dls = codec.varbyte_decode(b"".join(g["dls_bin"])).astype(float)
-            if tfs.size < k:
-                continue
-            fid = int(g["field"].iloc[0])
-            n_f, avgdl_f = field_stats[fid]
-            dfv = df_map[fk]
-            idf = math.log(1.0 + (n_f - dfv + 0.5) / (dfv + 0.5))
-            s = idf * tfs / (tfs + S.K1 * (1 - S.B + S.B * dls / avgdl_f))
-            theta = max(theta,
-                        float(np.partition(s, s.size - k)[s.size - k]))
+    for (fid, t), rs in need.items():
+        _ids, tfs, dls = K.decode_blocks(None, None,
+                                         [r["tfs_bin"] for r in rs],
+                                         [r["dls_bin"] for r in rs])
+        theta = max(theta, K.kth_score(
+            S.bm25(tfs, dls, df_map[_fkey(fid, t)], *field_stats[fid]), k))
     if theta <= 0.0:
         return blocks, {"gated": False, "theta": 0.0}
     other_col = F.create_map(

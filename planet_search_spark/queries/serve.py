@@ -5,8 +5,13 @@ templates serve): index segments are built distributed, then any number of
 stateless searchers memory-map them for millisecond point queries.
 
 No Spark session involved: pyarrow datasets with bucket/term predicate
-pushdown + the same numpy varbyte codec. Results are EXACTLY the engine's
-(same blocks, same float64 math, same tie-break) — asserted in tests.
+pushdown, then the engine's own numpy code — :mod:`.kernel` (block decode,
+θ-witness blocks and θ_t, dense/sparse accumulation, top-k) and
+:func:`scoring.bm25`, the functions the engine's Arrow UDF and θ call.
+Corpus statistics come from :func:`engine.open_index`. Results are EXACTLY
+the engine's (same blocks, same float64 math, same tie-break) — asserted
+in tests. Bare BM25 and dis_max share one block-max WAND path
+(:meth:`LocalSearcher._dismax_pruned`).
 
 At 100 TB this is the fan-out pattern: each searcher owns a bucket range
 (the term-bucket partitioning is the shard key), the coordinator merges
@@ -17,7 +22,6 @@ from __future__ import annotations
 
 import hashlib
 import json
-import math
 import os
 import threading
 from collections import OrderedDict
@@ -28,8 +32,9 @@ import pyarrow.dataset as ds
 
 from .. import analysis as A
 from .. import scoring as S
-from ..indexing import codec
-from ..indexing.build import bucket_of
+from ..indexing.build import FIELDS, bucket_of
+from . import kernel as K
+from .engine import MAX_EXPANSIONS, TEXT_FIELD, open_index
 
 
 class _LRU(OrderedDict):
@@ -67,18 +72,6 @@ class _LRU(OrderedDict):
                 self.popitem(last=False)
 
 
-def _in_sorted(values: np.ndarray, sorted_arr: np.ndarray) -> np.ndarray:
-    """Membership mask of ``values`` in ascending ``sorted_arr`` by binary
-    search — O(n log m) with no allocation-heavy merge, vs ``np.isin``'s
-    concat-and-sort of BOTH arrays (measurable on the multi-million-key
-    position sets of stopword phrases)."""
-    if sorted_arr.size == 0:
-        return np.zeros(values.shape, dtype=bool)
-    ix = np.searchsorted(sorted_arr, values)
-    ix[ix == sorted_arr.size] = 0
-    return sorted_arr[ix] == values
-
-
 class LocalSearcher:
     """Stateless low-latency reader for one index directory (all segments)."""
 
@@ -90,34 +83,18 @@ class LocalSearcher:
         exactly the unsharded ranking (the ES shard model, where df/N are
         coordinated globally in effect via large uniform shards; here they
         are globally exact)."""
-        with open(os.path.join(out_dir, "live.json")) as f:
-            live = json.load(f)["segments"]
+        meta = open_index(out_dir)
+        live = [os.path.basename(sd) for sd in meta.seg_dirs]
         if segments is not None:
             unknown = set(segments) - set(live)
             if unknown:
                 raise ValueError(f"not live segments: {sorted(unknown)}")
-        self.seg_dirs = [os.path.join(out_dir, "segments", s)
-                         for s in (segments if segments is not None
-                                   else live)]
-        self.n_docs, self.sum_dl = 0, 0
-        self.n_buckets = None
-        self.fields: dict = {}   # field name -> {n_docs, sum_dl} (global)
-        for sd in [os.path.join(out_dir, "segments", s) for s in live]:
-            with open(os.path.join(sd, "corpus_stats.json")) as f:
-                cs = json.load(f)
-            self.n_docs += cs["n_docs"]
-            self.sum_dl += cs.get("sum_dl",
-                                  int(round(cs["avgdl"] * cs["n_docs"])))
-            for fname, st in cs.get("fields", {}).items():
-                acc = self.fields.setdefault(fname, {"n_docs": 0, "sum_dl": 0})
-                acc["n_docs"] += st["n_docs"]
-                acc["sum_dl"] += st["sum_dl"]
-            self.n_buckets = cs["n_buckets"]
-        if not self.fields:
-            raise ValueError(
-                f"index at {out_dir!r} predates the per-field segment "
-                "layout; rebuild it (corpus_stats.json lacks 'fields')")
-        self.avgdl = self.sum_dl / self.n_docs
+        self.seg_dirs = meta.seg_dirs if segments is None else [
+            os.path.join(out_dir, "segments", s) for s in segments]
+        self.n_docs, self.avgdl = meta.n_docs, meta.avgdl
+        self.n_buckets = meta.n_buckets
+        self.fields = meta.fields   # field name -> {n_docs, sum_dl} (global)
+        self._fstats = meta.field_stats()   # field_id -> (N, avgdl)
         # template config snapshot (update-templates-only analogue,
         # MainClass.java:50-63): query-side tunables — boosts, tiers,
         # function_score weights — pushed to a live index without a
@@ -134,12 +111,11 @@ class LocalSearcher:
         # facts — a shard computing df from its own postings would score
         # differently from the unsharded index and break the exact
         # coordinator merge
-        live_dirs = [os.path.join(out_dir, "segments", s) for s in live]
         self._is_shard = segments is not None and set(
             segments) != set(live)
         self._term_dicts = [ds.dataset(os.path.join(sd, "term_dict"),
                                        partitioning="hive")
-                            for sd in live_dirs]
+                            for sd in meta.seg_dirs]
         self._term_cache_cap = 4096
         # term -> decoded (ids, tfs, dls) / packed (doc_id, pos) keys —
         # true LRUs (not admission caps) so late-arriving hot terms are
@@ -183,15 +159,9 @@ class LocalSearcher:
         return out
 
     def _postings_arrays(self, terms: list[str], field_id: int = 0):
-        """term -> (doc_ids, tfs, dls) numpy arrays, merged over segments.
-
-        One vectorized decode per term per stream: all of a term's block
-        payloads are byte-concatenated and varbyte-decoded in a single pass
-        (varbyte is self-delimiting); absolute doc_ids come from a segmented
-        cumsum that resets at each block boundary — the delta chain restarts
-        with an absolute id at every block start by construction, which is
-        exactly :func:`codec.decode_positions`'s semantics.
-        """
+        """term -> (doc_ids, tfs, dls) numpy arrays, merged over segments,
+        decoded by :func:`kernel.decode_blocks` (one vectorized decode per
+        term per stream)."""
         cached = {}
         for t in terms:
             hit = self._term_cache.get((field_id, t))
@@ -215,8 +185,7 @@ class LocalSearcher:
                 a["t"].append(tb)
                 a["l"].append(lb)
         out = dict(cached)
-        empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64),
-                 np.empty(0, dtype=np.int64))
+        empty = (np.empty(0, dtype=np.int64), np.empty(0), np.empty(0))
         for t, a in acc.items():
             if not a["n"]:
                 # NEGATIVE cache: a term with no postings in this field
@@ -224,10 +193,7 @@ class LocalSearcher:
                 # not re-scan parquet on every warm query
                 self._term_cache.put((field_id, t), empty)
                 continue
-            n_docs = np.asarray(a["n"], dtype=np.int64)
-            ids = codec.decode_positions(b"".join(a["d"]), n_docs)
-            tfs = codec.varbyte_decode(b"".join(a["t"]))
-            dls = codec.varbyte_decode(b"".join(a["l"]))
+            ids, tfs, dls = K.decode_blocks(a["n"], a["d"], a["t"], a["l"])
             # normalize to doc-ascending order (an INVARIANT downstream
             # consumers exploit: ids are sorted AND unique, since blocks of
             # one term are doc-disjoint). Doc-ordered layouts arrive sorted
@@ -260,29 +226,16 @@ class LocalSearcher:
             self._filter_cache.put(key, hit)
         return hit
 
-    def _term_score(self, tfs: np.ndarray, dls: np.ndarray, df: float,
-                    n: float | None = None,
-                    avgdl: float | None = None) -> np.ndarray:
-        n = self.n_docs if n is None else n
-        avgdl = self.avgdl if avgdl is None else avgdl
-        idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-        return idf * tfs / (tfs + S.K1 * (1 - S.B + S.B * dls / avgdl))
-
-    def _field_stats(self, fname: str) -> tuple:
-        st = self.fields[fname]   # pre-field segments are rejected at open
-        n = st["n_docs"]
-        return float(n), (st["sum_dl"] / n) if n else 1.0
-
     # -- queries ---------------------------------------------------------------
 
     def _block_meta(self, terms: list[str], field_id: int) -> dict:
-        """term -> per-block METADATA lists (no payload bytes): n_docs,
-        (max_tf, min_dl) ub pair, stored max REAL score, and the block's
-        (segment, block_id) address. Phase 1 of serving-side WAND — the
-        payload columns are never read here (parquet is columnar), so the
-        scan is KBs even for a stopword."""
-        acc: dict[str, dict] = {t: {"n": [], "ub": [], "ms": [], "addr": []}
-                                for t in terms}
+        """term -> per-block METADATA (no payload bytes) of the terms that
+        have blocks: numpy ``n`` (n_docs), ``max_tf`` / ``min_dl`` (the ub
+        pair), ``ms`` (stored max REAL score), and the blocks' (segment,
+        block_id) ``addr`` list. Phase 1 of serving-side WAND — the payload
+        columns are never read here (parquet is columnar), so the scan is
+        KBs even for a stopword."""
+        acc: dict[str, list] = {t: [] for t in terms}
         cols = ["term", "n_docs", "max_tf", "min_dl", "max_score",
                 "block_id"]
         buckets = sorted({bucket_of(t, self.n_buckets) for t in terms})
@@ -291,21 +244,18 @@ class LocalSearcher:
                 & ds.field("term").isin(terms))
         for si, d in enumerate(self._postings):
             tbl = d.to_table(columns=cols, filter=filt)
-            tcol = tbl.column("term").to_pylist()
-            ncol = tbl.column("n_docs").to_pylist()
-            # ub pairs recomputed after per-term df aggregation (idf is a
-            # per-term constant; (max_tf, min_dl) dominates any (tf, dl))
-            ubp = list(zip(tbl.column("max_tf").to_pylist(),
-                           tbl.column("min_dl").to_pylist()))
-            mscol = tbl.column("max_score").to_pylist()
-            bcol = tbl.column("block_id").to_pylist()
-            for i, t in enumerate(tcol):
-                a = acc[t]
-                a["n"].append(ncol[i])
-                a["ub"].append(ubp[i])
-                a["ms"].append(mscol[i])
-                a["addr"].append((si, bcol[i]))
-        return acc
+            for t, *row in zip(*(tbl.column(c).to_pylist() for c in cols)):
+                acc[t].append((si, *row))
+        out = {}
+        for t, rows in acc.items():
+            if rows:
+                si, n, mt, md, ms, bid = zip(*rows)
+                out[t] = {"n": np.array(n, dtype=np.int64),
+                          "max_tf": np.array(mt, dtype=np.float64),
+                          "min_dl": np.array(md, dtype=np.float64),
+                          "ms": np.array(ms, dtype=np.float64),
+                          "addr": list(zip(si, bid))}
+        return out
 
     def _fetch_payloads(self, want: set, field_id: int) -> dict:
         """Phase 2: payload bytes for EXACTLY the requested block
@@ -340,109 +290,17 @@ class LocalSearcher:
                     out[(si, t, bid)] = (db, tb, lb)
         return out
 
-    @staticmethod
-    def _theta_sel(a: dict, k: int):
-        """Indices of t's best blocks by descending stored per-block MAX
-        REAL score, covering ≥ k postings — the blocks whose decoded
-        payloads witness θ_t (any posting subset yields a valid θ_t:
-        adding postings only raises the k-th largest, and the max_score
-        ordering provably finds the best real postings; pairing-bound
-        orderings picked near-arbitrary blocks on uniform corpora and
-        left θ loose). None when t has < k postings."""
-        order = np.argsort(-np.asarray(a["ms"], dtype=np.float64))
-        n_docs_t = np.asarray(a["n"], dtype=np.int64)[order]
-        cum = np.cumsum(n_docs_t)
-        take = int(np.searchsorted(cum, k) + 1)
-        if int(n_docs_t[:take].sum()) < k:
-            return None
-        return [int(i) for i in order[:take]]
-
-    @staticmethod
-    def _decode_blocks_at(a: dict, t: str, idxs, pay: dict) -> tuple:
-        """(ids, tfs, dls) decoded from the fetched payloads of blocks
-        ``idxs`` (in that order; n_docs segment lengths stay aligned)."""
-        n_docs = np.asarray(a["n"], dtype=np.int64)[idxs]
-        bins = [pay[(a["addr"][i][0], t, a["addr"][i][1])] for i in idxs]
-        ids = codec.decode_positions(b"".join(b[0] for b in bins), n_docs)
-        return (ids,
-                codec.varbyte_decode(b"".join(b[1] for b in bins)),
-                codec.varbyte_decode(b"".join(b[2] for b in bins)))
-
-    def _postings_arrays_pruned(self, terms: list[str], k: int,
-                                field_id: int = 0,
-                                prune_stats: dict | None = None) -> dict:
-        """Block-max WAND pruned postings — EXACT top-k (same θ derivation
-        and exactness argument as the engine, `engine.py` module
-        docstring), TWO-PHASE like the engine (round 4): phase 1 scans
-        block METADATA only (KBs — parquet never reads the payload
-        columns), phase 2 fetches payload bytes for just the θ-witness
-        and kept blocks. Pruned blocks never leave parquet — neither
-        fetched nor decoded. Never cached (the kept set depends on k)."""
-        n, avgdl = self._field_stats("text" if field_id == 0 else "meta")
-        acc = self._block_meta(terms, field_id)
-        k1, b = S.K1, S.B
-        tfn = lambda tf, dl: tf / (tf + k1 * (1 - b + b * dl / avgdl))  # noqa: E731
-        per_term = {}
-        for t, a in acc.items():
-            if not a["n"]:
-                continue
-            df = self._df(t, field_id, float(sum(a["n"])))
-            idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            ubs = np.array([idf * tfn(mt, md) for mt, md in a["ub"]])
-            per_term[t] = (a, df, ubs)
-        if not per_term:
-            return {}
-        mx = {t: float(v[2].max()) for t, v in per_term.items()}
-        total = sum(mx.values())
-        # phase 2a: fetch + decode payloads of ONLY the θ-witness blocks
-        sel_by_term = {t: self._theta_sel(v[0], k)
-                       for t, v in per_term.items()}
-        want = {(per_term[t][0]["addr"][i][0], t,
-                 per_term[t][0]["addr"][i][1])
-                for t, sel in sel_by_term.items() if sel
-                for i in sel}
-        pay = self._fetch_payloads(want, field_id)
-        theta = 0.0
-        for t, sel in sel_by_term.items():
-            if not sel:
-                continue
-            a, df, ubs = per_term[t]
-            _ids, tfs, dls = self._decode_blocks_at(a, t, sel, pay)
-            idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            s = idf * tfn(tfs.astype(np.float64), dls.astype(np.float64))
-            theta = max(theta,
-                        float(np.partition(s, s.size - k)[s.size - k]))
-        # phase 2b: fetch payloads for ONLY the kept blocks (reusing the
-        # θ-witness payloads) — pruned blocks never leave parquet
-        keeps, want_keep = {}, set()
-        blocks_total = blocks_kept = 0
-        for t, (a, df, ubs) in per_term.items():
-            other = total - mx[t]
-            keep = (ubs + other) >= theta - 1e-12
-            keeps[t] = keep
-            blocks_total += keep.size
-            blocks_kept += int(keep.sum())
-            for i in np.flatnonzero(keep):
-                si, bid = a["addr"][i]
-                want_keep.add((si, t, bid))
-        pay.update(self._fetch_payloads(want_keep - set(pay), field_id))
-        out = {}
-        for t, (a, df, ubs) in per_term.items():
-            idxs = [int(i) for i in np.flatnonzero(keeps[t])]
-            if not idxs:
-                continue
-            ids, tfs, dls = self._decode_blocks_at(a, t, idxs, pay)
-            out[t] = (ids, tfs, dls, df)
-        if prune_stats is not None:
-            prune_stats.update(theta=theta, blocks_total=blocks_total,
-                               blocks_kept=blocks_kept)
-        return out
-
     def _dismax_pruned(self, terms: list[str], k: int, boosts: dict,
                        prune_stats: dict | None = None) -> dict:
-        """Serving-side block-max WAND for boosted multi-field dis_max
-        (round-3 VERDICT item 7) -> {field_id: {term: (ids, tfs, dls,
-        df)}} with only the blocks that can influence the top-k decoded.
+        """Serving-side block-max WAND for boosted multi-field dis_max —
+        and, with one field at boost 1.0, for bare BM25 — returning
+        {field_id: [(doc_ids, scores) per term]} with only the blocks that
+        can influence the top-k fetched and decoded. EXACT top-k (same θ
+        derivation and exactness argument as the engine, ``engine.py``
+        module docstring), TWO-PHASE: phase 1 scans block METADATA only,
+        phase 2 fetches payload bytes for just the θ-witness and kept
+        blocks. Pruned blocks never leave parquet. Never cached (the kept
+        set depends on k).
 
         θ = max over (field f, term t) of boost_f · θ_ft, where θ_ft is the
         k-th largest REAL decoded per-(f,t) score (those k docs' dis_max
@@ -460,100 +318,114 @@ class LocalSearcher:
         exactness argument as single-field WAND with a per-field clause.
         In practice cross_f is 0 when the query terms miss the other
         field's vocabulary (the common text-vs-meta case), which is what
-        lets text blocks prune."""
-        from ..indexing.build import FIELD_NAMES
-        k1, b = S.K1, S.B
-        stats, per = {}, {}
-        for fid, boost in boosts.items():
-            n, avgdl = self._field_stats(FIELD_NAMES[fid])
-            stats[fid] = (n, avgdl, float(boost))
-            acc = self._block_meta(terms, fid)
-            tfn = lambda tf, dl: tf / (tf + k1 * (1 - b + b * dl / avgdl))  # noqa: E731
-            for t, a in acc.items():
-                if not a["n"]:
-                    continue
-                df = self._df(t, fid, float(sum(a["n"])))
-                idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-                ubs = np.array([idf * tfn(mt, md) for mt, md in a["ub"]])
-                per[(fid, t)] = (a, df, ubs)
+        lets text blocks prune; with a single field it is always 0 and
+        every expression reduces to single-field WAND."""
+        per = {}
+        for fid in boosts:
+            n, avgdl = self._fstats[fid]
+            for t, a in self._block_meta(terms, fid).items():
+                df = self._df(t, fid, float(a["n"].sum()))
+                # ub per block: (max_tf, min_dl) dominates any real (tf, dl)
+                per[(fid, t)] = (a, df, S.bm25(a["max_tf"], a["min_dl"], df,
+                                               n, avgdl))
         if not per:
             return {}
         mx = {key: float(v[2].max()) for key, v in per.items()}
         total_f: dict = {}
         for (fid, _t), v in mx.items():
             total_f[fid] = total_f.get(fid, 0.0) + v
-        # phase 2a: θ-witness payloads only (per field — the payload scans
-        # carry the field filter)
-        sel_by = {key: self._theta_sel(v[0], k) for key, v in per.items()}
-        pay_by_fid: dict = {}
-        for fid in total_f:
-            want = {(per[key][0]["addr"][i][0], key[1],
-                     per[key][0]["addr"][i][1])
-                    for key, sel in sel_by.items()
-                    if sel and key[0] == fid for i in sel}
-            pay_by_fid[fid] = self._fetch_payloads(want, fid)
-        theta = 0.0
-        for (fid, t), sel in sel_by.items():
-            if not sel:
-                continue
-            a, df, ubs = per[(fid, t)]
-            n, avgdl, boost = stats[fid]
-            _ids, tfs, dls = self._decode_blocks_at(a, t, sel,
-                                                    pay_by_fid[fid])
-            idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            tfs = tfs.astype(np.float64)
-            dls = dls.astype(np.float64)
-            s = idf * tfs / (tfs + k1 * (1 - b + b * dls / avgdl))
-            theta = max(theta, boost *
-                        float(np.partition(s, s.size - k)[s.size - k]))
+        pay_by_fid: dict = {fid: {} for fid in total_f}
+
+        def decode_scored(idxs_by: dict) -> dict:
+            """(fid, t) -> (ids, scores) of the given blocks; one payload
+            scan per field and segment (the scans carry the field filter),
+            reusing payloads fetched earlier."""
+            addrs = {key: [per[key][0]["addr"][i] for i in idxs]
+                     for key, idxs in idxs_by.items()}
+            for fid, pay in pay_by_fid.items():
+                want = {(si, t, bid) for (f, t), ad in addrs.items()
+                        if f == fid for si, bid in ad}
+                pay.update(self._fetch_payloads(want - pay.keys(), fid))
+            out = {}
+            for (fid, t), idxs in idxs_by.items():
+                a, df, _ubs = per[(fid, t)]
+                bins = [pay_by_fid[fid][(si, t, bid)]
+                        for si, bid in addrs[(fid, t)]]
+                ids, tfs, dls = K.decode_blocks(
+                    a["n"][idxs], [b[0] for b in bins],
+                    [b[1] for b in bins], [b[2] for b in bins])
+                out[(fid, t)] = (ids, S.bm25(tfs, dls, df,
+                                             *self._fstats[fid]))
+            return out
+
+        # phase 2a: fetch + decode ONLY the θ-witness blocks
+        sels = {key: K.theta_blocks(a["ms"], a["n"], k)
+                for key, (a, _df, _ubs) in per.items()}
+        witness = decode_scored({key: sel for key, sel in sels.items()
+                                 if sel is not None})
+        theta = max((boosts[fid] * K.kth_score(s, k)
+                     for (fid, _t), (_ids, s) in witness.items()),
+                    default=0.0)
         # phase 2b: fetch + decode ONLY the kept blocks
-        out: dict = {fid: {} for fid in total_f}
         keeps: dict = {}
         blocks_total = blocks_kept = 0
-        want_by_fid: dict = {fid: set() for fid in total_f}
         for (fid, t), (a, df, ubs) in per.items():
-            n, avgdl, boost = stats[fid]
             other = total_f[fid] - mx[(fid, t)]
-            cross = max((stats[f2][2] * total_f[f2]
+            cross = max((boosts[f2] * total_f[f2]
                          for f2 in total_f if f2 != fid), default=0.0)
             if cross >= theta - 1e-12:
                 keep = np.ones(ubs.size, dtype=bool)
             else:
-                keep = (boost * (ubs + other)) >= theta - 1e-12
-            keeps[(fid, t)] = keep
+                keep = (boosts[fid] * (ubs + other)) >= theta - 1e-12
             blocks_total += keep.size
             blocks_kept += int(keep.sum())
-            for i in np.flatnonzero(keep):
-                si, bid = a["addr"][i]
-                want_by_fid[fid].add((si, t, bid))
-        for fid in total_f:
-            pay_by_fid[fid].update(self._fetch_payloads(
-                want_by_fid[fid] - set(pay_by_fid[fid]), fid))
-        for (fid, t), (a, df, ubs) in per.items():
-            idxs = [int(i) for i in np.flatnonzero(keeps[(fid, t)])]
-            if not idxs:
-                continue
-            ids, tfs, dls = self._decode_blocks_at(a, t, idxs,
-                                                   pay_by_fid[fid])
-            out[fid][t] = (ids, tfs, dls, df)
+            if keep.any():
+                keeps[(fid, t)] = np.flatnonzero(keep)
+        out: dict = {fid: [] for fid in total_f}
+        for (fid, _t), scored in decode_scored(keeps).items():
+            out[fid].append(scored)
         if prune_stats is not None:
             prune_stats.update(theta=theta, blocks_total=blocks_total,
                                blocks_kept=blocks_kept)
         return out
 
-    def _dense_info(self, total_mass: int):
-        """(base0, n) for the dense doc-indexed accumulator, or None when
-        the sparse path should run. Dense requires gap-free ids AND a hot
-        query (posting mass ≥ N/8): O(N) zeroing beats O(mass·log) merges
-        only when the candidate set approaches the corpus; ~10 B/doc
-        transient per query is the same O(N)-per-shard memory model the
-        numeric doc values already commit to."""
-        if 8 * total_mass < self.n_docs:
-            return None
-        dv_ids, _p, _t = self._doc_values()
-        if not self._dv_dense:
-            return None
-        return int(dv_ids[0]), dv_ids.size
+    def _scored(self, terms: list[str], k: int, boosts: dict, prune: bool,
+                prune_stats: dict | None) -> dict:
+        """{field_id: [(doc_ids, BM25 scores) per matched term]} for the
+        fields in ``boosts``, in sorted query-term order whatever the term
+        cache holds — so score sums are bit-identical between a cold and a
+        warm searcher. ``prune`` runs block-max WAND
+        (:meth:`_dismax_pruned`)."""
+        if prune:
+            return self._dismax_pruned(terms, k, boosts, prune_stats)
+        return {fid: self._score_terms(
+                    terms, fid, self._postings_arrays(terms, fid))
+                for fid in boosts}
+
+    def _score_terms(self, terms: list[str], fid: int, posts: dict) -> list:
+        """[(doc_ids, BM25 scores)] of ``terms`` that have postings in
+        ``posts`` (from :meth:`_postings_arrays`), in ``terms`` order."""
+        out = []
+        for t in terms:
+            if t in posts and posts[t][0].size:
+                ids, tfs, dls = posts[t]
+                out.append((ids, S.bm25(tfs, dls,
+                                        self._df(t, fid, float(ids.size)),
+                                        *self._fstats[fid])))
+        return out
+
+    def _space(self, id_lists: list) -> K.DocSpace:
+        """The query's accumulator: DENSE doc-indexed arrays when the doc
+        ids are gap-free and the posting mass reaches N/8 — O(N) zeroing
+        beats O(mass·log) merges only when the candidate set approaches
+        the corpus (~10 B/doc transient per query, the same
+        O(N)-per-shard memory model the numeric doc values already commit
+        to); SPARSE over the sorted union of the query's ids otherwise."""
+        if 8 * sum(a.size for a in id_lists) >= self.n_docs:
+            dv_ids, _p, _t = self._doc_values()
+            if self._dv_dense:
+                return K.DocSpace(id_lists, (int(dv_ids[0]), dv_ids.size))
+        return K.DocSpace(id_lists)
 
     def bm25_topk(self, query: str, k: int = 20, *,
                   require_all: bool = False, hydrate: bool = True,
@@ -567,87 +439,20 @@ class LocalSearcher:
         in BENCH), while repeated identical hot queries are faster
         unpruned from the warm term cache."""
         terms = sorted(set(A.py_tokens(query)))
-        if prune and not require_all and terms:
-            posts = self._postings_arrays_pruned(terms, k,
-                                                 prune_stats=prune_stats)
-            if not posts:
-                return []
-            all_ids = np.concatenate([p[0] for p in posts.values()])
-            uniq = np.unique(all_ids)
-            scores = np.zeros(uniq.size)
-            for t, (ids, tfs, dls, df) in posts.items():
-                idx = np.searchsorted(uniq, ids)
-                np.add.at(scores, idx, self._term_score(
-                    tfs.astype(np.float64), dls.astype(np.float64), df))
-            kk = min(k, uniq.size)
-            if kk < uniq.size:
-                part = np.argpartition(-scores, kk - 1)
-                boundary = scores[part[kk - 1]]
-                sel = np.flatnonzero(scores >= boundary)
-            else:
-                sel = np.arange(uniq.size)
-            order = sel[np.lexsort((uniq[sel], -scores[sel]))][:kk]
-            rows = [{"doc_id": int(uniq[i]), "score": float(scores[i])}
-                    for i in order]
-            return self._hydrate(rows) if hydrate else rows
-        posts = self._postings_arrays(terms) if terms else {}
-        if not posts:
+        if not terms:
             return []
-        dense = self._dense_info(sum(p[0].size for p in posts.values()))
-        if dense is not None:
-            # hot query: accumulate straight into doc-indexed arrays —
-            # per-term ids are unique, so plain fancy indexing, no add.at
-            base0, n_dv = dense
-            scores_d = np.zeros(n_dv)
-            nmatch_d = np.zeros(n_dv, dtype=np.int32)
-            for t, (ids, tfs, dls) in posts.items():
-                s = self._term_score(tfs.astype(np.float64),
-                                     dls.astype(np.float64),
-                                     self._df(t, 0, float(ids.size)))
-                ix = ids - base0
-                scores_d[ix] += s
-                nmatch_d[ix] += 1
-            cand = np.flatnonzero(
-                nmatch_d >= (len(terms) if require_all else 1))
-            if cand.size == 0:
-                return []
-            uniq = cand + base0
-            scores = scores_d[cand]
-            nmatch = nmatch_d[cand]
-            cand = np.arange(uniq.size)
-        else:
-            all_ids = np.concatenate([p[0] for p in posts.values()])
-            uniq = np.unique(all_ids)
-            scores = np.zeros(uniq.size)
-            nmatch = np.zeros(uniq.size, dtype=np.int32)
-            for t, (ids, tfs, dls) in posts.items():
-                idx = np.searchsorted(uniq, ids)
-                s = self._term_score(tfs.astype(np.float64),
-                                     dls.astype(np.float64),
-                                     self._df(t, 0, float(ids.size)))
-                np.add.at(scores, idx, s)
-                nmatch[idx] += 1
-            mask = np.ones(uniq.size, dtype=bool)
-            if require_all:
-                mask = nmatch >= len(terms)
-            cand = np.flatnonzero(mask)
-            if cand.size == 0:
-                return []
-        # top-k heap: argpartition by score, then WIDEN the cut to every
-        # candidate tied with the boundary score before the exact
-        # (score desc, doc_id asc) lexsort — argpartition alone resolves
-        # boundary ties arbitrarily, breaking exact parity with the engine's
-        # orderBy(score desc, doc_id asc).limit(k)
-        kk = min(k, cand.size)
-        if kk < cand.size:
-            part = np.argpartition(-scores[cand], kk - 1)
-            boundary = scores[cand[part[kk - 1]]]
-            sel = cand[scores[cand] >= boundary]
-        else:
-            sel = cand
-        order = sel[np.lexsort((uniq[sel], -scores[sel]))][:kk]
-        rows = [{"doc_id": int(uniq[i]), "score": float(scores[i]),
-                 "nmatch": int(nmatch[i])} for i in order]
+        lists = self._scored(terms, k, {TEXT_FIELD: 1.0},
+                             prune and not require_all,
+                             prune_stats).get(TEXT_FIELD)
+        if not lists:
+            return []
+        space = self._space([ids for ids, _s in lists])
+        scores, nmatch = K.accumulate(space, lists)
+        cand = np.flatnonzero(nmatch >= (len(terms) if require_all else 1))
+        ids, scores, nmatch = space.ids(cand), scores[cand], nmatch[cand]
+        rows = [{"doc_id": int(ids[i]), "score": float(scores[i]),
+                 "nmatch": int(nmatch[i])}
+                for i in K.topk(ids, scores, k)]
         return self._hydrate(rows) if hydrate else rows
 
     def dismax_topk(self, query: str, k: int = 20, *,
@@ -660,88 +465,31 @@ class LocalSearcher:
         score = max_f boost_f * s_f (tie_breaker 0.0). ``prune=True``
         enables serving-side block-max WAND (:meth:`_dismax_pruned` —
         exact, same results)."""
-        from ..indexing.build import FIELDS
-        boosts = boosts or self.cfg["field_boosts"]
+        boosts = {FIELDS[f]: float(b) for f, b in
+                  (boosts or self.cfg["field_boosts"]).items()}
         terms = sorted(set(A.py_tokens(query)))
         if not terms:
             return []
-        pruned = (self._dismax_pruned(
-            terms, k, {FIELDS[f]: float(b) for f, b in boosts.items()},
-            prune_stats) if prune else None)
-        field_posts = []   # (boost, n, avgdl, posts{t:(ids,tfs,dls)}, dfs)
-        for fname, boost in boosts.items():
-            fid = FIELDS[fname]
-            n, avgdl = self._field_stats(fname)
-            if pruned is not None:
-                fp = pruned.get(fid) or {}
-                posts = {t: (ids, tfs, dls)
-                         for t, (ids, tfs, dls, _df) in fp.items()}
-                dfs = {t: _df for t, (_i, _t2, _d, _df) in fp.items()}
-            else:
-                posts = self._postings_arrays(terms, fid)
-                dfs = {t: self._df(t, fid, float(p[0].size))
-                       for t, p in posts.items()}
-            if posts:
-                field_posts.append((float(boost), n, avgdl, posts, dfs))
-        if not field_posts:
+        fields = [(boosts[fid], lists) for fid, lists in
+                  self._scored(terms, k, boosts, prune, prune_stats).items()
+                  if lists]
+        if not fields:
             return []
-        dense = self._dense_info(sum(
-            p[0].size for _b, _n, _a, posts, _d in field_posts
-            for p in posts.values()))
-        if dense is not None:
-            # hot query: per-field dense accumulation, dis_max as an
-            # elementwise maximum (a term score is strictly positive, so
-            # s_f > 0 ⇔ matched in that field)
-            base0, n_dv = dense
-            best = None
-            # explicit matched mask: inferring match from best > 0.0 would
-            # drop a doc whose only matching field carries a zero boost,
-            # diverging from the sparse path (which keeps any matched doc)
-            matched = np.zeros(n_dv, dtype=bool)
-            for boost, n, avgdl, posts, dfs in field_posts:
-                s_f = np.zeros(n_dv)
-                for _t, (ids, tfs, dls) in posts.items():
-                    s_f[ids - base0] += self._term_score(
-                        tfs.astype(np.float64), dls.astype(np.float64),
-                        dfs[_t], n, avgdl)
-                    matched[ids - base0] = True
-                boosted = boost * s_f
-                best = boosted if best is None \
-                    else np.maximum(best, boosted)
-            cand = np.flatnonzero(matched)
-            if cand.size == 0:
-                return []
-            doc_ids = cand + base0
-            scores = best[cand]
-        else:
-            per_doc: dict = {}
-            for boost, n, avgdl, posts, dfs in field_posts:
-                all_ids = np.concatenate([p[0] for p in posts.values()])
-                uniq = np.unique(all_ids)
-                s_f = np.zeros(uniq.size)
-                for _t, (ids, tfs, dls) in posts.items():
-                    idx = np.searchsorted(uniq, ids)
-                    np.add.at(s_f, idx, self._term_score(
-                        tfs.astype(np.float64), dls.astype(np.float64),
-                        dfs[_t], n, avgdl))
-                boosted = boost * s_f
-                for d, v in zip(uniq.tolist(), boosted.tolist()):
-                    if v > per_doc.get(d, -1.0):
-                        per_doc[d] = v
-            if not per_doc:
-                return []
-            doc_ids = np.fromiter(per_doc.keys(), dtype=np.int64)
-            scores = np.fromiter(per_doc.values(), dtype=np.float64)
-        kk = min(k, doc_ids.size)
-        if kk < doc_ids.size:
-            part = np.argpartition(-scores, kk - 1)
-            boundary = scores[part[kk - 1]]
-            sel = np.flatnonzero(scores >= boundary)
-        else:
-            sel = np.arange(doc_ids.size)
-        order = sel[np.lexsort((doc_ids[sel], -scores[sel]))][:kk]
-        rows = [{"doc_id": int(doc_ids[i]), "score": float(scores[i])}
-                for i in order]
+        space = self._space([ids for _b, lists in fields
+                             for ids, _s in lists])
+        # dis_max as an elementwise maximum over fields; the explicit
+        # matched mask keeps a doc whose only matching field carries a
+        # zero boost
+        best, matched = None, np.zeros(space.size, dtype=bool)
+        for boost, lists in fields:
+            s_f, count = K.accumulate(space, lists)
+            matched |= count > 0
+            best = boost * s_f if best is None \
+                else np.maximum(best, boost * s_f)
+        cand = np.flatnonzero(matched)
+        ids, scores = space.ids(cand), best[cand]
+        rows = [{"doc_id": int(ids[i]), "score": float(scores[i])}
+                for i in K.topk(ids, scores, k)]
         return self._hydrate(rows) if hydrate else rows
 
     # (doc_id, pos) pairs are packed into one int64 key for the flat-numpy
@@ -753,7 +501,6 @@ class LocalSearcher:
         """term -> sorted packed (doc_id, pos) keys, merged over segments —
         one vectorized pass per segment, never per-doc Python. Hot phrase
         terms are LRU-cached like the postings term cache."""
-        from ..indexing.build import FIELDS
         out = {}
         for t in set(terms):
             hit = self._pos_cache.get(t)
@@ -817,7 +564,7 @@ class LocalSearcher:
             for i, t in enumerate(terms[1:], start=1):
                 if cand.size == 0:
                     break
-                cand = cand[_in_sorted(cand + i, keys[t])]
+                cand = cand[K.in_sorted(cand + i, keys[t])]
             doc_ids = np.unique(cand // self._POS_SHIFT)
             self._phrase_cache.put(ck, doc_ids)
         out = [{"doc_id": int(d)} for d in doc_ids]
@@ -852,9 +599,9 @@ class LocalSearcher:
                 for i, t in enumerate(exact[1:], start=1):
                     if cand.size == 0:
                         break
-                    cand = cand[_in_sorted(cand + i, keys[t])]
+                    cand = cand[K.in_sorted(cand + i, keys[t])]
                 if cand.size:
-                    cand = cand[_in_sorted(cand + (len(terms) - 1), last)]
+                    cand = cand[K.in_sorted(cand + (len(terms) - 1), last)]
                 doc_ids = np.unique(cand // self._POS_SHIFT)
             self._phrase_cache.put(ck, doc_ids)
         out = [{"doc_id": int(d)} for d in doc_ids]
@@ -874,7 +621,6 @@ class LocalSearcher:
         are >= 0), so only docs with ``base + max_addon >= theta`` are
         hydrated — never the whole candidate set, never the whole store.
         """
-        from ..indexing.build import FIELDS, FIELD_NAMES
         q_terms = A.py_tokens(params.query)
         q_kw = " ".join(q_terms)
         q_kw_hash = hashlib.md5(q_kw.encode("utf-8")).hexdigest()
@@ -892,7 +638,7 @@ class LocalSearcher:
             ids = tbl.column("doc_id").to_numpy().astype(np.int64)
             prior = tbl.column("prior").to_numpy().astype(np.float64)
             if allowed is not None:
-                m = _in_sorted(ids, allowed)
+                m = K.in_sorted(ids, allowed)
                 ids, prior = ids[m], prior[m]
             order = np.lexsort((ids, -prior))[:params.k]
             rows = [{"doc_id": int(ids[i]),
@@ -901,8 +647,8 @@ class LocalSearcher:
 
         if not q_terms:
             return []
-        field_ids = ((FIELDS["text"], FIELDS["meta"]) if params.multifield
-                     else (FIELDS["text"],))
+        field_ids = ((TEXT_FIELD, FIELDS["meta"]) if params.multifield
+                     else (TEXT_FIELD,))
         # (orig -> expansion set), mirroring the engine's pair construction
         exp_by_orig: dict[str, set] = {}
         for i, t in enumerate(q_terms):
@@ -917,133 +663,73 @@ class LocalSearcher:
 
         boosts = ({FIELDS[f]: float(b)
                    for f, b in self.cfg["field_boosts"].items()}
-                  if params.multifield else {FIELDS["text"]: 1.0})
+                  if params.multifield else {TEXT_FIELD: 1.0})
         raw_fo = []   # (field_id, orig, [(doc_ids, scores) per expansion])
         for fid in field_ids:
-            n_f, avgdl_f = self._field_stats(FIELD_NAMES[fid])
             posts = self._postings_arrays(exp_terms, fid)
             for o, exps in exp_by_orig.items():
-                arrs = []
-                for e in sorted(exps):
-                    p = posts.get(e)
-                    if p is None:
-                        continue
-                    ids, tfs, dls = p
-                    arrs.append((ids, self._term_score(
-                        tfs.astype(np.float64), dls.astype(np.float64),
-                        self._df(e, fid, float(ids.size)),
-                        n_f, avgdl_f)))
+                arrs = self._score_terms(sorted(exps), fid, posts)
                 if arrs:
                     raw_fo.append((fid, o, arrs))
         if not raw_fo:
             return []
         dv_ids, dv_prior, dv_ts = self._doc_values()
-        # raw postings mass (pre-dedup): the dense/sparse gate input, and
-        # the quantity the per-query work is actually linear in
-        total_mass = sum(a[0].size for _, _, arrs in raw_fo for a in arrs)
-        if self._dv_dense and 8 * total_mass >= dv_ids.size:
-            # DENSE accumulation (round 4, profiled): on hot queries the
-            # candidate set approaches the corpus, and the sparse path's
-            # np.unique + per-(field,orig) searchsorted scatters were 60%
-            # of warm latency (114 of 196 ms at 1M docs). Doc ids are
-            # globally dense, so score straight into doc-indexed arrays —
-            # ~10 B/doc transient per query, the same O(N)-per-shard
-            # memory model the numeric doc values already commit to; the
-            # mass gate keeps rare-term queries on the sparse path where
-            # O(candidates) beats O(N) zeroing.
-            base0, n_dv = int(dv_ids[0]), dv_ids.size
-            bm_d = np.zeros(n_dv)
-            # int32, not int8: ≥128 distinct original terms would overflow
-            # silently and corrupt the nmatch>0 mask / operator='and' check
-            # (memory is dominated by the float64 bm_d array anyway)
-            nmatch_d = np.zeros(n_dv, dtype=np.int32)
-            m_buf = np.empty(n_dv, dtype=bool)
-            # Expanded terms (prefix: up to 200 lists) dismax straight into
-            # doc-indexed scratch — gather/np.maximum/scatter per list is
-            # O(total postings), replacing the global np.unique sort-merge
-            # + searchsorted scatter (O(total·log total)) that set the
-            # single-shard prefix p50 at 10M docs. Values are identical:
-            # same max over the same per-expansion scores, same (fid, orig)
-            # addition order into bm_d. Scratch reset walks only touched
-            # slots, so rare-term queries don't pay O(N) zeroing here.
-            sm_d = t_buf = None
-            for o in exp_by_orig:
-                m_buf[:] = False
-                for fid, o2, arrs in raw_fo:
-                    if o2 != o:
-                        continue
-                    if len(arrs) == 1:
-                        # posting ids are sorted-unique by the
-                        # _postings_arrays invariant: plain fancy indexing
-                        ids, s = arrs[0]
-                        ix = ids - base0
-                        bm_d[ix] += boosts[fid] * s
-                        m_buf[ix] = True
-                        continue
-                    if sm_d is None:
-                        sm_d = np.zeros(n_dv)
-                        t_buf = np.zeros(n_dv, dtype=bool)
-                    for ids, s in arrs:
-                        ix = ids - base0
-                        sm_d[ix] = np.maximum(sm_d[ix], s)
-                        t_buf[ix] = True
-                    touched = np.flatnonzero(t_buf)
-                    bm_d[touched] += boosts[fid] * sm_d[touched]
-                    m_buf[touched] = True
-                    sm_d[touched] = 0.0
-                    t_buf[touched] = False
-                nmatch_d += m_buf
-            mask = nmatch_d > 0
-            if params.operator == "and":
-                mask &= nmatch_d == len(set(q_terms))
-            if allowed is not None:
-                m_buf[:] = False
-                m_buf[allowed - base0] = True
-                mask &= m_buf
-            cand = np.flatnonzero(mask)
-            if cand.size == 0:
-                return []
-            g_ids = cand + base0
-            bm = bm_d[cand]
-            nmatch = nmatch_d[cand].astype(np.int64)
-            dv_ix = cand
-        else:
-            # sparse path (rare-term queries under the mass gate): the
-            # per-(field, orig) unique-merge is cheap here by construction
-            per_fo = []   # (field_id, orig, doc_ids, dismax)
-            for fid, o, arrs in raw_fo:
+        # On hot queries the candidate set approaches the corpus and the
+        # space is dense (round 4, profiled: the sparse path's np.unique +
+        # per-(field, orig) searchsorted scatters were 60% of warm latency,
+        # 114 of 196 ms at 1M docs); rare-term queries stay sparse.
+        space = self._space([a[0] for _, _, arrs in raw_fo for a in arrs])
+        bm = np.zeros(space.size)
+        # int32, not int8: ≥128 distinct original terms would overflow
+        # silently and corrupt the nmatch>0 mask / operator='and' check
+        # (memory is dominated by the float64 bm array anyway)
+        nmatch = np.zeros(space.size, dtype=np.int32)
+        m_buf = np.empty(space.size, dtype=bool)
+        # Expanded terms (prefix: up to 200 lists) dismax straight into
+        # slot-indexed scratch — gather/np.maximum/scatter per list is
+        # O(total postings), replacing a global np.unique sort-merge +
+        # searchsorted scatter (O(total·log total)) that set the
+        # single-shard prefix p50 at 10M docs. Scratch reset walks only
+        # touched slots.
+        sm = t_buf = None
+        for o in exp_by_orig:
+            m_buf[:] = False
+            for fid, o2, arrs in raw_fo:
+                if o2 != o:
+                    continue
                 if len(arrs) == 1:
-                    uniq, smax = arrs[0]
-                else:
-                    uniq = np.unique(np.concatenate([a[0] for a in arrs]))
-                    smax = np.zeros(uniq.size)
-                    for ids, s in arrs:
-                        np.maximum.at(smax, np.searchsorted(uniq, ids), s)
-                per_fo.append((fid, o, uniq, smax))
-            g_ids = np.unique(np.concatenate([u for _, _, u, _ in per_fo]))
-            bm = np.zeros(g_ids.size)
-            matched = {o: np.zeros(g_ids.size, dtype=bool)
-                       for o in exp_by_orig}
-            for fid, o, u, s in per_fo:
-                ix = np.searchsorted(g_ids, u)
-                bm[ix] += boosts[fid] * s
-                matched[o][ix] = True
-            nmatch = np.zeros(g_ids.size, dtype=np.int64)
-            for m in matched.values():
-                nmatch += m
-            mask = nmatch > 0
-            if params.operator == "and":
-                mask &= nmatch == len(set(q_terms))
-            if allowed is not None:
-                mask &= _in_sorted(g_ids, allowed)
-            g_ids, bm, nmatch = g_ids[mask], bm[mask], nmatch[mask]
-            if g_ids.size == 0:
-                return []
-            dv_ix = (g_ids - dv_ids[0]) if self._dv_dense \
-                else np.searchsorted(dv_ids, g_ids)
+                    # posting ids are unique within a list: plain fancy
+                    # indexing
+                    ids, s = arrs[0]
+                    ix = space.slots(ids)
+                    bm[ix] += boosts[fid] * s
+                    m_buf[ix] = True
+                    continue
+                if sm is None:
+                    sm = np.zeros(space.size)
+                    t_buf = np.zeros(space.size, dtype=bool)
+                for ids, s in arrs:
+                    ix = space.slots(ids)
+                    sm[ix] = np.maximum(sm[ix], s)
+                    t_buf[ix] = True
+                touched = np.flatnonzero(t_buf)
+                bm[touched] += boosts[fid] * sm[touched]
+                m_buf[touched] = True
+                sm[touched] = 0.0
+                t_buf[touched] = False
+            nmatch += m_buf
+        mask = nmatch > 0
+        if params.operator == "and":
+            mask &= nmatch == len(set(q_terms))
+        if allowed is not None:
+            mask &= space.member(allowed)
+        cand = np.flatnonzero(mask)
+        if cand.size == 0:
+            return []
+        g_ids, bm, nmatch = space.ids(cand), bm[cand], nmatch[cand]
 
         exact_ids = self._kw_ids(q_kw_hash)
-        is_exact = _in_sorted(g_ids, exact_ids)
+        is_exact = K.in_sorted(g_ids, exact_ids)
         cfg = self.cfg
         if params.phrase_tiers:
             # constant_score tiers inside the bool score, pre-saturation
@@ -1051,34 +737,25 @@ class LocalSearcher:
             contained = np.fromiter(
                 (r["doc_id"] for r in self.phrase_match(params.query)),
                 dtype=np.int64)
-            bm = bm + cfg["tier_phrase"] * _in_sorted(g_ids, contained)
+            bm = bm + cfg["tier_phrase"] * K.in_sorted(g_ids, contained)
 
         base = (cfg["w_text"] * bm / (bm + cfg["k_text"])
                 + cfg["w_exact"] * is_exact)
         # function_score add-ons from the numeric doc values — one
         # vectorized gather regardless of candidate-set size (the earlier
         # survivor-bound point reads degenerated on flat-scored hot queries
-        # where prior/recency decide the ranking for ~every candidate);
-        # dv_ix was computed per accumulation branch (dense: direct
-        # candidate indices; sparse: dense offset or binary search)
-        ix = dv_ix
+        # where prior/recency decide the ranking for ~every candidate)
+        ix = (g_ids - dv_ids[0]) if self._dv_dense \
+            else np.searchsorted(dv_ids, g_ids)
         score = base + cfg["w_prior"] * dv_prior[ix]
         if params.recency:
             x = np.maximum(0.0, params.now_epoch - dv_ts[ix]
                            - cfg["rec_offset"])
             score = score + cfg["w_rec"] * np.exp(
                 -0.5 * (x / cfg["rec_scale"]) ** 2)
-        ids, nm, k = g_ids, nmatch, params.k
-        kk = min(k, ids.size)
-        if kk < ids.size:
-            part = np.argpartition(-score, kk - 1)
-            boundary = score[part[kk - 1]]
-            sel = np.flatnonzero(score >= boundary)
-        else:
-            sel = np.arange(ids.size)
-        order = sel[np.lexsort((ids[sel], -score[sel]))][:kk]
-        rows = [{"doc_id": int(ids[i]), "score": float(score[i]),
-                 "nmatch": int(nm[i])} for i in order]
+        rows = [{"doc_id": int(g_ids[i]), "score": float(score[i]),
+                 "nmatch": int(nmatch[i])}
+                for i in K.topk(g_ids, score, params.k)]
         return self._hydrate(rows)
 
     # -- numeric doc values (scoring side) -----------------------------------
@@ -1204,7 +881,6 @@ class LocalSearcher:
         ordering + MAX_EXPANSIONS cap as ``engine.expand_prefix``. The term
         RANGE filter row-group-prunes the dictionary scan (term_dict is
         (field, term)-sorted with small row groups); results are cached."""
-        from .engine import MAX_EXPANSIONS
         key = ("pfx", prefix, field_ids)
         hit = self._filter_cache.get(key)
         if hit is not None:
@@ -1223,7 +899,6 @@ class LocalSearcher:
         pre-Levenshtein pruning runs vectorized in Arrow compute — the
         Python edit-distance only ever sees the blocked candidate set."""
         import pyarrow.compute as pc
-        from .engine import MAX_EXPANSIONS
         from . import fuzzy as FZ
         if max_ed == 0:
             return [term]

@@ -13,6 +13,12 @@ rank-neutral ``(k1+1)`` factor):
 dropped at index time, the analogue of the reference dropping unnamed
 features, ``PlanetSearchProfile.java:450-458``).
 
+The formula exists in three forms, one per execution engine: Spark Columns
+(:func:`bm25_term_score` — ``logical.py`` and the engine's JVM block
+filter), numpy (:func:`bm25`, :func:`idf`, :func:`tfn` — the build
+encoder, the engine's decode UDF and θ, and the serving reader) and SQL
+(``SQL_BM25_TERM`` — the DuckDB oracle).
+
 Function-score pipeline (``points_search.json:108-159``, score_mode=sum,
 boost_mode=replace — ``points_search.json:9-11``):
 
@@ -41,6 +47,7 @@ between the JVM and DuckDB cannot flip a hash.
 """
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -95,6 +102,26 @@ def recency_decay(ts: Column, now_epoch: float) -> Column:
     age = F.lit(now_epoch) - F.unix_timestamp(ts).cast("double")
     x = F.greatest(F.lit(0.0), age - F.lit(REC_OFFSET))
     return F.lit(W_REC) * F.exp(F.lit(-0.5) * (x / F.lit(REC_SCALE)) * (x / F.lit(REC_SCALE)))
+
+
+# ------------------------------ numpy side ---------------------------------
+# The only numpy BM25: the build encoder's bounds, the engine's decode UDF
+# and θ, and the serving reader all call these. Elementwise over arrays or
+# scalars; the expression order is fixed, so encoder outputs are stable.
+
+def idf(df, n):
+    """Lucene idf ln(1 + (N - df + 0.5) / (df + 0.5))."""
+    return np.log(1.0 + (n - df + 0.5) / (df + 0.5))
+
+
+def tfn(tf, dl, avgdl):
+    """BM25 tf-normalization tf / (tf + k1 * (1 - b + b * dl / avgdl))."""
+    return tf / (tf + K1 * ((1.0 - B) + B * dl / avgdl))
+
+
+def bm25(tf, dl, df, n, avgdl):
+    """Per-term BM25 score idf * tf / (tf + k1 * (1 - b + b * dl / avgdl))."""
+    return idf(df, n) * tf / (tf + K1 * ((1.0 - B) + B * dl / avgdl))
 
 
 # ------------------------------ SQL (oracle) side --------------------------

@@ -73,15 +73,6 @@ def test_spark_expr_matches_python(spark):
         assert row.kw == A.py_keyword(row.text), row.text
 
 
-def test_pandas_udf_matches_python(spark):
-    texts = [g[0] for g in GOLDENS]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    udf = A.tokens_pandas_udf()
-    got = df.select("text", udf(F.col("text")).alias("tok")).collect()
-    for row in got:
-        assert list(row.tok) == A.py_tokens(row.text), row.text
-
-
 def test_duckdb_sql_matches_python():
     texts = [g[0] for g in GOLDENS]
     con = duckdb.connect()

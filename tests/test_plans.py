@@ -36,13 +36,16 @@ def test_postings_scan_prunes_buckets_and_pushes_terms(spark, small_index):
 
 
 def test_bm25_scores_plan_is_join_free(spark, small_index):
-    """Per-term df ships as a literal-map projection (collected once, one
+    """Per-term df ships in the scoring UDF's closure (collected once, one
     row per query term), so the scoring plan has NO join at all — stricter
     than the round-1 broadcast-join assertion."""
     df = E.bm25_scores(spark, small_index, "error timeout")
     plan = _plan(df)
     assert "Join" not in plan, "scoring must be a pure projection"
     assert "SortMergeJoin" not in plan
+    # decode + BM25 run in one Arrow UDF over the blocks (no pandas hop)
+    assert "MapInArrow" in plan
+    assert "MapInPandas" not in plan
 
 
 def test_topk_is_take_ordered(spark, small_index):

@@ -42,6 +42,21 @@ def test_serve_matches_engine(spark, index_dir, query, require_all):
            [(w["doc_id"], round(w["score"], 10)) for w in want], query
 
 
+@pytest.mark.parametrize("method", ["bm25_topk", "dismax_topk"])
+def test_serve_scores_independent_of_term_cache(index_dir, method):
+    """Term contributions are summed in sorted query-term order, never in
+    term-cache order: a searcher that already holds the query's last term
+    returns bit-identical scores in the identical order to a cold one."""
+    query = "the error timeout"
+    cold = getattr(LocalSearcher(index_dir), method)(query, k=50,
+                                                      hydrate=False)
+    warm = LocalSearcher(index_dir)
+    getattr(warm, method)("timeout", k=5, hydrate=False)
+    got = getattr(warm, method)(query, k=50, hydrate=False)
+    assert [(r["doc_id"], r["score"]) for r in got] == \
+           [(r["doc_id"], r["score"]) for r in cold]
+
+
 def test_serve_boundary_ties_break_by_doc_id(spark, tmp_path):
     """Many docs tie exactly at the k-boundary score: the serving reader
     must cut by (score desc, doc_id asc) like the engine, not by whatever
@@ -108,8 +123,9 @@ def test_serve_wand_matches_unpruned(index_dir, query):
     got = srv.bm25_topk(query, k=10, hydrate=False, prune=True,
                         prune_stats=stats)
     want = srv.bm25_topk(query, k=10, hydrate=False)
-    assert [(g["doc_id"], round(g["score"], 10)) for g in got] == \
-           [(w["doc_id"], round(w["score"], 10)) for w in want], query
+    assert [(g["doc_id"], round(g["score"], 10), g["nmatch"]) for g in got] \
+        == [(w["doc_id"], round(w["score"], 10), w["nmatch"])
+            for w in want], query
     assert stats["blocks_kept"] <= stats["blocks_total"]
 
 
@@ -126,8 +142,8 @@ def test_serve_wand_prunes_on_clustered_corpus(spark, tmp_path):
     got = srv.bm25_topk("hotterm", k=20, hydrate=False, prune=True,
                         prune_stats=stats)
     want = srv.bm25_topk("hotterm", k=20, hydrate=False)
-    assert [(g["doc_id"], round(g["score"], 10)) for g in got] == \
-           [(w["doc_id"], round(w["score"], 10)) for w in want]
+    assert [(g["doc_id"], round(g["score"], 10), g["nmatch"]) for g in got] \
+        == [(w["doc_id"], round(w["score"], 10), w["nmatch"]) for w in want]
     assert stats["blocks_kept"] < stats["blocks_total"] / 2, stats
     # the winners are the hot-prefix docs
     assert all(g["doc_id"] < 1024 for g in got)
