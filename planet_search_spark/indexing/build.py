@@ -2,7 +2,7 @@
 reference's Elasticsearch indexing core, SURVEY.md §3.1).
 
 Stages (each checkpointed with a ``_ckpt/*.done`` marker; resume recomputes
-only missing stages/groups — the north rule's per-partition resumability):
+only missing stages/buckets — the north rule's per-partition resumability):
 
 1. **doc ids** — stable dense doc_id by global (conv_id, turn_idx) order:
    range-partition + per-partition offsets (scalable zipWithIndex, no global
@@ -21,19 +21,26 @@ only missing stages/groups — the north rule's per-partition resumability):
    bucket-partitioned parquet sorted by (field, term, doc_id) within each
    file. Materializing these partials is what makes every later stage
    partition-prunable and resumable.
-4+5. **term_dict + block encode** — per bucket-group jobs (G independent
-   jobs, each ONE mapInArrow with one task per bucket and its own marker).
-   A task k-way merges its bucket's sorted source files in bounded batches
-   and encodes chunks of at most ``_CHUNK_ROWS`` postings cut at term
-   boundaries, writing postings and term_dict rows itself; a term bigger
-   than a chunk is folded once for its df, then re-read alone and encoded
-   a salt group at a time. Salt = posting rank // salt_target within the
-   term's doc_id order — explicit hot-term skew handling at 10^12-turn
-   scale: no block group outgrows salt_target, and task memory is bounded
-   by a constant, not by bucket size. dl is stored inside the block
-   (``dls_bin``) so query-time scoring needs NO join against doc stats.
-6. **metrics + lineage** tables (``IndexingStats.java:6-23`` analogue), then
-   the atomic ``live.json`` pointer — the blue/green alias swap analogue
+4+5. **term_dict + block encode** — ONE mapInArrow job of at most
+   ``defaultParallelism`` Python tasks (a Python task has a fixed start-up
+   cost, so a task per bucket would pay it n_buckets times). Pending
+   buckets are dealt to the tasks largest-first by source bytes; each
+   bucket writes ``postings/group=<g>/bucket=<b>``, its term_dict rows and
+   then its own ``_ckpt/bucket_<b>.done`` marker holding its stats row.
+   Per bucket, the task k-way merges the sorted source files in bounded
+   batches and encodes chunks of at most ``_CHUNK_ROWS`` postings cut at
+   term boundaries; a term bigger than a chunk is folded once for its df,
+   then re-read alone and encoded a salt group at a time. Salt = posting
+   rank // salt_target within the term's doc_id order — explicit hot-term
+   skew handling at 10^12-turn scale: no block group outgrows salt_target,
+   and task memory is bounded by a constant, not by bucket size. dl is
+   stored inside the block (``dls_bin``) so query-time scoring needs NO
+   join against doc stats. Hot terms' block-bound summaries (``min_tfn``,
+   ``ub_tfn_q10``, the engine's benefit-gate inputs) ride their term_dict
+   rows.
+6. **metrics + lineage** tables (``IndexingStats.java:6-23`` analogue; term
+   count and skew come from the bucket markers, no re-scan), then the
+   atomic ``live.json`` pointer — the blue/green alias swap analogue
    (``ElasticsearchHelper.java:208-217``): readers only ever see a fully
    built segment.
 
@@ -132,8 +139,12 @@ def assign_doc_ids(tx: DataFrame, num_partitions: int = 0,
     for pid in sorted(sizes):
         offsets[pid] = acc
         acc += sizes[pid]
+    # from pandas, so Arrow hands the rows to the JVM directly: a Python
+    # list would be parallelized into a PythonRDD, and every broadcast of
+    # it would run one Python task per core
     off_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "_pid int, _off long")
+        pd.DataFrame({"_pid": list(offsets), "_off": list(offsets.values())}),
+        "_pid int, _off long")
     local = (F.monotonically_increasing_id()
              - F.col("_pid").cast("long") * F.lit(1 << 33))
     out = (part.withColumn("_local", local)
@@ -148,10 +159,12 @@ def assign_doc_ids(tx: DataFrame, num_partitions: int = 0,
 def _prewarm_python_workers(spark: SparkSession) -> threading.Thread:
     """Spawn + warm the Python worker pool (numpy/pyarrow imports, one
     trivial task per slot) on a background job while the JVM-only build
-    stages run. The per-bucket encode is otherwise the session's
-    FIRST Python stage and pays the whole pool's spawn + imports serially
-    on its critical path (~7 s at 32 cores, measured round 7); overlapped
-    with the doc_store/positions jobs it costs nothing (guide §2.6)."""
+    stages run. The encode job is otherwise the session's FIRST Python
+    stage and pays the whole pool's spawn + imports serially on its
+    critical path (~7 s at 32 cores, measured round 7); overlapped with
+    the doc_store/positions jobs it costs nothing (guide §2.6). Every
+    Python task also pays a fixed ~0.2 s of worker CPU, so one task per
+    slot is the most that helps."""
     def _warm(batches):
         import numpy as np
         import pyarrow  # noqa: F401
@@ -169,7 +182,7 @@ def _prewarm_python_workers(spark: SparkSession) -> threading.Thread:
 
     def _run():
         try:
-            n = 2 * spark.sparkContext.defaultParallelism
+            n = spark.sparkContext.defaultParallelism
             spark.range(0, n, 1, n).mapInArrow(_warm, schema="id long") \
                 .write.format("noop").mode("overwrite").save()
         except Exception:
@@ -377,21 +390,28 @@ def _encoder_core(field_stats: dict, block_size: int, n_levels: int,
     """Vectorized term_dict and block encoder over chunks of posting rows
     ``p`` (int64 field/doc_id/dl/tf numpy columns plus the ``term`` Arrow
     array) sorted by (field, term, doc_id); ``starts`` are the row indices
-    where each term begins. Returns three functions:
+    where each term begins. Returns four functions:
 
     * ``term_stats(p, starts)`` — per-term df, cf, max_tf, min_dl and
       max_tfn_real, all mergeable (sums, maxima, minima), so a term bigger
       than a chunk folds its stats piece by piece (see _STAT_FOLD).
-    * ``term_batch(st, first_id)`` — term_dict rows from (folded) stats,
-      plus max_score_ub and a dense term_id from ``first_id``.
     * ``blocks(p, starts, term_df, rank0=0)`` — one RecordBatch of block
-      rows; ``rank0`` counts the (single) term's postings before this
-      chunk. Salt = posting rank in the term's doc_id order // salt_target:
-      contiguous doc-id ranges, so the layout depends on the data alone,
-      never on how it was chunked. Impact levels (df ≥ 8·block_size only —
-      stratifying a tail term would fragment its single block into
-      metadata bloat) and the (field, term, salt, lvl desc, doc_id) order
-      are computed here.
+      rows, plus each block's term index into ``starts`` and its ub tfn
+      (the tf-normalization of its (max_tf, min_dl) pair); ``rank0``
+      counts the (single) term's postings before this chunk. Salt =
+      posting rank in the term's doc_id order // salt_target: contiguous
+      doc-id ranges, so the layout depends on the data alone, never on how
+      it was chunked. Impact levels (df ≥ 8·block_size only — stratifying
+      a tail term would fragment its single block into metadata bloat) and
+      the (field, term, salt, lvl desc, doc_id) order are computed here.
+    * ``term_bounds(term_df, owner, ub)`` — per hot term (df ≥
+      8·block_size, NaN for the rest) the MIN block ub tfn and the 10th
+      percentile ``sorted(ub)[ceil(0.1·n) − 1]`` over its n blocks: the
+      engine's benefit gate (df-independent; idf re-attaches at query
+      time). Pruning pays only when ~10% of some term's blocks could drop.
+    * ``term_batch(st, first_id, bounds)`` — term_dict rows from (folded)
+      stats and ``term_bounds``, plus max_score_ub and a dense term_id
+      from ``first_id``.
 
     Term-ordered outputs let parquet row-group min/max stats on ``term``
     prune query-time scans. ``field_stats``: field_id -> (n_docs, avgdl) —
@@ -410,7 +430,8 @@ def _encoder_core(field_stats: dict, block_size: int, n_levels: int,
         ("df", pa.float64()), ("cf", pa.int64()),
         ("max_tf", pa.float64()), ("min_dl", pa.float64()),
         ("max_tfn_real", pa.float64()),
-        ("max_score_ub", pa.float64()), ("term_id", pa.int64())])
+        ("max_score_ub", pa.float64()), ("term_id", pa.int64()),
+        ("min_tfn", pa.float64()), ("ub_tfn_q10", pa.float64())])
     # bucket rides the hive directory, not the file
     out_schema = pa.schema([
         ("field", pa.int32()), ("term", pa.string()),
@@ -434,7 +455,21 @@ def _encoder_core(field_stats: dict, block_size: int, n_levels: int,
             "max_tfn_real": np.maximum.reduceat(
                 S.tfn(tf, dl, avgdl_arr[p["field"]]), starts)}
 
-    def term_batch(st: dict, first_id: int) -> pa.RecordBatch:
+    def term_bounds(term_df: np.ndarray, owner: np.ndarray,
+                    ub: np.ndarray) -> tuple:
+        n = np.bincount(owner, minlength=len(term_df))
+        first = np.cumsum(n) - n
+        ub = ub[np.lexsort((ub, owner))]
+        hot = term_df >= lvl_min_df
+        lo, q10 = np.full(len(term_df), np.nan), np.full(len(term_df), np.nan)
+        lo[hot] = ub[first[hot]]
+        # the rank rule of Spark's percentile_approx(ub, 0.10); Spark's
+        # answer differs only where its sketch approximates (~10^4 blocks)
+        q10[hot] = ub[first[hot]
+                      + np.ceil(0.1 * n[hot]).astype(np.int64) - 1]
+        return lo, q10
+
+    def term_batch(st: dict, first_id: int, bounds: tuple) -> pa.RecordBatch:
         df, max_tf, min_dl = st["df"], st["max_tf"], st["min_dl"]
         # upper bound: max tf paired with min dl dominates any real (tf, dl)
         smax = S.bm25(max_tf, min_dl, df, n_arr[st["field"]],
@@ -448,7 +483,8 @@ def _encoder_core(field_stats: dict, block_size: int, n_levels: int,
             pa.array(st["max_tfn_real"], type=pa.float64()),
             pa.array(smax, type=pa.float64()),
             pa.array(np.arange(first_id, first_id + len(df), dtype=np.int64)),
-        ], schema=tdict_schema)
+        ] + [pa.array(b, mask=np.isnan(b), type=pa.float64())
+             for b in bounds], schema=tdict_schema)
 
     def _bin_col(buf: bytes, offs: np.ndarray) -> pa.Array:
         return pa.Array.from_buffers(
@@ -456,7 +492,7 @@ def _encoder_core(field_stats: dict, block_size: int, n_levels: int,
             [None, pa.py_buffer(offs), pa.py_buffer(buf)])
 
     def blocks(p: dict, starts: np.ndarray, term_df: np.ndarray,
-               rank0: int = 0) -> pa.RecordBatch:
+               rank0: int = 0) -> tuple:
         n = len(p["doc_id"])
         sizes = np.diff(np.append(starts, n))
         gids = np.repeat(np.arange(starts.size), sizes)
@@ -485,7 +521,9 @@ def _encoder_core(field_stats: dict, block_size: int, n_levels: int,
                                                 block_size)
         rs = enc["row_start"]
         scores = S.bm25(tfs, dls, dfs, n_arr[fields], avgdl_arr[fields])
-        return pa.RecordBatch.from_arrays([
+        b_max_tf = np.maximum.reduceat(tfs, rs).astype(np.float64)
+        b_min_dl = np.minimum.reduceat(dls, rs).astype(np.float64)
+        batch = pa.RecordBatch.from_arrays([
             pa.array(fields[rs].astype(np.int32), type=pa.int32()),
             p["term"].take(pa.array(starts[gids[rs]])),
             pa.array((salts[rs] * n_levels + lvls[rs]) * 1_000_000
@@ -499,16 +537,17 @@ def _encoder_core(field_stats: dict, block_size: int, n_levels: int,
             # stats by multi-segment readers (θ derives from real decoded
             # scores; the lower-bound pair is retained for min-score skip
             # strategies and reader compatibility)
-            pa.array(np.maximum.reduceat(tfs, rs).astype(np.float64)),
-            pa.array(np.minimum.reduceat(dls, rs).astype(np.float64)),
+            pa.array(b_max_tf), pa.array(b_min_dl),
             pa.array(np.minimum.reduceat(tfs, rs).astype(np.float64)),
             pa.array(np.maximum.reduceat(dls, rs).astype(np.float64)),
             _bin_col(enc["docs_buf"], enc["docs_off"]),
             _bin_col(enc["tfs_buf"], enc["tfs_off"]),
             _bin_col(enc["dls_buf"], enc["dls_off"]),
         ], schema=out_schema)
+        return batch, gids[rs], S.tfn(b_max_tf, b_min_dl,
+                                      avgdl_arr[fields[rs]])
 
-    return term_stats, term_batch, blocks
+    return term_stats, blocks, term_bounds, term_batch
 
 
 # how each term_stats column folds across the pieces of one term
@@ -516,8 +555,16 @@ _STAT_FOLD = {"df": np.add, "cf": np.add, "max_tf": np.maximum,
               "min_dl": np.minimum, "max_tfn_real": np.maximum}
 
 
-def _encode_bucket_task_fn(src_dir: str, src_kind: str, out_dir: str,
-                           term_dict_dir: str, buckets: list,
+# one stats row per encoded bucket: the task's reply and, as JSON, the
+# bucket's ``_ckpt/bucket_<b>.done`` marker; ``n_terms`` counts term_dict
+# rows, the text_* columns fold into the segment's skew ratio
+_BUCKET_STATS = ("bucket long, n_blocks long, chunks long, "
+                 "peak_rss_bytes long, n_terms long, text_df_max double, "
+                 "text_df_sum double, text_terms long")
+
+
+def _encode_bucket_task_fn(src_dir: str, src_kind: str, postings_dir: str,
+                           term_dict_dir: str, ckpt_dir: str, parts: list,
                            field_stats: dict, block_size: int,
                            n_levels: int, salt_target: int):
     """Per-BUCKET encode, the build's one encode path: the task streams its
@@ -535,13 +582,15 @@ def _encode_bucket_task_fn(src_dir: str, src_kind: str, out_dir: str,
     at term boundaries — usually the whole bucket is one chunk, read once.
     A term with more postings than a chunk is folded as it streams past
     (df is needed before encoding: idf in ``max_score``, impact levels,
-    salt), then re-read alone and encoded whole salt groups per chunk.
+    salt), then re-read alone and encoded whole salt groups per chunk; its
+    term_dict row follows its blocks (the bounds need every block's ub).
 
     Returns a mapInArrow function over a one-row-per-partition range
-    frame; partition i encodes ``buckets[i]`` and yields one stats row
-    (blocks, chunks, the task's peak RSS). Outputs are written
-    tmp-then-rename after a pre-clean, so task retries and resume re-runs
-    stay idempotent.
+    frame; partition i encodes the ``(group, bucket)`` list ``parts[i]``
+    into ``postings/group=<g>/bucket=<b>``, then writes the bucket's
+    marker and yields its stats row (_BUCKET_STATS). Outputs are written
+    tmp-then-rename after a pre-clean, and the marker only after them, so
+    task retries and resume re-runs stay idempotent.
     """
 
     # read when the task is built: its closure carries the bound to the
@@ -550,7 +599,7 @@ def _encode_bucket_task_fn(src_dir: str, src_kind: str, out_dir: str,
 
     def task(batches):
         import pyarrow as pa
-        term_stats, term_batch, blocks = _encoder_core(
+        term_stats, blocks, term_bounds, term_batch = _encoder_core(
             field_stats, block_size, n_levels, salt_target)
         cols = ["field", "term", "doc_id", "dl"] + (
             ["tf"] if src_kind == "tf" else [])
@@ -558,111 +607,126 @@ def _encode_bucket_task_fn(src_dir: str, src_kind: str, out_dir: str,
         # a big term's chunk: whole salt groups, as many as fit
         big_step = max(1, chunk_rows // salt_target) * salt_target
 
+        def encode(g: int, bkt: int) -> dict:
+            _reset_peak_rss()
+            src = os.path.join(src_dir, f"bucket={bkt}")
+            post_w = _PartWriter(os.path.join(postings_dir, f"group={g}",
+                                              f"bucket={bkt}"))
+            term_w = _PartWriter(os.path.join(term_dict_dir, f"bucket={bkt}"))
+            for w in (post_w, term_w):
+                if os.path.isdir(w.d):
+                    shutil.rmtree(w.d)
+            files = (sorted(os.path.join(src, f) for f in os.listdir(src)
+                            if not f.startswith((".", "_")))
+                     if os.path.isdir(src) else [])
+            read_rows = max(16, chunk_rows // (4 * max(1, len(files))))
+
+            def stream(key=None):
+                return map(_postings, _merge_sorted(
+                    [_read_sorted(f, cols, read_rows, key) for f in files]))
+
+            # dense 1-based (field, term)-ordered id + the bucket prefix
+            next_id = (bkt << 40) + 1
+            row = dict(bucket=bkt, n_blocks=0, chunks=0, peak_rss_bytes=0,
+                       n_terms=0, text_df_max=0.0, text_df_sum=0.0,
+                       text_terms=0)
+
+            def put_terms(st, bounds):
+                nonlocal next_id
+                term_w.add(term_batch(st, next_id, bounds))
+                next_id += len(st["df"])
+                text_df = st["df"][st["field"] == FIELDS["text"]]
+                row["n_terms"] += len(st["df"])
+                row["text_terms"] += len(text_df)
+                row["text_df_sum"] += float(text_df.sum())
+                row["text_df_max"] = max(row["text_df_max"],
+                                         float(text_df.max(initial=0.0)))
+
+            def put_blocks(p, starts, term_df, rank0=0):
+                batch, owner, ub = blocks(p, starts, term_df, rank0)
+                post_w.add(batch)
+                row["chunks"] += 1
+                return owner, ub
+
+            def whole_terms(p):
+                starts = _run_starts(p)
+                st = term_stats(p, starts)
+                put_terms(st, term_bounds(
+                    st["df"], *put_blocks(p, starts, st["df"])))
+
+            def big_term(st):
+                # second pass: the term alone, whole salt groups a chunk
+                key = (int(st["field"][0]), st["term"][0].as_py())
+                acc, n_done, ubs = None, 0, []
+                for w in itertools.chain(stream(key), [None]):
+                    if w is not None:
+                        acc = w if acc is None else _cat([acc, w])
+                    while acc is not None and (
+                            w is None or len(acc["doc_id"]) >= big_step):
+                        m = min(big_step, len(acc["doc_id"]))
+                        ubs.append(put_blocks(_sl(acc, 0, m), one, st["df"],
+                                              n_done)[1])
+                        n_done += m
+                        acc = _sl(acc, m) if m < len(acc["doc_id"]) else None
+                if n_done != st["df"][0]:
+                    raise RuntimeError(
+                        f"bucket {bkt}: term {key} re-read {n_done} "
+                        f"postings, folded df {st['df'][0]}")
+                ub = np.concatenate(ubs)
+                put_terms(st, term_bounds(
+                    st["df"], np.zeros(len(ub), dtype=np.int64), ub))
+
+            # pend: streamed postings not yet encoded, whole terms except
+            # (until the stream ends) the last one
+            src = itertools.chain(stream(), [None])
+            pend = None
+            for w in src:
+                if w is not None:
+                    pend = w if pend is None else _cat([pend, w])
+                while pend is not None and (
+                        w is None or len(pend["doc_id"]) > chunk_rows):
+                    n = len(pend["doc_id"])
+                    if n <= chunk_rows:   # end of stream: terms whole
+                        whole_terms(pend)
+                        pend = None
+                        break
+                    starts = _run_starts(pend)
+                    fit = starts[(starts > 0) & (starts <= chunk_rows)]
+                    if fit.size:
+                        whole_terms(_sl(pend, 0, fit[-1]))
+                        pend = _sl(pend, fit[-1])
+                        continue
+                    # the head term alone exceeds a chunk: fold it as it
+                    # streams past (it may go on for many windows)
+                    end = int(starts[1]) if starts.size > 1 else n
+                    st = term_stats(_sl(pend, 0, end), one)
+                    pend = _sl(pend, end) if end < n else None
+                    while pend is None and w is not None:
+                        w = next(src)
+                        e = 0 if w is None else _lead(w, st)
+                        if e:
+                            s = term_stats(_sl(w, 0, e), one)
+                            st = {k: (_STAT_FOLD[k](v, s[k])
+                                      if k in _STAT_FOLD else v)
+                                  for k, v in st.items()}
+                        if w is not None and e < len(w["doc_id"]):
+                            pend = _sl(w, e)
+                    big_term(st)
+            post_w.close()
+            term_w.close()
+            row["n_blocks"] = post_w.rows
+            row["peak_rss_bytes"] = _peak_rss_bytes()
+            return row
+
         for batch in batches:
             for i in batch.column(0).to_pylist():
-                bkt = buckets[int(i)]
-                _reset_peak_rss()
-                src = os.path.join(src_dir, f"bucket={bkt}")
-                post_w = _PartWriter(os.path.join(out_dir, f"bucket={bkt}"))
-                term_w = _PartWriter(os.path.join(term_dict_dir,
-                                                  f"bucket={bkt}"))
-                for w in (post_w, term_w):
-                    if os.path.isdir(w.d):
-                        shutil.rmtree(w.d)
-                files = (sorted(os.path.join(src, f) for f in os.listdir(src)
-                                if not f.startswith((".", "_")))
-                         if os.path.isdir(src) else [])
-                read_rows = max(16, chunk_rows // (4 * max(1, len(files))))
-
-                def stream(key=None):
-                    return map(_postings, _merge_sorted(
-                        [_read_sorted(f, cols, read_rows, key)
-                         for f in files]))
-
-                # dense 1-based (field, term)-ordered id + the bucket prefix
-                next_id = (bkt << 40) + 1
-                n_chunks = 0
-
-                def put_terms(st):
-                    nonlocal next_id
-                    term_w.add(term_batch(st, next_id))
-                    next_id += len(st["df"])
-
-                def put_blocks(p, starts, term_df, rank0=0):
-                    nonlocal n_chunks
-                    post_w.add(blocks(p, starts, term_df, rank0))
-                    n_chunks += 1
-
-                def whole_terms(p):
-                    starts = _run_starts(p)
-                    st = term_stats(p, starts)
-                    put_terms(st)
-                    put_blocks(p, starts, st["df"])
-
-                def big_term(st):
-                    # second pass: the term alone, whole salt groups a chunk
-                    put_terms(st)
-                    key = (int(st["field"][0]), st["term"][0].as_py())
-                    acc, n_done = None, 0
-                    for w in itertools.chain(stream(key), [None]):
-                        if w is not None:
-                            acc = w if acc is None else _cat([acc, w])
-                        while acc is not None and (
-                                w is None or len(acc["doc_id"]) >= big_step):
-                            m = min(big_step, len(acc["doc_id"]))
-                            put_blocks(_sl(acc, 0, m), one, st["df"], n_done)
-                            n_done += m
-                            acc = (_sl(acc, m) if m < len(acc["doc_id"])
-                                   else None)
-                    if n_done != st["df"][0]:
-                        raise RuntimeError(
-                            f"bucket {bkt}: term {key} re-read {n_done} "
-                            f"postings, folded df {st['df'][0]}")
-
-                # pend: streamed postings not yet encoded, whole terms
-                # except (until the stream ends) the last one
-                src = itertools.chain(stream(), [None])
-                pend = None
-                for w in src:
-                    if w is not None:
-                        pend = w if pend is None else _cat([pend, w])
-                    while pend is not None and (
-                            w is None or len(pend["doc_id"]) > chunk_rows):
-                        n = len(pend["doc_id"])
-                        if n <= chunk_rows:   # end of stream: terms whole
-                            whole_terms(pend)
-                            pend = None
-                            break
-                        starts = _run_starts(pend)
-                        fit = starts[(starts > 0) & (starts <= chunk_rows)]
-                        if fit.size:
-                            whole_terms(_sl(pend, 0, fit[-1]))
-                            pend = _sl(pend, fit[-1])
-                            continue
-                        # the head term alone exceeds a chunk: fold it as
-                        # it streams past (it may go on for many windows)
-                        end = int(starts[1]) if starts.size > 1 else n
-                        st = term_stats(_sl(pend, 0, end), one)
-                        pend = _sl(pend, end) if end < n else None
-                        while pend is None and w is not None:
-                            w = next(src)
-                            e = 0 if w is None else _lead(w, st)
-                            if e:
-                                s = term_stats(_sl(w, 0, e), one)
-                                st = {k: (_STAT_FOLD[k](v, s[k])
-                                          if k in _STAT_FOLD else v)
-                                      for k, v in st.items()}
-                            if w is not None and e < len(w["doc_id"]):
-                                pend = _sl(w, e)
-                        big_term(st)
-                post_w.close()
-                term_w.close()
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([bkt], type=pa.int32()),
-                     pa.array([post_w.rows], type=pa.int64()),
-                     pa.array([n_chunks], type=pa.int64()),
-                     pa.array([_peak_rss_bytes()], type=pa.int64())],
-                    names=["bucket", "n_blocks", "chunks", "peak_rss_bytes"])
+                for g, bkt in parts[int(i)]:
+                    row = encode(g, bkt)
+                    marker = os.path.join(ckpt_dir, f"bucket_{bkt}.done")
+                    with open(marker + ".tmp", "w") as f:
+                        json.dump(row, f)
+                    os.replace(marker + ".tmp", marker)
+                    yield pa.RecordBatch.from_pylist([row])
 
     return task
 
@@ -680,9 +744,10 @@ def build_index(spark: SparkSession, tx: DataFrame, out_dir: str, *,
     ``doc_base`` offsets this segment's doc_ids (multi-segment /
     incremental indexes — the Lucene-segment model); ``append=True``
     publishes by adding the segment to live.json's segment list instead of
-    replacing it. ``fail_after_group`` injects a crash after that many
-    encode groups — used by the resume tests (the analogue of the
-    reference's double-build E2E, ``E2ETest.java:77-78``).
+    replacing it. ``fail_after_group`` injects a crash after encoding the
+    buckets of that many pending groups, before publish — used by the
+    resume tests (the analogue of the reference's double-build E2E,
+    ``E2ETest.java:77-78``).
     """
     t0 = time.time()
     seg_dir = os.path.join(out_dir, "segments", segment)
@@ -892,114 +957,97 @@ def build_index(spark: SparkSession, tx: DataFrame, out_dir: str, *,
         lap("tf_partial")
     ids._cached_base.unpersist()
 
-    n_terms_total, built_groups, encode_stats = _term_dict_and_postings(
+    enc = _term_dict_and_postings(
         spark, seg_dir, field_stats, n_buckets=n_buckets,
         block_size=block_size, salt_target=salt_target, n_groups=n_groups,
-        done=done, mark=mark, lap=lap, impact_order=impact_order,
+        done=done, lap=lap, impact_order=impact_order,
         fail_after_group=fail_after_group)
-    groups = [sorted(range(n_buckets))[i::n_groups] for i in range(n_groups)]
-    postings_path = os.path.join(seg_dir, "postings")
-    term_df = spark.read.parquet(
-        os.path.join(seg_dir, "term_dict")).select("field", "df")
     return _finalize_segment(
-        spark, out_dir, seg_dir, segment, term_df, groups, postings_path,
-        n_docs=n_docs, avgdl=avgdl, n_terms_total=n_terms_total,
-        built_groups=built_groups, encode_stats=encode_stats,
+        out_dir, seg_dir, segment, enc, n_docs=n_docs, avgdl=avgdl,
         resume=resume, append=append, t0=t0, stage_t=stage_t)
+
+
+def _bucket_groups(n_buckets: int, n_groups: int) -> list:
+    """Bucket ids of each group (group g holds buckets g, g+G, ...): the
+    ``postings/group=<g>`` directories, the lineage rows and the unit of
+    ``fail_after_group``."""
+    return [list(range(g, n_buckets, n_groups)) for g in range(n_groups)]
+
+
+def _deal(sizes: dict, n_parts: int) -> list:
+    """Keys of ``sizes`` dealt to ``n_parts`` lists, largest first, each
+    onto the list with the least total so far (greedy LPT): a hot bucket
+    gets a task of its own instead of queueing behind others."""
+    parts, loads = [[] for _ in range(n_parts)], [0] * n_parts
+    for key in sorted(sizes, key=lambda k: (-sizes[k], k)):
+        i = min(range(n_parts), key=lambda j: (loads[j], j))
+        parts[i].append(key)
+        loads[i] += sizes[key]
+    return parts
 
 
 def _term_dict_and_postings(spark: SparkSession, seg_dir: str,
                             field_stats: dict, *, n_buckets: int,
                             block_size: int, salt_target: int,
-                            n_groups: int, done, mark, lap,
+                            n_groups: int, done, lap,
                             impact_order: bool = False,
-                            fail_after_group: int = -1) -> tuple:
+                            fail_after_group: int = -1) -> dict:
     """Stages 4+5 (term dictionary + block encode) — shared by
     :func:`build_index` and :func:`compact_index` (segment merging
     rebuilds the dictionary and postings from the UNION of the input
     segments' partials under the merged corpus stats). The source is the
     segment's ``tf_partial`` table when it exists (no-positions builds),
-    else the raw ``pos_partial`` table with tf derived in-task. Each
-    bucket group is ONE mapInArrow job of per-bucket tasks
-    (:func:`_encode_bucket_task_fn`) that write both the postings and the
-    term_dict. Returns ``(n_terms_total, built_groups, encode_stats)``,
-    the last one stats row per bucket encoded in this run."""
+    else the raw ``pos_partial`` table with tf derived in-task.
+
+    Every bucket without a marker is encoded by ONE mapInArrow job of at
+    most ``defaultParallelism`` tasks (:func:`_encode_bucket_task_fn`).
+    ``fail_after_group=g`` encodes only the buckets of the first g pending
+    groups and then raises (the resume tests' crash point). Returns
+    ``groups``, ``markers`` (every bucket's stats row, from its marker),
+    ``encoded`` (the rows of the buckets encoded in this run) and
+    ``groups_built`` (groups with a bucket encoded in this run)."""
     tf_dir = os.path.join(seg_dir, "tf_partial")
     src_dir, src_kind = ((tf_dir, "tf") if os.path.isdir(tf_dir)
                          else (os.path.join(seg_dir, "pos_partial"), "pos"))
-    term_dict_path = os.path.join(seg_dir, "term_dict")
-    groups = [sorted(range(n_buckets))[i::n_groups] for i in range(n_groups)]
-    postings_path = os.path.join(seg_dir, "postings")
-    n_levels = 8 if impact_order else 1
-    built_groups = 0
-    encode_stats = []
-    for gi, buckets in enumerate(groups):
-        if done(f"group_{gi}.done"):
-            continue
-        if buckets:
-            spark.sparkContext.setJobDescription(
-                f"encode group {gi}: {len(buckets)} bucket tasks")
-            task = _encode_bucket_task_fn(
-                src_dir, src_kind, os.path.join(postings_path, f"group={gi}"),
-                term_dict_path, buckets, field_stats, block_size, n_levels,
-                salt_target)
-            res = (spark.range(0, len(buckets), 1, len(buckets))
-                   .mapInArrow(task, schema="bucket int, n_blocks long, "
-                               "chunks long, peak_rss_bytes long")
-                   .collect())
-            spark.sparkContext.setJobDescription(None)
-            if len(res) != len(buckets):
-                raise RuntimeError(
-                    f"encode group {gi}: {len(res)}/{len(buckets)} "
-                    "bucket tasks reported")
-            encode_stats += res
-        mark(f"group_{gi}.done")
-        lap(f"encode_g{gi}")
-        built_groups += 1
-        if fail_after_group >= 0 and built_groups >= fail_after_group:
-            raise RuntimeError(f"injected failure after group {gi}")
-    n_terms_total = spark.read.parquet(term_dict_path).count()
-    if not done("term_bounds.done"):
-        # per-(field, term) MIN over blocks of the block upper-bound's
-        # tf-normalization (df-independent; idf re-attaches at query time).
-        # Powers the engine's no-possible-prune static gate: when every
-        # block of a term bounds at least as high as the best achievable θ,
-        # the θ job is pure overhead (uniform corpora, doc-ordered blocks)
-        # and is skipped entirely. A tiny column-pruned scan of block
-        # metadata (~postings/block_size rows), NOT the posting payloads.
-        k1, b = S.K1, S.B
-        avgdl_col = F.create_map(
-            *[x for fid, (_nf, af) in field_stats.items()
-              for x in (F.lit(fid), F.lit(af))])[F.col("field")]
-        tfn = (F.col("max_tf")
-               / (F.col("max_tf")
-                  + k1 * (1 - b + b * F.col("min_dl") / avgdl_col)))
-        # HOT TERMS ONLY (df ≥ ~8 blocks): the gate exists to spare hot
-        # terms' θ jobs; percentile digests over the full 5M-term
-        # vocabulary cost 30 s at 1 executor and scaled at 0.40 — a
-        # semi-join against the hot dictionary rows collapses the agg to
-        # seconds (AQE picks broadcast while the hot set is small; at a
-        # vocabulary scale where it is not, the shuffle semi-join is
-        # still far cheaper than full-vocab digests). Tail terms get no
-        # sidecar row (NULL at read time), which the engine treats as
-        # "prunable" — exactly the pre-sidecar behavior.
-        hot = (spark.read.parquet(term_dict_path)
-               .where(F.col("df") >= float(8 * block_size))
-               .select("field", "term"))
-        (spark.read.parquet(postings_path)
-             .select("field", "term", tfn.alias("tfn"))
-             .join(hot, ["field", "term"], "left_semi")
-             .groupBy("field", "term")
-             .agg(F.min("tfn").alias("min_tfn"),
-                  # 10th-percentile block ub: the gate's cost model —
-                  # pruning runs only when at least ~10% of some term's
-                  # blocks could drop at the θ cap
-                  F.percentile_approx("tfn", 0.10).alias("ub_tfn_q10"))
-             .write.mode("overwrite")
-             .parquet(os.path.join(seg_dir, "term_bounds")))
-        mark("term_bounds.done")
-        lap("term_bounds")
-    return n_terms_total, built_groups, encode_stats
+    ckpt_dir = os.path.join(seg_dir, "_ckpt")
+    groups = _bucket_groups(n_buckets, n_groups)
+    pending = [p for p in ([(gi, b) for b in g
+                            if not done(f"bucket_{b}.done")]
+                           for gi, g in enumerate(groups)) if p]
+    if fail_after_group >= 0:
+        pending = pending[:fail_after_group]
+    todo = [x for p in pending for x in p]
+    encoded = []
+    if todo:
+        def src_bytes(b: int) -> int:
+            return sum(os.path.getsize(os.path.join(dp, fn)) for dp, _, fns
+                       in os.walk(os.path.join(src_dir, f"bucket={b}"))
+                       for fn in fns)
+        n_parts = min(len(todo), spark.sparkContext.defaultParallelism)
+        parts = _deal({x: src_bytes(x[1]) for x in todo}, n_parts)
+        task = _encode_bucket_task_fn(
+            src_dir, src_kind, os.path.join(seg_dir, "postings"),
+            os.path.join(seg_dir, "term_dict"), ckpt_dir, parts,
+            field_stats, block_size, 8 if impact_order else 1, salt_target)
+        spark.sparkContext.setJobDescription(
+            f"encode: {len(todo)} buckets in {n_parts} tasks")
+        encoded = [r.asDict() for r in
+                   spark.range(0, n_parts, 1, n_parts)
+                   .mapInArrow(task, schema=_BUCKET_STATS).collect()]
+        spark.sparkContext.setJobDescription(None)
+        if len(encoded) != len(todo):
+            raise RuntimeError(f"encode: {len(encoded)}/{len(todo)} "
+                               "bucket tasks reported")
+    lap("encode")
+    if 0 <= fail_after_group <= len(pending):
+        raise RuntimeError(
+            f"injected failure after {len(pending)} encode groups")
+    markers = []
+    for b in range(n_buckets):
+        with open(os.path.join(ckpt_dir, f"bucket_{b}.done")) as f:
+            markers.append(json.load(f))
+    return {"groups": groups, "markers": markers, "encoded": encoded,
+            "groups_built": len(pending)}
 
 
 def _seg_id_of(name: str) -> int:
@@ -1044,40 +1092,42 @@ def _live_lock(out_dir: str):
             fcntl.flock(lf, fcntl.LOCK_UN)
 
 
-def _finalize_segment(spark: SparkSession, out_dir: str, seg_dir: str,
-                      segment: str, term_df: DataFrame, groups: list,
-                      postings_path: str, *, n_docs: int, avgdl: float,
-                      n_terms_total: int, built_groups: int,
-                      encode_stats: list, resume: bool,
+def _finalize_segment(out_dir: str, seg_dir: str, segment: str, enc: dict,
+                      *, n_docs: int, avgdl: float, resume: bool,
                       append: bool, t0: float, stage_t: dict,
                       replace_segments: list | None = None) -> dict:
-    """Stage 6: metrics + lineage + atomic live.json publish. With
-    ``replace_segments``, the named segments are REPLACED by this one in
-    the pointer (compaction); otherwise append/overwrite semantics."""
+    """Stage 6: metrics + lineage + atomic live.json publish. ``enc`` is
+    :func:`_term_dict_and_postings`' result. With ``replace_segments``,
+    the named segments are REPLACED by this one in the pointer
+    (compaction); otherwise append/overwrite semantics."""
     elapsed = time.time() - t0
+    postings_path = os.path.join(seg_dir, "postings")
     post_bytes = sum(
         os.path.getsize(os.path.join(dp, fn))
         for dp, _, fns in os.walk(postings_path) for fn in fns)
-    # skew ratio computed distributed — never collect the term dict
-    # (text field only: the tiny meta vocabulary would distort the ratio)
-    _sk = (term_df.where(F.col("field") == FIELDS["text"])
-           .agg(F.max("df").alias("mx"), F.avg("df").alias("av")).collect()[0])
+    # skew ratio over the text field's df (the tiny meta vocabulary would
+    # distort it), folded from the bucket markers — no term_dict re-scan
+    mk, run = enc["markers"], enc["encoded"]
+    text_terms = sum(r["text_terms"] for r in mk)
+    df_avg = sum(r["text_df_sum"] for r in mk) / max(text_terms, 1)
     metrics = {
         "segment": segment, "n_docs": n_docs, "avgdl": avgdl,
-        "n_terms": n_terms_total, "postings_bytes": post_bytes,
+        "n_terms": sum(r["n_terms"] for r in mk),
+        "postings_bytes": post_bytes,
         "build_sec": elapsed, "turns_per_sec": n_docs / max(elapsed, 1e-9),
-        "skew_ratio": float(_sk["mx"]) / max(float(_sk["av"]), 1e-9),
-        "groups_built": built_groups, "resumed": resume,
+        "skew_ratio": (max(r["text_df_max"] for r in mk)
+                       / max(df_avg, 1e-9)),
+        "groups_built": enc["groups_built"], "resumed": resume,
         "stage_sec": json.dumps(stage_t),
-        # over the buckets encoded in THIS run (a resume skips done groups)
-        "encode_chunks": sum(r["chunks"] for r in encode_stats),
+        # over the buckets encoded in THIS run (a resume skips done ones)
+        "encode_chunks": sum(r["chunks"] for r in run),
         "encode_peak_rss_bytes": max(
-            (r["peak_rss_bytes"] for r in encode_stats), default=0),
+            (r["peak_rss_bytes"] for r in run), default=0),
     }
     pd.DataFrame([metrics]).to_parquet(os.path.join(seg_dir, "metrics.parquet"))
     pd.DataFrame([{"group": gi, "buckets": json.dumps(g),
-                   "marker": f"group_{gi}.done"}
-                  for gi, g in enumerate(groups)]
+                   "markers": json.dumps([f"bucket_{b}.done" for b in g])}
+                  for gi, g in enumerate(enc["groups"])]
                  ).to_parquet(os.path.join(seg_dir, "lineage.parquet"))
 
     live_path = os.path.join(out_dir, "live.json")
@@ -1412,19 +1462,13 @@ def compact_index(spark: SparkSession, out_dir: str, *,
                        "impact_order": impact_order,
                        "with_positions": with_positions}, f)
 
-    n_terms_total, built_groups, encode_stats = _term_dict_and_postings(
+    enc = _term_dict_and_postings(
         spark, seg_dir, field_stats, n_buckets=n_buckets,
         block_size=block_size, salt_target=salt_target, n_groups=n_groups,
-        done=done, mark=mark, lap=lap, impact_order=impact_order)
-    groups = [sorted(range(n_buckets))[i::n_groups] for i in range(n_groups)]
-    term_df = spark.read.parquet(
-        os.path.join(seg_dir, "term_dict")).select("field", "df")
+        done=done, lap=lap, impact_order=impact_order)
     m = _finalize_segment(
-        spark, out_dir, seg_dir, segment, term_df, groups,
-        os.path.join(seg_dir, "postings"), n_docs=n_docs,
-        avgdl=sum_dl / n_docs, n_terms_total=n_terms_total,
-        built_groups=built_groups, encode_stats=encode_stats,
-        resume=resume, append=False,
+        out_dir, seg_dir, segment, enc, n_docs=n_docs,
+        avgdl=sum_dl / n_docs, resume=resume, append=False,
         t0=t0, stage_t=stage_t, replace_segments=in_segs)
     m["merged_segments"] = in_segs
     return m

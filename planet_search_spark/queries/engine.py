@@ -39,7 +39,8 @@ main job):
 * benefit gate (term-level, zero jobs): θ can never exceed
   M_real := max_t idf_t·max_tfn_real(t) (the best ACTUAL posting, stored
   in term_dict at build time); pruning runs only when for SOME term the
-  10th-percentile block ub (the term_bounds sidecar) plus its `other`
+  10th-percentile block ub (``ub_tfn_q10``, written into hot terms'
+  term_dict rows by the encoder; NULL for other terms) plus its `other`
   sits below M_real — i.e. at least ~10% of that term's blocks could
   drop at the θ cap. Below that, the two θ jobs cost more than the
   decode they save (the homogeneous-bounds uniform-corpus case, a
@@ -269,67 +270,48 @@ def _collect_term_stats(spark: SparkSession, idx: IndexMeta,
                         terms: list[str],
                         field_ids: tuple = (TEXT_FIELD,)) -> list:
     """One dict per query (field, term): df, max_score_ub, max_tfn_real,
-    min_tfn, ub_tfn_q10 — same values as :func:`_term_stats`, computed by
-    collecting the RAW per-segment rows (≤ segments × terms of them) and
-    aggregating on the driver. The groupBy + left-join form planned 3
-    stages (two Exchanges) for a handful of rows; this is one
-    exchange-free scan job per query — the fixed per-query Spark-job cost
-    is the dominant term at serving-adjacent latencies (round 7).
+    min_tfn, ub_tfn_q10 under GLOBAL stats, computed by collecting the RAW
+    per-segment term_dict rows (≤ segments × terms of them) and
+    aggregating on the driver. A groupBy form planned Exchanges for a
+    handful of rows; this is one exchange-free scan job per query — the
+    fixed per-query Spark-job cost is the dominant term at
+    serving-adjacent latencies (round 7).
     """
     buckets = sorted({bucket_of(t, idx.n_buckets) for t in terms})
-    tset = sorted(set(terms))
-    fl = list(field_ids)
-    null_d = F.lit(None).cast("double")
     td = (_union_read(spark, idx, "term_dict")
           .where(F.col("bucket").isin(buckets))
-          .where(F.col("field").isin(fl))
-          .where(F.col("term").isin(tset)))
-    if "max_tfn_real" not in td.columns:
-        td = td.withColumn("max_tfn_real", null_d)
-    td = td.select("field", "term", "df", "max_tf", "min_dl",
-                   "max_tfn_real", null_d.alias("min_tfn"),
-                   null_d.alias("ub_tfn_q10"), F.lit(0).alias("_src"))
-    plan = td
-    if all(os.path.isdir(os.path.join(sd, "term_bounds"))
-           for sd in idx.seg_dirs):
-        tb = _union_read(spark, idx, "term_bounds")
-        if "ub_tfn_q10" not in tb.columns:
-            tb = tb.withColumn("ub_tfn_q10", null_d)
-        tb = (tb.where(F.col("field").isin(fl))
-              .where(F.col("term").isin(tset))
-              .select("field", "term", null_d.alias("df"),
-                      null_d.alias("max_tf"), null_d.alias("min_dl"),
-                      null_d.alias("max_tfn_real"), "min_tfn",
-                      "ub_tfn_q10", F.lit(1).alias("_src")))
-        plan = td.unionByName(tb)
+          .where(F.col("field").isin(list(field_ids)))
+          .where(F.col("term").isin(sorted(set(terms)))))
+    # older segment generations lack these columns: NULL = unknown
+    for c in ("max_tfn_real", "min_tfn", "ub_tfn_q10"):
+        if c not in td.columns:
+            td = td.withColumn(c, F.lit(None).cast("double"))
     acc: dict[tuple, dict] = {}
-    for r in plan.collect():
-        key = (r["field"], r["term"])
-        a = acc.setdefault(key, {
+    for r in td.select("field", "term", "df", "max_tf", "min_dl",
+                       "max_tfn_real", "min_tfn", "ub_tfn_q10").collect():
+        a = acc.setdefault((r["field"], r["term"]), {
             "field": r["field"], "term": r["term"], "df": 0.0,
             "max_tf": None, "min_dl": None, "max_tfn_real": None,
             "_mtr_nulls": 0, "min_tfn": None, "ub_tfn_q10": None})
-        if r["_src"] == 0:                      # term_dict row (per segment)
-            a["df"] += float(r["df"])
-            if a["max_tf"] is None or r["max_tf"] > a["max_tf"]:
-                a["max_tf"] = float(r["max_tf"])
-            if a["min_dl"] is None or r["min_dl"] < a["min_dl"]:
-                a["min_dl"] = float(r["min_dl"])
-            if r["max_tfn_real"] is None:
-                # a NULL from any pre-round-3 segment must poison the max
-                # (an unknown segment max invalidates the θ cap)
-                a["_mtr_nulls"] += 1
-            elif (a["max_tfn_real"] is None
-                  or r["max_tfn_real"] > a["max_tfn_real"]):
-                a["max_tfn_real"] = float(r["max_tfn_real"])
-        else:                                   # term_bounds sidecar row
-            # min over segments: conservative toward pruning (an
-            # underestimated q10 runs the θ jobs more often, never the
-            # reverse); F.min semantics — NULLs skipped
-            for c in ("min_tfn", "ub_tfn_q10"):
-                v = r[c]
-                if v is not None and (a[c] is None or v < a[c]):
-                    a[c] = float(v)
+        a["df"] += float(r["df"])
+        if a["max_tf"] is None or r["max_tf"] > a["max_tf"]:
+            a["max_tf"] = float(r["max_tf"])
+        if a["min_dl"] is None or r["min_dl"] < a["min_dl"]:
+            a["min_dl"] = float(r["min_dl"])
+        if r["max_tfn_real"] is None:
+            # a NULL from any pre-round-3 segment must poison the max
+            # (an unknown segment max invalidates the θ cap)
+            a["_mtr_nulls"] += 1
+        elif (a["max_tfn_real"] is None
+              or r["max_tfn_real"] > a["max_tfn_real"]):
+            a["max_tfn_real"] = float(r["max_tfn_real"])
+        # min over segments, NULLs (not hot there) skipped: conservative
+        # toward pruning (an underestimated q10 runs the θ jobs more
+        # often, never the reverse)
+        for c in ("min_tfn", "ub_tfn_q10"):
+            v = r[c]
+            if v is not None and (a[c] is None or v < a[c]):
+                a[c] = float(v)
     field_stats = idx.field_stats()
     out = []
     for a in acc.values():
@@ -383,13 +365,14 @@ def _wand_prune_blocks(blocks: DataFrame, stats: list, idx: IndexMeta,
     # ub(t,b) + other(t) ≥ θ, and θ ≤ M_real = max_t idf_t·max_tfn_real(t)
     # (θ_t is a REAL per-term score, so it can never exceed t's best actual
     # posting — a much tighter cap than the (max_tf, min_dl) pairing bound).
-    # With mn(t) = the MIN block ub of t (idf × the build-time min_tfn
-    # sidecar), mn(t) + other(t) ≥ M_real for EVERY query term proves no θ
-    # can drop any block — skip both θ jobs. This is the homogeneous-bounds
-    # uniform-corpus case that made pruning a measured net loss; a
-    # performance decision only, so cross-segment avgdl drift in the stored
-    # tfn cannot affect correctness. NULL min_tfn / max_tfn_real
-    # (pre-sidecar segments) disables the gate.
+    # With q(t) = idf × t's 10th-percentile block ub tfn (``ub_tfn_q10``
+    # of its term_dict rows, build time), q(t) + other(t) ≥ M_real for
+    # EVERY query term means under ~10% of any term's blocks could drop —
+    # skip both θ jobs. This is the homogeneous-bounds uniform-corpus case
+    # that made pruning a measured net loss; a performance decision only,
+    # so cross-segment avgdl drift in the stored tfn cannot affect
+    # correctness. A NULL ub_tfn_q10 (a term hot in no segment) or
+    # max_tfn_real disables the gate.
     def _idf(fk):
         return float(S.idf(df_map[fk],
                            field_stats[int(fk.split(":", 1)[0])][0]))

@@ -386,8 +386,8 @@ def test_tiered_compaction_merges_only_the_small_tier(spark, tmp_path):
     stay bit-identical and the live count stays bounded. Also covers
     VERDICT item 7: the merged inputs have different avgdl, and block-max
     WAND (prune='force') on the mixed index still equals the unpruned
-    path (term_bounds / max_score sidecars stay correct across tiered
-    merges)."""
+    path (the term_dict block-bound columns and max_score stay correct
+    across tiered merges)."""
     from planet_search_spark.indexing.build import maybe_compact
 
     out = str(tmp_path / "tieridx")

@@ -422,6 +422,124 @@ def test_tiny_chunks_artifact_identical(spark, corpus, single_shot_dir,
         assert pa_ == pb_ and len(pa_) > 0
 
 
+def test_resume_reencodes_only_unmarked_bucket(spark, corpus,
+                                               single_shot_dir, tmp_path):
+    """Resume granularity is one bucket: with every bucket encoded but the
+    build crashed before publish, deleting one bucket's marker re-encodes
+    exactly that bucket and leaves every other bucket's files alone."""
+    out = str(tmp_path / "idx")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        build_index(spark, corpus, out,
+                    fail_after_group=BUILD_KW["n_groups"], **BUILD_KW)
+    assert not os.path.exists(os.path.join(out, "live.json"))
+    seg = os.path.join(out, "segments", "seg_1")
+    redo = 4
+
+    def stamps():
+        return {p: os.stat(p).st_mtime_ns for p in
+                glob.glob(os.path.join(seg, "_ckpt", "bucket_*.done"))
+                + glob.glob(os.path.join(seg, "postings", "*", "*", "*"))
+                + glob.glob(os.path.join(seg, "term_dict", "*", "*"))
+                if f"bucket={redo}" not in p and f"bucket_{redo}." not in p}
+    before = stamps()
+    assert len(before) == 3 * (BUILD_KW["n_buckets"] - 1), sorted(before)
+    os.remove(os.path.join(seg, "_ckpt", f"bucket_{redo}.done"))
+    m = build_index(spark, corpus, out, resume=True, **BUILD_KW)
+    assert m["groups_built"] == 1
+    assert m["encode_chunks"] == 1       # one bucket, one chunk: one row
+    assert stamps() == before
+    assert os.path.exists(os.path.join(seg, "_ckpt", f"bucket_{redo}.done"))
+    _assert_artifacts_identical(spark, single_shot_dir, out)
+
+
+def test_encode_is_one_job_of_at_most_one_task_per_core(spark, corpus,
+                                                         tmp_path):
+    """Every Python task pays a fixed start-up cost, so the encode stage is
+    ONE Spark job of at most defaultParallelism tasks, however many
+    buckets and bucket groups there are."""
+    import json as _json
+    import planet_search_spark.indexing.build as B
+    sc = spark.sparkContext
+    kw = dict(BUILD_KW, n_buckets=2 * sc.defaultParallelism)
+    out = str(tmp_path / "idx")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        build_index(spark, corpus, out, fail_after_group=0, **kw)
+    seg = os.path.join(out, "segments", "seg_1")
+    with open(os.path.join(seg, "corpus_stats.json")) as f:
+        fields = _json.load(f)["fields"]
+    field_stats = {B.FIELDS[n]: (float(s["n_docs"]), s["sum_dl"] / s["n_docs"])
+                   for n, s in fields.items()}
+    group = f"encode-shape-{os.getpid()}"
+    sc.setJobGroup(group, "encode stage only")
+    try:
+        enc = B._term_dict_and_postings(
+            spark, seg, field_stats, n_buckets=kw["n_buckets"],
+            block_size=kw["block_size"], salt_target=kw["salt_target"],
+            n_groups=kw["n_groups"], done=lambda name: False,
+            lap=lambda name: None)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    assert len(jobs) == 1, jobs
+    tasks = sum(st.getStageInfo(s).numTasks
+                for s in st.getJobInfo(jobs[0]).stageIds)
+    assert 0 < tasks <= sc.defaultParallelism, tasks
+    assert sorted(r["bucket"] for r in enc["encoded"]) == \
+        list(range(kw["n_buckets"]))
+    assert enc["groups_built"] == kw["n_groups"]
+
+
+def _term_bounds_reference(spark, seg_dir, block_size):
+    """Hot terms' (df ≥ 8·block_size) block-bound summaries computed by
+    Spark itself, the reference for the encoder's numpy rank rule:
+    semi-join the block metadata on the hot term_dict rows, then the MIN
+    and ``percentile_approx(·, 0.10)`` of each block's ub tfn."""
+    import json as _json
+    from planet_search_spark.indexing.build import FIELDS
+    with open(os.path.join(seg_dir, "corpus_stats.json")) as f:
+        fields = _json.load(f)["fields"]
+    avgdl = F.create_map(*[x for n, s in fields.items() for x in (
+        F.lit(FIELDS[n]), F.lit(s["sum_dl"] / s["n_docs"]))])[F.col("field")]
+    tfn = (F.col("max_tf") / (F.col("max_tf") + S.K1 * (
+        1 - S.B + S.B * F.col("min_dl") / avgdl)))
+    hot = (spark.read.parquet(os.path.join(seg_dir, "term_dict"))
+           .where(F.col("df") >= float(8 * block_size))
+           .select("field", "term"))
+    return (spark.read.parquet(os.path.join(seg_dir, "postings"))
+            .select("field", "term", tfn.alias("tfn"))
+            .join(hot, ["field", "term"], "left_semi")
+            .groupBy("field", "term")
+            .agg(F.min("tfn").alias("min_tfn"),
+                 F.percentile_approx("tfn", 0.10).alias("ub_tfn_q10")))
+
+
+@pytest.mark.parametrize("which", ["single_shot", "tiny_chunks", "impact"])
+def test_term_bounds_match_spark_reference(spark, corpus, single_shot_dir,
+                                           impact_index_dir, tmp_path,
+                                           monkeypatch, which):
+    """The encoder's min_tfn / ub_tfn_q10 term_dict columns equal the Spark
+    reference exactly on hot terms and are NULL on every other term — also
+    when a big term's blocks are encoded across many chunks."""
+    import planet_search_spark.indexing.build as B
+    out = {"single_shot": single_shot_dir, "impact": impact_index_dir}.get(
+        which)
+    if out is None:
+        monkeypatch.setattr(B, "_CHUNK_ROWS", TINY_CHUNK_ROWS)
+        out = str(tmp_path / "tiny")
+        build_index(spark, corpus, out, **BUILD_KW)
+    seg = glob.glob(os.path.join(out, "segments", "*"))[0]
+    want = {(r.field, r.term): (r.min_tfn, r.ub_tfn_q10) for r in
+            _term_bounds_reference(spark, seg, BUILD_KW["block_size"])
+            .collect()}
+    got = {(r.field, r.term): (r.min_tfn, r.ub_tfn_q10) for r in
+           spark.read.parquet(os.path.join(seg, "term_dict"))
+           .select("field", "term", "min_tfn", "ub_tfn_q10").collect()}
+    assert len(want) >= 10, len(want)
+    assert set(want) <= set(got)
+    assert {k: v for k, v in got.items() if v != (None, None)} == want
+
+
 def test_metrics_and_lineage_written(index_dir):
     seg = glob.glob(os.path.join(index_dir, "segments", "*"))[0]
     import pandas as pd
