@@ -156,15 +156,26 @@ def assign_doc_ids(tx: DataFrame, num_partitions: int = 0,
     return out
 
 
-def _prewarm_python_workers(spark: SparkSession) -> threading.Thread:
+# SparkContexts (by application id) whose Python workers were warmed
+_PREWARMED: set = set()
+PREWARM_JOB_GROUP = "prewarm-python-workers"
+
+
+def _prewarm_python_workers(spark: SparkSession) -> None:
     """Spawn + warm the Python worker pool (numpy/pyarrow imports, one
     trivial task per slot) on a background job while the JVM-only build
-    stages run. The encode job is otherwise the session's FIRST Python
-    stage and pays the whole pool's spawn + imports serially on its
-    critical path (~7 s at 32 cores, measured round 7); overlapped with
-    the doc_store/positions jobs it costs nothing (guide §2.6). Every
-    Python task also pays a fixed ~0.2 s of worker CPU, so one task per
-    slot is the most that helps."""
+    stages run, once per SparkContext. The encode job is otherwise the
+    session's FIRST Python stage and pays the whole pool's spawn + imports
+    serially on its critical path (~7 s at 32 cores, measured round 7);
+    overlapped with the doc_store/positions jobs it costs nothing (guide
+    §2.6). Every Python task also pays a fixed ~0.2 s of worker CPU, so
+    one task per slot is the most that helps, and a later build in the
+    same session (an append, a compaction) finds the workers up."""
+    app = spark.sparkContext.applicationId
+    if app in _PREWARMED:
+        return
+    _PREWARMED.add(app)
+
     def _warm(batches):
         import numpy as np
         import pyarrow  # noqa: F401
@@ -182,15 +193,15 @@ def _prewarm_python_workers(spark: SparkSession) -> threading.Thread:
 
     def _run():
         try:
-            n = spark.sparkContext.defaultParallelism
+            sc = spark.sparkContext
+            sc.setJobGroup(PREWARM_JOB_GROUP, "warm the Python worker pool")
+            n = sc.defaultParallelism
             spark.range(0, n, 1, n).mapInArrow(_warm, schema="id long") \
                 .write.format("noop").mode("overwrite").save()
         except Exception:
             pass  # warmup is best-effort; the encode stage works without it
 
-    t = threading.Thread(target=_run, daemon=True)
-    t.start()
-    return t
+    threading.Thread(target=_run, daemon=True).start()
 
 
 def _reset_peak_rss() -> None:

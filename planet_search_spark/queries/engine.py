@@ -1,5 +1,5 @@
 """Segment query engine: BM25 top-k over the compressed posting blocks,
-with optional block-max WAND pruning — all DataFrame-level.
+with optional block-max WAND pruning.
 
 Read path (mirrors the ES search template execution, SURVEY.md §3.2):
 
@@ -7,81 +7,34 @@ Read path (mirrors the ES search template execution, SURVEY.md §3.2):
    the index side (``analysis.py_tokens`` — identity with the Spark-side
    expression is golden-tested);
 2. bucket-prune + term-filter the block table (partition pruning on
-   ``bucket=``, min/max row-group stats on ``term``);
-3. [optional] block-max WAND prune (below);
-4. one ``mapInArrow`` UDF decodes each (field, term)'s blocks and scores
-   them with the numpy code the serving reader runs (:mod:`.kernel`
-   decode, :func:`scoring.bm25` under the field's own corpus stats and the
-   collected global df) -> (field, term, doc_id, s); dl ships inside the
-   block so scoring needs NO doc-stats join;
-5. per-doc aggregation in the JVM: groupBy(doc_id).sum;
-6. top-k via orderBy(...).limit(k) — Spark's distributed
-   TakeOrderedAndProject heap — then a broadcast hydration join against
-   doc_store for the k winners only.
+   ``bucket=``, min/max row-group stats on ``term``) and collect the query
+   terms' global stats (one tiny term_dict job): df, and the bounds the
+   driver-side pruning gates read;
+3. tag each block with the doc-range shard(s) it overlaps and repartition
+   by shard — ES's shard-local top-k over doc ranges. The shard count
+   follows the query's posting mass (``_SHARD_POSTINGS``), so small
+   queries run one shard;
+4. one ``mapInArrow`` task per shard runs the serving reader's own code
+   (:func:`kernel.score_blocks`: witness θ, block skipping, the AND
+   doc-range skip, decode, :func:`scoring.bm25` under each field's corpus
+   stats and the global df; then :func:`kernel.rank`: accumulate, AND
+   filter, dis_max, top-k) and emits ≤ k rows plus one stats row; dl ships
+   inside the block, so scoring needs NO doc-stats join;
+5. the exact coordinator merge: ``orderBy(score desc, doc_id asc)
+   .limit(k)`` — Spark's TakeOrderedAndProject heap;
+6. a broadcast hydration join against doc_store for the k winners only.
 
 Block-max WAND (the Lucene-side top-k pruning the reference gets for free,
-SURVEY.md §4 "Lucene-side (delegated)") as data-level pruning — fully
-DISTRIBUTED over block metadata (never a per-block driver collect; driver
-state is one row per QUERY TERM plus a bounded top-``4k`` block-bound heap
-— θ becomes a literal in a plain filter, adding no scan/join/window to the
-main job):
-
-* per block both bounds are recomputed under GLOBAL corpus stats from the
-  stored (max_tf, min_dl) / (min_tf, max_dl) pairs — so they stay valid
-  after multi-segment appends; global df(t) comes from the term dictionary
-  (summed across segments).
-* selectivity gate (cheap, term-level only): θ ≤ M := max_t mx(t), and a
-  block of term t can only be pruned when ub(t,b) + (total − mx(t)) < θ,
-  which for ANY t requires 2·M > total. All-hot-term OR queries (mx roughly
-  equal across terms) fail the gate and skip the θ job entirely — pruning
-  cannot win there, so the unpruned plan runs (this was a measured
-  regression in round 1 when pruning was unconditional).
-* benefit gate (term-level, zero jobs): θ can never exceed
-  M_real := max_t idf_t·max_tfn_real(t) (the best ACTUAL posting, stored
-  in term_dict at build time); pruning runs only when for SOME term the
-  10th-percentile block ub (``ub_tfn_q10``, written into hot terms'
-  term_dict rows by the encoder; NULL for other terms) plus its `other`
-  sits below M_real — i.e. at least ~10% of that term's blocks could
-  drop at the θ cap. Below that, the two θ jobs cost more than the
-  decode they save (the homogeneous-bounds uniform-corpus case, a
-  measured net loss) and are skipped. Performance decision only — gating
-  never changes results.
-* θ = max over terms t of θ_t, where θ_t is the k-th largest REAL decoded
-  per-term score among the postings of t's best blocks by descending
-  stored max REAL score (:func:`kernel.theta_blocks`; phase 1 is
-  metadata-only; phase 2 fetches only the winning blocks' tf/dl payloads,
-  bounded by the same row limit). ANY subset of t's postings yields a
-  valid θ_t — adding postings only raises the k-th largest — and picking
-  high-max-score blocks finds the best real postings. Any
-  k real docs' total scores are ≥ their t-contributions ≥ θ_t, so θ
-  lower-bounds the true k-th best total.
-  Blocks of ONE term are doc-disjoint (each doc appears once per posting
-  list, and segments hold disjoint doc ranges); blocks of DIFFERENT terms
-  may share docs, which is why θ is a max over per-term values, never a
-  cross-term cumulative count.
-* a block (t, b) is pruned iff ``ub(t,b) + Σ_{t'≠t} mx(t') < θ`` — applied
-  as a plain column FILTER on the block relation (per-term constants via a
-  literal map), so multi-segment indexes need no (term, block_id) join and
-  block_id uniqueness across segments is irrelevant.
-* θ-pruning is DISABLED under ``require_all``: θ lower-bounds the k-th
-  best *disjunctive* score, so an AND-matching doc scoring below θ could
-  lose a pruned term contribution and silently drop out of conjunctive
-  results. Conjunctive queries get SOUND doc-range pruning instead
-  (:func:`_and_range_prune_blocks`): every AND doc lies inside a
-  rarest-term block's doc range, so other terms' non-overlapping blocks
-  drop with exact membership AND scores — the Lucene two-pointer
-  ``advance()`` skip as a broadcast range anti-filter on block metadata.
-
-Exactness argument: if a block is pruned, every doc in it has true score
-< θ; any doc with true score ≥ θ therefore keeps ALL its blocks and its
-computed score is exact; since ≥ k docs score ≥ θ, the true top-k and their
-scores are unchanged. Docs that lost a pruned contribution rank strictly
-below θ and cannot displace the top-k. Verified against the unpruned path
-in tests (including a multi-segment index where blocks provably drop).
+SURVEY.md §4 "Lucene-side (delegated)") runs inside each shard task; the
+θ derivation and the exactness argument (shard-local bounds, exact merge,
+why θ is off under AND) are in :mod:`.kernel`. Whether a query prunes at
+all is a term-level driver decision (:func:`_theta_may_prune`). Verified
+against the unpruned path in tests, also with several shards.
 """
 from __future__ import annotations
 
 import json
+import math
 import os
 from dataclasses import dataclass
 
@@ -177,14 +130,6 @@ def doc_store(spark: SparkSession, idx: IndexMeta) -> DataFrame:
     return _union_read(spark, idx, "doc_store")
 
 
-def _field_lit_col(idx: IndexMeta, which: int):
-    """Per-field N (which=0) or avgdl (which=1) as a literal-map lookup."""
-    stats = idx.field_stats()
-    entries = [x for fid, pair in stats.items()
-               for x in (F.lit(fid), F.lit(pair[which]))]
-    return F.create_map(*entries)[F.col("field")]
-
-
 def _load_blocks(spark: SparkSession, idx: IndexMeta, terms: list[str],
                  field_ids: tuple = (TEXT_FIELD,)) -> DataFrame:
     buckets = sorted({bucket_of(t, idx.n_buckets) for t in terms})
@@ -192,28 +137,6 @@ def _load_blocks(spark: SparkSession, idx: IndexMeta, terms: list[str],
             .where(F.col("bucket").isin(buckets))   # directory pruning
             .where(F.col("field").isin(list(field_ids)))
             .where(F.col("term").isin(list(set(terms)))))
-
-
-# indexes whose θ machinery already ran once in this process (key =
-# tuple(seg_dirs)); the first run fuses the θ payload fetch into the
-# metadata heap job to halve cold-path job count — see _wand_prune_blocks
-_THETA_SEEN: set = set()
-
-
-def _fkey(fid: int, term: str) -> str:
-    return f"{fid}:{term}"
-
-
-def _fkey_col():
-    return F.concat_ws(":", F.col("field").cast("string"), F.col("term"))
-
-
-def _df_map_col(df_map: dict[str, float]):
-    """(field:term) -> df as a literal-map lookup column (no join)."""
-    if not df_map:  # no query term exists in the index: typed empty lookup
-        return F.lit(None).cast("double")
-    entries = [x for k, d in df_map.items() for x in (F.lit(k), F.lit(d))]
-    return F.create_map(*entries)[_fkey_col()]
 
 
 def _scored_postings(idx: IndexMeta, blocks: DataFrame,
@@ -246,9 +169,7 @@ def _scored_postings(idx: IndexMeta, blocks: DataFrame,
                     *([c[n][i] for i in ix] for n in
                       ("n_docs", "docs_bin", "tfs_bin", "dls_bin")))
                 ids.append(d)
-                # _fkey inlined: a module-level reference would import
-                # this whole module into every Python worker
-                ss.append(S.bm25(tfs, dls, df_map[f"{fid}:{t}"],
+                ss.append(S.bm25(tfs, dls, df_map[(fid, t)],
                                  *field_stats[fid]))
             if not keys:
                 continue
@@ -306,8 +227,8 @@ def _collect_term_stats(spark: SparkSession, idx: IndexMeta,
               or r["max_tfn_real"] > a["max_tfn_real"]):
             a["max_tfn_real"] = float(r["max_tfn_real"])
         # min over segments, NULLs (not hot there) skipped: conservative
-        # toward pruning (an underestimated q10 runs the θ jobs more
-        # often, never the reverse)
+        # toward pruning (an underestimated q10 runs θ more often, never
+        # the reverse)
         for c in ("min_tfn", "ub_tfn_q10"):
             v = r[c]
             if v is not None and (a[c] is None or v < a[c]):
@@ -324,256 +245,231 @@ def _collect_term_stats(spark: SparkSession, idx: IndexMeta,
     return out
 
 
-def _stats_df_map(stats: list) -> dict[str, float]:
-    return {_fkey(r["field"], r["term"]): float(r["df"]) for r in stats}
+def _stats_df_map(stats: list) -> dict[tuple, float]:
+    """(field_id, term) -> global df."""
+    return {(r["field"], r["term"]): float(r["df"]) for r in stats}
 
 
-def _wand_prune_blocks(blocks: DataFrame, stats: list, idx: IndexMeta,
-                       k: int, *, force: bool = False,
-                       want_theta: bool = False):
-    """Block-max WAND pruning — distributed θ with a BOUNDED driver state.
-
-    Returns ``(blocks_kept, info)``. θ comes from one tiny extra job: a
-    TakeOrderedAndProject heap over block METADATA (column-pruned scan of
-    the three stat columns) collecting only the top ``max(64, 4k)`` lower
-    bounds — never one row per block (the round-1 design collected ALL
-    block metadata, which dies on a stopword at 10^12 turns). θ is then a
-    literal in a plain column filter on the block relation: the main job
-    gains no extra scan, no join, no window.
-
-    θ_t scans term t's blocks by descending lb until ≥ k docs are covered
-    (blocks of one (field, term) are doc-disjoint, also across segments);
-    θ = max_t θ_t. Computing θ_t over the global-top-L prefix only WEAKENS
-    θ (prefixes of each term's descending-lb order), never invalidates it.
+def _theta_may_prune(stats: list, idx: IndexMeta) -> bool:
+    """Term-level gates: can θ drop any block? A performance decision
+    only — results are exact either way — taken from the term stats
+    before the query runs, so it costs no job.
 
     Static gate: pruning any block of term t needs other(t) = total − mx(t)
-    < θ ≤ M, and min_t other(t) = total − M, so 2·M ≤ total proves no block
-    can ever be pruned — skip the θ job entirely (e.g. three similar hot
-    terms). ``force=True`` bypasses the gate (tests); ``want_theta``
-    records θ for assertions.
-    """
-    if not stats:
-        return blocks, {"gated": True, "theta": 0.0}
-    mx = {_fkey(r["field"], r["term"]): float(r["max_score_ub"])
-          for r in stats}
-    field_stats = idx.field_stats()
-    df_map = _stats_df_map(stats)
+    < θ ≤ M := max_t mx(t), and min_t other(t) = total − M, so 2·M ≤ total
+    proves no block can drop (e.g. three similar hot terms).
+
+    Benefit gate: θ_t is a REAL per-term score, so θ ≤ M_real = max_t
+    idf_t·max_tfn_real(t) (t's best actual posting). With q(t) = idf × t's
+    10th-percentile block ub tfn (``ub_tfn_q10``, written by the encoder
+    into hot terms' term_dict rows), q(t) + other(t) ≥ M_real for EVERY
+    term means under ~10% of any term's blocks could drop — the
+    homogeneous-bounds uniform-corpus case, where pruning was a measured
+    net loss. A NULL ``max_tfn_real`` or ``ub_tfn_q10`` (a term hot in no
+    segment) leaves the gate open."""
+    by_key = {(r["field"], r["term"]): r for r in stats}
+    mx = {key: float(r["max_score_ub"]) for key, r in by_key.items()}
     total, m = sum(mx.values()), max(mx.values())
-    if not force and 2.0 * m <= total + 1e-12:
-        return blocks, {"gated": True, "theta": 0.0}
-    # no-possible-prune gate: a block of t survives whenever
-    # ub(t,b) + other(t) ≥ θ, and θ ≤ M_real = max_t idf_t·max_tfn_real(t)
-    # (θ_t is a REAL per-term score, so it can never exceed t's best actual
-    # posting — a much tighter cap than the (max_tf, min_dl) pairing bound).
-    # With q(t) = idf × t's 10th-percentile block ub tfn (``ub_tfn_q10``
-    # of its term_dict rows, build time), q(t) + other(t) ≥ M_real for
-    # EVERY query term means under ~10% of any term's blocks could drop —
-    # skip both θ jobs. This is the homogeneous-bounds uniform-corpus case
-    # that made pruning a measured net loss; a performance decision only,
-    # so cross-segment avgdl drift in the stored tfn cannot affect
-    # correctness. A NULL ub_tfn_q10 (a term hot in no segment) or
-    # max_tfn_real disables the gate.
-    def _idf(fk):
-        return float(S.idf(df_map[fk],
-                           field_stats[int(fk.split(":", 1)[0])][0]))
-    by_fk = {_fkey(r["field"], r["term"]): r for r in stats}
-    if not force:
-        caps = [(_idf(fk) * float(r["max_tfn_real"]))
-                if r["max_tfn_real"] is not None else None
-                for fk, r in by_fk.items()]
-        if all(c is not None for c in caps):
-            m_real = max(caps)
-            prunable = False
-            for fk, v in mx.items():
-                q10 = by_fk[fk]["ub_tfn_q10"]
-                if q10 is None:
-                    prunable = True
-                    break
-                if _idf(fk) * float(q10) + (total - v) < m_real - 1e-9:
-                    prunable = True
-                    break
-            if not prunable:
-                return blocks, {"gated": True, "theta": 0.0}
-    n_col, avgdl_col = _field_lit_col(idx, 0), _field_lit_col(idx, 1)
-    df_col = _df_map_col(df_map)
-    # TWO-PHASE θ. Phase 1: metadata-only TakeOrderedAndProject (exactly
-    # the round-2 job — no binary columns ride the heap shuffle; shipping
-    # every candidate block's tf/dl payload through the sort was a measured
-    # +0.5 s on a 3-term query). Phase 2: fetch (tf, dl) payloads for ONLY
-    # the ≤ max(64, 4k) winning blocks (term + block_id pushdown) and take
-    # θ_t as the k-th largest REAL decoded per-term score among them — far
-    # tighter than the (min_tf, max_dl) pairing bound, which can undercut
-    # every actual posting in a block (that left impact-stratified blocks
-    # nearly unpruned). Validity: ANY subset of a term's postings gives a
-    # valid θ_t (its k-th largest real score only grows as postings are
-    # added, and those k docs' TOTAL scores are ≥ their t-contributions),
-    # so θ = max_t θ_t lower-bounds the true k-th best total score
-    # regardless of which blocks phase 1 picks. Phase 1 therefore picks by
-    # the stored per-block MAX REAL score (``max_score``, computed from the
-    # actual postings at encode time) — the blocks that provably hold the
-    # best real postings, so θ_t reaches the true k-th-largest per-term
-    # score whenever the top postings span ≥ k of the selected blocks.
-    # (Ordering by a pairing bound — lb or even ub — selected
-    # near-arbitrary blocks on uniform corpora and left θ visibly below
-    # the best real scores.) Driver state stays bounded in both phases.
-    ub = S.bm25_term_score(F.col("max_tf"), df_col, F.col("min_dl"),
-                           n_col, avgdl_col)
-    # COLD-PATH FUSION (round-6 VERDICT #3): the FIRST θ computation
-    # against an index in this process pays full first-run cost per job
-    # (plan compile for the novel literals, scan warm-up), and cold wand
-    # measured ≈ noprune + two such jobs. On that first call the payload
-    # columns ride phase 1's TakeOrderedAndProject directly — one job,
-    # identical block selection, identical θ. Warm repeats keep the
-    # metadata-only phase 1 (shipping every candidate's tf/dl payload
-    # through the heap was a measured +0.5 s on a 3-term query).
-    key = tuple(idx.seg_dirs)
-    fused = key not in _THETA_SEEN
-    _THETA_SEEN.add(key)
-    meta_cols = ["field", "term", "n_docs", "block_id", "max_score"]
-    top = (blocks.select(*(meta_cols + ["tfs_bin", "dls_bin"] if fused
-                           else meta_cols))
-           .orderBy(F.desc("max_score")).limit(max(64, 4 * k))
-           .collect())
-    by_term: dict = {}
-    for r in top:
-        by_term.setdefault((r["field"], r["term"]), []).append(r)
-    need = {}
-    for key_t, rs in by_term.items():
-        sel = K.theta_blocks([r["max_score"] for r in rs],
-                             [r["n_docs"] for r in rs], k)
-        if sel is not None:   # else < k postings in the collected top
-            need[key_t] = [rs[i] for i in sel]
-    if need and not fused:    # fused: the payloads already rode phase 1
-        want = {(f, t, r["block_id"]) for (f, t), rs in need.items()
-                for r in rs}
-        need = {}
-        for r in (blocks.where(
-                      F.col("term").isin(sorted({t for _f, t, _b in want}))
-                      & F.col("block_id").isin(
-                          sorted({b for _f, _t, b in want})))
-                  .select("field", "term", "block_id", "tfs_bin", "dls_bin")
-                  .collect()):
-            if (r["field"], r["term"], r["block_id"]) in want:
-                need.setdefault((r["field"], r["term"]), []).append(r)
-    theta = 0.0
-    for (fid, t), rs in need.items():
-        _ids, tfs, dls = K.decode_blocks(None, None,
-                                         [r["tfs_bin"] for r in rs],
-                                         [r["dls_bin"] for r in rs])
-        theta = max(theta, K.kth_score(
-            S.bm25(tfs, dls, df_map[_fkey(fid, t)], *field_stats[fid]), k))
-    if theta <= 0.0:
-        return blocks, {"gated": False, "theta": 0.0}
-    other_col = F.create_map(
-        *[x for t, v in mx.items() for x in (F.lit(t), F.lit(total - v))]
-    )[_fkey_col()]
-    kept = blocks.where((ub + other_col) >= F.lit(theta - 1e-12))
-    return kept, {"gated": False, "theta": theta}
+    if 2.0 * m <= total + 1e-12:
+        return False
+    if any(r["max_tfn_real"] is None or r["ub_tfn_q10"] is None
+           for r in stats):
+        return True
+    field_stats = idx.field_stats()
+    idf = {key: float(S.idf(r["df"], field_stats[key[0]][0]))
+           for key, r in by_key.items()}
+    m_real = max(idf[key] * float(r["max_tfn_real"])
+                 for key, r in by_key.items())
+    return any(idf[key] * float(r["ub_tfn_q10"]) + (total - mx[key])
+               < m_real - 1e-9 for key, r in by_key.items())
+
+
+# Postings per doc-range shard. The kernel decodes, scores and ranks ~8 M
+# postings/s on one core (4-core x86 box), so a full shard is ~0.25 s of
+# kernel work plus its Arrow intake — above the ~0.2 s every Python task
+# pays to start, which runs in parallel on the other cores. On a
+# 2M-turn index, 2 M-posting shards answered hot 1-6 term queries as fast
+# as or faster than 4 M (CHANGES.md). Smaller queries run as one shard.
+_SHARD_POSTINGS = 2_000_000
+
+_RANKED_SCHEMA = ("doc_id long, score double, nmatch long, theta double, "
+                  "blocks_kept long, blocks_total long")
+
+
+def _shard_task(df_map: dict, field_stats: dict, boosts: dict,
+                k: int | None, need: int, prune: bool, and_skip: bool,
+                width: int, n_shards: int):
+    """The ``mapInArrow`` body: rank every doc-range shard in the task's
+    partition with :func:`kernel.score_blocks` + :func:`kernel.rank`.
+    Shard s covers doc ids [s·width, (s+1)·width), the last one everything
+    above. Emits the shard's top-k (all matches when ``k`` is None) as
+    (doc_id, score, nmatch) rows, then one stats row (doc_id NULL; θ and
+    the block counts)."""
+    def score(key, tfs, dls):
+        return S.bm25(tfs, dls, df_map[key], *field_stats[key[0]])
+
+    def run(batches):
+        import pyarrow as pa
+        names = ["doc_id", "score", "nmatch", "theta", "blocks_kept",
+                 "blocks_total"]
+        batches = list(batches)
+        if not batches:
+            return
+        tbl = pa.Table.from_batches(batches)
+        col = {c: tbl.column(c).to_numpy() for c in (
+            "field", "n_docs", "first_doc", "last_doc", "max_tf", "min_dl",
+            "max_score", "shard")}
+        terms = tbl.column("term").to_pylist()
+        bins = [tbl.column(c).to_pylist()
+                for c in ("docs_bin", "tfs_bin", "dls_bin")]
+        for s in np.unique(col["shard"]):
+            rows: dict = {}
+            for i in np.flatnonzero(col["shard"] == s):
+                rows.setdefault((int(col["field"][i]), terms[i]), []).append(i)
+            rows = {key: np.array(ix) for key, ix in rows.items()}
+            meta = {key: {"n": col["n_docs"][ix], "max_tf": col["max_tf"][ix],
+                          "min_dl": col["min_dl"][ix],
+                          "ms": col["max_score"][ix],
+                          "first": col["first_doc"][ix],
+                          "last": col["last_doc"][ix]}
+                    for key, ix in rows.items()}
+
+            def fetch(sel, rows=rows):
+                return {key: tuple([b[i] for i in rows[key][ix]]
+                                   for b in bins)
+                        for key, ix in sel.items()}
+
+            lo = int(s) * width
+            hi = lo + width if s < n_shards - 1 else np.iinfo(np.int64).max
+            fields, st = K.score_blocks(meta, fetch, score, boosts, k,
+                                        prune=prune, and_skip=and_skip,
+                                        doc_range=(lo, hi))
+            lists = [ids for ls in fields.values() for ids, _s in ls]
+            ids, scores, nmatch = K.rank(
+                fields, boosts, k, need=need,
+                space=K.range_space(lists, lo) if lists else None)
+            n = ids.size
+            yield pa.RecordBatch.from_arrays([
+                pa.array(ids, pa.int64()), pa.array(scores, pa.float64()),
+                pa.array(nmatch, pa.int64()), pa.nulls(n, pa.float64()),
+                pa.nulls(n, pa.int64()), pa.nulls(n, pa.int64())],
+                names=names)
+            yield pa.RecordBatch.from_arrays([
+                pa.nulls(1, pa.int64()), pa.nulls(1, pa.float64()),
+                pa.nulls(1, pa.int64()), pa.array([st["theta"]]),
+                pa.array([st["blocks_kept"]], pa.int64()),
+                pa.array([st["blocks_total"]], pa.int64())],
+                names=names)
+
+    return run
+
+
+def _ranked(spark: SparkSession, idx: IndexMeta, terms: list[str],
+            stats: list, k: int | None, *, field_ids: tuple = (TEXT_FIELD,),
+            boosts: dict | None = None, need: int = 1, prune: bool = False,
+            and_skip: bool = False) -> DataFrame:
+    """The one ranking plan of ``bm25_scores``, ``bm25_topk`` and
+    ``dismax_topk``: tag each block of the term-pruned scan with the
+    doc-range shard(s) it overlaps, repartition by shard, and rank each
+    shard in one ``mapInArrow`` task (:func:`_shard_task`). The shard
+    count follows the query's posting mass (Σ df / ``_SHARD_POSTINGS``,
+    at most one shard per core)."""
+    n_shards = max(1, min(math.ceil(sum(r["df"] for r in stats)
+                                    / _SHARD_POSTINGS),
+                          spark.sparkContext.defaultParallelism))
+    width = max(1, math.ceil(idx.n_docs / n_shards))
+    shard = F.explode(F.sequence(
+        *(F.expr(f"least({c} div {width}, {n_shards - 1})")
+          for c in ("first_doc", "last_doc"))))
+    task = _shard_task(_stats_df_map(stats), idx.field_stats(),
+                       boosts or {TEXT_FIELD: 1.0}, k, need, prune, and_skip,
+                       width, n_shards)
+    return (_load_blocks(spark, idx, terms, field_ids)
+            .select("field", "term", "n_docs", "first_doc", "last_doc",
+                    "max_tf", "min_dl", "max_score", "docs_bin", "tfs_bin",
+                    "dls_bin", shard.alias("shard"))
+            .repartition(n_shards, "shard")
+            .mapInArrow(task, _RANKED_SCHEMA))
+
+
+def _matches(ranked: DataFrame) -> DataFrame:
+    return (ranked.where(F.col("doc_id").isNotNull())
+            .select("doc_id", "score", "nmatch"))
+
+
+def _top(ranked: DataFrame, k: int) -> DataFrame:
+    return _matches(ranked).orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+def _hydrate(spark: SparkSession, idx: IndexMeta, top: DataFrame) -> DataFrame:
+    """The k winners with their stored strings: ``top``'s columns after
+    (doc_id, conv_id, turn_idx, role, tool, ts), in (score desc, doc_id
+    asc) order. The k-row side is broadcast, so the doc_store is scanned
+    once and never shuffled."""
+    store = doc_store(spark, idx).select(
+        "doc_id", "conv_id", "turn_idx", "role", "tool", "ts")
+    return (store.join(F.broadcast(top), "doc_id")
+            .select(*store.columns, *[c for c in top.columns
+                                      if c != "doc_id"])
+            .orderBy(F.desc("score"), F.asc("doc_id")))
+
+
+def _empty_top(spark: SparkSession) -> DataFrame:
+    return spark.range(0).select(F.col("id").alias("doc_id"),
+                                 F.lit(0.0).alias("score"))
 
 
 def bm25_scores(spark: SparkSession, out_dir: str, query: str, *,
                 require_all: bool = False) -> DataFrame:
-    """Disjunctive/conjunctive BM25 over the segment -> (doc_id, score, nmatch)."""
+    """Disjunctive/conjunctive BM25 over the segment -> (doc_id, score,
+    nmatch): the ranking plan without the top-k cut."""
     idx = open_index(out_dir)
     terms = sorted(set(A.py_tokens(query)))
     if not terms:
         return spark.range(0).select(
             F.col("id").alias("doc_id"), F.lit(0.0).alias("score"),
             F.lit(0).cast("long").alias("nmatch"))
-    blocks = _load_blocks(spark, idx, terms)
     stats = _collect_term_stats(spark, idx, terms)
-    scored = _scored_postings(idx, blocks, _stats_df_map(stats))
-    agg = (scored.groupBy("doc_id")
-           .agg(F.sum("s").alias("score"),
-                F.count_distinct("term").alias("nmatch")))
-    if require_all:
-        agg = agg.where(F.col("nmatch") == len(terms))
-    return agg
-
-
-def _and_range_prune_blocks(blocks: DataFrame, stats: list) -> DataFrame:
-    """Conjunctive doc-range pruning — SOUND under AND (unlike θ-pruning).
-
-    Every AND-result doc has a posting for the RAREST query term, hence
-    lies inside some rarest-term block's [first_doc, last_doc] range; a
-    block of any other term containing such a doc necessarily overlaps
-    that range (both contain the doc). So dropping other-term blocks that
-    overlap NO rarest-term range removes only docs that cannot satisfy
-    the conjunction, and every surviving doc keeps ALL its blocks — both
-    membership and scores stay exact (the Lucene two-pointer advance()
-    skip, expressed as a broadcast range anti-filter on block metadata).
-
-    Applied only when the rarest term is genuinely selective (df ≤ 2^18,
-    so its block-range relation broadcasts in KBs, and ≥ 4× rarer than
-    the hottest term, so ranges don't cover the whole doc space).
-    """
-    if len(stats) < 2:
-        return blocks
-    dfs = {_fkey(r["field"], r["term"]): float(r["df"]) for r in stats}
-    rarest = min(dfs, key=dfs.get)
-    if dfs[rarest] > float(1 << 18) or max(dfs.values()) < 4 * dfs[rarest]:
-        return blocks
-    rare_blocks = blocks.where(_fkey_col() == F.lit(rarest))
-    ranges = rare_blocks.select(F.col("first_doc").alias("_rf"),
-                                F.col("last_doc").alias("_rl"))
-    kept_others = (blocks.where(_fkey_col() != F.lit(rarest))
-                   .join(F.broadcast(ranges),
-                         (F.col("first_doc") <= F.col("_rl"))
-                         & (F.col("last_doc") >= F.col("_rf")),
-                         "left_semi"))
-    return rare_blocks.unionByName(kept_others)
+    return _matches(_ranked(spark, idx, terms, stats, None,
+                            need=len(terms) if require_all else 1))
 
 
 def bm25_topk(spark: SparkSession, out_dir: str, query: str, k: int = 20, *,
               require_all: bool = False, prune: bool = True,
               hydrate: bool = True, prune_stats: dict | None = None) -> DataFrame:
-    """Top-k BM25 with distributed block-max WAND pruning; rank-identical to
-    the unpruned path (and to the logical path) by construction — see the
-    module docstring for the θ derivation, the selectivity gate, and the
-    exactness argument.
+    """Top-k BM25 with block-max WAND pruning; rank-identical to the
+    unpruned path (and to the logical path) by construction — see
+    :mod:`.kernel` for the θ derivation and the exactness argument.
 
-    ``prune`` accepts ``"force"`` to bypass the selectivity gate (tests use
-    it to guarantee the pruned code path runs). θ-pruning is always
-    disabled under ``require_all`` (unsound for conjunctive results —
-    docstring); conjunctive queries instead get SOUND doc-range pruning
-    (:func:`_and_range_prune_blocks`). ``prune_stats``, when a dict, is
-    filled with {theta, gated, blocks_total, blocks_kept} (the counts cost
-    two extra metadata-only jobs; pass None outside tests).
+    The gates (:func:`_theta_may_prune`) decide on the driver whether the
+    shard tasks run θ; ``prune="force"`` bypasses them (tests use it to
+    guarantee the pruned code path runs). θ-pruning is always disabled
+    under ``require_all`` (unsound for conjunctive results); conjunctive
+    queries get the exact AND doc-range skip instead. ``prune_stats``,
+    when a dict, is filled with {theta, gated, blocks_total, blocks_kept}:
+    θ is the max over shards, the counts are summed over shards (a block
+    overlapping two shards counts twice), and ``gated`` means θ did not
+    run. Reading them costs one extra Spark action over the ranking plan;
+    pass None outside tests.
     """
     idx = open_index(out_dir)
     terms = sorted(set(A.py_tokens(query)))
     if not terms:
-        return spark.range(0).select(F.col("id").alias("doc_id"),
-                                     F.lit(0.0).alias("score"))
-    blocks = _load_blocks(spark, idx, terms)
-    blocks_raw = blocks
+        return _empty_top(spark)
     stats = _collect_term_stats(spark, idx, terms)
-    do_prune = bool(prune) and not require_all
-    if bool(prune) and require_all:
-        blocks = _and_range_prune_blocks(blocks, stats)
-    blocks_kept, info = (_wand_prune_blocks(blocks, stats, idx, k,
-                                            force=(prune == "force"),
-                                            want_theta=prune_stats is not None)
-                         if do_prune else (blocks, {"gated": True,
-                                                    "theta": 0.0}))
+    do_prune = (bool(prune) and not require_all and bool(stats)
+                and (prune == "force" or _theta_may_prune(stats, idx)))
+    ranked = _ranked(spark, idx, terms, stats, k,
+                     need=len(terms) if require_all else 1, prune=do_prune,
+                     and_skip=bool(prune) and require_all)
     if prune_stats is not None:
-        prune_stats.update(info)
-        prune_stats["blocks_total"] = blocks_raw.count()
-        prune_stats["blocks_kept"] = blocks_kept.count()
-    scored = _scored_postings(idx, blocks_kept, _stats_df_map(stats))
-    agg = (scored.groupBy("doc_id")
-           .agg(F.sum("s").alias("score"),
-                F.count_distinct("term").alias("nmatch")))
-    if require_all:
-        agg = agg.where(F.col("nmatch") == len(terms))
-    top = (agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
-    if hydrate:
-        store = doc_store(spark, idx)
-        top = (top.join(store, "doc_id")
-                  .select("doc_id", "conv_id", "turn_idx", "role", "tool",
-                          "ts", "score", "nmatch")
-                  .orderBy(F.desc("score"), F.asc("doc_id")))
-    return top
+        st = (ranked.where(F.col("doc_id").isNull())
+              .agg(F.max("theta"), F.sum("blocks_kept"),
+                   F.sum("blocks_total")).collect()[0])
+        prune_stats.update(theta=st[0] or 0.0, gated=not do_prune,
+                           blocks_kept=st[1] or 0, blocks_total=st[2] or 0)
+    top = _top(ranked, k)
+    return _hydrate(spark, idx, top) if hydrate else top
 
 
 def dismax_topk(spark: SparkSession, out_dir: str, query: str, k: int = 20, *,
@@ -589,26 +485,12 @@ def dismax_topk(spark: SparkSession, out_dir: str, query: str, k: int = 20, *,
     boosts = boosts or FIELD_BOOSTS
     field_ids = tuple(FIELDS[f] for f in boosts)
     if not terms:
-        return spark.range(0).select(F.col("id").alias("doc_id"),
-                                     F.lit(0.0).alias("score"))
-    blocks = _load_blocks(spark, idx, terms, field_ids)
+        return _empty_top(spark)
     stats = _collect_term_stats(spark, idx, terms, field_ids)
-    scored = _scored_postings(idx, blocks, _stats_df_map(stats))
-    boost_col = F.create_map(
-        *[x for f, b in boosts.items()
-          for x in (F.lit(FIELDS[f]), F.lit(float(b)))])[F.col("field")]
-    per_field = (scored.groupBy("doc_id", "field")
-                 .agg(F.sum("s").alias("s_f"))
-                 .withColumn("boosted", boost_col * F.col("s_f")))
-    agg = per_field.groupBy("doc_id").agg(F.max("boosted").alias("score"))
-    top = agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    if hydrate:
-        store = doc_store(spark, idx)
-        top = (top.join(store, "doc_id")
-                  .select("doc_id", "conv_id", "turn_idx", "role", "tool",
-                          "ts", "score")
-                  .orderBy(F.desc("score"), F.asc("doc_id")))
-    return top
+    ranked = _ranked(spark, idx, terms, stats, k, field_ids=field_ids,
+                     boosts={FIELDS[f]: float(b) for f, b in boosts.items()})
+    top = _top(ranked, k).select("doc_id", "score")
+    return _hydrate(spark, idx, top) if hydrate else top
 
 
 def _pos_rows(spark: SparkSession, idx: IndexMeta,
@@ -853,11 +735,6 @@ def search(spark: SparkSession, out_dir: str, params) -> DataFrame:
             .select("doc_id", "score", "nmatch")
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(params.k))
-    # hydrate stored strings for the k winners only (broadcast the k-row
-    # side; the unfiltered store is fine — winners already passed B17)
-    full = doc_store(spark, idx).select(
-        "doc_id", "conv_id", "turn_idx", "role", "tool", "ts")
-    return (full.join(F.broadcast(topk), "doc_id")
-            .select("doc_id", "conv_id", "turn_idx", "role", "tool", "ts",
-                    "score", "nmatch")
-            .orderBy(F.desc("score"), F.asc("doc_id")))
+    # hydrate stored strings for the k winners only (the unfiltered store
+    # is fine — winners already passed B17)
+    return _hydrate(spark, idx, topk)

@@ -1,19 +1,63 @@
 """Columnar block kernel shared by the Spark engine and the serving reader.
 
-One implementation of the per-term block algorithms of the read path: the
-engine's ``mapInArrow`` decode UDF and its driver-side θ call it inside
-Spark, and :class:`~planet_search_spark.queries.serve.LocalSearcher` calls
-it directly. It imports numpy and the codec only — no pyspark — so the same
-code runs in a Python UDF worker and in the shard daemon. The BM25 formula
-itself is :func:`planet_search_spark.scoring.bm25`.
+One implementation of the read path's block algorithms: the engine's
+per-shard ``mapInArrow`` task and
+:class:`~planet_search_spark.queries.serve.LocalSearcher` both prune and
+rank through :func:`score_blocks` and :func:`rank`. It imports numpy and
+the codec only — no pyspark — so the same code runs in a Python UDF worker
+and in the shard daemon. Callers pass BM25 in as a ``score`` callable
+(:func:`planet_search_spark.scoring.bm25` under global stats).
 
+* :func:`score_blocks` — the one pruning routine: the AND doc-range skip,
+  witness-block θ, block-max WAND block skipping, decode and score;
+* :func:`rank` — accumulate, the AND filter, dis_max over boosted fields
+  and the exact top-k;
 * :func:`decode_blocks` — a term's block payloads -> (doc_ids, tfs, dls);
 * :func:`theta_blocks` / :func:`kth_score` — the θ-witness blocks of a term
-  and its θ_t (block-max WAND, exactness argument in ``engine.py``);
-* :class:`DocSpace` / :func:`accumulate` — per-doc accumulation, dense
-  (doc-indexed arrays) or sparse (sorted union of the query's doc ids);
+  and its θ_t;
+* :class:`DocSpace` / :func:`range_space` / :func:`accumulate` — per-doc
+  accumulation, dense (doc-indexed arrays) or sparse (sorted union of the
+  query's doc ids);
 * :func:`topk` — the exact (score desc, doc_id asc) top-k cut;
 * :func:`in_sorted` — binary-search membership in a sorted id set.
+
+Block-max WAND, and why it is exact
+-----------------------------------
+A block source holds, for each query (field f, term t), blocks with stored
+metadata: doc count, the (max_tf, min_dl) pair whose BM25 ``ub`` bounds
+every posting of the block, the stored max REAL score, and the doc range
+[first_doc, last_doc]. The engine's source is one doc-range shard
+[lo, hi): every block of the query terms that overlaps the range. The
+reader's source is its whole index (lo, hi unbounded).
+
+* θ_ft is the k-th largest REAL score among the postings of t's witness
+  blocks (:func:`theta_blocks`: best stored max score first, until ≥ k
+  postings). Any subset of t's postings gives a valid θ_ft — adding
+  postings only raises the k-th largest — and those k docs' dis_max scores
+  are ≥ boost_f·θ_ft. So θ = max_ft boost_f·θ_ft lower-bounds the GLOBAL
+  k-th best score, whichever shard's blocks the witnesses came from.
+* Blocks of one (f, t) are doc-disjoint (one posting per doc per term;
+  segments hold disjoint doc ranges). A doc of the shard has every block
+  that contains it in the shard's input, since that block overlaps the
+  range. So for a doc of the shard, ``mx_f(t)`` (the max block ub of
+  (f, t) in the source) bounds its t-contribution, and a block (f, t, b)
+  is pruned iff ``max(boost_f·(ub_f(t,b) + other_f(t)), cross_f) < θ``
+  with ``other_f(t) = Σ_{t'≠t} mx_f(t')`` and
+  ``cross_f = max_{f'≠f} boost_f'·Σ_t mx_f'(t)`` — the bound of a doc in
+  that block, whichever field wins its dis_max. With one field at boost
+  1.0 this is ``ub + other < θ``.
+* A doc whose true score is ≥ θ therefore keeps all its blocks and is
+  scored exactly. Every global top-k doc scores ≥ the global k-th score ≥
+  θ, so it keeps its blocks and lands in its shard's top-k: the docs of
+  the shard ranked above it are exact too (a doc that lost a block scores
+  < θ) and also rank above it globally. The (score desc, doc_id asc)
+  merge of the shards' top-k is the exact global top-k.
+* θ lower-bounds the k-th best DISJUNCTIVE score only, so θ-pruning is off
+  for conjunctive queries. Those get the exact AND doc-range skip instead:
+  every AND doc has a posting of the rarest term, so it lies in one of
+  that term's block ranges, and a block of another term containing it
+  overlaps that range. Blocks overlapping none drop; every surviving doc
+  keeps all its blocks.
 """
 from __future__ import annotations
 
@@ -103,6 +147,17 @@ class DocSpace:
         return m
 
 
+def range_space(id_lists: list, lo: int) -> DocSpace:
+    """Slots for ids ≥ ``lo``: dense over [lo, max id] once the posting
+    mass reaches 1/8 of that span (O(span) zeroing beats the sparse
+    union's sort), sparse otherwise."""
+    span = max((int(a.max()) for a in id_lists if a.size),
+               default=lo - 1) + 1 - lo
+    if 0 < span <= 8 * sum(a.size for a in id_lists):
+        return DocSpace(id_lists, (lo, span))
+    return DocSpace(id_lists)
+
+
 def accumulate(space: DocSpace, lists) -> tuple:
     """(per-slot score sum, per-slot match count) over ``(ids, scores)``
     lists, added in list order. Ids are unique within a list (one posting
@@ -142,3 +197,107 @@ def in_sorted(values: np.ndarray, sorted_arr: np.ndarray) -> np.ndarray:
     ix = np.searchsorted(sorted_arr, values)
     ix[ix == sorted_arr.size] = 0
     return sorted_arr[ix] == values
+
+
+def _overlaps(first, last, r_first, r_last) -> np.ndarray:
+    """Per block [first, last]: does it overlap any range [r_first,
+    r_last]? Ranges sorted by start, a running max of their ends, one
+    binary search per block."""
+    o = np.argsort(r_first, kind="stable")
+    starts, ends = r_first[o], np.maximum.accumulate(r_last[o])
+    j = np.searchsorted(starts, last, side="right") - 1
+    return (j >= 0) & (ends[np.maximum(j, 0)] >= first)
+
+
+def score_blocks(meta: dict, fetch, score, boosts: dict, k: int, *,
+                 prune: bool = False, and_skip: bool = False,
+                 doc_range: tuple | None = None) -> tuple:
+    """Prune, decode and score one block source (exactness argument in the
+    module docstring).
+
+    ``meta`` maps each (field_id, term) that has blocks in the source to
+    numpy per-block arrays: ``n`` (doc count), ``max_tf`` / ``min_dl``
+    (the ub pair), ``ms`` (stored max real score) and, for ``and_skip``,
+    ``first`` / ``last`` (doc range). ``fetch({key: block indices})``
+    returns ``{key: (docs_bins, tfs_bins, dls_bins)}`` of those blocks, and
+    ``score(key, tfs, dls)`` is the key's BM25. ``prune`` runs witness θ
+    and block-max WAND skipping; ``and_skip`` the AND doc-range skip.
+    Decoded postings outside ``doc_range = (lo, hi)`` are dropped.
+
+    Returns ``({field_id: [(doc_ids, scores) per term in sorted term
+    order]}, {"theta", "blocks_total", "blocks_kept"})``."""
+    keys = sorted(meta)
+    keep = {key: np.ones(meta[key]["n"].size, dtype=bool) for key in keys}
+    theta = 0.0
+    if and_skip and keys:
+        rare = min(keys, key=lambda key: int(meta[key]["n"].sum()))
+        for key in keys:
+            if key != rare:
+                keep[key] = _overlaps(meta[key]["first"], meta[key]["last"],
+                                      meta[rare]["first"], meta[rare]["last"])
+    if prune and keys:
+        ubs = {key: score(key, meta[key]["max_tf"], meta[key]["min_dl"])
+               for key in keys}
+        mx = {key: float(u.max()) for key, u in ubs.items()}
+        total: dict = {}
+        for (fid, _t), v in mx.items():
+            total[fid] = total.get(fid, 0.0) + v
+        sels = {key: theta_blocks(meta[key]["ms"], meta[key]["n"], k)
+                for key in keys}
+        sels = {key: sel for key, sel in sels.items() if sel is not None}
+        for key, (_d, tbins, lbins) in (fetch(sels) if sels else {}).items():
+            _ids, tfs, dls = decode_blocks(None, None, tbins, lbins)
+            theta = max(theta,
+                        boosts[key[0]] * kth_score(score(key, tfs, dls), k))
+        for key in keys:
+            fid = key[0]
+            cross = max((boosts[f] * total[f] for f in total if f != fid),
+                        default=0.0)
+            if cross < theta - 1e-12:
+                other = total[fid] - mx[key]
+                keep[key] &= boosts[fid] * (ubs[key] + other) >= theta - 1e-12
+    sel = {key: np.flatnonzero(keep[key]) for key in keys if keep[key].any()}
+    out: dict = {}
+    for key, bins in (fetch(sel) if sel else {}).items():
+        ids, tfs, dls = decode_blocks(meta[key]["n"][sel[key]], *bins)
+        if doc_range is not None:
+            m = (ids >= doc_range[0]) & (ids < doc_range[1])
+            ids, tfs, dls = ids[m], tfs[m], dls[m]
+        out.setdefault(key[0], []).append((ids, score(key, tfs, dls)))
+    return out, {"theta": theta,
+                 "blocks_total": sum(v.size for v in keep.values()),
+                 "blocks_kept": sum(int(v.sum()) for v in keep.values())}
+
+
+def rank(fields: dict, boosts: dict, k: int | None, *, need: int = 1,
+         space: DocSpace | None = None) -> tuple:
+    """(doc_ids, scores, nmatch) of the docs matching ≥ ``need`` postings,
+    the top ``k`` in (score desc, doc_id asc) order (all, unordered, when
+    ``k`` is None).
+
+    ``fields`` is :func:`score_blocks`' ``{field_id: [(ids, scores)]}``.
+    Per field the scores are summed in list order (sorted query-term
+    order, so every reader gets bit-identical sums); a doc's score is the
+    dis_max ``max_f boost_f·s_f`` over the fields, which with one field at
+    boost 1.0 is the plain BM25 sum; nmatch counts its postings. ``space``
+    defaults to the sparse union of the ids."""
+    lists = [ids for ls in fields.values() for ids, _s in ls]
+    if not lists:
+        return (np.empty(0, dtype=np.int64), np.empty(0),
+                np.empty(0, dtype=np.int32))
+    if space is None:
+        space = DocSpace(lists)
+    best, nmatch = None, np.zeros(space.size, dtype=np.int32)
+    for fid, ls in fields.items():
+        if not ls:
+            continue
+        s_f, count = accumulate(space, ls)
+        nmatch += count
+        best = boosts[fid] * s_f if best is None \
+            else np.maximum(best, boosts[fid] * s_f)
+    cand = np.flatnonzero(nmatch >= need)
+    ids, scores, nmatch = space.ids(cand), best[cand], nmatch[cand]
+    if k is not None:
+        o = topk(ids, scores, k)
+        ids, scores, nmatch = ids[o], scores[o], nmatch[o]
+    return ids, scores, nmatch

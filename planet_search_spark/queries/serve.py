@@ -5,13 +5,14 @@ templates serve): index segments are built distributed, then any number of
 stateless searchers memory-map them for millisecond point queries.
 
 No Spark session involved: pyarrow datasets with bucket/term predicate
-pushdown, then the engine's own numpy code — :mod:`.kernel` (block decode,
-θ-witness blocks and θ_t, dense/sparse accumulation, top-k) and
-:func:`scoring.bm25`, the functions the engine's Arrow UDF and θ call.
-Corpus statistics come from :func:`engine.open_index`. Results are EXACTLY
-the engine's (same blocks, same float64 math, same tie-break) — asserted
-in tests. Bare BM25 and dis_max share one block-max WAND path
-(:meth:`LocalSearcher._dismax_pruned`).
+pushdown, then the engine's own numpy code — :func:`kernel.score_blocks`
+(witness θ, block-max WAND skipping, decode, score) over this searcher as
+a block source, :func:`kernel.rank` (accumulate, AND filter, dis_max,
+top-k) and :func:`scoring.bm25`, the functions the engine's per-shard
+Arrow task calls. Corpus statistics come from :func:`engine.open_index`.
+Results are EXACTLY the engine's (same blocks, same float64 math, same
+summation order, same tie-break) — asserted in tests. Bare BM25 and
+dis_max share one ranking path (:meth:`LocalSearcher._rank`).
 
 At 100 TB this is the fan-out pattern: each searcher owns a bucket range
 (the term-bucket partitioning is the shard key), the coordinator merges
@@ -290,117 +291,62 @@ class LocalSearcher:
                     out[(si, t, bid)] = (db, tb, lb)
         return out
 
-    def _dismax_pruned(self, terms: list[str], k: int, boosts: dict,
-                       prune_stats: dict | None = None) -> dict:
-        """Serving-side block-max WAND for boosted multi-field dis_max —
-        and, with one field at boost 1.0, for bare BM25 — returning
-        {field_id: [(doc_ids, scores) per term]} with only the blocks that
-        can influence the top-k fetched and decoded. EXACT top-k (same θ
-        derivation and exactness argument as the engine, ``engine.py``
-        module docstring), TWO-PHASE: phase 1 scans block METADATA only,
-        phase 2 fetches payload bytes for just the θ-witness and kept
-        blocks. Pruned blocks never leave parquet. Never cached (the kept
-        set depends on k).
-
-        θ = max over (field f, term t) of boost_f · θ_ft, where θ_ft is the
-        k-th largest REAL decoded per-(f,t) score (those k docs' dis_max
-        scores are ≥ boost_f·s_f ≥ boost_f·θ_ft, so θ lower-bounds the true
-        k-th best dis_max score). A block (f,t,b) is pruned iff its
-        per-doc dis_max bound
-        ``max(boost_f·(ub_f(t,b) + other_f(t)), cross_f)`` < θ, with
-        ``other_f(t) = Σ_{t'≠t} mx_f(t')`` and
-        ``cross_f = max_{f'≠f} boost_f'·total_f'`` — the second component
-        covers docs whose dis_max winner is ANOTHER field (for such a doc
-        x with dis_max(x) = boost_f*·s_f*(x) ≤ boost_f*·total_f* ≤
-        cross_f, every block of f containing x keeps). Hence any doc with
-        true dis_max ≥ θ keeps ALL its blocks in ALL fields and scores
-        exactly; ≥ k docs clear θ, so the top-k is unchanged — the same
-        exactness argument as single-field WAND with a per-field clause.
-        In practice cross_f is 0 when the query terms miss the other
-        field's vocabulary (the common text-vs-meta case), which is what
-        lets text blocks prune; with a single field it is always 0 and
-        every expression reduces to single-field WAND."""
-        per = {}
+    def _block_source(self, terms: list[str], boosts: dict) -> tuple:
+        """This searcher as a :func:`kernel.score_blocks` block source:
+        ``(meta, fetch, score)`` over the fields in ``boosts``. ``meta`` is
+        :meth:`_block_meta` per (field, term); ``fetch`` reads payloads
+        with :meth:`_fetch_payloads` (one scan per field and segment per
+        call) and keeps them, so a block fetched for θ is not read
+        again."""
+        meta, df = {}, {}
         for fid in boosts:
-            n, avgdl = self._fstats[fid]
             for t, a in self._block_meta(terms, fid).items():
-                df = self._df(t, fid, float(a["n"].sum()))
-                # ub per block: (max_tf, min_dl) dominates any real (tf, dl)
-                per[(fid, t)] = (a, df, S.bm25(a["max_tf"], a["min_dl"], df,
-                                               n, avgdl))
-        if not per:
-            return {}
-        mx = {key: float(v[2].max()) for key, v in per.items()}
-        total_f: dict = {}
-        for (fid, _t), v in mx.items():
-            total_f[fid] = total_f.get(fid, 0.0) + v
-        pay_by_fid: dict = {fid: {} for fid in total_f}
+                meta[(fid, t)] = a
+                df[(fid, t)] = self._df(t, fid, float(a["n"].sum()))
+        pay: dict = {}
 
-        def decode_scored(idxs_by: dict) -> dict:
-            """(fid, t) -> (ids, scores) of the given blocks; one payload
-            scan per field and segment (the scans carry the field filter),
-            reusing payloads fetched earlier."""
-            addrs = {key: [per[key][0]["addr"][i] for i in idxs]
-                     for key, idxs in idxs_by.items()}
-            for fid, pay in pay_by_fid.items():
+        def fetch(sel: dict) -> dict:
+            addrs = {key: [meta[key]["addr"][i] for i in ix]
+                     for key, ix in sel.items()}
+            for fid in {f for f, _t in addrs}:
+                have = pay.setdefault(fid, {})
                 want = {(si, t, bid) for (f, t), ad in addrs.items()
                         if f == fid for si, bid in ad}
-                pay.update(self._fetch_payloads(want - pay.keys(), fid))
-            out = {}
-            for (fid, t), idxs in idxs_by.items():
-                a, df, _ubs = per[(fid, t)]
-                bins = [pay_by_fid[fid][(si, t, bid)]
-                        for si, bid in addrs[(fid, t)]]
-                ids, tfs, dls = K.decode_blocks(
-                    a["n"][idxs], [b[0] for b in bins],
-                    [b[1] for b in bins], [b[2] for b in bins])
-                out[(fid, t)] = (ids, S.bm25(tfs, dls, df,
-                                             *self._fstats[fid]))
-            return out
+                have.update(self._fetch_payloads(want - have.keys(), fid))
+            return {(fid, t): tuple(zip(*(pay[fid][(si, t, bid)]
+                                          for si, bid in ad)))
+                    for (fid, t), ad in addrs.items()}
 
-        # phase 2a: fetch + decode ONLY the θ-witness blocks
-        sels = {key: K.theta_blocks(a["ms"], a["n"], k)
-                for key, (a, _df, _ubs) in per.items()}
-        witness = decode_scored({key: sel for key, sel in sels.items()
-                                 if sel is not None})
-        theta = max((boosts[fid] * K.kth_score(s, k)
-                     for (fid, _t), (_ids, s) in witness.items()),
-                    default=0.0)
-        # phase 2b: fetch + decode ONLY the kept blocks
-        keeps: dict = {}
-        blocks_total = blocks_kept = 0
-        for (fid, t), (a, df, ubs) in per.items():
-            other = total_f[fid] - mx[(fid, t)]
-            cross = max((boosts[f2] * total_f[f2]
-                         for f2 in total_f if f2 != fid), default=0.0)
-            if cross >= theta - 1e-12:
-                keep = np.ones(ubs.size, dtype=bool)
-            else:
-                keep = (boosts[fid] * (ubs + other)) >= theta - 1e-12
-            blocks_total += keep.size
-            blocks_kept += int(keep.sum())
-            if keep.any():
-                keeps[(fid, t)] = np.flatnonzero(keep)
-        out: dict = {fid: [] for fid in total_f}
-        for (fid, _t), scored in decode_scored(keeps).items():
-            out[fid].append(scored)
-        if prune_stats is not None:
-            prune_stats.update(theta=theta, blocks_total=blocks_total,
-                               blocks_kept=blocks_kept)
-        return out
+        def score(key, tfs, dls):
+            return S.bm25(tfs, dls, df[key], *self._fstats[key[0]])
 
-    def _scored(self, terms: list[str], k: int, boosts: dict, prune: bool,
-                prune_stats: dict | None) -> dict:
-        """{field_id: [(doc_ids, BM25 scores) per matched term]} for the
-        fields in ``boosts``, in sorted query-term order whatever the term
-        cache holds — so score sums are bit-identical between a cold and a
-        warm searcher. ``prune`` runs block-max WAND
-        (:meth:`_dismax_pruned`)."""
+        return meta, fetch, score
+
+    def _rank(self, terms: list[str], k: int, boosts: dict, *,
+              need: int = 1, prune: bool = False,
+              prune_stats: dict | None = None) -> tuple:
+        """(doc_ids, scores, nmatch) top-k over the fields in ``boosts``
+        through :func:`kernel.rank`. ``prune`` runs block-max WAND
+        (:func:`kernel.score_blocks` over :meth:`_block_source`, two-phase:
+        block metadata first, then payloads of just the θ-witness and kept
+        blocks; never cached, since the kept set depends on k). Unpruned
+        postings come decoded from the term cache. Either way each field's
+        scores are summed in sorted query-term order, whatever the cache
+        holds, so sums are bit-identical between a cold and a warm
+        searcher."""
         if prune:
-            return self._dismax_pruned(terms, k, boosts, prune_stats)
-        return {fid: self._score_terms(
-                    terms, fid, self._postings_arrays(terms, fid))
-                for fid in boosts}
+            meta, fetch, score = self._block_source(terms, boosts)
+            fields, st = K.score_blocks(meta, fetch, score, boosts, k,
+                                        prune=True)
+            if prune_stats is not None:
+                prune_stats.update(st)
+        else:
+            fields = {fid: self._score_terms(
+                          terms, fid, self._postings_arrays(terms, fid))
+                      for fid in boosts}
+        lists = [ids for ls in fields.values() for ids, _s in ls]
+        return K.rank(fields, boosts, k, need=need,
+                      space=self._space(lists) if lists else None)
 
     def _score_terms(self, terms: list[str], fid: int, posts: dict) -> list:
         """[(doc_ids, BM25 scores)] of ``terms`` that have postings in
@@ -441,18 +387,12 @@ class LocalSearcher:
         terms = sorted(set(A.py_tokens(query)))
         if not terms:
             return []
-        lists = self._scored(terms, k, {TEXT_FIELD: 1.0},
-                             prune and not require_all,
-                             prune_stats).get(TEXT_FIELD)
-        if not lists:
-            return []
-        space = self._space([ids for ids, _s in lists])
-        scores, nmatch = K.accumulate(space, lists)
-        cand = np.flatnonzero(nmatch >= (len(terms) if require_all else 1))
-        ids, scores, nmatch = space.ids(cand), scores[cand], nmatch[cand]
-        rows = [{"doc_id": int(ids[i]), "score": float(scores[i]),
-                 "nmatch": int(nmatch[i])}
-                for i in K.topk(ids, scores, k)]
+        ids, scores, nmatch = self._rank(
+            terms, k, {TEXT_FIELD: 1.0},
+            need=len(terms) if require_all else 1,
+            prune=prune and not require_all, prune_stats=prune_stats)
+        rows = [{"doc_id": int(d), "score": float(x), "nmatch": int(m)}
+                for d, x, m in zip(ids, scores, nmatch)]
         return self._hydrate(rows) if hydrate else rows
 
     def dismax_topk(self, query: str, k: int = 20, *,
@@ -463,33 +403,17 @@ class LocalSearcher:
         engine's :func:`planet_search_spark.queries.engine.dismax_topk`:
         per field f, s_f = summed BM25 under f's OWN corpus stats;
         score = max_f boost_f * s_f (tie_breaker 0.0). ``prune=True``
-        enables serving-side block-max WAND (:meth:`_dismax_pruned` —
-        exact, same results)."""
+        enables serving-side block-max WAND (:meth:`_rank` — exact, same
+        results)."""
         boosts = {FIELDS[f]: float(b) for f, b in
                   (boosts or self.cfg["field_boosts"]).items()}
         terms = sorted(set(A.py_tokens(query)))
         if not terms:
             return []
-        fields = [(boosts[fid], lists) for fid, lists in
-                  self._scored(terms, k, boosts, prune, prune_stats).items()
-                  if lists]
-        if not fields:
-            return []
-        space = self._space([ids for _b, lists in fields
-                             for ids, _s in lists])
-        # dis_max as an elementwise maximum over fields; the explicit
-        # matched mask keeps a doc whose only matching field carries a
-        # zero boost
-        best, matched = None, np.zeros(space.size, dtype=bool)
-        for boost, lists in fields:
-            s_f, count = K.accumulate(space, lists)
-            matched |= count > 0
-            best = boost * s_f if best is None \
-                else np.maximum(best, boost * s_f)
-        cand = np.flatnonzero(matched)
-        ids, scores = space.ids(cand), best[cand]
-        rows = [{"doc_id": int(ids[i]), "score": float(scores[i])}
-                for i in K.topk(ids, scores, k)]
+        ids, scores, _n = self._rank(terms, k, boosts, prune=prune,
+                                     prune_stats=prune_stats)
+        rows = [{"doc_id": int(d), "score": float(x)}
+                for d, x in zip(ids, scores)]
         return self._hydrate(rows) if hydrate else rows
 
     # (doc_id, pos) pairs are packed into one int64 key for the flat-numpy

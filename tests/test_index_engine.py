@@ -200,6 +200,74 @@ def test_wand_gate_skips_uniform_queries(spark, index_dir):
     assert stats["gated"] and stats["blocks_kept"] == stats["blocks_total"]
 
 
+def _jobs(spark, fn) -> int:
+    """Spark jobs that ``fn()`` runs, counted under a fresh job group."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pruned_topk_runs_no_extra_jobs(spark, skewed_index):
+    """θ is computed inside the shard tasks, so a query whose blocks
+    provably drop runs no more Spark jobs pruned than unpruned."""
+    def run(prune):
+        return lambda: E.bm25_topk(spark, skewed_index, "the", k=5,
+                                   prune=prune, hydrate=False).collect()
+    _jobs(spark, run(False))          # first-run costs out of the count
+    assert _jobs(spark, run("force")) <= _jobs(spark, run(False))
+
+
+def _shards(df) -> int:
+    """Shard count of an engine ranking plan (its one Exchange)."""
+    import re
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    m = re.search(r"Exchange hashpartitioning\(shard#\d+L?, (\d+)\)", plan)
+    return int(m.group(1)) if m else int("Exchange SinglePartition" in plan)
+
+
+MULTI_SHARD_CASES = {
+    "skewed_index": [("bm25_topk", "the", {"k": 5, "prune": "force"}),
+                     ("bm25_topk", "the zz", {"k": 30, "prune": False}),
+                     ("bm25_topk", "the zz", {"k": 40, "require_all": True}),
+                     ("dismax_topk", "the zz", {"k": 10})],
+    "impact_index_dir": [
+        ("bm25_topk", "error timeout retry", {"k": 10, "prune": "force"}),
+        ("bm25_topk", "error timeout retry", {"k": 10, "prune": False}),
+        ("bm25_topk", "error timeout", {"k": 10, "require_all": True}),
+        ("dismax_topk", "error search tool", {"k": 10})],
+}
+
+
+@pytest.mark.parametrize("which", sorted(MULTI_SHARD_CASES))
+def test_multi_shard_matches_one_shard(spark, request, monkeypatch, which):
+    """Doc-range shards merge exactly: with the shard size forced down so
+    ≥3 shards run, every query returns the one-shard doc ids and
+    bit-identical scores — also pruned, where each shard takes its own θ
+    and blocks straddling shards are ranked in both."""
+    out = request.getfixturevalue(which)
+
+    def run():
+        res = []
+        for fn, q, kw in MULTI_SHARD_CASES[which]:
+            df = getattr(E, fn)(spark, out, q, hydrate=False, **kw)
+            res.append((_shards(df), [(r.doc_id, r.score)
+                                      for r in df.collect()]))
+        return res
+    one = run()
+    monkeypatch.setattr(E, "_SHARD_POSTINGS", 1)
+    many = run()
+    for case, (n1, want), (n2, got) in zip(MULTI_SHARD_CASES[which], one,
+                                            many):
+        assert n1 == 1 and n2 >= 3, (case, n1, n2)
+        assert got == want and want, case
+
+
 @pytest.mark.parametrize("query", ["error search tool", "assistant code",
                                    "spark user"])
 def test_dismax_fields_segment_matches_logical(spark, corpus, index_dir, query):
@@ -490,6 +558,28 @@ def test_encode_is_one_job_of_at_most_one_task_per_core(spark, corpus,
     assert enc["groups_built"] == kw["n_groups"]
 
 
+def test_prewarm_runs_once_per_session(spark, monkeypatch, tmp_path):
+    """The Python worker pool is warmed once per SparkContext: the first
+    build warms it, a second build in the same session starts no prewarm
+    job (an append would otherwise pay a task per core again)."""
+    import time
+    import planet_search_spark.indexing.build as B
+    monkeypatch.setattr(B, "_PREWARMED", set())
+    st = spark.sparkContext.statusTracker()
+    tx = synthesize_transcripts(spark, n_convs=4, seed=93)
+    kw = dict(n_buckets=2, block_size=16, n_groups=1, with_positions=False)
+    before = len(st.getJobIdsForGroup(B.PREWARM_JOB_GROUP))
+    build_index(spark, tx, str(tmp_path / "a"), **kw)
+    deadline = time.time() + 60
+    while (len(st.getJobIdsForGroup(B.PREWARM_JOB_GROUP)) == before
+           and time.time() < deadline):
+        time.sleep(0.2)
+    warmed = st.getJobIdsForGroup(B.PREWARM_JOB_GROUP)
+    assert len(warmed) == before + 1
+    build_index(spark, tx, str(tmp_path / "b"), **kw)
+    assert st.getJobIdsForGroup(B.PREWARM_JOB_GROUP) == warmed
+
+
 def _term_bounds_reference(spark, seg_dir, block_size):
     """Hot terms' (df ≥ 8·block_size) block-bound summaries computed by
     Spark itself, the reference for the encoder's numpy rank rule:
@@ -630,7 +720,7 @@ def test_impact_layout_inherited_by_incremental(spark, tmp_path):
 
 def test_benefit_gate_skips_theta_on_homogeneous_blocks(spark, tmp_path):
     """Identical docs -> identical block bounds -> the benefit gate must
-    prove pruning can't drop >=10% of blocks and skip the θ jobs; on a
+    prove pruning can't drop >=10% of blocks and skip θ; on a
     skewed corpus it must NOT gate (and must actually prune). Gating is a
     performance decision only — results stay identical either way."""
     from pyspark.sql import functions as F

@@ -54,6 +54,26 @@ def test_topk_is_take_ordered(spark, small_index):
     assert "TakeOrderedAndProject" in _plan(df)
 
 
+def test_topk_plan_is_one_exchange_by_shard(spark, small_index,
+                                           monkeypatch):
+    """Each doc-range shard is ranked inside one Arrow task: the un-hydrated
+    top-k plan moves blocks through ONE Exchange, keyed by shard (a single
+    partition for a one-shard query), and has no per-doc aggregation in
+    the JVM."""
+    def plan():
+        return _plan(E.bm25_topk(spark, small_index, "error timeout", k=5,
+                                 hydrate=False))
+    one = plan()
+    monkeypatch.setattr(E, "_SHARD_POSTINGS", 1)
+    many = plan()
+    assert "Exchange SinglePartition" in one
+    assert "Exchange hashpartitioning(shard" in many
+    for p in (one, many):
+        assert p.count("Exchange") == 1, p
+        assert "HashAggregate" not in p
+        assert "MapInArrow" in p
+
+
 def test_logical_bm25_pushes_term_filter_to_scan(spark):
     """The inline path must push the isin(term) filter below the tf agg."""
     from planet_search_spark.queries.logical import QUERIES

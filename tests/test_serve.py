@@ -57,6 +57,25 @@ def test_serve_scores_independent_of_term_cache(index_dir, method):
            [(r["doc_id"], r["score"]) for r in cold]
 
 
+@pytest.mark.parametrize("prune", [False, True])
+def test_engine_and_reader_rank_bit_identical(spark, index_dir, prune):
+    """The engine's shard task and the reader rank through the same kernel
+    routine and sum in sorted query-term order: scores are bit-identical
+    and in the same order, pruned and unpruned."""
+    srv = LocalSearcher(index_dir)
+    for q in ["the error timeout", "spark user data"]:
+        got = srv.bm25_topk(q, k=15, hydrate=False, prune=prune)
+        want = E.bm25_topk(spark, index_dir, q, k=15, hydrate=False,
+                           prune="force" if prune else False).collect()
+        assert [(g["doc_id"], g["score"], g["nmatch"]) for g in got] == \
+               [(w.doc_id, w.score, w.nmatch) for w in want] != [], q
+        got = srv.dismax_topk(q, k=12, hydrate=False, prune=prune)
+        want = E.dismax_topk(spark, index_dir, q, k=12,
+                             hydrate=False).collect()
+        assert [(g["doc_id"], g["score"]) for g in got] == \
+               [(w.doc_id, w.score) for w in want] != [], q
+
+
 def test_serve_boundary_ties_break_by_doc_id(spark, tmp_path):
     """Many docs tie exactly at the k-boundary score: the serving reader
     must cut by (score desc, doc_id asc) like the engine, not by whatever
