@@ -14,15 +14,22 @@ Read path (mirrors the ES search template execution, SURVEY.md §3.2):
    by shard — ES's shard-local top-k over doc ranges. The shard count
    follows the query's posting mass (``_SHARD_POSTINGS``), so small
    queries run one shard;
-4. one ``mapInArrow`` task per shard runs the serving reader's own code
-   (:func:`kernel.score_blocks`: witness θ, block skipping, the AND
+4. one ``mapInArrow`` task per shard runs the serving reader's own code:
+   :func:`kernel.score_blocks` (witness θ, block skipping, the AND
    doc-range skip, decode, :func:`scoring.bm25` under each field's corpus
-   stats and the global df; then :func:`kernel.rank`: accumulate, AND
-   filter, dis_max, top-k) and emits ≤ k rows plus one stats row; dl ships
-   inside the block, so scoring needs NO doc-stats join;
+   stats and the global df), then one combinator. ``bm25_topk`` and
+   ``dismax_topk`` rank with :func:`kernel.rank` (accumulate, AND filter,
+   dis_max, top-k) and emit ≤ k rows; ``search`` combines with
+   :func:`kernel.should_sum` (dis_max over each term's expansions, boosted
+   should-sum, AND filter) and emits every candidate's BM25 part. Each
+   task adds one stats row; dl ships inside the block, so scoring needs NO
+   doc-stats join;
 5. the exact coordinator merge: ``orderBy(score desc, doc_id asc)
-   .limit(k)`` — Spark's TakeOrderedAndProject heap;
-6. a broadcast hydration join against doc_store for the k winners only.
+   .limit(k)`` — Spark's TakeOrderedAndProject heap. ``search`` first
+   joins its candidates to the narrow doc values and applies the phrase
+   tiers and function_score in the JVM;
+6. a broadcast hydration join against doc_store for the k winners only,
+   ordered by one single-partition sort.
 
 Block-max WAND (the Lucene-side top-k pruning the reference gets for free,
 SURVEY.md §4 "Lucene-side (delegated)") runs inside each shard task; the
@@ -37,6 +44,7 @@ import json
 import math
 import os
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -137,54 +145,6 @@ def _load_blocks(spark: SparkSession, idx: IndexMeta, terms: list[str],
             .where(F.col("bucket").isin(buckets))   # directory pruning
             .where(F.col("field").isin(list(field_ids)))
             .where(F.col("term").isin(list(set(terms)))))
-
-
-def _scored_postings(idx: IndexMeta, blocks: DataFrame,
-                     df_map: dict[str, float]) -> DataFrame:
-    """(field, term, doc_id, s) with exact per-field BM25 contributions.
-
-    One Arrow UDF decodes and scores: per (field, term) in each Arrow batch
-    it decodes the term's blocks with :func:`kernel.decode_blocks` (one
-    vectorized pass per stream, not per block) and scores them with
-    :func:`scoring.bm25` — the serving reader's exact code. ``df_map``
-    holds the GLOBAL per-(field, term) doc frequencies (summed across
-    segments, collected once — one tiny row per query term) and each field
-    is scored under its OWN corpus stats (per-field Lucene similarity
-    semantics); both ride the closure, so scoring adds no join to the
-    plan. Block payloads cross the JVM↔Python boundary once and only
-    (doc_id, s) rows come back."""
-    field_stats = idx.field_stats()
-
-    def score(batches):
-        import pyarrow as pa
-        for b in batches:
-            c = b.to_pydict()
-            rows: dict = {}
-            for i, key in enumerate(zip(c["field"], c["term"])):
-                rows.setdefault(key, []).append(i)
-            keys, ids, ss = list(rows), [], []
-            for fid, t in keys:
-                ix = rows[(fid, t)]
-                d, tfs, dls = K.decode_blocks(
-                    *([c[n][i] for i in ix] for n in
-                      ("n_docs", "docs_bin", "tfs_bin", "dls_bin")))
-                ids.append(d)
-                ss.append(S.bm25(tfs, dls, df_map[(fid, t)],
-                                 *field_stats[fid]))
-            if not keys:
-                continue
-            owner = np.repeat(np.arange(len(keys)), [a.size for a in ids])
-            yield pa.RecordBatch.from_arrays([
-                pa.array(np.array([f for f, _ in keys],
-                                  dtype=np.int32)[owner]),
-                pa.array([t for _, t in keys]).take(pa.array(owner)),
-                pa.array(np.concatenate(ids)), pa.array(np.concatenate(ss))],
-                names=["field", "term", "doc_id", "s"])
-
-    return (blocks.select("field", "term", "n_docs",
-                          "docs_bin", "tfs_bin", "dls_bin")
-            .mapInArrow(score, "field int, term string, doc_id long, "
-                               "s double"))
 
 
 def _collect_term_stats(spark: SparkSession, idx: IndexMeta,
@@ -297,14 +257,15 @@ _RANKED_SCHEMA = ("doc_id long, score double, nmatch long, theta double, "
 
 
 def _shard_task(df_map: dict, field_stats: dict, boosts: dict,
-                k: int | None, need: int, prune: bool, and_skip: bool,
-                width: int, n_shards: int):
-    """The ``mapInArrow`` body: rank every doc-range shard in the task's
-    partition with :func:`kernel.score_blocks` + :func:`kernel.rank`.
-    Shard s covers doc ids [s·width, (s+1)·width), the last one everything
-    above. Emits the shard's top-k (all matches when ``k`` is None) as
-    (doc_id, score, nmatch) rows, then one stats row (doc_id NULL; θ and
-    the block counts)."""
+                k: int | None, prune: bool, and_skip: bool, width: int,
+                n_shards: int, rank):
+    """The ``mapInArrow`` body: score every doc-range shard in the task's
+    partition with :func:`kernel.score_blocks` and combine its lists with
+    ``rank(scored, boosts, space=)`` — :func:`kernel.rank` or
+    :func:`kernel.should_sum` with their other arguments bound. Shard s
+    covers doc ids [s·width, (s+1)·width), the last one everything above.
+    Emits rank's (doc_id, score, nmatch) rows, then one stats row (doc_id
+    NULL; θ and the block counts)."""
     def score(key, tfs, dls):
         return S.bm25(tfs, dls, df_map[key], *field_stats[key[0]])
 
@@ -341,12 +302,12 @@ def _shard_task(df_map: dict, field_stats: dict, boosts: dict,
 
             lo = int(s) * width
             hi = lo + width if s < n_shards - 1 else np.iinfo(np.int64).max
-            fields, st = K.score_blocks(meta, fetch, score, boosts, k,
+            scored, st = K.score_blocks(meta, fetch, score, boosts, k,
                                         prune=prune, and_skip=and_skip,
                                         doc_range=(lo, hi))
-            lists = [ids for ls in fields.values() for ids, _s in ls]
-            ids, scores, nmatch = K.rank(
-                fields, boosts, k, need=need,
+            lists = [ids for ids, _s in scored.values()]
+            ids, scores, nmatch = rank(
+                scored, boosts,
                 space=K.range_space(lists, lo) if lists else None)
             n = ids.size
             yield pa.RecordBatch.from_arrays([
@@ -365,15 +326,16 @@ def _shard_task(df_map: dict, field_stats: dict, boosts: dict,
 
 
 def _ranked(spark: SparkSession, idx: IndexMeta, terms: list[str],
-            stats: list, k: int | None, *, field_ids: tuple = (TEXT_FIELD,),
-            boosts: dict | None = None, need: int = 1, prune: bool = False,
-            and_skip: bool = False) -> DataFrame:
-    """The one ranking plan of ``bm25_scores``, ``bm25_topk`` and
-    ``dismax_topk``: tag each block of the term-pruned scan with the
-    doc-range shard(s) it overlaps, repartition by shard, and rank each
-    shard in one ``mapInArrow`` task (:func:`_shard_task`). The shard
-    count follows the query's posting mass (Σ df / ``_SHARD_POSTINGS``,
-    at most one shard per core)."""
+            stats: list, rank, *, k: int | None = None,
+            field_ids: tuple = (TEXT_FIELD,), boosts: dict | None = None,
+            prune: bool = False, and_skip: bool = False) -> DataFrame:
+    """The one ranking plan of every engine BM25 query: tag each block of
+    the term-pruned scan with the doc-range shard(s) it overlaps,
+    repartition by shard, and score each shard in one ``mapInArrow`` task
+    (:func:`_shard_task`) that combines through ``rank``; ``k`` is the
+    top-k that θ targets under ``prune``. The shard count follows the
+    query's posting mass (Σ df / ``_SHARD_POSTINGS``, at most one shard
+    per core)."""
     n_shards = max(1, min(math.ceil(sum(r["df"] for r in stats)
                                     / _SHARD_POSTINGS),
                           spark.sparkContext.defaultParallelism))
@@ -382,8 +344,8 @@ def _ranked(spark: SparkSession, idx: IndexMeta, terms: list[str],
         *(F.expr(f"least({c} div {width}, {n_shards - 1})")
           for c in ("first_doc", "last_doc"))))
     task = _shard_task(_stats_df_map(stats), idx.field_stats(),
-                       boosts or {TEXT_FIELD: 1.0}, k, need, prune, and_skip,
-                       width, n_shards)
+                       boosts or {TEXT_FIELD: 1.0}, k, prune, and_skip,
+                       width, n_shards, rank)
     return (_load_blocks(spark, idx, terms, field_ids)
             .select("field", "term", "n_docs", "first_doc", "last_doc",
                     "max_tf", "min_dl", "max_score", "docs_bin", "tfs_bin",
@@ -411,7 +373,8 @@ def _hydrate(spark: SparkSession, idx: IndexMeta, top: DataFrame) -> DataFrame:
     return (store.join(F.broadcast(top), "doc_id")
             .select(*store.columns, *[c for c in top.columns
                                       if c != "doc_id"])
-            .orderBy(F.desc("score"), F.asc("doc_id")))
+            .repartition(1)
+            .sortWithinPartitions(F.desc("score"), F.asc("doc_id")))
 
 
 def _empty_top(spark: SparkSession) -> DataFrame:
@@ -430,8 +393,9 @@ def bm25_scores(spark: SparkSession, out_dir: str, query: str, *,
             F.col("id").alias("doc_id"), F.lit(0.0).alias("score"),
             F.lit(0).cast("long").alias("nmatch"))
     stats = _collect_term_stats(spark, idx, terms)
-    return _matches(_ranked(spark, idx, terms, stats, None,
-                            need=len(terms) if require_all else 1))
+    need = len(terms) if require_all else 1
+    return _matches(_ranked(spark, idx, terms, stats,
+                            partial(K.rank, k=None, need=need)))
 
 
 def bm25_topk(spark: SparkSession, out_dir: str, query: str, k: int = 20, *,
@@ -459,8 +423,9 @@ def bm25_topk(spark: SparkSession, out_dir: str, query: str, k: int = 20, *,
     stats = _collect_term_stats(spark, idx, terms)
     do_prune = (bool(prune) and not require_all and bool(stats)
                 and (prune == "force" or _theta_may_prune(stats, idx)))
-    ranked = _ranked(spark, idx, terms, stats, k,
-                     need=len(terms) if require_all else 1, prune=do_prune,
+    need = len(terms) if require_all else 1
+    ranked = _ranked(spark, idx, terms, stats,
+                     partial(K.rank, k=k, need=need), k=k, prune=do_prune,
                      and_skip=bool(prune) and require_all)
     if prune_stats is not None:
         st = (ranked.where(F.col("doc_id").isNull())
@@ -487,7 +452,8 @@ def dismax_topk(spark: SparkSession, out_dir: str, query: str, k: int = 20, *,
     if not terms:
         return _empty_top(spark)
     stats = _collect_term_stats(spark, idx, terms, field_ids)
-    ranked = _ranked(spark, idx, terms, stats, k, field_ids=field_ids,
+    ranked = _ranked(spark, idx, terms, stats, partial(K.rank, k=k),
+                     field_ids=field_ids,
                      boosts={FIELDS[f]: float(b) for f, b in boosts.items()})
     top = _top(ranked, k).select("doc_id", "score")
     return _hydrate(spark, idx, top) if hydrate else top
@@ -622,10 +588,15 @@ def expand_fuzzy(spark: SparkSession, idx: IndexMeta, term: str,
 def search(spark: SparkSession, out_dir: str, params) -> DataFrame:
     """The full search pipeline (points_search template analogue):
 
-    query analysis -> (prefix|fuzzy) dictionary expansion -> postings decode
-    -> per-original-term dis_max over expansions (B15) -> OR/AND combine
-    (B9/B10) -> function_score: saturation + static prior + exact bonus +
-    recency decay (B19-B24) -> metadata filter (B17) -> top-k hydrated (B25).
+    query analysis -> (prefix|fuzzy) dictionary expansion -> the ranking
+    plan of the bare BM25 paths (:func:`_ranked`), whose per-shard tasks
+    decode, score and combine with :func:`kernel.should_sum` —
+    per-original-term dis_max over expansions (B15), boosted should-sum
+    over fields and terms (B16/B8), OR/AND (B9/B10) — and emit every
+    candidate -> metadata filter (B17) through the narrow doc-values join
+    -> function_score: saturation + static prior + exact bonus + recency
+    decay (B19-B24) -> top-k hydrated (B25). The BM25 part is the serving
+    reader's, bit for bit.
 
     No WAND pruning on this path BY DESIGN: under function_score the
     per-doc add-ons (prior <= 0.3, recency <= 0.6, tiers) dominate the
@@ -634,9 +605,6 @@ def search(spark: SparkSession, out_dir: str, params) -> DataFrame:
     function_score/rescore wraps the match query; pruning applies to the
     bare BM25 paths (``bm25_topk``, serve ``bm25_topk(prune=True)``).
     """
-    from .params import SearchParams  # noqa: F401 (typing only)
-    from .. import scoring as S2
-
     idx = open_index(out_dir)
     store = doc_store(spark, idx)
     q_terms = A.py_tokens(params.query)
@@ -666,42 +634,27 @@ def search(spark: SparkSession, out_dir: str, params) -> DataFrame:
 
     field_ids = ((TEXT_FIELD, FIELDS["meta"]) if params.multifield
                  else (TEXT_FIELD,))
-    # expansion map: (orig, term) — expansions drawn from the queried
-    # fields' dictionary
-    pairs: list[tuple[str, str]] = []
+    # orig -> expansions, drawn from the queried fields' dictionary
+    origs: dict[str, set] = {}
     for i, t in enumerate(q_terms):
         if params.prefix and i == len(q_terms) - 1:
-            pairs += [(t, e) for e in
-                      (expand_prefix(spark, idx, t, field_ids) or [t])]
+            exps = expand_prefix(spark, idx, t, field_ids) or [t]
         elif params.fuzzy:
-            pairs += [(t, e) for e in
-                      expand_fuzzy(spark, idx, t, params.auto_fuzz(t),
-                                   field_ids)]
+            exps = expand_fuzzy(spark, idx, t, params.auto_fuzz(t), field_ids)
         else:
-            pairs.append((t, t))
-    exp_terms = sorted({e for _, e in pairs})
-    exp_df = spark.createDataFrame(pairs, "orig string, term string").distinct()
-    blocks = _load_blocks(spark, idx, exp_terms, field_ids)
-    scored = _scored_postings(
-        idx, blocks,
-        _stats_df_map(_collect_term_stats(spark, idx, exp_terms, field_ids)))
-    # dis_max over expansions of each original term per field (B15), then
-    # boosted should-sum across fields and terms (B16/B9/B8). AND requires
-    # every original term matched in at least one field.
-    per_orig = (scored.join(F.broadcast(exp_df), "term")
-                .groupBy("doc_id", "field", "orig").agg(F.max("s").alias("s")))
-    if params.multifield:
-        w = F.create_map(
-            *[x for f, b in FIELD_BOOSTS.items()
-              for x in (F.lit(FIELDS[f]), F.lit(float(b)))])[F.col("field")]
-    else:
-        w = F.lit(1.0)
-    agg = (per_orig.withColumn("ws", w * F.col("s"))
-           .groupBy("doc_id")
-           .agg(F.sum("ws").alias("bm25"),
-                F.count_distinct("orig").alias("nmatch")))
-    if params.operator == "and":
-        agg = agg.where(F.col("nmatch") == len(set(q_terms)))
+            exps = [t]
+        origs.setdefault(t, set()).update(exps)
+    exp_terms = sorted(set().union(*origs.values()))
+    boosts = ({FIELDS[f]: float(b) for f, b in FIELD_BOOSTS.items()}
+              if params.multifield else {TEXT_FIELD: 1.0})
+    # every candidate's BM25 part (B15/B16/B9/B8) from the shard tasks;
+    # AND requires every original term matched in at least one field
+    stats = _collect_term_stats(spark, idx, exp_terms, field_ids)
+    rank = partial(K.should_sum, origs=origs,
+                   need=len(origs) if params.operator == "and" else 1)
+    cand = (_matches(_ranked(spark, idx, exp_terms, stats, rank,
+                             field_ids=field_ids, boosts=boosts))
+            .withColumnRenamed("score", "bm25"))
 
     # DOC-VALUES SPLIT (round-3 VERDICT #1, mirroring serve.py's numeric
     # doc values): function_score needs only (prior, ts, kw_hash) per
@@ -711,7 +664,7 @@ def search(spark: SparkSession, out_dir: str, params) -> DataFrame:
     # the last stored-string scale risk. The k winners alone hydrate the
     # stored strings after limit(k), exactly like bm25_topk's hydration.
     narrow = store.select("doc_id", "prior", "ts", "kw_hash")
-    joined = agg.join(narrow, "doc_id")  # inner join applies B17 filters
+    joined = cand.join(narrow, "doc_id")  # inner join applies B17 filters
     bool_score = F.col("bm25")
     if params.phrase_tiers:
         # constant_score phrase tiers INSIDE the bool score, before the
@@ -725,12 +678,12 @@ def search(spark: SparkSession, out_dir: str, params) -> DataFrame:
                       + F.when(F.col("kw_hash") == q_kw_hash,
                                F.lit(12.0)).otherwise(F.lit(0.0))
                       + F.coalesce(F.col("tier6"), F.lit(0.0)))
-    final = (S2.saturation(bool_score)
-             + F.lit(S2.W_PRIOR) * F.col("prior")
+    final = (S.saturation(bool_score)
+             + F.lit(S.W_PRIOR) * F.col("prior")
              + F.when(F.col("kw_hash") == q_kw_hash,
-                      F.lit(S2.W_EXACT)).otherwise(F.lit(0.0)))
+                      F.lit(S.W_EXACT)).otherwise(F.lit(0.0)))
     if params.recency:
-        final = final + S2.recency_decay(F.col("ts"), params.now_epoch)
+        final = final + S.recency_decay(F.col("ts"), params.now_epoch)
     topk = (joined.withColumn("score", final)
             .select("doc_id", "score", "nmatch")
             .orderBy(F.desc("score"), F.asc("doc_id"))

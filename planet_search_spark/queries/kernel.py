@@ -10,8 +10,12 @@ and in the shard daemon. Callers pass BM25 in as a ``score`` callable
 
 * :func:`score_blocks` — the one pruning routine: the AND doc-range skip,
   witness-block θ, block-max WAND block skipping, decode and score;
-* :func:`rank` — accumulate, the AND filter, dis_max over boosted fields
-  and the exact top-k;
+* the two combinators over its ``{(field_id, term): (ids, scores)}``
+  lists: :func:`rank` — accumulate, the AND filter, dis_max over boosted
+  fields and the exact top-k (``bm25_topk``, ``dismax_topk``) — and
+  :func:`should_sum` — dis_max over each original term's expansions, the
+  boosted should-sum over fields and terms and the matched-term count
+  (the BM25 part of ``search``);
 * :func:`decode_blocks` — a term's block payloads -> (doc_ids, tfs, dls);
 * :func:`theta_blocks` / :func:`kth_score` — the θ-witness blocks of a term
   and its θ_t;
@@ -137,15 +141,6 @@ class DocSpace:
     def ids(self, slots: np.ndarray) -> np.ndarray:
         return slots + self.base if self.uniq is None else self.uniq[slots]
 
-    def member(self, sorted_ids: np.ndarray) -> np.ndarray:
-        """Per-slot mask: is the slot's doc id in ascending ``sorted_ids``
-        (ids of this space's doc range)."""
-        if self.uniq is not None:
-            return in_sorted(self.uniq, sorted_ids)
-        m = np.zeros(self.size, dtype=bool)
-        m[sorted_ids - self.base] = True
-        return m
-
 
 def range_space(id_lists: list, lo: int) -> DocSpace:
     """Slots for ids ≥ ``lo``: dense over [lo, max id] once the posting
@@ -224,8 +219,8 @@ def score_blocks(meta: dict, fetch, score, boosts: dict, k: int, *,
     and block-max WAND skipping; ``and_skip`` the AND doc-range skip.
     Decoded postings outside ``doc_range = (lo, hi)`` are dropped.
 
-    Returns ``({field_id: [(doc_ids, scores) per term in sorted term
-    order]}, {"theta", "blocks_total", "blocks_kept"})``."""
+    Returns ``({(field_id, term): (doc_ids, scores)} in sorted key order,
+    {"theta", "blocks_total", "blocks_kept"})``."""
     keys = sorted(meta)
     keep = {key: np.ones(meta[key]["n"].size, dtype=bool) for key in keys}
     theta = 0.0
@@ -263,34 +258,34 @@ def score_blocks(meta: dict, fetch, score, boosts: dict, k: int, *,
         if doc_range is not None:
             m = (ids >= doc_range[0]) & (ids < doc_range[1])
             ids, tfs, dls = ids[m], tfs[m], dls[m]
-        out.setdefault(key[0], []).append((ids, score(key, tfs, dls)))
+        out[key] = (ids, score(key, tfs, dls))
     return out, {"theta": theta,
                  "blocks_total": sum(v.size for v in keep.values()),
                  "blocks_kept": sum(int(v.sum()) for v in keep.values())}
 
 
-def rank(fields: dict, boosts: dict, k: int | None, *, need: int = 1,
+def rank(scored: dict, boosts: dict, k: int | None, *, need: int = 1,
          space: DocSpace | None = None) -> tuple:
     """(doc_ids, scores, nmatch) of the docs matching ≥ ``need`` postings,
     the top ``k`` in (score desc, doc_id asc) order (all, unordered, when
     ``k`` is None).
 
-    ``fields`` is :func:`score_blocks`' ``{field_id: [(ids, scores)]}``.
-    Per field the scores are summed in list order (sorted query-term
-    order, so every reader gets bit-identical sums); a doc's score is the
-    dis_max ``max_f boost_f·s_f`` over the fields, which with one field at
-    boost 1.0 is the plain BM25 sum; nmatch counts its postings. ``space``
+    ``scored`` is :func:`score_blocks`' ``{(field_id, term): (ids,
+    scores)}``. Per field the scores are summed in sorted term order, so
+    every reader gets bit-identical sums; a doc's score is the dis_max
+    ``max_f boost_f·s_f`` over the fields, which with one field at boost
+    1.0 is the plain BM25 sum; nmatch counts its postings. ``space``
     defaults to the sparse union of the ids."""
-    lists = [ids for ls in fields.values() for ids, _s in ls]
-    if not lists:
+    if not scored:
         return (np.empty(0, dtype=np.int64), np.empty(0),
                 np.empty(0, dtype=np.int32))
     if space is None:
-        space = DocSpace(lists)
+        space = DocSpace([ids for ids, _s in scored.values()])
+    fields: dict = {}
+    for key in sorted(scored):
+        fields.setdefault(key[0], []).append(scored[key])
     best, nmatch = None, np.zeros(space.size, dtype=np.int32)
     for fid, ls in fields.items():
-        if not ls:
-            continue
         s_f, count = accumulate(space, ls)
         nmatch += count
         best = boosts[fid] * s_f if best is None \
@@ -301,3 +296,59 @@ def rank(fields: dict, boosts: dict, k: int | None, *, need: int = 1,
         o = topk(ids, scores, k)
         ids, scores, nmatch = ids[o], scores[o], nmatch[o]
     return ids, scores, nmatch
+
+
+def should_sum(scored: dict, boosts: dict, origs: dict, *, need: int = 1,
+               space: DocSpace | None = None) -> tuple:
+    """(doc_ids, bm25, nmatch) of every doc matching ≥ ``need`` original
+    query terms, in slot order — the bool ``should`` of ``search``.
+
+    ``scored`` is :func:`score_blocks`' ``{(field_id, term): (ids,
+    scores)}`` and ``origs`` maps each original query term to the set of
+    its expansions (itself for a plain term). Per (field, original term) a
+    doc takes the max over the expansions (dis_max, tie_breaker 0.0), and
+    ``bm25`` sums ``boost_f`` × that max over original terms in ``origs``
+    order, fields ascending; nmatch counts the original terms matched in
+    any field. ``space`` defaults to the sparse union of the ids."""
+    lists = [ids for ids, _s in scored.values() if ids.size]
+    if not lists:
+        return (np.empty(0, dtype=np.int64), np.empty(0),
+                np.empty(0, dtype=np.int32))
+    if space is None:
+        space = DocSpace(lists)
+    bm = np.zeros(space.size)
+    # int32, not int8: ≥128 distinct original terms would overflow
+    nmatch = np.zeros(space.size, dtype=np.int32)
+    m_buf = np.empty(space.size, dtype=bool)
+    # Several expansions dis_max straight into slot-indexed scratch:
+    # gather/np.maximum/scatter per list is O(total postings), and the
+    # scratch reset walks only the touched slots.
+    sm = t_buf = None
+    for o, exps in origs.items():
+        m_buf[:] = False
+        for fid in sorted(boosts):
+            arrs = [scored[(fid, e)] for e in sorted(exps)
+                    if (fid, e) in scored and scored[(fid, e)][0].size]
+            if not arrs:
+                continue
+            if len(arrs) == 1:
+                # posting ids are unique within a list: plain fancy indexing
+                ix = space.slots(arrs[0][0])
+                bm[ix] += boosts[fid] * arrs[0][1]
+                m_buf[ix] = True
+                continue
+            if sm is None:
+                sm = np.zeros(space.size)
+                t_buf = np.zeros(space.size, dtype=bool)
+            for ids, s in arrs:
+                ix = space.slots(ids)
+                sm[ix] = np.maximum(sm[ix], s)
+                t_buf[ix] = True
+            touched = np.flatnonzero(t_buf)
+            bm[touched] += boosts[fid] * sm[touched]
+            m_buf[touched] = True
+            sm[touched] = 0.0
+            t_buf[touched] = False
+        nmatch += m_buf
+    cand = np.flatnonzero(nmatch >= need)
+    return space.ids(cand), bm[cand], nmatch[cand]

@@ -8,11 +8,14 @@ No Spark session involved: pyarrow datasets with bucket/term predicate
 pushdown, then the engine's own numpy code — :func:`kernel.score_blocks`
 (witness θ, block-max WAND skipping, decode, score) over this searcher as
 a block source, :func:`kernel.rank` (accumulate, AND filter, dis_max,
-top-k) and :func:`scoring.bm25`, the functions the engine's per-shard
-Arrow task calls. Corpus statistics come from :func:`engine.open_index`.
-Results are EXACTLY the engine's (same blocks, same float64 math, same
-summation order, same tie-break) — asserted in tests. Bare BM25 and
-dis_max share one ranking path (:meth:`LocalSearcher._rank`).
+top-k), :func:`kernel.should_sum` (the BM25 part of ``search``) and
+:func:`scoring.bm25`, the functions the engine's per-shard Arrow task
+calls. Corpus statistics come from :func:`engine.open_index`. Results are
+EXACTLY the engine's (same blocks, same float64 math, same summation
+order, same tie-break) — asserted in tests. Bare BM25 and dis_max share
+one ranking path (:meth:`LocalSearcher._rank`); ``search`` combines its
+expansions through :func:`kernel.should_sum` like the engine's shard
+task.
 
 At 100 TB this is the fan-out pattern: each searcher owns a bucket range
 (the term-bucket partitioning is the shard key), the coordinator merges
@@ -336,28 +339,30 @@ class LocalSearcher:
         searcher."""
         if prune:
             meta, fetch, score = self._block_source(terms, boosts)
-            fields, st = K.score_blocks(meta, fetch, score, boosts, k,
+            scored, st = K.score_blocks(meta, fetch, score, boosts, k,
                                         prune=True)
             if prune_stats is not None:
                 prune_stats.update(st)
         else:
-            fields = {fid: self._score_terms(
-                          terms, fid, self._postings_arrays(terms, fid))
-                      for fid in boosts}
-        lists = [ids for ls in fields.values() for ids, _s in ls]
-        return K.rank(fields, boosts, k, need=need,
+            scored = self._scored(terms, boosts)
+        lists = [ids for ids, _s in scored.values()]
+        return K.rank(scored, boosts, k, need=need,
                       space=self._space(lists) if lists else None)
 
-    def _score_terms(self, terms: list[str], fid: int, posts: dict) -> list:
-        """[(doc_ids, BM25 scores)] of ``terms`` that have postings in
-        ``posts`` (from :meth:`_postings_arrays`), in ``terms`` order."""
-        out = []
-        for t in terms:
-            if t in posts and posts[t][0].size:
-                ids, tfs, dls = posts[t]
-                out.append((ids, S.bm25(tfs, dls,
-                                        self._df(t, fid, float(ids.size)),
-                                        *self._fstats[fid])))
+    def _scored(self, terms: list[str], field_ids) -> dict:
+        """``{(field_id, term): (doc_ids, BM25 scores)}`` of the ``terms``
+        that have postings in each field, decoded through the term cache
+        (:meth:`_postings_arrays`) — the unpruned form of
+        :func:`kernel.score_blocks`' output."""
+        out = {}
+        for fid in field_ids:
+            posts = self._postings_arrays(terms, fid)
+            for t in terms:
+                if t in posts and posts[t][0].size:
+                    ids, tfs, dls = posts[t]
+                    out[(fid, t)] = (ids, S.bm25(
+                        tfs, dls, self._df(t, fid, float(ids.size)),
+                        *self._fstats[fid]))
         return out
 
     def _space(self, id_lists: list) -> K.DocSpace:
@@ -573,8 +578,8 @@ class LocalSearcher:
             return []
         field_ids = ((TEXT_FIELD, FIELDS["meta"]) if params.multifield
                      else (TEXT_FIELD,))
-        # (orig -> expansion set), mirroring the engine's pair construction
-        exp_by_orig: dict[str, set] = {}
+        # orig -> expansions, built like the engine's
+        origs: dict[str, set] = {}
         for i, t in enumerate(q_terms):
             if params.prefix and i == len(q_terms) - 1:
                 exps = self.expand_prefix(t, field_ids) or [t]
@@ -582,75 +587,29 @@ class LocalSearcher:
                 exps = self.expand_fuzzy(t, params.auto_fuzz(t), field_ids)
             else:
                 exps = [t]
-            exp_by_orig.setdefault(t, set()).update(exps)
-        exp_terms = sorted({e for s in exp_by_orig.values() for e in s})
+            origs.setdefault(t, set()).update(exps)
+        exp_terms = sorted(set().union(*origs.values()))
 
         boosts = ({FIELDS[f]: float(b)
                    for f, b in self.cfg["field_boosts"].items()}
                   if params.multifield else {TEXT_FIELD: 1.0})
-        raw_fo = []   # (field_id, orig, [(doc_ids, scores) per expansion])
-        for fid in field_ids:
-            posts = self._postings_arrays(exp_terms, fid)
-            for o, exps in exp_by_orig.items():
-                arrs = self._score_terms(sorted(exps), fid, posts)
-                if arrs:
-                    raw_fo.append((fid, o, arrs))
-        if not raw_fo:
+        scored = self._scored(exp_terms, field_ids)
+        if not scored:
             return []
         dv_ids, dv_prior, dv_ts = self._doc_values()
         # On hot queries the candidate set approaches the corpus and the
         # space is dense (round 4, profiled: the sparse path's np.unique +
         # per-(field, orig) searchsorted scatters were 60% of warm latency,
         # 114 of 196 ms at 1M docs); rare-term queries stay sparse.
-        space = self._space([a[0] for _, _, arrs in raw_fo for a in arrs])
-        bm = np.zeros(space.size)
-        # int32, not int8: ≥128 distinct original terms would overflow
-        # silently and corrupt the nmatch>0 mask / operator='and' check
-        # (memory is dominated by the float64 bm array anyway)
-        nmatch = np.zeros(space.size, dtype=np.int32)
-        m_buf = np.empty(space.size, dtype=bool)
-        # Expanded terms (prefix: up to 200 lists) dismax straight into
-        # slot-indexed scratch — gather/np.maximum/scatter per list is
-        # O(total postings), replacing a global np.unique sort-merge +
-        # searchsorted scatter (O(total·log total)) that set the
-        # single-shard prefix p50 at 10M docs. Scratch reset walks only
-        # touched slots.
-        sm = t_buf = None
-        for o in exp_by_orig:
-            m_buf[:] = False
-            for fid, o2, arrs in raw_fo:
-                if o2 != o:
-                    continue
-                if len(arrs) == 1:
-                    # posting ids are unique within a list: plain fancy
-                    # indexing
-                    ids, s = arrs[0]
-                    ix = space.slots(ids)
-                    bm[ix] += boosts[fid] * s
-                    m_buf[ix] = True
-                    continue
-                if sm is None:
-                    sm = np.zeros(space.size)
-                    t_buf = np.zeros(space.size, dtype=bool)
-                for ids, s in arrs:
-                    ix = space.slots(ids)
-                    sm[ix] = np.maximum(sm[ix], s)
-                    t_buf[ix] = True
-                touched = np.flatnonzero(t_buf)
-                bm[touched] += boosts[fid] * sm[touched]
-                m_buf[touched] = True
-                sm[touched] = 0.0
-                t_buf[touched] = False
-            nmatch += m_buf
-        mask = nmatch > 0
-        if params.operator == "and":
-            mask &= nmatch == len(set(q_terms))
+        g_ids, bm, nmatch = K.should_sum(
+            scored, boosts, origs,
+            need=len(origs) if params.operator == "and" else 1,
+            space=self._space([ids for ids, _s in scored.values()]))
         if allowed is not None:
-            mask &= space.member(allowed)
-        cand = np.flatnonzero(mask)
-        if cand.size == 0:
+            m = K.in_sorted(g_ids, allowed)
+            g_ids, bm, nmatch = g_ids[m], bm[m], nmatch[m]
+        if g_ids.size == 0:
             return []
-        g_ids, bm, nmatch = space.ids(cand), bm[cand], nmatch[cand]
 
         exact_ids = self._kw_ids(q_kw_hash)
         is_exact = K.in_sorted(g_ids, exact_ids)

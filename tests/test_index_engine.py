@@ -231,16 +231,25 @@ def _shards(df) -> int:
     return int(m.group(1)) if m else int("Exchange SinglePartition" in plan)
 
 
+_TIERS = {"multifield": True, "phrase_tiers": True, "recency": True}
 MULTI_SHARD_CASES = {
     "skewed_index": [("bm25_topk", "the", {"k": 5, "prune": "force"}),
                      ("bm25_topk", "the zz", {"k": 30, "prune": False}),
                      ("bm25_topk", "the zz", {"k": 40, "require_all": True}),
-                     ("dismax_topk", "the zz", {"k": 10})],
+                     ("dismax_topk", "the zz", {"k": 10}),
+                     ("search", "the zz", _TIERS),
+                     ("search", "the w1", {"prefix": True}),
+                     ("search", "thx w10", {"fuzzy": True}),
+                     ("search", "zz the", {"operator": "and", "k": 40})],
     "impact_index_dir": [
         ("bm25_topk", "error timeout retry", {"k": 10, "prune": "force"}),
         ("bm25_topk", "error timeout retry", {"k": 10, "prune": False}),
         ("bm25_topk", "error timeout", {"k": 10, "require_all": True}),
-        ("dismax_topk", "error search tool", {"k": 10})],
+        ("dismax_topk", "error search tool", {"k": 10}),
+        ("search", "out of memory", _TIERS),
+        ("search", "spark merg", {"prefix": True}),
+        ("search", "spak timout", {"fuzzy": True}),
+        ("search", "error timeout", {"operator": "and"})],
 }
 
 
@@ -249,13 +258,18 @@ def test_multi_shard_matches_one_shard(spark, request, monkeypatch, which):
     """Doc-range shards merge exactly: with the shard size forced down so
     ≥3 shards run, every query returns the one-shard doc ids and
     bit-identical scores — also pruned, where each shard takes its own θ
-    and blocks straddling shards are ranked in both."""
+    and blocks straddling shards are ranked in both, and for ``search``,
+    whose shard tasks emit every candidate."""
+    from planet_search_spark.queries.params import SearchParams
     out = request.getfixturevalue(which)
 
     def run():
         res = []
         for fn, q, kw in MULTI_SHARD_CASES[which]:
-            df = getattr(E, fn)(spark, out, q, hydrate=False, **kw)
+            if fn == "search":
+                df = E.search(spark, out, SearchParams(query=q, **kw))
+            else:
+                df = getattr(E, fn)(spark, out, q, hydrate=False, **kw)
             res.append((_shards(df), [(r.doc_id, r.score)
                                       for r in df.collect()]))
         return res

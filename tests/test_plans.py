@@ -74,6 +74,59 @@ def test_topk_plan_is_one_exchange_by_shard(spark, small_index,
         assert "MapInArrow" in p
 
 
+def _subtree(plan: str, marker: str) -> list[str]:
+    """The lines of the first plan node containing ``marker`` and of its
+    children (the lines below it that are indented deeper)."""
+    lines = plan.splitlines()
+    at = next(i for i, ln in enumerate(lines) if marker in ln)
+
+    def depth(ln):
+        return len(ln) - len(ln.lstrip(" :+-"))
+    out = [lines[at]]
+    for ln in lines[at + 1:]:
+        if depth(ln) <= depth(lines[at]):
+            break
+        out.append(ln)
+    return out
+
+
+def test_search_plan_is_one_shard_task(spark, small_index, monkeypatch):
+    """``search`` scores through the same per-shard Arrow task as the bare
+    BM25 paths: one ``MapInArrow`` over ONE block Exchange keyed by shard
+    (a single partition for a one-shard query), no JVM aggregation and no
+    driver-side Python-list relation of expansion pairs."""
+    from planet_search_spark.queries.params import SearchParams
+
+    def plan():
+        return _plan(E.search(spark, small_index, SearchParams(
+            query="error time", multifield=True, prefix=True,
+            phrase_tiers=False, k=5)))
+    one = plan()
+    monkeypatch.setattr(E, "_SHARD_POSTINGS", 1)
+    many = plan()
+    for p, key in ((one, "Exchange SinglePartition"),
+                   (many, "Exchange hashpartitioning(shard")):
+        assert p.count("MapInArrow") == 1, p
+        assert "HashAggregate" not in p and "ExistingRDD" not in p, p
+        exchanges = [ln for ln in _subtree(p, "MapInArrow")
+                     if "Exchange" in ln]
+        assert len(exchanges) == 1 and key in exchanges[0], p
+
+
+def test_hydrated_plans_have_no_range_shuffle(spark, small_index):
+    """Hydration joins ≤ k already-ordered rows: its final order is one
+    single-partition sort, never a range-partition Exchange (which costs a
+    bounds-sampling job per query)."""
+    from planet_search_spark.queries.params import SearchParams
+    for df in (E.bm25_topk(spark, small_index, "error timeout", k=5),
+               E.dismax_topk(spark, small_index, "error timeout", k=5),
+               E.search(spark, small_index, SearchParams(
+                   query="error timeout", multifield=True,
+                   phrase_tiers=True, recency=True, k=5))):
+        p = _plan(df)
+        assert "BroadcastHashJoin" in p and "rangepartitioning" not in p, p
+
+
 def test_logical_bm25_pushes_term_filter_to_scan(spark):
     """The inline path must push the isin(term) filter below the tf agg."""
     from planet_search_spark.queries.logical import QUERIES
