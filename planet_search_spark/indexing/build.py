@@ -35,9 +35,8 @@ only missing stages/buckets — the north rule's per-partition resumability):
    skew handling at 10^12-turn scale: no block group outgrows salt_target,
    and task memory is bounded by a constant, not by bucket size. dl is
    stored inside the block (``dls_bin``) so query-time scoring needs NO
-   join against doc stats. Hot terms' block-bound summaries (``min_tfn``,
-   ``ub_tfn_q10``, the engine's benefit-gate inputs) ride their term_dict
-   rows.
+   join against doc stats. A term_dict row is (field, term, df, cf,
+   term_id): every block bound lives on its block row.
 6. **metrics + lineage** tables (``IndexingStats.java:6-23`` analogue; term
    count and skew come from the bucket markers, no re-scan), then the
    atomic ``live.json`` pointer — the blue/green alias swap analogue
@@ -401,28 +400,20 @@ def _encoder_core(field_stats: dict, block_size: int, n_levels: int,
     """Vectorized term_dict and block encoder over chunks of posting rows
     ``p`` (int64 field/doc_id/dl/tf numpy columns plus the ``term`` Arrow
     array) sorted by (field, term, doc_id); ``starts`` are the row indices
-    where each term begins. Returns four functions:
+    where each term begins. Returns three functions:
 
-    * ``term_stats(p, starts)`` — per-term df, cf, max_tf, min_dl and
-      max_tfn_real, all mergeable (sums, maxima, minima), so a term bigger
-      than a chunk folds its stats piece by piece (see _STAT_FOLD).
+    * ``term_stats(p, starts)`` — per-term df and cf, both sums, so a term
+      bigger than a chunk folds its stats piece by piece (see _STAT_FOLD).
     * ``blocks(p, starts, term_df, rank0=0)`` — one RecordBatch of block
-      rows, plus each block's term index into ``starts`` and its ub tfn
-      (the tf-normalization of its (max_tf, min_dl) pair); ``rank0``
-      counts the (single) term's postings before this chunk. Salt =
-      posting rank in the term's doc_id order // salt_target: contiguous
-      doc-id ranges, so the layout depends on the data alone, never on how
-      it was chunked. Impact levels (df ≥ 8·block_size only — stratifying
-      a tail term would fragment its single block into metadata bloat) and
-      the (field, term, salt, lvl desc, doc_id) order are computed here.
-    * ``term_bounds(term_df, owner, ub)`` — per hot term (df ≥
-      8·block_size, NaN for the rest) the MIN block ub tfn and the 10th
-      percentile ``sorted(ub)[ceil(0.1·n) − 1]`` over its n blocks: the
-      engine's benefit gate (df-independent; idf re-attaches at query
-      time). Pruning pays only when ~10% of some term's blocks could drop.
-    * ``term_batch(st, first_id, bounds)`` — term_dict rows from (folded)
-      stats and ``term_bounds``, plus max_score_ub and a dense term_id
-      from ``first_id``.
+      rows; ``rank0`` counts the (single) term's postings before this
+      chunk. Salt = posting rank in the term's doc_id order //
+      salt_target: contiguous doc-id ranges, so the layout depends on the
+      data alone, never on how it was chunked. Impact levels (df ≥
+      8·block_size only — stratifying a tail term would fragment its
+      single block into metadata bloat) and the (field, term, salt, lvl
+      desc, doc_id) order are computed here.
+    * ``term_batch(st, first_id)`` — term_dict rows from (folded) stats,
+      plus a dense term_id from ``first_id``.
 
     Term-ordered outputs let parquet row-group min/max stats on ``term``
     prune query-time scans. ``field_stats``: field_id -> (n_docs, avgdl) —
@@ -438,11 +429,7 @@ def _encoder_core(field_stats: dict, block_size: int, n_levels: int,
         n_arr[fid], avgdl_arr[fid] = n_f, avgdl_f
     tdict_schema = pa.schema([
         ("field", pa.int32()), ("term", pa.string()),
-        ("df", pa.float64()), ("cf", pa.int64()),
-        ("max_tf", pa.float64()), ("min_dl", pa.float64()),
-        ("max_tfn_real", pa.float64()),
-        ("max_score_ub", pa.float64()), ("term_id", pa.int64()),
-        ("min_tfn", pa.float64()), ("ub_tfn_q10", pa.float64())])
+        ("df", pa.float64()), ("cf", pa.int64()), ("term_id", pa.int64())])
     # bucket rides the hive directory, not the file
     out_schema = pa.schema([
         ("field", pa.int32()), ("term", pa.string()),
@@ -455,47 +442,21 @@ def _encoder_core(field_stats: dict, block_size: int, n_levels: int,
     lvl_min_df = float(8 * block_size)
 
     def term_stats(p: dict, starts: np.ndarray) -> dict:
-        tf, dl = p["tf"], p["dl"]
+        tf = p["tf"]
         return {
             "field": p["field"][starts],
             "term": p["term"].take(pa.array(starts)),
             "df": np.diff(np.append(starts, len(tf))).astype(np.float64),
-            "cf": np.add.reduceat(tf, starts),
-            "max_tf": np.maximum.reduceat(tf, starts).astype(np.float64),
-            "min_dl": np.minimum.reduceat(dl, starts).astype(np.float64),
-            "max_tfn_real": np.maximum.reduceat(
-                S.tfn(tf, dl, avgdl_arr[p["field"]]), starts)}
+            "cf": np.add.reduceat(tf, starts)}
 
-    def term_bounds(term_df: np.ndarray, owner: np.ndarray,
-                    ub: np.ndarray) -> tuple:
-        n = np.bincount(owner, minlength=len(term_df))
-        first = np.cumsum(n) - n
-        ub = ub[np.lexsort((ub, owner))]
-        hot = term_df >= lvl_min_df
-        lo, q10 = np.full(len(term_df), np.nan), np.full(len(term_df), np.nan)
-        lo[hot] = ub[first[hot]]
-        # the rank rule of Spark's percentile_approx(ub, 0.10); Spark's
-        # answer differs only where its sketch approximates (~10^4 blocks)
-        q10[hot] = ub[first[hot]
-                      + np.ceil(0.1 * n[hot]).astype(np.int64) - 1]
-        return lo, q10
-
-    def term_batch(st: dict, first_id: int, bounds: tuple) -> pa.RecordBatch:
-        df, max_tf, min_dl = st["df"], st["max_tf"], st["min_dl"]
-        # upper bound: max tf paired with min dl dominates any real (tf, dl)
-        smax = S.bm25(max_tf, min_dl, df, n_arr[st["field"]],
-                      avgdl_arr[st["field"]])
+    def term_batch(st: dict, first_id: int) -> pa.RecordBatch:
+        df = st["df"]
         return pa.RecordBatch.from_arrays([
             pa.array(st["field"].astype(np.int32), type=pa.int32()),
             st["term"], pa.array(df, type=pa.float64()),
             pa.array(st["cf"], type=pa.int64()),
-            pa.array(max_tf, type=pa.float64()),
-            pa.array(min_dl, type=pa.float64()),
-            pa.array(st["max_tfn_real"], type=pa.float64()),
-            pa.array(smax, type=pa.float64()),
             pa.array(np.arange(first_id, first_id + len(df), dtype=np.int64)),
-        ] + [pa.array(b, mask=np.isnan(b), type=pa.float64())
-             for b in bounds], schema=tdict_schema)
+        ], schema=tdict_schema)
 
     def _bin_col(buf: bytes, offs: np.ndarray) -> pa.Array:
         return pa.Array.from_buffers(
@@ -532,8 +493,6 @@ def _encoder_core(field_stats: dict, block_size: int, n_levels: int,
                                                 block_size)
         rs = enc["row_start"]
         scores = S.bm25(tfs, dls, dfs, n_arr[fields], avgdl_arr[fields])
-        b_max_tf = np.maximum.reduceat(tfs, rs).astype(np.float64)
-        b_min_dl = np.minimum.reduceat(dls, rs).astype(np.float64)
         batch = pa.RecordBatch.from_arrays([
             pa.array(fields[rs].astype(np.int32), type=pa.int32()),
             p["term"].take(pa.array(starts[gids[rs]])),
@@ -548,22 +507,21 @@ def _encoder_core(field_stats: dict, block_size: int, n_levels: int,
             # stats by multi-segment readers (θ derives from real decoded
             # scores; the lower-bound pair is retained for min-score skip
             # strategies and reader compatibility)
-            pa.array(b_max_tf), pa.array(b_min_dl),
+            pa.array(np.maximum.reduceat(tfs, rs).astype(np.float64)),
+            pa.array(np.minimum.reduceat(dls, rs).astype(np.float64)),
             pa.array(np.minimum.reduceat(tfs, rs).astype(np.float64)),
             pa.array(np.maximum.reduceat(dls, rs).astype(np.float64)),
             _bin_col(enc["docs_buf"], enc["docs_off"]),
             _bin_col(enc["tfs_buf"], enc["tfs_off"]),
             _bin_col(enc["dls_buf"], enc["dls_off"]),
         ], schema=out_schema)
-        return batch, gids[rs], S.tfn(b_max_tf, b_min_dl,
-                                      avgdl_arr[fields[rs]])
+        return batch
 
-    return term_stats, blocks, term_bounds, term_batch
+    return term_stats, blocks, term_batch
 
 
 # how each term_stats column folds across the pieces of one term
-_STAT_FOLD = {"df": np.add, "cf": np.add, "max_tf": np.maximum,
-              "min_dl": np.minimum, "max_tfn_real": np.maximum}
+_STAT_FOLD = {"df": np.add, "cf": np.add}
 
 
 # one stats row per encoded bucket: the task's reply and, as JSON, the
@@ -593,8 +551,7 @@ def _encode_bucket_task_fn(src_dir: str, src_kind: str, postings_dir: str,
     at term boundaries — usually the whole bucket is one chunk, read once.
     A term with more postings than a chunk is folded as it streams past
     (df is needed before encoding: idf in ``max_score``, impact levels,
-    salt), then re-read alone and encoded whole salt groups per chunk; its
-    term_dict row follows its blocks (the bounds need every block's ub).
+    salt), then re-read alone and encoded whole salt groups per chunk.
 
     Returns a mapInArrow function over a one-row-per-partition range
     frame; partition i encodes the ``(group, bucket)`` list ``parts[i]``
@@ -610,7 +567,7 @@ def _encode_bucket_task_fn(src_dir: str, src_kind: str, postings_dir: str,
 
     def task(batches):
         import pyarrow as pa
-        term_stats, blocks, term_bounds, term_batch = _encoder_core(
+        term_stats, blocks, term_batch = _encoder_core(
             field_stats, block_size, n_levels, salt_target)
         cols = ["field", "term", "doc_id", "dl"] + (
             ["tf"] if src_kind == "tf" else [])
@@ -642,9 +599,9 @@ def _encode_bucket_task_fn(src_dir: str, src_kind: str, postings_dir: str,
                        n_terms=0, text_df_max=0.0, text_df_sum=0.0,
                        text_terms=0)
 
-            def put_terms(st, bounds):
+            def put_terms(st):
                 nonlocal next_id
-                term_w.add(term_batch(st, next_id, bounds))
+                term_w.add(term_batch(st, next_id))
                 next_id += len(st["df"])
                 text_df = st["df"][st["field"] == FIELDS["text"]]
                 row["n_terms"] += len(st["df"])
@@ -654,38 +611,33 @@ def _encode_bucket_task_fn(src_dir: str, src_kind: str, postings_dir: str,
                                          float(text_df.max(initial=0.0)))
 
             def put_blocks(p, starts, term_df, rank0=0):
-                batch, owner, ub = blocks(p, starts, term_df, rank0)
-                post_w.add(batch)
+                post_w.add(blocks(p, starts, term_df, rank0))
                 row["chunks"] += 1
-                return owner, ub
 
             def whole_terms(p):
                 starts = _run_starts(p)
                 st = term_stats(p, starts)
-                put_terms(st, term_bounds(
-                    st["df"], *put_blocks(p, starts, st["df"])))
+                put_blocks(p, starts, st["df"])
+                put_terms(st)
 
             def big_term(st):
                 # second pass: the term alone, whole salt groups a chunk
                 key = (int(st["field"][0]), st["term"][0].as_py())
-                acc, n_done, ubs = None, 0, []
+                acc, n_done = None, 0
                 for w in itertools.chain(stream(key), [None]):
                     if w is not None:
                         acc = w if acc is None else _cat([acc, w])
                     while acc is not None and (
                             w is None or len(acc["doc_id"]) >= big_step):
                         m = min(big_step, len(acc["doc_id"]))
-                        ubs.append(put_blocks(_sl(acc, 0, m), one, st["df"],
-                                              n_done)[1])
+                        put_blocks(_sl(acc, 0, m), one, st["df"], n_done)
                         n_done += m
                         acc = _sl(acc, m) if m < len(acc["doc_id"]) else None
                 if n_done != st["df"][0]:
                     raise RuntimeError(
                         f"bucket {bkt}: term {key} re-read {n_done} "
                         f"postings, folded df {st['df'][0]}")
-                ub = np.concatenate(ubs)
-                put_terms(st, term_bounds(
-                    st["df"], np.zeros(len(ub), dtype=np.int64), ub))
+                put_terms(st)
 
             # pend: streamed postings not yet encoded, whole terms except
             # (until the stream ends) the last one

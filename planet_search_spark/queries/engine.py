@@ -8,8 +8,8 @@ Read path (mirrors the ES search template execution, SURVEY.md §3.2):
    expression is golden-tested);
 2. bucket-prune + term-filter the block table (partition pruning on
    ``bucket=``, min/max row-group stats on ``term``) and collect the query
-   terms' global stats (one tiny term_dict job): df, and the bounds the
-   driver-side pruning gates read;
+   terms' global df (one tiny term_dict job: df is additive over
+   segments);
 3. tag each block with the doc-range shard(s) it overlaps and repartition
    by shard — ES's shard-local top-k over doc ranges. The shard count
    follows the query's posting mass (``_SHARD_POSTINGS``), so small
@@ -34,9 +34,9 @@ Read path (mirrors the ES search template execution, SURVEY.md §3.2):
 Block-max WAND (the Lucene-side top-k pruning the reference gets for free,
 SURVEY.md §4 "Lucene-side (delegated)") runs inside each shard task; the
 θ derivation and the exactness argument (shard-local bounds, exact merge,
-why θ is off under AND) are in :mod:`.kernel`. Whether a query prunes at
-all is a term-level driver decision (:func:`_theta_may_prune`). Verified
-against the unpruned path in tests, also with several shards.
+why θ is off under AND) are in :mod:`.kernel`. θ runs in every pruned
+shard task, on blocks the task already holds, so it costs no Spark job.
+Verified against the unpruned path in tests, also with several shards.
 """
 from __future__ import annotations
 
@@ -127,9 +127,10 @@ def _union_read(spark: SparkSession, idx: IndexMeta, sub: str) -> DataFrame:
         dfs.append(spark.read.option("basePath", path).parquet(path))
     out = dfs[0]
     for d in dfs[1:]:
-        # allowMissingColumns: additive schema evolution across segment
-        # generations (e.g. term_dict.max_tfn_real, round 3) — readers
-        # detect the resulting NULLs where the column matters
+        # allowMissingColumns: schema evolution across segment
+        # generations (e.g. term_dict rows written with the bound columns
+        # that later builds dropped) — readers select only the columns
+        # every generation has
         out = out.unionByName(d, allowMissingColumns=True)
     return out
 
@@ -147,101 +148,25 @@ def _load_blocks(spark: SparkSession, idx: IndexMeta, terms: list[str],
             .where(F.col("term").isin(list(set(terms)))))
 
 
-def _collect_term_stats(spark: SparkSession, idx: IndexMeta,
-                        terms: list[str],
-                        field_ids: tuple = (TEXT_FIELD,)) -> list:
-    """One dict per query (field, term): df, max_score_ub, max_tfn_real,
-    min_tfn, ub_tfn_q10 under GLOBAL stats, computed by collecting the RAW
-    per-segment term_dict rows (≤ segments × terms of them) and
-    aggregating on the driver. A groupBy form planned Exchanges for a
-    handful of rows; this is one exchange-free scan job per query — the
-    fixed per-query Spark-job cost is the dominant term at
-    serving-adjacent latencies (round 7).
+def _global_df(spark: SparkSession, idx: IndexMeta, terms: list[str],
+               field_ids: tuple = (TEXT_FIELD,)) -> dict[tuple, float]:
+    """(field_id, term) -> GLOBAL df of every query term present in the
+    index: the sum of ``df`` over the per-segment term_dict rows
+    (≤ segments × terms of them), collected and added on the driver. A
+    groupBy form planned Exchanges for a handful of rows; this is one
+    exchange-free scan job per query — the fixed per-query Spark-job cost
+    is the dominant term at serving-adjacent latencies (round 7).
     """
     buckets = sorted({bucket_of(t, idx.n_buckets) for t in terms})
     td = (_union_read(spark, idx, "term_dict")
           .where(F.col("bucket").isin(buckets))
           .where(F.col("field").isin(list(field_ids)))
           .where(F.col("term").isin(sorted(set(terms)))))
-    # older segment generations lack these columns: NULL = unknown
-    for c in ("max_tfn_real", "min_tfn", "ub_tfn_q10"):
-        if c not in td.columns:
-            td = td.withColumn(c, F.lit(None).cast("double"))
-    acc: dict[tuple, dict] = {}
-    for r in td.select("field", "term", "df", "max_tf", "min_dl",
-                       "max_tfn_real", "min_tfn", "ub_tfn_q10").collect():
-        a = acc.setdefault((r["field"], r["term"]), {
-            "field": r["field"], "term": r["term"], "df": 0.0,
-            "max_tf": None, "min_dl": None, "max_tfn_real": None,
-            "_mtr_nulls": 0, "min_tfn": None, "ub_tfn_q10": None})
-        a["df"] += float(r["df"])
-        if a["max_tf"] is None or r["max_tf"] > a["max_tf"]:
-            a["max_tf"] = float(r["max_tf"])
-        if a["min_dl"] is None or r["min_dl"] < a["min_dl"]:
-            a["min_dl"] = float(r["min_dl"])
-        if r["max_tfn_real"] is None:
-            # a NULL from any pre-round-3 segment must poison the max
-            # (an unknown segment max invalidates the θ cap)
-            a["_mtr_nulls"] += 1
-        elif (a["max_tfn_real"] is None
-              or r["max_tfn_real"] > a["max_tfn_real"]):
-            a["max_tfn_real"] = float(r["max_tfn_real"])
-        # min over segments, NULLs (not hot there) skipped: conservative
-        # toward pruning (an underestimated q10 runs θ more often, never
-        # the reverse)
-        for c in ("min_tfn", "ub_tfn_q10"):
-            v = r[c]
-            if v is not None and (a[c] is None or v < a[c]):
-                a[c] = float(v)
-    field_stats = idx.field_stats()
-    out = []
-    for a in acc.values():
-        if a["_mtr_nulls"] > 0:
-            a["max_tfn_real"] = None
-        a["max_score_ub"] = float(S.bm25(a["max_tf"], a["min_dl"], a["df"],
-                                         *field_stats[a["field"]]))
-        del a["_mtr_nulls"], a["max_tf"], a["min_dl"]
-        out.append(a)
-    return out
-
-
-def _stats_df_map(stats: list) -> dict[tuple, float]:
-    """(field_id, term) -> global df."""
-    return {(r["field"], r["term"]): float(r["df"]) for r in stats}
-
-
-def _theta_may_prune(stats: list, idx: IndexMeta) -> bool:
-    """Term-level gates: can θ drop any block? A performance decision
-    only — results are exact either way — taken from the term stats
-    before the query runs, so it costs no job.
-
-    Static gate: pruning any block of term t needs other(t) = total − mx(t)
-    < θ ≤ M := max_t mx(t), and min_t other(t) = total − M, so 2·M ≤ total
-    proves no block can drop (e.g. three similar hot terms).
-
-    Benefit gate: θ_t is a REAL per-term score, so θ ≤ M_real = max_t
-    idf_t·max_tfn_real(t) (t's best actual posting). With q(t) = idf × t's
-    10th-percentile block ub tfn (``ub_tfn_q10``, written by the encoder
-    into hot terms' term_dict rows), q(t) + other(t) ≥ M_real for EVERY
-    term means under ~10% of any term's blocks could drop — the
-    homogeneous-bounds uniform-corpus case, where pruning was a measured
-    net loss. A NULL ``max_tfn_real`` or ``ub_tfn_q10`` (a term hot in no
-    segment) leaves the gate open."""
-    by_key = {(r["field"], r["term"]): r for r in stats}
-    mx = {key: float(r["max_score_ub"]) for key, r in by_key.items()}
-    total, m = sum(mx.values()), max(mx.values())
-    if 2.0 * m <= total + 1e-12:
-        return False
-    if any(r["max_tfn_real"] is None or r["ub_tfn_q10"] is None
-           for r in stats):
-        return True
-    field_stats = idx.field_stats()
-    idf = {key: float(S.idf(r["df"], field_stats[key[0]][0]))
-           for key, r in by_key.items()}
-    m_real = max(idf[key] * float(r["max_tfn_real"])
-                 for key, r in by_key.items())
-    return any(idf[key] * float(r["ub_tfn_q10"]) + (total - mx[key])
-               < m_real - 1e-9 for key, r in by_key.items())
+    df_map: dict[tuple, float] = {}
+    for r in td.select("field", "term", "df").collect():
+        key = (r["field"], r["term"])
+        df_map[key] = df_map.get(key, 0.0) + float(r["df"])
+    return df_map
 
 
 # Postings per doc-range shard. The kernel decodes, scores and ranks ~8 M
@@ -326,7 +251,7 @@ def _shard_task(df_map: dict, field_stats: dict, boosts: dict,
 
 
 def _ranked(spark: SparkSession, idx: IndexMeta, terms: list[str],
-            stats: list, rank, *, k: int | None = None,
+            df_map: dict, rank, *, k: int | None = None,
             field_ids: tuple = (TEXT_FIELD,), boosts: dict | None = None,
             prune: bool = False, and_skip: bool = False) -> DataFrame:
     """The one ranking plan of every engine BM25 query: tag each block of
@@ -336,14 +261,14 @@ def _ranked(spark: SparkSession, idx: IndexMeta, terms: list[str],
     top-k that θ targets under ``prune``. The shard count follows the
     query's posting mass (Σ df / ``_SHARD_POSTINGS``, at most one shard
     per core)."""
-    n_shards = max(1, min(math.ceil(sum(r["df"] for r in stats)
+    n_shards = max(1, min(math.ceil(sum(df_map.values())
                                     / _SHARD_POSTINGS),
                           spark.sparkContext.defaultParallelism))
     width = max(1, math.ceil(idx.n_docs / n_shards))
     shard = F.explode(F.sequence(
         *(F.expr(f"least({c} div {width}, {n_shards - 1})")
           for c in ("first_doc", "last_doc"))))
-    task = _shard_task(_stats_df_map(stats), idx.field_stats(),
+    task = _shard_task(df_map, idx.field_stats(),
                        boosts or {TEXT_FIELD: 1.0}, k, prune, and_skip,
                        width, n_shards, rank)
     return (_load_blocks(spark, idx, terms, field_ids)
@@ -392,9 +317,9 @@ def bm25_scores(spark: SparkSession, out_dir: str, query: str, *,
         return spark.range(0).select(
             F.col("id").alias("doc_id"), F.lit(0.0).alias("score"),
             F.lit(0).cast("long").alias("nmatch"))
-    stats = _collect_term_stats(spark, idx, terms)
+    df_map = _global_df(spark, idx, terms)
     need = len(terms) if require_all else 1
-    return _matches(_ranked(spark, idx, terms, stats,
+    return _matches(_ranked(spark, idx, terms, df_map,
                             partial(K.rank, k=None, need=need)))
 
 
@@ -405,34 +330,31 @@ def bm25_topk(spark: SparkSession, out_dir: str, query: str, k: int = 20, *,
     unpruned path (and to the logical path) by construction — see
     :mod:`.kernel` for the θ derivation and the exactness argument.
 
-    The gates (:func:`_theta_may_prune`) decide on the driver whether the
-    shard tasks run θ; ``prune="force"`` bypasses them (tests use it to
-    guarantee the pruned code path runs). θ-pruning is always disabled
-    under ``require_all`` (unsound for conjunctive results); conjunctive
-    queries get the exact AND doc-range skip instead. ``prune_stats``,
-    when a dict, is filled with {theta, gated, blocks_total, blocks_kept}:
-    θ is the max over shards, the counts are summed over shards (a block
-    overlapping two shards counts twice), and ``gated`` means θ did not
-    run. Reading them costs one extra Spark action over the ranking plan;
-    pass None outside tests.
+    With ``prune``, every shard task runs θ on the blocks it holds. θ is
+    always off under ``require_all`` (unsound for conjunctive results);
+    conjunctive queries get the exact AND doc-range skip instead.
+    ``prune_stats``, when a dict, is filled with {theta, blocks_total,
+    blocks_kept}: θ is the max over shards (0.0 when no shard ran it), the
+    counts are summed over shards (a block overlapping two shards counts
+    twice). Reading them costs one extra Spark action over the ranking
+    plan; pass None outside tests.
     """
     idx = open_index(out_dir)
     terms = sorted(set(A.py_tokens(query)))
     if not terms:
         return _empty_top(spark)
-    stats = _collect_term_stats(spark, idx, terms)
-    do_prune = (bool(prune) and not require_all and bool(stats)
-                and (prune == "force" or _theta_may_prune(stats, idx)))
+    df_map = _global_df(spark, idx, terms)
     need = len(terms) if require_all else 1
-    ranked = _ranked(spark, idx, terms, stats,
-                     partial(K.rank, k=k, need=need), k=k, prune=do_prune,
-                     and_skip=bool(prune) and require_all)
+    ranked = _ranked(spark, idx, terms, df_map,
+                     partial(K.rank, k=k, need=need), k=k,
+                     prune=prune and not require_all,
+                     and_skip=prune and require_all)
     if prune_stats is not None:
         st = (ranked.where(F.col("doc_id").isNull())
               .agg(F.max("theta"), F.sum("blocks_kept"),
                    F.sum("blocks_total")).collect()[0])
-        prune_stats.update(theta=st[0] or 0.0, gated=not do_prune,
-                           blocks_kept=st[1] or 0, blocks_total=st[2] or 0)
+        prune_stats.update(theta=st[0] or 0.0, blocks_kept=st[1] or 0,
+                           blocks_total=st[2] or 0)
     top = _top(ranked, k)
     return _hydrate(spark, idx, top) if hydrate else top
 
@@ -451,8 +373,8 @@ def dismax_topk(spark: SparkSession, out_dir: str, query: str, k: int = 20, *,
     field_ids = tuple(FIELDS[f] for f in boosts)
     if not terms:
         return _empty_top(spark)
-    stats = _collect_term_stats(spark, idx, terms, field_ids)
-    ranked = _ranked(spark, idx, terms, stats, partial(K.rank, k=k),
+    df_map = _global_df(spark, idx, terms, field_ids)
+    ranked = _ranked(spark, idx, terms, df_map, partial(K.rank, k=k),
                      field_ids=field_ids,
                      boosts={FIELDS[f]: float(b) for f, b in boosts.items()})
     top = _top(ranked, k).select("doc_id", "score")
@@ -649,10 +571,10 @@ def search(spark: SparkSession, out_dir: str, params) -> DataFrame:
               if params.multifield else {TEXT_FIELD: 1.0})
     # every candidate's BM25 part (B15/B16/B9/B8) from the shard tasks;
     # AND requires every original term matched in at least one field
-    stats = _collect_term_stats(spark, idx, exp_terms, field_ids)
+    df_map = _global_df(spark, idx, exp_terms, field_ids)
     rank = partial(K.should_sum, origs=origs,
                    need=len(origs) if params.operator == "and" else 1)
-    cand = (_matches(_ranked(spark, idx, exp_terms, stats, rank,
+    cand = (_matches(_ranked(spark, idx, exp_terms, df_map, rank,
                              field_ids=field_ids, boosts=boosts))
             .withColumnRenamed("score", "bm25"))
 

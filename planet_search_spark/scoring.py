@@ -16,7 +16,7 @@ features, ``PlanetSearchProfile.java:450-458``).
 The formula exists in three forms, one per execution engine: Spark Columns
 (:func:`bm25_term_score` — ``logical.py``), numpy (:func:`bm25`,
 :func:`idf`, :func:`tfn` — the build encoder, the engine's shard tasks
-and pruning gate, and the serving reader) and SQL
+and the serving reader) and SQL
 (``SQL_BM25_TERM`` — the DuckDB oracle).
 
 Function-score pipeline (``points_search.json:108-159``, score_mode=sum,

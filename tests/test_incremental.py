@@ -54,7 +54,7 @@ def test_incremental_equals_single_shot(spark, corpora, tmp_path):
     for q in ["error timeout retry", "spark", "the data", "kitten sitting"]:
         assert _top(spark, inc, q) == _top(spark, full, q), q
     # WAND across segments stays exact too
-    assert _top(spark, inc, "error timeout", prune="force") == \
+    assert _top(spark, inc, "error timeout", prune=True) == \
            _top(spark, inc, "error timeout", prune=False)
 
 
@@ -385,9 +385,8 @@ def test_tiered_compaction_merges_only_the_small_tier(spark, tmp_path):
     size tier — the big segment is NOT rewritten — while reader results
     stay bit-identical and the live count stays bounded. Also covers
     VERDICT item 7: the merged inputs have different avgdl, and block-max
-    WAND (prune='force') on the mixed index still equals the unpruned
-    path (the term_dict block-bound columns and max_score stay correct
-    across tiered merges)."""
+    WAND on the mixed index still equals the unpruned path (the blocks'
+    bound columns and max_score stay correct across tiered merges)."""
     from planet_search_spark.indexing.build import maybe_compact
 
     out = str(tmp_path / "tieridx")
@@ -423,7 +422,7 @@ def test_tiered_compaction_merges_only_the_small_tier(spark, tmp_path):
     assert (after.score - before.score).abs().max() < 1e-12
     # VERDICT item 7: WAND on the mixed-avgdl tiered index is exact
     pruned = E.bm25_topk(spark, out, "error timeout", k=12,
-                         prune="force", hydrate=False).toPandas()
+                         prune=True, hydrate=False).toPandas()
     plain = E.bm25_topk(spark, out, "error timeout", k=12,
                         prune=False, hydrate=False).toPandas()
     assert list(pruned.doc_id) == list(plain.doc_id)

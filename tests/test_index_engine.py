@@ -82,7 +82,7 @@ def test_segment_matches_logical_and(spark, corpus, index_dir):
 
 @pytest.mark.parametrize("query", ["error timeout retry", "the data spark"])
 def test_wand_equals_unpruned(spark, index_dir, query):
-    pruned = E.bm25_topk(spark, index_dir, query, k=10, prune="force",
+    pruned = E.bm25_topk(spark, index_dir, query, k=10, prune=True,
                          hydrate=False).toPandas()
     full = E.bm25_topk(spark, index_dir, query, k=10, prune=False,
                        hydrate=False).toPandas()
@@ -131,7 +131,7 @@ def test_wand_actually_prunes_multisegment(spark, skewed_index):
                          hydrate=False, prune_stats=stats).toPandas()
     full = E.bm25_topk(spark, skewed_index, "the", k=5, prune=False,
                        hydrate=False).toPandas()
-    assert not stats["gated"] and stats["theta"] > 0.0
+    assert stats["theta"] > 0.0
     assert stats["blocks_kept"] < stats["blocks_total"], \
         f"no block pruned: {stats}"
     assert list(pruned.doc_id) == list(full.doc_id)
@@ -152,7 +152,7 @@ def test_prune_disabled_under_require_all(spark, skewed_index):
                          prune_stats=stats).toPandas()
     full = E.bm25_topk(spark, skewed_index, "the zz", k=40,
                        require_all=True, prune=False, hydrate=False).toPandas()
-    assert stats["gated"] is True          # the θ path never ran
+    assert stats["theta"] == 0.0           # the θ path never ran
     assert stats["blocks_kept"] == stats["blocks_total"]
     assert len(full) == 40 and list(pruned.doc_id) == list(full.doc_id)
     assert (pruned.score - full.score).abs().max() < 1e-12
@@ -178,26 +178,26 @@ def test_and_range_prune_drops_blocks_exactly(spark, tmp_path):
                          prune_stats=stats).toPandas()
     full = E.bm25_topk(spark, out, "the rare", k=5, require_all=True,
                        prune=False, hydrate=False).toPandas()
-    assert stats["gated"] is True                      # θ never ran
+    assert stats["theta"] == 0.0                       # θ never ran
     assert stats["blocks_kept"] < stats["blocks_total"], stats
     assert list(pruned.doc_id) == list(full.doc_id) != []
     assert (pruned.score - full.score).abs().max() < 1e-12
 
 
-def test_wand_gate_skips_uniform_queries(spark, index_dir):
-    """Similar-bound hot-term OR queries fail the 2·M > total selectivity
-    gate (needs ≥3 similar terms) — pruning is skipped entirely (round 1
-    regression: unconditional pruning was a net loss on exactly these)."""
-    idx = E.open_index(index_dir)
-    terms = sorted(set(A.py_tokens("the data error")))
-    stats_rows = E._collect_term_stats(spark, idx, terms)
-    mx = [float(r["max_score_ub"]) for r in stats_rows]
-    assert 2.0 * max(mx) <= sum(mx) + 1e-12, \
-        "fixture terms must have similar upper bounds for this test"
+def test_wand_exact_on_similar_bound_terms(spark, index_dir):
+    """Three hot terms with similar upper bounds, where θ can seldom
+    drop a block: θ runs anyway, and the pruned top-k is the unpruned
+    one, doc for doc with bit-identical scores."""
     stats: dict = {}
-    E.bm25_topk(spark, index_dir, "the data error", k=10, prune=True,
-                hydrate=False, prune_stats=stats).toPandas()
-    assert stats["gated"] and stats["blocks_kept"] == stats["blocks_total"]
+    pruned = E.bm25_topk(spark, index_dir, "the data error", k=10,
+                         prune=True, hydrate=False,
+                         prune_stats=stats).collect()
+    full = E.bm25_topk(spark, index_dir, "the data error", k=10,
+                       prune=False, hydrate=False).collect()
+    assert stats["theta"] > 0.0, stats
+    assert len(full) == 10
+    assert [(r.doc_id, r.score) for r in pruned] == \
+           [(r.doc_id, r.score) for r in full]
 
 
 def _jobs(spark, fn) -> int:
@@ -220,7 +220,7 @@ def test_pruned_topk_runs_no_extra_jobs(spark, skewed_index):
         return lambda: E.bm25_topk(spark, skewed_index, "the", k=5,
                                    prune=prune, hydrate=False).collect()
     _jobs(spark, run(False))          # first-run costs out of the count
-    assert _jobs(spark, run("force")) <= _jobs(spark, run(False))
+    assert _jobs(spark, run(True)) <= _jobs(spark, run(False))
 
 
 def _shards(df) -> int:
@@ -233,7 +233,7 @@ def _shards(df) -> int:
 
 _TIERS = {"multifield": True, "phrase_tiers": True, "recency": True}
 MULTI_SHARD_CASES = {
-    "skewed_index": [("bm25_topk", "the", {"k": 5, "prune": "force"}),
+    "skewed_index": [("bm25_topk", "the", {"k": 5, "prune": True}),
                      ("bm25_topk", "the zz", {"k": 30, "prune": False}),
                      ("bm25_topk", "the zz", {"k": 40, "require_all": True}),
                      ("dismax_topk", "the zz", {"k": 10}),
@@ -242,7 +242,7 @@ MULTI_SHARD_CASES = {
                      ("search", "thx w10", {"fuzzy": True}),
                      ("search", "zz the", {"operator": "and", "k": 40})],
     "impact_index_dir": [
-        ("bm25_topk", "error timeout retry", {"k": 10, "prune": "force"}),
+        ("bm25_topk", "error timeout retry", {"k": 10, "prune": True}),
         ("bm25_topk", "error timeout retry", {"k": 10, "prune": False}),
         ("bm25_topk", "error timeout", {"k": 10, "require_all": True}),
         ("dismax_topk", "error search tool", {"k": 10}),
@@ -280,6 +280,83 @@ def test_multi_shard_matches_one_shard(spark, request, monkeypatch, which):
                                             many):
         assert n1 == 1 and n2 >= 3, (case, n1, n2)
         assert got == want and want, case
+
+
+TERM_DICT_COLUMNS = ["field", "term", "df", "cf", "term_id"]
+# bound columns that older builds wrote into term_dict and nothing reads
+LEGACY_TERM_DICT_COLUMNS = ("max_tf", "min_dl", "max_tfn_real",
+                            "max_score_ub", "min_tfn", "ub_tfn_q10")
+
+
+@pytest.mark.parametrize("which", ["index_dir", "impact_index_dir",
+                                   "skewed_index"])
+def test_term_dict_schema(spark, request, which):
+    """A term_dict row is (field, term, df, cf, term_id) in every segment,
+    plus the ``bucket`` directory partition; block bounds live on the
+    block rows only."""
+    import pyarrow.parquet as pq
+    out = request.getfixturevalue(which)
+    segs = glob.glob(os.path.join(out, "segments", "*"))
+    assert segs
+    for seg in segs:
+        td = os.path.join(seg, "term_dict")
+        files = glob.glob(os.path.join(td, "bucket=*", "*.parquet"))
+        assert files, seg
+        for f in files:
+            assert pq.read_schema(f).names == TERM_DICT_COLUMNS, f
+        assert spark.read.parquet(td).columns == \
+            TERM_DICT_COLUMNS + ["bucket"], seg
+
+
+def _add_legacy_term_dict_columns(seg_dir: str) -> None:
+    """Rewrite a segment's term_dict files in the older layout: four of
+    the six bound columns between cf and term_id, the other two after
+    it."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    for f in glob.glob(os.path.join(seg_dir, "term_dict", "bucket=*",
+                                    "*.parquet")):
+        t = pq.read_table(f)
+        n = t.num_rows
+        val = pa.array(np.linspace(1.0, 2.0, n))
+        nul = pa.nulls(n, pa.float64())
+        cols = {c: t[c] for c in ("field", "term", "df", "cf")}
+        cols.update(dict.fromkeys(LEGACY_TERM_DICT_COLUMNS[:4], val))
+        cols["term_id"] = t["term_id"]
+        cols.update(dict.fromkeys(LEGACY_TERM_DICT_COLUMNS[4:], nul))
+        pq.write_table(pa.table(cols), f)
+
+
+def test_legacy_term_dict_columns_still_read(spark, skewed_index, tmp_path):
+    """A segment written by an older build still carries the six legacy
+    term_dict columns. With one of two segments rewritten that way, every
+    engine path and the serving reader return the rows of the untouched
+    index."""
+    import shutil
+    from planet_search_spark.queries.params import SearchParams
+    from planet_search_spark.queries.serve import LocalSearcher
+    old = str(tmp_path / "legacy")
+    shutil.copytree(skewed_index, old)
+    seg = sorted(glob.glob(os.path.join(old, "segments", "*")))[0]
+    _add_legacy_term_dict_columns(seg)
+    assert set(LEGACY_TERM_DICT_COLUMNS) <= set(spark.read.parquet(
+        os.path.join(seg, "term_dict")).columns)
+
+    def rows(out):
+        res = [[(r.doc_id, r.score) for r in E.bm25_topk(
+                    spark, out, "the zz", k=10, prune=prune,
+                    hydrate=False).collect()] for prune in (True, False)]
+        res.append([(r.doc_id, r.score) for r in E.dismax_topk(
+            spark, out, "the zz", k=10, hydrate=False).collect()])
+        res.append([(r.doc_id, r.score) for r in E.search(
+            spark, out, SearchParams(query="the w1", prefix=True))
+            .collect()])
+        res.append([(r["doc_id"], r["score"]) for r in LocalSearcher(
+            out).bm25_topk("the zz", k=10, hydrate=False)])
+        return res
+    want, got = rows(skewed_index), rows(old)
+    assert all(want) and got == want
 
 
 @pytest.mark.parametrize("query", ["error search tool", "assistant code",
@@ -594,56 +671,6 @@ def test_prewarm_runs_once_per_session(spark, monkeypatch, tmp_path):
     assert st.getJobIdsForGroup(B.PREWARM_JOB_GROUP) == warmed
 
 
-def _term_bounds_reference(spark, seg_dir, block_size):
-    """Hot terms' (df ≥ 8·block_size) block-bound summaries computed by
-    Spark itself, the reference for the encoder's numpy rank rule:
-    semi-join the block metadata on the hot term_dict rows, then the MIN
-    and ``percentile_approx(·, 0.10)`` of each block's ub tfn."""
-    import json as _json
-    from planet_search_spark.indexing.build import FIELDS
-    with open(os.path.join(seg_dir, "corpus_stats.json")) as f:
-        fields = _json.load(f)["fields"]
-    avgdl = F.create_map(*[x for n, s in fields.items() for x in (
-        F.lit(FIELDS[n]), F.lit(s["sum_dl"] / s["n_docs"]))])[F.col("field")]
-    tfn = (F.col("max_tf") / (F.col("max_tf") + S.K1 * (
-        1 - S.B + S.B * F.col("min_dl") / avgdl)))
-    hot = (spark.read.parquet(os.path.join(seg_dir, "term_dict"))
-           .where(F.col("df") >= float(8 * block_size))
-           .select("field", "term"))
-    return (spark.read.parquet(os.path.join(seg_dir, "postings"))
-            .select("field", "term", tfn.alias("tfn"))
-            .join(hot, ["field", "term"], "left_semi")
-            .groupBy("field", "term")
-            .agg(F.min("tfn").alias("min_tfn"),
-                 F.percentile_approx("tfn", 0.10).alias("ub_tfn_q10")))
-
-
-@pytest.mark.parametrize("which", ["single_shot", "tiny_chunks", "impact"])
-def test_term_bounds_match_spark_reference(spark, corpus, single_shot_dir,
-                                           impact_index_dir, tmp_path,
-                                           monkeypatch, which):
-    """The encoder's min_tfn / ub_tfn_q10 term_dict columns equal the Spark
-    reference exactly on hot terms and are NULL on every other term — also
-    when a big term's blocks are encoded across many chunks."""
-    import planet_search_spark.indexing.build as B
-    out = {"single_shot": single_shot_dir, "impact": impact_index_dir}.get(
-        which)
-    if out is None:
-        monkeypatch.setattr(B, "_CHUNK_ROWS", TINY_CHUNK_ROWS)
-        out = str(tmp_path / "tiny")
-        build_index(spark, corpus, out, **BUILD_KW)
-    seg = glob.glob(os.path.join(out, "segments", "*"))[0]
-    want = {(r.field, r.term): (r.min_tfn, r.ub_tfn_q10) for r in
-            _term_bounds_reference(spark, seg, BUILD_KW["block_size"])
-            .collect()}
-    got = {(r.field, r.term): (r.min_tfn, r.ub_tfn_q10) for r in
-           spark.read.parquet(os.path.join(seg, "term_dict"))
-           .select("field", "term", "min_tfn", "ub_tfn_q10").collect()}
-    assert len(want) >= 10, len(want)
-    assert set(want) <= set(got)
-    assert {k: v for k, v in got.items() if v != (None, None)} == want
-
-
 def test_metrics_and_lineage_written(index_dir):
     seg = glob.glob(os.path.join(index_dir, "segments", "*"))[0]
     import pandas as pd
@@ -732,11 +759,10 @@ def test_impact_layout_inherited_by_incremental(spark, tmp_path):
         assert _json.load(f)["impact_order"] is True
 
 
-def test_benefit_gate_skips_theta_on_homogeneous_blocks(spark, tmp_path):
-    """Identical docs -> identical block bounds -> the benefit gate must
-    prove pruning can't drop >=10% of blocks and skip θ; on a
-    skewed corpus it must NOT gate (and must actually prune). Gating is a
-    performance decision only — results stay identical either way."""
+def test_wand_exact_on_tied_scores(spark, tmp_path):
+    """Identical docs -> every score and every block bound tie θ: θ runs,
+    no block may drop, and the pruned top-k is the unpruned one (ties
+    broken by doc_id asc), score for score."""
     from pyspark.sql import functions as F
     uni = spark.createDataFrame(
         [("c", t, "user", "same text every turn here", None,
@@ -752,17 +778,8 @@ def test_benefit_gate_skips_theta_on_homogeneous_blocks(spark, tmp_path):
                       prune_stats=st).collect()
     want = E.bm25_topk(spark, out_u, "same", k=5, prune=False,
                        hydrate=False).collect()
-    assert st["gated"] is True, st
+    assert st["theta"] > 0.0, st
+    assert st["blocks_kept"] == st["blocks_total"], st
+    assert len(want) == 5
     assert [(r.doc_id, r.score) for r in got] == \
            [(r.doc_id, r.score) for r in want]
-
-    from planet_search_spark.transcripts import clustered_corpus
-    out_s = str(tmp_path / "skew")
-    tx = clustered_corpus(spark, 20_000, hot_docs=1024, parallelism=8)
-    build_index(spark, tx, out_s, n_buckets=4, block_size=64,
-                salt_target=4096, n_groups=1, with_positions=False)
-    st2: dict = {}
-    E.bm25_topk(spark, out_s, "hotterm", k=20, prune=True, hydrate=False,
-                prune_stats=st2).collect()
-    assert st2["gated"] is False, st2
-    assert st2["blocks_kept"] < st2["blocks_total"], st2

@@ -66,7 +66,7 @@ def test_engine_and_reader_rank_bit_identical(spark, index_dir, prune):
     for q in ["the error timeout", "spark user data"]:
         got = srv.bm25_topk(q, k=15, hydrate=False, prune=prune)
         want = E.bm25_topk(spark, index_dir, q, k=15, hydrate=False,
-                           prune="force" if prune else False).collect()
+                           prune=prune).collect()
         assert [(g["doc_id"], g["score"], g["nmatch"]) for g in got] == \
                [(w.doc_id, w.score, w.nmatch) for w in want] != [], q
         got = srv.dismax_topk(q, k=12, hydrate=False, prune=prune)
