@@ -63,8 +63,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import analysis as A
+from .. import lazyzip
 from .. import scoring as S
 from . import codec
+from . import layout as L
 
 # Posting rows one encode task holds at a time: a chunk of whole terms,
 # or — for a term with more postings than this — whole salt groups of
@@ -176,6 +178,7 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     _PREWARMED.add(app)
 
     def _warm(batches):
+        lazyzip.install()
         import numpy as np
         import pyarrow  # noqa: F401
         import pyarrow.dataset  # noqa: F401
@@ -427,18 +430,6 @@ def _encoder_core(field_stats: dict, block_size: int, n_levels: int,
     avgdl_arr = np.ones(max_f)
     for fid, (n_f, avgdl_f) in field_stats.items():
         n_arr[fid], avgdl_arr[fid] = n_f, avgdl_f
-    tdict_schema = pa.schema([
-        ("field", pa.int32()), ("term", pa.string()),
-        ("df", pa.float64()), ("cf", pa.int64()), ("term_id", pa.int64())])
-    # bucket rides the hive directory, not the file
-    out_schema = pa.schema([
-        ("field", pa.int32()), ("term", pa.string()),
-        ("block_id", pa.int64()), ("n_docs", pa.int32()),
-        ("first_doc", pa.int64()), ("last_doc", pa.int64()),
-        ("max_score", pa.float64()), ("max_tf", pa.float64()),
-        ("min_dl", pa.float64()), ("min_tf", pa.float64()),
-        ("max_dl", pa.float64()), ("docs_bin", pa.binary()),
-        ("tfs_bin", pa.binary()), ("dls_bin", pa.binary())])
     lvl_min_df = float(8 * block_size)
 
     def term_stats(p: dict, starts: np.ndarray) -> dict:
@@ -456,7 +447,7 @@ def _encoder_core(field_stats: dict, block_size: int, n_levels: int,
             st["term"], pa.array(df, type=pa.float64()),
             pa.array(st["cf"], type=pa.int64()),
             pa.array(np.arange(first_id, first_id + len(df), dtype=np.int64)),
-        ], schema=tdict_schema)
+        ], schema=L.TERM_DICT)
 
     def _bin_col(buf: bytes, offs: np.ndarray) -> pa.Array:
         return pa.Array.from_buffers(
@@ -502,19 +493,14 @@ def _encoder_core(field_stats: dict, block_size: int, n_levels: int,
             pa.array(enc["first_doc"], type=pa.int64()),
             pa.array(enc["last_doc"], type=pa.int64()),
             pa.array(np.maximum.reduceat(scores, rs), type=pa.float64()),
-            # per-block (max_tf, min_dl) -> upper bound, (min_tf, max_dl)
-            # -> lower bound; both recomputable under *global* corpus
-            # stats by multi-segment readers (θ derives from real decoded
-            # scores; the lower-bound pair is retained for min-score skip
-            # strategies and reader compatibility)
+            # per-block (max_tf, min_dl): the score upper bound, which
+            # multi-segment readers recompute under *global* corpus stats
             pa.array(np.maximum.reduceat(tfs, rs).astype(np.float64)),
             pa.array(np.minimum.reduceat(dls, rs).astype(np.float64)),
-            pa.array(np.minimum.reduceat(tfs, rs).astype(np.float64)),
-            pa.array(np.maximum.reduceat(dls, rs).astype(np.float64)),
             _bin_col(enc["docs_buf"], enc["docs_off"]),
             _bin_col(enc["tfs_buf"], enc["tfs_off"]),
             _bin_col(enc["dls_buf"], enc["dls_off"]),
-        ], schema=out_schema)
+        ], schema=L.POSTINGS)
         return batch
 
     return term_stats, blocks, term_batch
@@ -566,6 +552,7 @@ def _encode_bucket_task_fn(src_dir: str, src_kind: str, postings_dir: str,
     chunk_rows = _CHUNK_ROWS
 
     def task(batches):
+        lazyzip.install()
         import pyarrow as pa
         term_stats, blocks, term_batch = _encoder_core(
             field_stats, block_size, n_levels, salt_target)
@@ -787,6 +774,7 @@ def build_index(spark: SparkSession, tx: DataFrame, out_dir: str, *,
     # the extra pass). The re-scan remains as the resume fallback.
     from pyspark.sql import Observation
     doc_obs = Observation("doc_store_stats")
+    store_t = L.spark_schema("doc_store")
 
     def _write_doc_store():
         # kw_hash, not the raw keyword string: exact-match semantics only
@@ -795,9 +783,13 @@ def build_index(spark: SparkSession, tx: DataFrame, out_dir: str, *,
         # exact-match path (filter kw_hash == md5(q)) into a row-group-
         # pruned point read instead of a full doc_store scan — no extra
         # shuffle, no file blowup (round-1 judge flagged the full scan)
+        # the transcript columns cast onto the declared layout (a no-op
+        # for input that already meets the transcripts contract)
         (docs.select(
-            "doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "dl",
-            "mdl",
+            "doc_id",
+            *(F.col(c).cast(store_t[c].dataType).alias(c)
+              for c in ("conv_id", "turn_idx", "role", "tool", "ts")),
+            "dl", "mdl",
             F.md5(F.array_join("toks", " ")).alias("kw_hash"),
             S.static_prior(F.col("role"), F.col("dl").cast("double"),
                            F.col("tool")).alias("prior"))
@@ -1380,12 +1372,8 @@ def compact_index(spark: SparkSession, out_dir: str, *,
         t_stage = time.time()
 
     def union_read(sub: str) -> DataFrame:
-        dfs = [spark.read.option("basePath", os.path.join(seg_root, s, sub))
-               .parquet(os.path.join(seg_root, s, sub)) for s in in_segs]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        return L.read_segments(
+            spark, [os.path.join(seg_root, s) for s in in_segs], sub)
 
     # worker-pool spawn overlaps the JVM-only union/copy stages
     _prewarm_python_workers(spark)

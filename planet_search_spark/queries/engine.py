@@ -7,9 +7,11 @@ Read path (mirrors the ES search template execution, SURVEY.md §3.2):
    the index side (``analysis.py_tokens`` — identity with the Spark-side
    expression is golden-tested);
 2. bucket-prune + term-filter the block table (partition pruning on
-   ``bucket=``, min/max row-group stats on ``term``) and collect the query
-   terms' global df (one tiny term_dict job: df is additive over
-   segments);
+   ``bucket=``, min/max row-group stats on ``term``), read with the
+   declared table schemas of :mod:`..indexing.layout` (no inference job),
+   and look up the query terms' global df with pyarrow in the calling
+   process (:func:`term_df`; df is additive over segments), which runs no
+   Spark job;
 3. tag each block with the doc-range shard(s) it overlaps and repartition
    by shard — ES's shard-local top-k over doc ranges. The shard count
    follows the query's posting mass (``_SHARD_POSTINGS``), so small
@@ -37,6 +39,10 @@ SURVEY.md §4 "Lucene-side (delegated)") runs inside each shard task; the
 why θ is off under AND) are in :mod:`.kernel`. θ runs in every pruned
 shard task, on blocks the task already holds, so it costs no Spark job.
 Verified against the unpruned path in tests, also with several shards.
+
+A hydrated ``bm25_topk`` thus runs at most 4 Spark jobs (the ranking and
+hydration plan under AQE) and an un-hydrated one at most 2; a test counts
+them.
 """
 from __future__ import annotations
 
@@ -51,7 +57,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import analysis as A
+from .. import lazyzip
 from .. import scoring as S
+from ..indexing import layout as L
 from ..indexing.build import FIELDS, FIELD_BOOSTS, bucket_of
 from . import kernel as K
 
@@ -121,18 +129,11 @@ def open_index(out_dir: str) -> IndexMeta:
 
 
 def _union_read(spark: SparkSession, idx: IndexMeta, sub: str) -> DataFrame:
-    dfs = []
-    for seg_dir in idx.seg_dirs:
-        path = os.path.join(seg_dir, sub)
-        dfs.append(spark.read.option("basePath", path).parquet(path))
-    out = dfs[0]
-    for d in dfs[1:]:
-        # allowMissingColumns: schema evolution across segment
-        # generations (e.g. term_dict rows written with the bound columns
-        # that later builds dropped) — readers select only the columns
-        # every generation has
-        out = out.unionByName(d, allowMissingColumns=True)
-    return out
+    """Table ``sub`` of every live segment, read with its declared schema
+    (:mod:`..indexing.layout`): no schema-inference job. Readers select
+    only declared columns, so segments whose files carry columns later
+    builds dropped still read."""
+    return L.read_segments(spark, idx.seg_dirs, sub)
 
 
 def doc_store(spark: SparkSession, idx: IndexMeta) -> DataFrame:
@@ -148,25 +149,41 @@ def _load_blocks(spark: SparkSession, idx: IndexMeta, terms: list[str],
             .where(F.col("term").isin(list(set(terms)))))
 
 
-def _global_df(spark: SparkSession, idx: IndexMeta, terms: list[str],
+def term_df(seg_dirs: list, n_buckets: int, terms, field_ids) -> dict:
+    """(field_id, term) -> Σ df over the ``term_dict`` rows of ``seg_dirs``
+    (df is additive over segments) of every term in ``terms`` that the
+    fields ``field_ids`` hold; absent terms have no key. Read in this
+    process with pyarrow: only the terms' ``bucket=`` directories, with
+    row groups pruned on the term min/max. The engine's global df and the
+    serving reader's shard df are this one lookup."""
+    import pyarrow.dataset as ds
+    by_bucket: dict[int, list] = {}
+    for t in sorted(set(terms)):
+        by_bucket.setdefault(bucket_of(t, n_buckets), []).append(t)
+    fields = [int(f) for f in field_ids]
+    out: dict[tuple, float] = {}
+    for seg_dir in seg_dirs:
+        for b, ts in by_bucket.items():
+            path = os.path.join(seg_dir, "term_dict", f"bucket={b}")
+            if not os.path.isdir(path):
+                continue
+            tbl = ds.dataset(path, schema=L.TERM_DICT).to_table(
+                columns=["field", "term", "df"],
+                filter=(ds.field("field").isin(fields)
+                        & ds.field("term").isin(ts)))
+            for f, t, df in zip(*(tbl.column(c).to_pylist()
+                                  for c in ("field", "term", "df"))):
+                out[(f, t)] = out.get((f, t), 0.0) + df
+    return out
+
+
+def _global_df(idx: IndexMeta, terms: list[str],
                field_ids: tuple = (TEXT_FIELD,)) -> dict[tuple, float]:
     """(field_id, term) -> GLOBAL df of every query term present in the
-    index: the sum of ``df`` over the per-segment term_dict rows
-    (≤ segments × terms of them), collected and added on the driver. A
-    groupBy form planned Exchanges for a handful of rows; this is one
-    exchange-free scan job per query — the fixed per-query Spark-job cost
-    is the dominant term at serving-adjacent latencies (round 7).
-    """
-    buckets = sorted({bucket_of(t, idx.n_buckets) for t in terms})
-    td = (_union_read(spark, idx, "term_dict")
-          .where(F.col("bucket").isin(buckets))
-          .where(F.col("field").isin(list(field_ids)))
-          .where(F.col("term").isin(sorted(set(terms)))))
-    df_map: dict[tuple, float] = {}
-    for r in td.select("field", "term", "df").collect():
-        key = (r["field"], r["term"])
-        df_map[key] = df_map.get(key, 0.0) + float(r["df"])
-    return df_map
+    index, looked up in this process (:func:`term_df`) like
+    ``open_index`` reads the segment metadata: a query runs no Spark job
+    for its df."""
+    return term_df(idx.seg_dirs, idx.n_buckets, terms, field_ids)
 
 
 # Postings per doc-range shard. The kernel decodes, scores and ranks ~8 M
@@ -195,6 +212,7 @@ def _shard_task(df_map: dict, field_stats: dict, boosts: dict,
         return S.bm25(tfs, dls, df_map[key], *field_stats[key[0]])
 
     def run(batches):
+        lazyzip.install()
         import pyarrow as pa
         names = ["doc_id", "score", "nmatch", "theta", "blocks_kept",
                  "blocks_total"]
@@ -317,7 +335,7 @@ def bm25_scores(spark: SparkSession, out_dir: str, query: str, *,
         return spark.range(0).select(
             F.col("id").alias("doc_id"), F.lit(0.0).alias("score"),
             F.lit(0).cast("long").alias("nmatch"))
-    df_map = _global_df(spark, idx, terms)
+    df_map = _global_df(idx, terms)
     need = len(terms) if require_all else 1
     return _matches(_ranked(spark, idx, terms, df_map,
                             partial(K.rank, k=None, need=need)))
@@ -343,7 +361,7 @@ def bm25_topk(spark: SparkSession, out_dir: str, query: str, k: int = 20, *,
     terms = sorted(set(A.py_tokens(query)))
     if not terms:
         return _empty_top(spark)
-    df_map = _global_df(spark, idx, terms)
+    df_map = _global_df(idx, terms)
     need = len(terms) if require_all else 1
     ranked = _ranked(spark, idx, terms, df_map,
                      partial(K.rank, k=k, need=need), k=k,
@@ -373,7 +391,7 @@ def dismax_topk(spark: SparkSession, out_dir: str, query: str, k: int = 20, *,
     field_ids = tuple(FIELDS[f] for f in boosts)
     if not terms:
         return _empty_top(spark)
-    df_map = _global_df(spark, idx, terms, field_ids)
+    df_map = _global_df(idx, terms, field_ids)
     ranked = _ranked(spark, idx, terms, df_map, partial(K.rank, k=k),
                      field_ids=field_ids,
                      boosts={FIELDS[f]: float(b) for f, b in boosts.items()})
@@ -571,7 +589,7 @@ def search(spark: SparkSession, out_dir: str, params) -> DataFrame:
               if params.multifield else {TEXT_FIELD: 1.0})
     # every candidate's BM25 part (B15/B16/B9/B8) from the shard tasks;
     # AND requires every original term matched in at least one field
-    df_map = _global_df(spark, idx, exp_terms, field_ids)
+    df_map = _global_df(idx, exp_terms, field_ids)
     rank = partial(K.should_sum, origs=origs,
                    need=len(origs) if params.operator == "and" else 1)
     cand = (_matches(_ranked(spark, idx, exp_terms, df_map, rank,

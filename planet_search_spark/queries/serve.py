@@ -17,10 +17,11 @@ one ranking path (:meth:`LocalSearcher._rank`); ``search`` combines its
 expansions through :func:`kernel.should_sum` like the engine's shard
 task.
 
-At 100 TB this is the fan-out pattern: each searcher owns a bucket range
-(the term-bucket partitioning is the shard key), the coordinator merges
-per-shard top-k heaps — precisely ES's shard/coordinator split, but over
-open parquet segments instead of Lucene files.
+At 100 TB this is the fan-out pattern: each searcher owns a subset of the
+live segments, which hold disjoint doc-id ranges, and scores with the
+global corpus statistics; the coordinator merges the per-shard top-k
+heaps (:class:`ShardedSearcher`) — ES's shard/coordinator split, but
+over open parquet segments instead of Lucene files.
 """
 from __future__ import annotations
 
@@ -38,7 +39,7 @@ from .. import analysis as A
 from .. import scoring as S
 from ..indexing.build import FIELDS, bucket_of
 from . import kernel as K
-from .engine import MAX_EXPANSIONS, TEXT_FIELD, open_index
+from .engine import MAX_EXPANSIONS, TEXT_FIELD, open_index, term_df
 
 
 class _LRU(OrderedDict):
@@ -117,6 +118,7 @@ class LocalSearcher:
         # coordinator merge
         self._is_shard = segments is not None and set(
             segments) != set(live)
+        self._live_seg_dirs = meta.seg_dirs
         self._term_dicts = [ds.dataset(os.path.join(sd, "term_dict"),
                                        partitioning="hive")
                             for sd in meta.seg_dirs]
@@ -213,20 +215,16 @@ class LocalSearcher:
 
     def _df(self, term: str, field_id: int, local: float) -> float:
         """Document frequency for scoring: the local postings count IS the
-        global df for a full searcher; a doc shard looks it up in the
-        global term dictionary (cached, bucket+term-pruned scan)."""
+        global df for a full searcher; a doc shard looks it up in every
+        live segment's term dictionary with the engine's own lookup
+        (:func:`engine.term_df`), cached."""
         if not self._is_shard:
             return local
         key = ("gdf", field_id, term)
         hit = self._filter_cache.get(key)
         if hit is None:
-            filt = ((ds.field("bucket") == bucket_of(term, self.n_buckets))
-                    & (ds.field("field") == field_id)
-                    & (ds.field("term") == term))
-            hit = 0.0
-            for td in self._term_dicts:
-                tbl = td.to_table(columns=["df"], filter=filt)
-                hit += float(sum(tbl.column("df").to_pylist() or [0]))
+            hit = term_df(self._live_seg_dirs, self.n_buckets, [term],
+                          (field_id,)).get((field_id, term), 0.0)
             self._filter_cache.put(key, hit)
         return hit
 
@@ -545,10 +543,10 @@ class LocalSearcher:
         serving surface (SearchTemplates.java:39-44,
         points_search.json:28-158), not just the bare BM25 core.
 
-        Stored-field access is bounded: the k-th largest ``base`` score is a
-        valid lower bound on the k-th best TRUE score (prior/recency add-ons
-        are >= 0), so only docs with ``base + max_addon >= theta`` are
-        hydrated — never the whole candidate set, never the whole store.
+        function_score reads the numeric doc values (prior, ts) of every
+        candidate in one vectorized gather; stored fields are read for
+        the k winners only — never the whole candidate set, never the
+        whole store.
         """
         q_terms = A.py_tokens(params.query)
         q_kw = " ".join(q_terms)

@@ -223,6 +223,24 @@ def test_pruned_topk_runs_no_extra_jobs(spark, skewed_index):
     assert _jobs(spark, run(True)) <= _jobs(spark, run(False))
 
 
+def test_engine_query_job_floor(spark, skewed_index):
+    """A query runs only the jobs its own plan needs: every table is read
+    with its declared schema (no inference job) and the global df is a
+    pyarrow lookup outside Spark, so a hydrated ``bm25_topk`` runs at most
+    4 jobs, an un-hydrated one at most 2, and reading a table's schema
+    none."""
+    def topk(hydrate):
+        return lambda: E.bm25_topk(spark, skewed_index, "the zz", k=5,
+                                   hydrate=hydrate).collect()
+    for hydrate, most in ((True, 4), (False, 2)):
+        _jobs(spark, topk(hydrate))   # first-run costs out of the count
+        assert _jobs(spark, topk(hydrate)) <= most, hydrate
+    idx = E.open_index(skewed_index)
+    for table in ("postings", "term_dict", "doc_store", "pos_partial"):
+        assert _jobs(spark, lambda: E._union_read(spark, idx, table).schema
+                     ) == 0, table
+
+
 def _shards(df) -> int:
     """Shard count of an engine ranking plan (its one Exchange)."""
     import re
@@ -357,6 +375,125 @@ def test_legacy_term_dict_columns_still_read(spark, skewed_index, tmp_path):
         return res
     want, got = rows(skewed_index), rows(old)
     assert all(want) and got == want
+
+
+def _add_legacy_postings_columns(seg_dir: str) -> None:
+    """Rewrite a segment's postings files in the older layout, with the
+    never-read (min_tf, max_dl) block pair after min_dl."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    for f in glob.glob(os.path.join(seg_dir, "postings", "group=*",
+                                    "bucket=*", "*.parquet")):
+        t = pq.read_table(f)
+        i = t.schema.get_field_index("min_dl") + 1
+        t = t.add_column(i, "min_tf", pa.array(np.ones(t.num_rows)))
+        t = t.add_column(i + 1, "max_dl", pa.array(np.full(t.num_rows, 9.0)))
+        pq.write_table(t, f)
+
+
+def test_legacy_postings_columns_still_read(spark, skewed_index, tmp_path):
+    """A segment whose postings still carry min_tf/max_dl reads as before:
+    every engine path and the serving reader return the untouched index's
+    rows, bit for bit."""
+    import shutil
+    import pyarrow.parquet as pq
+    from planet_search_spark.queries.params import SearchParams
+    from planet_search_spark.queries.serve import LocalSearcher
+    old = str(tmp_path / "legacy_postings")
+    shutil.copytree(skewed_index, old)
+    seg = sorted(glob.glob(os.path.join(old, "segments", "*")))[0]
+    _add_legacy_postings_columns(seg)
+    files = glob.glob(os.path.join(seg, "postings", "*", "*", "*.parquet"))
+    assert files and all({"min_tf", "max_dl"} <= set(pq.read_schema(f).names)
+                         for f in files)
+
+    def rows(out):
+        res = [[(r.doc_id, r.score) for r in E.bm25_topk(
+                    spark, out, "the zz", k=10, prune=prune,
+                    hydrate=False).collect()] for prune in (True, False)]
+        res.append([(r.doc_id, r.score) for r in E.dismax_topk(
+            spark, out, "the zz", k=10, hydrate=False).collect()])
+        res.append([(r.doc_id, r.score) for r in E.search(
+            spark, out, SearchParams(query="the w1", prefix=True))
+            .collect()])
+        res.append([(r["doc_id"], r["score"]) for r in LocalSearcher(
+            out).bm25_topk("the zz", k=10, hydrate=False)])
+        return res
+    want, got = rows(skewed_index), rows(old)
+    assert all(want) and got == want
+
+
+@pytest.fixture(scope="module")
+def tf_index(spark, skewed_corpus, tmp_path_factory):
+    """A no-positions (tf_partial-sourced) index of two segments."""
+    from planet_search_spark.indexing.build import incremental_update
+    out = str(tmp_path_factory.mktemp("tfidx"))
+    build_index(spark, skewed_corpus, out, n_buckets=4, block_size=16,
+                n_groups=1, with_positions=False)
+    incremental_update(spark, out, skewed_corpus.withColumn(
+        "conv_id", F.concat(F.col("conv_id"), F.lit("_s2"))), n_groups=1)
+    return out
+
+
+def _compacted(spark, src: str, dst: str) -> str:
+    import shutil
+    from planet_search_spark.indexing.build import compact_index
+    shutil.copytree(src, dst)
+    assert compact_index(spark, dst)["merged_segments"]
+    return dst
+
+
+@pytest.fixture(scope="module")
+def compacted_indexes(spark, skewed_index, tf_index, tmp_path_factory):
+    """The two-segment positional and tf-sourced indexes, each merged into
+    one segment."""
+    root = tmp_path_factory.mktemp("compacted")
+    return [_compacted(spark, skewed_index, str(root / "pos")),
+            _compacted(spark, tf_index, str(root / "tf"))]
+
+
+def _footer_columns(path: str) -> list:
+    """(name, Spark type) of a parquet file's columns: the Spark schema a
+    Spark writer stores in the footer, else the Arrow schema's."""
+    import json
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import from_arrow_schema
+    meta = pq.read_metadata(path).metadata or {}
+    spark_json = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+    st = (T.StructType.fromJson(json.loads(spark_json)) if spark_json
+          else from_arrow_schema(pq.read_schema(path)))
+    return [(f.name, f.dataType) for f in st.fields]
+
+
+@pytest.mark.parametrize("which", ["index_dir", "tf_index",
+                                   "compacted_indexes"])
+def test_table_footers_match_declared_layout(request, which):
+    """Every file of every index table carries exactly its declared
+    columns (``indexing.layout``), in order and type: with positions, from
+    the tf source, and after an append plus compaction. The encoder's
+    pyarrow files match the Arrow declaration itself."""
+    import pyarrow.parquet as pq
+    from planet_search_spark.indexing import layout as L
+    outs = request.getfixturevalue(which)
+    seen = set()
+    for out in outs if isinstance(outs, list) else [outs]:
+        for seg in E.open_index(out).seg_dirs:
+            for table, (schema, parts) in L.TABLES.items():
+                want = [(f.name, f.dataType)
+                        for f in L.spark_schema(table).fields
+                        if f.name not in parts]
+                files = glob.glob(os.path.join(seg, table, "**", "*.parquet"),
+                                  recursive=True)
+                for f in files:
+                    assert _footer_columns(f) == want, (f, table)
+                    if table in ("postings", "term_dict"):
+                        assert pq.read_schema(f).remove_metadata().equals(
+                            schema), f
+                seen |= {table} if files else set()
+    assert {"postings", "term_dict", "doc_store"} <= seen
+    assert seen & {"pos_partial", "tf_partial"}
 
 
 @pytest.mark.parametrize("query", ["error search tool", "assistant code",
