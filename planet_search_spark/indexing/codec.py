@@ -143,118 +143,21 @@ def varbyte_lengths(values: np.ndarray) -> np.ndarray:
     return np.maximum(nbits, 1)
 
 
-def encode_blocks(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
-                  flat_positions: np.ndarray | None,
-                  block_size: int) -> dict:
-    """Vectorized multi-block encode of one (term[, salt]) posting group.
-
-    One varbyte pass over the whole group per stream, then slicing at block
-    boundaries — no per-block Python loop. Delta chains restart at each
-    block start (docs) / each doc start (positions), so blocks decode
-    independently.
-
-    Returns dict of lists (one element per block): docs_bin, tfs_bin,
-    dls_bin, pos_bin, n_docs, first_doc, last_doc.
-    """
-    n = len(doc_ids)
-    starts = np.arange(0, n, block_size)
-    ends = np.minimum(starts + block_size, n)
-
-    gaps = np.empty(n, dtype=np.int64)
-    gaps[0] = doc_ids[0]
-    np.subtract(doc_ids[1:], doc_ids[:-1], out=gaps[1:])
-    gaps[starts] = doc_ids[starts]          # restart chain per block
-
-    def sliced(stream: np.ndarray, bounds_starts, bounds_ends) -> list[bytes]:
-        lens = varbyte_lengths(stream)
-        offs = np.concatenate(([0], np.cumsum(lens)))
-        buf = varbyte_encode(stream)
-        return [buf[offs[s]:offs[e]] for s, e in zip(bounds_starts, bounds_ends)]
-
-    out = {
-        "docs_bin": sliced(gaps, starts, ends),
-        "tfs_bin": sliced(np.asarray(tfs, np.int64), starts, ends),
-        "dls_bin": sliced(np.asarray(dls, np.int64), starts, ends),
-        "n_docs": (ends - starts).tolist(),
-        "first_doc": doc_ids[starts].tolist(),
-        "last_doc": doc_ids[ends - 1].tolist(),
-    }
-    if flat_positions is not None:
-        tfs64 = np.asarray(tfs, np.int64)
-        pos = np.asarray(flat_positions, np.int64)
-        pgaps = np.empty(pos.shape, dtype=np.int64)
-        if pos.size:
-            pgaps[0] = pos[0]
-            np.subtract(pos[1:], pos[:-1], out=pgaps[1:])
-            doc_starts = np.concatenate(([0], np.cumsum(tfs64)[:-1]))
-            pgaps[doc_starts] = pos[doc_starts]   # restart per doc
-        pos_bounds = np.concatenate(([0], np.cumsum(tfs64)))
-        out["pos_bin"] = sliced(pgaps, pos_bounds[starts], pos_bounds[ends])
-    return out
-
-
-def encode_blocks_multi(doc_ids: np.ndarray, tfs: np.ndarray,
-                        dls: np.ndarray, group_starts: np.ndarray,
-                        block_size: int) -> dict:
+def encode_blocks_multi_buffers(doc_ids: np.ndarray, tfs: np.ndarray,
+                                dls: np.ndarray, group_starts: np.ndarray,
+                                block_size: int) -> dict:
     """Vectorized block encode over MANY groups at once.
 
     Input rows must be sorted so each group is contiguous and doc_ids are
     ascending within a group; ``group_starts`` is a boolean flag per row.
-    This is the many-tiny-terms-friendly form: no per-group Python at all —
-    one varbyte pass per stream, block boundaries at group starts and every
-    ``block_size`` rows within a group.
-
-    Returns per-block arrays plus ``row_start`` (the block's first row
-    index) and ``seq`` (the block's ordinal within its group).
-    """
-    n = len(doc_ids)
-    gidx = np.flatnonzero(group_starts)
-    glen = np.diff(np.append(gidx, n))
-    within = np.arange(n) - np.repeat(gidx, glen)
-    is_start = group_starts | (within % block_size == 0)
-    starts = np.flatnonzero(is_start)
-    ends = np.append(starts[1:], n)
-
-    gaps = np.empty(n, dtype=np.int64)
-    if n:
-        gaps[0] = doc_ids[0]
-        np.subtract(doc_ids[1:], doc_ids[:-1], out=gaps[1:])
-        gaps[starts] = doc_ids[starts]
-
-    def sliced(stream: np.ndarray) -> list[bytes]:
-        lens = varbyte_lengths(stream)
-        offs = np.concatenate(([0], np.cumsum(lens)))
-        buf = varbyte_encode(stream)
-        return [buf[offs[s]:offs[e]] for s, e in zip(starts, ends)]
-
-    # ordinal of each block within its group
-    grp_of_block = np.searchsorted(gidx, starts, side="right") - 1
-    first_block_of_grp = np.searchsorted(starts, gidx)
-    seq = np.arange(len(starts)) - first_block_of_grp[grp_of_block]
-
-    return {
-        "row_start": starts,
-        "seq": seq,
-        "n_docs": (ends - starts).astype(np.int32),
-        "first_doc": doc_ids[starts],
-        "last_doc": doc_ids[ends - 1],
-        "docs_bin": sliced(gaps),
-        "tfs_bin": sliced(np.asarray(tfs, np.int64)),
-        "dls_bin": sliced(np.asarray(dls, np.int64)),
-        "reduce_starts": starts,
-    }
-
-
-def encode_blocks_multi_buffers(doc_ids: np.ndarray, tfs: np.ndarray,
-                                dls: np.ndarray, group_starts: np.ndarray,
-                                block_size: int) -> dict:
-    """:func:`encode_blocks_multi` without the per-block Python slicing:
-    each stream comes back as ONE contiguous encoded buffer plus an int32
-    block-offsets array, ready to become an Arrow binary column zero-copy
-    (``pa.Array.from_buffers``). Encoded bytes are IDENTICAL to the sliced
-    form — only the container changes (a million tail-term blocks cost a
-    million ``bytes`` allocations per stream in the sliced form; here they
-    cost one buffer + one offsets array)."""
+    Blocks start at group starts and every ``block_size`` rows within a
+    group, and each block's doc-gap chain restarts with an absolute id, so
+    blocks decode independently. Each stream comes back as ONE contiguous
+    varbyte buffer plus an int32 block-offsets array, ready to become an
+    Arrow binary column zero-copy (``pa.Array.from_buffers``): a million
+    tail-term blocks cost one buffer, not a million ``bytes`` objects.
+    ``row_start`` is each block's first row, ``seq`` its ordinal within
+    its group."""
     n = len(doc_ids)
     gidx = np.flatnonzero(group_starts)
     glen = np.diff(np.append(gidx, n))

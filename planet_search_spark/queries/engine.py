@@ -8,10 +8,12 @@ Read path (mirrors the ES search template execution, SURVEY.md §3.2):
    expression is golden-tested);
 2. bucket-prune + term-filter the block table (partition pruning on
    ``bucket=``, min/max row-group stats on ``term``), read with the
-   declared table schemas of :mod:`..indexing.layout` (no inference job),
-   and look up the query terms' global df with pyarrow in the calling
-   process (:func:`term_df`; df is additive over segments), which runs no
-   Spark job;
+   declared table schemas of :mod:`..indexing.layout` (no inference job).
+   The query terms' global df (:func:`term_df`; df is additive over
+   segments) and their prefix / fuzzy dictionary expansions
+   (:func:`expand_prefix`, :func:`expand_fuzzy`) are pyarrow lookups in
+   the calling process, the serving reader's own code, and run no Spark
+   job;
 3. tag each block with the doc-range shard(s) it overlaps and repartition
    by shard — ES's shard-local top-k over doc ranges. The shard count
    follows the query's posting mass (``_SHARD_POSTINGS``), so small
@@ -21,15 +23,17 @@ Read path (mirrors the ES search template execution, SURVEY.md §3.2):
    doc-range skip, decode, :func:`scoring.bm25` under each field's corpus
    stats and the global df), then one combinator. ``bm25_topk`` and
    ``dismax_topk`` rank with :func:`kernel.rank` (accumulate, AND filter,
-   dis_max, top-k) and emit ≤ k rows; ``search`` combines with
+   dis_max, top-k); ``search`` (:func:`_search_rank`) combines with
    :func:`kernel.should_sum` (dis_max over each term's expansions, boosted
-   should-sum, AND filter) and emits every candidate's BM25 part. Each
-   task adds one stats row; dl ships inside the block, so scoring needs NO
-   doc-stats join;
+   should-sum, AND filter), reads the doc values, filter sets and phrase
+   positions of its shard's doc range with the pyarrow readers below, and
+   ranks by :func:`kernel.function_score` under the index's
+   ``search_config.json``. Every task emits ≤ k rows and one stats row;
+   dl ships inside the block, so scoring needs NO doc-stats join;
 5. the exact coordinator merge: ``orderBy(score desc, doc_id asc)
-   .limit(k)`` — Spark's TakeOrderedAndProject heap. ``search`` first
-   joins its candidates to the narrow doc values and applies the phrase
-   tiers and function_score in the JVM;
+   .limit(k)`` — Spark's TakeOrderedAndProject heap. It is exact for
+   ``search`` too, because a doc's final score depends only on global
+   stats and the doc itself;
 6. a broadcast hydration join against doc_store for the k winners only,
    ordered by one single-partition sort.
 
@@ -40,12 +44,13 @@ why θ is off under AND) are in :mod:`.kernel`. θ runs in every pruned
 shard task, on blocks the task already holds, so it costs no Spark job.
 Verified against the unpruned path in tests, also with several shards.
 
-A hydrated ``bm25_topk`` thus runs at most 4 Spark jobs (the ranking and
-hydration plan under AQE) and an un-hydrated one at most 2; a test counts
-them.
+A hydrated ``bm25_topk`` or ``search`` (prefix and fuzzy included) thus
+runs at most 4 Spark jobs (the ranking and hydration plan under AQE) and
+an un-hydrated ``bm25_topk`` at most 2; a test counts them.
 """
 from __future__ import annotations
 
+import hashlib
 import json
 import math
 import os
@@ -53,6 +58,9 @@ from dataclasses import dataclass
 from functools import partial
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -60,8 +68,10 @@ from .. import analysis as A
 from .. import lazyzip
 from .. import scoring as S
 from ..indexing import layout as L
-from ..indexing.build import FIELDS, FIELD_BOOSTS, bucket_of
+from ..indexing.build import FIELDS, bucket_of
+from . import fuzzy as FZ
 from . import kernel as K
+from .search_config import load_config
 
 TEXT_FIELD = FIELDS["text"]
 
@@ -156,7 +166,6 @@ def term_df(seg_dirs: list, n_buckets: int, terms, field_ids) -> dict:
     process with pyarrow: only the terms' ``bucket=`` directories, with
     row groups pruned on the term min/max. The engine's global df and the
     serving reader's shard df are this one lookup."""
-    import pyarrow.dataset as ds
     by_bucket: dict[int, list] = {}
     for t in sorted(set(terms)):
         by_bucket.setdefault(bucket_of(t, n_buckets), []).append(t)
@@ -186,6 +195,143 @@ def _global_df(idx: IndexMeta, terms: list[str],
     return term_df(idx.seg_dirs, idx.n_buckets, terms, field_ids)
 
 
+# ---------------------------------------------------------------------------
+# pyarrow readers the serving reader shares: the dictionary expansions (run
+# where the query is planned) and search's doc-local reads (run by the
+# reader over its segments and by each shard task over its doc range). They
+# take opened tables (:func:`datasets`): a dataset keeps the footers it has
+# read, so the long-lived reader opens each table once.
+# ---------------------------------------------------------------------------
+
+MAX_EXPANSIONS = 200  # match_phrase_prefix cap, points_search.json:47
+
+
+def datasets(seg_dirs: list, table: str) -> list:
+    """One pyarrow dataset per segment for ``table``, hive-partitioned
+    when its layout declares partition columns."""
+    part = "hive" if L.TABLES[table][1] else None
+    return [ds.dataset(os.path.join(sd, table), partitioning=part)
+            for sd in seg_dirs]
+
+
+def _scan(tables: list, columns: list, filt=None,
+          doc_range: tuple | None = None) -> list:
+    """Per table, ``columns`` of the rows matching ``filt`` within
+    ``doc_range = (lo, hi)`` (doc_id row-group stats prune it)."""
+    if doc_range is not None:
+        rng = ((ds.field("doc_id") >= int(doc_range[0]))
+               & (ds.field("doc_id") < int(doc_range[1])))
+        filt = rng if filt is None else filt & rng
+    return [t.to_table(columns=columns, filter=filt) for t in tables]
+
+
+def _dict_terms(term_dicts: list, field_ids, filt=None) -> pa.ChunkedArray:
+    """The fields' ``term_dict`` terms matching ``filt``, as Arrow arrays:
+    every vectorized prune runs before Python sees a term."""
+    f = ds.field("field").isin([int(x) for x in field_ids])
+    tbls = _scan(term_dicts, ["term"], f if filt is None else f & filt)
+    return pa.chunked_array([c for t in tbls for c in t.column(0).chunks],
+                            type=pa.string())
+
+
+def expand_prefix(term_dicts: list, prefix: str,
+                  field_ids: tuple = (TEXT_FIELD,)) -> list[str]:
+    """The distinct dictionary terms starting with ``prefix``, in term
+    order, capped like ES ``max_expansions``; the term range filter
+    row-group-prunes the (field, term)-sorted term_dict."""
+    hi = prefix[:-1] + chr(ord(prefix[-1]) + 1) if prefix else "\uffff"
+    filt = (ds.field("term") >= prefix) & (ds.field("term") < hi)
+    terms = _dict_terms(term_dicts, field_ids, filt).to_pylist()
+    return sorted(set(terms))[:MAX_EXPANSIONS]
+
+
+def expand_fuzzy(term_dicts: list, term: str, max_ed: int,
+                 field_ids: tuple = (TEXT_FIELD,)) -> list[str]:
+    """AUTO fuzzy expansion with SOUND blocking (SURVEY.md §7 hard-part 5):
+    :func:`.fuzzy.block_mask` prunes the vocabulary in Arrow compute, so
+    the banded edit distance sees only the blocked candidates. Capped like
+    :func:`expand_prefix`; ``[term]`` when nothing lies within
+    ``max_ed``."""
+    if max_ed == 0:
+        return [term]
+    arr = _dict_terms(term_dicts, field_ids)
+    cands = sorted(set(pc.filter(arr, FZ.block_mask(arr, term, max_ed))
+                       .to_pylist()))
+    out = [t for t in cands if FZ.lev_leq(t, term, max_ed)]
+    return out[:MAX_EXPANSIONS] or [term]
+
+
+def epoch_seconds(ts: pa.ChunkedArray) -> np.ndarray:
+    """Timestamps as float64 epoch seconds, floored like Spark's
+    ``unix_timestamp``."""
+    div = {"s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9}[ts.type.unit]
+    return (ts.cast(pa.int64()).to_numpy() // div).astype(np.float64)
+
+
+def doc_values(stores: list, doc_range: tuple | None = None) -> tuple:
+    """doc_id-sorted (doc_ids, prior, ts epoch seconds) arrays of the
+    ``doc_store`` tables ``stores``: the numeric doc values function_score
+    reads (the Lucene doc_values analogue)."""
+    tbls = _scan(stores, ["doc_id", "prior", "ts"], doc_range=doc_range)
+    ids = np.concatenate([t.column("doc_id").to_numpy() for t in tbls])
+    o = np.argsort(ids)
+    return (ids[o],
+            np.concatenate([t.column("prior").to_numpy() for t in tbls])[o],
+            np.concatenate([epoch_seconds(t.column("ts")) for t in tbls])[o])
+
+
+def meta_filter(role: str | None, tool: str | None):
+    """``search``'s role / tool filter (B17) as a doc_store predicate."""
+    filt = None
+    if role is not None:
+        filt = ds.field("role") == role
+    if tool is not None:
+        f2 = ds.field("tool") == tool
+        filt = f2 if filt is None else (filt & f2)
+    return filt
+
+
+def doc_ids_where(stores: list, filt,
+                  doc_range: tuple | None = None) -> np.ndarray:
+    """Sorted doc ids of the ``doc_store`` rows matching ``filt`` (a kw_hash
+    equality row-group-prunes: doc_store is written kw_hash-sorted)."""
+    return np.sort(np.concatenate([
+        t.column("doc_id").to_numpy()
+        for t in _scan(stores, ["doc_id"], filt, doc_range)]))
+
+
+def pos_keys(positions: list, n_buckets: int, terms,
+             doc_range: tuple | None = None) -> dict:
+    """term -> sorted packed (doc_id, pos) keys (:data:`kernel.POS_SHIFT`)
+    of the terms' text-field positions in the ``pos_partial`` tables
+    ``positions``: one vectorized pass per table, never per-doc Python."""
+    uniq = sorted(set(terms))
+    filt = (ds.field("bucket").isin(sorted({bucket_of(t, n_buckets)
+                                            for t in uniq}))
+            & (ds.field("field") == TEXT_FIELD)
+            & ds.field("term").isin(uniq))
+    parts: dict[str, list] = {t: [] for t in uniq}
+    for tbl in _scan(positions, ["doc_id", "term", "pos"], filt, doc_range):
+        docs = tbl.column("doc_id").to_numpy().astype(np.int64)
+        poss = tbl.column("pos").to_numpy().astype(np.int64)
+        # hard error, not assert: the packed-key invariant must survive
+        # `python -O` — a silently wrapped key would corrupt doc
+        # boundaries and return wrong phrase matches
+        if poss.size and int(poss.max()) >= K.POS_SHIFT - 64:
+            raise ValueError(
+                f"token position {int(poss.max())} exceeds the packed-key "
+                f"capacity ({K.POS_SHIFT - 64}); re-index with position "
+                "capping for multi-million-token turns")
+        keys = docs * K.POS_SHIFT + poss
+        # per-term masks in Arrow compute — never materialize millions of
+        # Python string objects for the term column
+        for t in uniq:
+            m = pc.equal(tbl.column("term"), t).combine_chunks() \
+                .to_numpy(zero_copy_only=False)
+            parts[t].append(keys[m])
+    return {t: np.sort(np.concatenate(p)) for t, p in parts.items()}
+
+
 # Postings per doc-range shard. The kernel decodes, scores and ranks ~8 M
 # postings/s on one core (4-core x86 box), so a full shard is ~0.25 s of
 # kernel work plus its Arrow intake — above the ~0.2 s every Python task
@@ -203,11 +349,11 @@ def _shard_task(df_map: dict, field_stats: dict, boosts: dict,
                 n_shards: int, rank):
     """The ``mapInArrow`` body: score every doc-range shard in the task's
     partition with :func:`kernel.score_blocks` and combine its lists with
-    ``rank(scored, boosts, space=)`` — :func:`kernel.rank` or
-    :func:`kernel.should_sum` with their other arguments bound. Shard s
-    covers doc ids [s·width, (s+1)·width), the last one everything above.
-    Emits rank's (doc_id, score, nmatch) rows, then one stats row (doc_id
-    NULL; θ and the block counts)."""
+    ``rank(scored, boosts, space, doc_range)`` — :func:`_rank_by` or
+    :func:`_search_rank` with their other arguments bound. Shard s covers
+    doc ids [s·width, (s+1)·width), the last one everything above. Emits
+    rank's (doc_id, score, nmatch) rows, then one stats row (doc_id NULL;
+    θ and the block counts)."""
     def score(key, tfs, dls):
         return S.bm25(tfs, dls, df_map[key], *field_stats[key[0]])
 
@@ -251,7 +397,7 @@ def _shard_task(df_map: dict, field_stats: dict, boosts: dict,
             lists = [ids for ids, _s in scored.values()]
             ids, scores, nmatch = rank(
                 scored, boosts,
-                space=K.range_space(lists, lo) if lists else None)
+                K.range_space(lists, lo) if lists else None, (lo, hi))
             n = ids.size
             yield pa.RecordBatch.from_arrays([
                 pa.array(ids, pa.int64()), pa.array(scores, pa.float64()),
@@ -297,6 +443,48 @@ def _ranked(spark: SparkSession, idx: IndexMeta, terms: list[str],
             .mapInArrow(task, _RANKED_SCHEMA))
 
 
+def _rank_by(k: int | None, need: int = 1):
+    """:func:`kernel.rank` as a shard combinator (the bare BM25 paths need
+    no doc-local reads, so the doc range goes unused)."""
+    def rank(scored, boosts, space, doc_range):
+        return K.rank(scored, boosts, k, need=need, space=space)
+    return rank
+
+
+def _search_rank(scored, boosts, space, doc_range, *, seg_dirs: list,
+                 n_buckets: int, origs: dict, need: int, params, cfg: dict,
+                 kw_hash: str, terms: list) -> tuple:
+    """The ``search`` shard combinator: :func:`kernel.should_sum`, the
+    role / tool filter, the phrase tiers and :func:`kernel.function_score`
+    over the shard's candidates, then its top ``params.k``. The doc-local
+    inputs are read for ``doc_range`` only; ``terms`` is the analyzed
+    query."""
+    ids, bm, nmatch = K.should_sum(scored, boosts, origs, need=need,
+                                   space=space)
+    stores = datasets(seg_dirs, "doc_store")
+    if params.filter_role or params.filter_tool:
+        m = K.in_sorted(ids, doc_ids_where(
+            stores, meta_filter(params.filter_role, params.filter_tool),
+            doc_range))
+        ids, bm, nmatch = ids[m], bm[m], nmatch[m]
+    if ids.size == 0:
+        return ids, bm, nmatch
+    in_phrase = None
+    if params.phrase_tiers:
+        keys = pos_keys(datasets(seg_dirs, "pos_partial"), n_buckets, terms,
+                        doc_range)
+        in_phrase = K.in_sorted(ids, K.phrase_docs([keys[t] for t in terms]))
+    dv_ids, prior, ts = doc_values(stores, doc_range)
+    ix = np.searchsorted(dv_ids, ids)
+    exact = doc_ids_where(stores, ds.field("kw_hash") == kw_hash, doc_range)
+    score = K.function_score(
+        bm, K.in_sorted(ids, exact), prior[ix], ts[ix], cfg,
+        in_phrase=in_phrase,
+        now=params.now_epoch if params.recency else None)
+    o = K.topk(ids, score, params.k)
+    return ids[o], score[o], nmatch[o]
+
+
 def _matches(ranked: DataFrame) -> DataFrame:
     return (ranked.where(F.col("doc_id").isNotNull())
             .select("doc_id", "score", "nmatch"))
@@ -338,7 +526,7 @@ def bm25_scores(spark: SparkSession, out_dir: str, query: str, *,
     df_map = _global_df(idx, terms)
     need = len(terms) if require_all else 1
     return _matches(_ranked(spark, idx, terms, df_map,
-                            partial(K.rank, k=None, need=need)))
+                            _rank_by(None, need)))
 
 
 def bm25_topk(spark: SparkSession, out_dir: str, query: str, k: int = 20, *,
@@ -363,8 +551,7 @@ def bm25_topk(spark: SparkSession, out_dir: str, query: str, k: int = 20, *,
         return _empty_top(spark)
     df_map = _global_df(idx, terms)
     need = len(terms) if require_all else 1
-    ranked = _ranked(spark, idx, terms, df_map,
-                     partial(K.rank, k=k, need=need), k=k,
+    ranked = _ranked(spark, idx, terms, df_map, _rank_by(k, need), k=k,
                      prune=prune and not require_all,
                      and_skip=prune and require_all)
     if prune_stats is not None:
@@ -383,16 +570,18 @@ def dismax_topk(spark: SparkSession, out_dir: str, query: str, k: int = 20, *,
     BM25 sum s_f is computed under f's OWN corpus stats, then
     ``score = max_f boost_f * s_f`` (dis_max, tie_breaker 0.0) — the segment
     form of the reference's ``dis_max`` over ``match name.* boost 5`` /
-    ``alt_names boost 3`` clauses (points_search.json:66-93).
+    ``alt_names boost 3`` clauses (points_search.json:66-93). ``boosts``
+    defaults to the index's ``search_config.json`` field boosts, like the
+    serving reader's.
     """
     idx = open_index(out_dir)
     terms = sorted(set(A.py_tokens(query)))
-    boosts = boosts or FIELD_BOOSTS
+    boosts = boosts or load_config(out_dir)["field_boosts"]
     field_ids = tuple(FIELDS[f] for f in boosts)
     if not terms:
         return _empty_top(spark)
     df_map = _global_df(idx, terms, field_ids)
-    ranked = _ranked(spark, idx, terms, df_map, partial(K.rank, k=k),
+    ranked = _ranked(spark, idx, terms, df_map, _rank_by(k),
                      field_ids=field_ids,
                      boosts={FIELDS[f]: float(b) for f, b in boosts.items()})
     top = _top(ranked, k).select("doc_id", "score")
@@ -452,8 +641,9 @@ def phrase_prefix_match(spark: SparkSession, out_dir: str,
     ES's ``max_expansions: 200``) at position p + n - 1
     (points_search.json:47,61; bbox_container.json:38-43).
 
-    Plan: prefix-expand against the term dictionary (row-group pruned range
-    scan), then the same JVM-only positional self-join chain as
+    Plan: prefix-expand against the term dictionary with pyarrow
+    (:func:`expand_prefix`, no Spark job), then the same JVM-only
+    positional self-join chain as
     :func:`phrase_match` with the LAST join's right side being the union of
     all expansions' positions (shifted by n-1).
     """
@@ -464,7 +654,7 @@ def phrase_prefix_match(spark: SparkSession, out_dir: str,
     if not idx.with_positions:
         raise ValueError("index built without positions")
     exact, prefix = terms[:-1], terms[-1]
-    expansions = expand_prefix(spark, idx, prefix)
+    expansions = expand_prefix(datasets(idx.seg_dirs, "term_dict"), prefix)
     if not expansions:
         return spark.range(0).select(F.col("id").alias("doc_id"))
     raw = _pos_rows(spark, idx, list(exact) + expansions)
@@ -482,61 +672,21 @@ def phrase_prefix_match(spark: SparkSession, out_dir: str,
 # Full points_search composition over the segment (B13-B27)
 # ---------------------------------------------------------------------------
 
-MAX_EXPANSIONS = 200  # match_phrase_prefix cap, points_search.json:47
-
-
-def _term_dict_all(spark: SparkSession, idx: IndexMeta) -> DataFrame:
-    return _union_read(spark, idx, "term_dict")
-
-
-def expand_prefix(spark: SparkSession, idx: IndexMeta, prefix: str,
-                  field_ids: tuple = (TEXT_FIELD,)) -> list[str]:
-    """Dictionary prefix expansion over the queried FIELDS' vocabulary,
-    capped + ordered like ES max_expansions (term_dict min/max stats prune
-    row groups on the term range)."""
-    td = _term_dict_all(spark, idx)
-    rows = (td.where(F.col("field").isin(list(field_ids)))
-              .where(F.col("term").startswith(prefix))
-              .select("term").distinct()
-              .orderBy("term").limit(MAX_EXPANSIONS).collect())
-    return [r["term"] for r in rows]
-
-
-def expand_fuzzy(spark: SparkSession, idx: IndexMeta, term: str,
-                 max_ed: int, field_ids: tuple = (TEXT_FIELD,)) -> list[str]:
-    """AUTO fuzzy expansion with SOUND dictionary blocking (SURVEY.md §7
-    hard-part 5): the +/- ed length band plus the pigeonhole segment filter
-    (:mod:`.fuzzy` — startswith/contains/endswith over ed+1 segments, which
-    can never drop a true match) run as cheap JVM string predicates BEFORE
-    ``levenshtein``, so the dictionary scan prunes ~20-50x instead of
-    edit-distancing the whole vocabulary (round-2 VERDICT item 6)."""
-    from . import fuzzy as FZ
-    if max_ed == 0:
-        return [term]
-    td = _term_dict_all(spark, idx)
-    n = len(term)
-    rows = (td.where(F.col("field").isin(list(field_ids)))
-              .where((F.length("term") >= n - max_ed)
-                     & (F.length("term") <= n + max_ed))
-              .where(FZ.block_col(term, max_ed, F.col("term")))
-              .where(F.levenshtein(F.col("term"), F.lit(term)) <= max_ed)
-              .select("term").distinct()
-              .orderBy("term").limit(MAX_EXPANSIONS).collect())
-    return [r["term"] for r in rows] or [term]
-
-
 def search(spark: SparkSession, out_dir: str, params) -> DataFrame:
     """The full search pipeline (points_search template analogue):
 
-    query analysis -> (prefix|fuzzy) dictionary expansion -> the ranking
-    plan of the bare BM25 paths (:func:`_ranked`), whose per-shard tasks
-    decode, score and combine with :func:`kernel.should_sum` —
+    query analysis -> (prefix|fuzzy) dictionary expansion
+    (:func:`expand_prefix` / :func:`expand_fuzzy`, pyarrow, no Spark job)
+    -> the ranking plan of the bare BM25 paths (:func:`_ranked`), whose
+    per-shard tasks decode, score and combine with :func:`_search_rank`:
     per-original-term dis_max over expansions (B15), boosted should-sum
-    over fields and terms (B16/B8), OR/AND (B9/B10) — and emit every
-    candidate -> metadata filter (B17) through the narrow doc-values join
-    -> function_score: saturation + static prior + exact bonus + recency
-    decay (B19-B24) -> top-k hydrated (B25). The BM25 part is the serving
-    reader's, bit for bit.
+    over fields and terms (B16/B8), OR/AND (B9/B10), the metadata filter
+    (B17), the phrase tiers and function_score — the saturated text
+    score + static prior + exact bonus + recency decay (B19-B24) — and
+    the shard's top-k -> the exact top-k merge, hydrated (B25). Ranking
+    is the serving reader's code under the same ``search_config.json``
+    (:func:`.search_config.load_config`), so engine and reader scores are
+    bit-identical.
 
     No WAND pruning on this path BY DESIGN: under function_score the
     per-doc add-ons (prior <= 0.3, recency <= 0.6, tiers) dominate the
@@ -546,88 +696,56 @@ def search(spark: SparkSession, out_dir: str, params) -> DataFrame:
     bare BM25 paths (``bm25_topk``, serve ``bm25_topk(prune=True)``).
     """
     idx = open_index(out_dir)
-    store = doc_store(spark, idx)
+    cfg = load_config(out_dir)
     q_terms = A.py_tokens(params.query)
-    q_kw = " ".join(q_terms)
-
-    if params.filter_role:
-        store = store.where(F.col("role") == params.filter_role)
-    if params.filter_tool:
-        store = store.where(F.col("tool") == params.filter_tool)
-
-    import hashlib
-    q_kw_hash = hashlib.md5(q_kw.encode("utf-8")).hexdigest()
+    q_kw_hash = hashlib.md5(" ".join(q_terms).encode("utf-8")).hexdigest()
 
     if params.exact:
-        # points_search_exact: keyword equality (by md5), constant score 12,
-        # prominence (prior) tiebreak
+        # points_search_exact: keyword equality (by md5), constant score
+        # tier_exact, prominence (prior) tiebreak
+        store = doc_store(spark, idx)
+        if params.filter_role:
+            store = store.where(F.col("role") == params.filter_role)
+        if params.filter_tool:
+            store = store.where(F.col("tool") == params.filter_tool)
         out = (store.where(F.col("kw_hash") == q_kw_hash)
                .select("doc_id", "conv_id", "turn_idx", "role", "tool", "ts",
-                       F.lit(12.0).alias("score"), F.col("prior"))
+                       F.lit(float(cfg["tier_exact"])).alias("score"),
+                       F.col("prior"))
                .orderBy(F.desc("score"), F.desc("prior"), F.asc("doc_id"))
                .limit(params.k))
         return out.drop("prior")
 
     if not q_terms:
-        return (store.select("doc_id", "conv_id", "turn_idx", "role", "tool",
-                             "ts", F.lit(0.0).alias("score")).limit(0))
+        return (doc_store(spark, idx)
+                .select("doc_id", "conv_id", "turn_idx", "role", "tool",
+                        "ts", F.lit(0.0).alias("score")).limit(0))
+    if params.phrase_tiers and not idx.with_positions:
+        raise ValueError("index built without positions")
 
     field_ids = ((TEXT_FIELD, FIELDS["meta"]) if params.multifield
                  else (TEXT_FIELD,))
     # orig -> expansions, drawn from the queried fields' dictionary
+    term_dicts = datasets(idx.seg_dirs, "term_dict")
     origs: dict[str, set] = {}
     for i, t in enumerate(q_terms):
         if params.prefix and i == len(q_terms) - 1:
-            exps = expand_prefix(spark, idx, t, field_ids) or [t]
+            exps = expand_prefix(term_dicts, t, field_ids) or [t]
         elif params.fuzzy:
-            exps = expand_fuzzy(spark, idx, t, params.auto_fuzz(t), field_ids)
+            exps = expand_fuzzy(term_dicts, t, params.auto_fuzz(t),
+                                field_ids)
         else:
             exps = [t]
         origs.setdefault(t, set()).update(exps)
     exp_terms = sorted(set().union(*origs.values()))
-    boosts = ({FIELDS[f]: float(b) for f, b in FIELD_BOOSTS.items()}
+    boosts = ({FIELDS[f]: float(b) for f, b in cfg["field_boosts"].items()}
               if params.multifield else {TEXT_FIELD: 1.0})
-    # every candidate's BM25 part (B15/B16/B9/B8) from the shard tasks;
     # AND requires every original term matched in at least one field
-    df_map = _global_df(idx, exp_terms, field_ids)
-    rank = partial(K.should_sum, origs=origs,
-                   need=len(origs) if params.operator == "and" else 1)
-    cand = (_matches(_ranked(spark, idx, exp_terms, df_map, rank,
-                             field_ids=field_ids, boosts=boosts))
-            .withColumnRenamed("score", "bm25"))
-
-    # DOC-VALUES SPLIT (round-3 VERDICT #1, mirroring serve.py's numeric
-    # doc values): function_score needs only (prior, ts, kw_hash) per
-    # candidate, so the pre-top-k join ships a NARROW projection of the
-    # (already B17-filtered) doc_store — on a hot term the candidate set is
-    # O(N) and dragging conv_id/role/tool strings through that shuffle was
-    # the last stored-string scale risk. The k winners alone hydrate the
-    # stored strings after limit(k), exactly like bm25_topk's hydration.
-    narrow = store.select("doc_id", "prior", "ts", "kw_hash")
-    joined = cand.join(narrow, "doc_id")  # inner join applies B17 filters
-    bool_score = F.col("bm25")
-    if params.phrase_tiers:
-        # constant_score phrase tiers INSIDE the bool score, before the
-        # saturation function — points_search.json:16-27 (keyword phrase,
-        # boost 12) and :74-85 (contained phrase, boost 6); both clauses
-        # are independent should members like the reference's name/alt pair
-        contained = (phrase_match(spark, out_dir, params.query)
-                     .withColumn("tier6", F.lit(6.0)))
-        joined = joined.join(contained, "doc_id", "left")
-        bool_score = (bool_score
-                      + F.when(F.col("kw_hash") == q_kw_hash,
-                               F.lit(12.0)).otherwise(F.lit(0.0))
-                      + F.coalesce(F.col("tier6"), F.lit(0.0)))
-    final = (S.saturation(bool_score)
-             + F.lit(S.W_PRIOR) * F.col("prior")
-             + F.when(F.col("kw_hash") == q_kw_hash,
-                      F.lit(S.W_EXACT)).otherwise(F.lit(0.0)))
-    if params.recency:
-        final = final + S.recency_decay(F.col("ts"), params.now_epoch)
-    topk = (joined.withColumn("score", final)
-            .select("doc_id", "score", "nmatch")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(params.k))
-    # hydrate stored strings for the k winners only (the unfiltered store
-    # is fine — winners already passed B17)
-    return _hydrate(spark, idx, topk)
+    rank = partial(_search_rank, seg_dirs=idx.seg_dirs,
+                   n_buckets=idx.n_buckets, origs=origs,
+                   need=len(origs) if params.operator == "and" else 1,
+                   params=params, cfg=cfg, kw_hash=q_kw_hash, terms=q_terms)
+    ranked = _ranked(spark, idx, exp_terms,
+                     _global_df(idx, exp_terms, field_ids), rank,
+                     field_ids=field_ids, boosts=boosts)
+    return _hydrate(spark, idx, _top(ranked, params.k))

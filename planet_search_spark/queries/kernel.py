@@ -1,12 +1,14 @@
 """Columnar block kernel shared by the Spark engine and the serving reader.
 
-One implementation of the read path's block algorithms: the engine's
-per-shard ``mapInArrow`` task and
-:class:`~planet_search_spark.queries.serve.LocalSearcher` both prune and
-rank through :func:`score_blocks` and :func:`rank`. It imports numpy and
-the codec only — no pyspark — so the same code runs in a Python UDF worker
-and in the shard daemon. Callers pass BM25 in as a ``score`` callable
-(:func:`planet_search_spark.scoring.bm25` under global stats).
+One implementation of the read path's algorithms: the engine's per-shard
+``mapInArrow`` task and
+:class:`~planet_search_spark.queries.serve.LocalSearcher` both prune, rank,
+chain phrases and apply function_score through the routines below. It
+imports numpy and the codec only — no pyspark — so the same code runs in a
+Python UDF worker and in the shard daemon. Callers pass BM25 in as a
+``score`` callable (:func:`planet_search_spark.scoring.bm25` under global
+stats) and the search-template config as a dict
+(:func:`..search_config.load_config`).
 
 * :func:`score_blocks` — the one pruning routine: the AND doc-range skip,
   witness-block θ, block-max WAND block skipping, decode and score;
@@ -16,6 +18,10 @@ and in the shard daemon. Callers pass BM25 in as a ``score`` callable
   :func:`should_sum` — dis_max over each original term's expansions, the
   boosted should-sum over fields and terms and the matched-term count
   (the BM25 part of ``search``);
+* :func:`function_score` — ``search``'s phrase tiers, saturation, static
+  prior, exact bonus and recency over its candidates' doc values;
+* :func:`phrase_docs` — the positional phrase chain over packed
+  (doc_id, pos) keys (:data:`POS_SHIFT`);
 * :func:`decode_blocks` — a term's block payloads -> (doc_ids, tfs, dls);
 * :func:`theta_blocks` / :func:`kth_score` — the θ-witness blocks of a term
   and its θ_t;
@@ -352,3 +358,48 @@ def should_sum(scored: dict, boosts: dict, origs: dict, *, need: int = 1,
         nmatch += m_buf
     cand = np.flatnonzero(nmatch >= need)
     return space.ids(cand), bm[cand], nmatch[cand]
+
+
+def function_score(bm: np.ndarray, is_exact: np.ndarray, prior: np.ndarray,
+                   ts: np.ndarray, cfg: dict, *,
+                   in_phrase: np.ndarray | None = None,
+                   now: float | None = None) -> np.ndarray:
+    """``search``'s final score per candidate (points_search.json:108-159):
+    ``bm`` is :func:`should_sum`'s bool score, ``prior`` / ``ts`` the doc
+    values, ``cfg`` the search-template config. ``in_phrase`` adds the
+    constant phrase tiers to the bool score before the saturation; then
+    the exact bonus, the weighted prior and, with ``now``, the gaussian
+    recency. One expression order, so every caller's scores agree bit for
+    bit."""
+    if in_phrase is not None:
+        bm = bm + cfg["tier_exact"] * is_exact
+        bm = bm + cfg["tier_phrase"] * in_phrase
+    score = (cfg["w_text"] * bm / (bm + cfg["k_text"])
+             + cfg["w_exact"] * is_exact)
+    score = score + cfg["w_prior"] * prior
+    if now is not None:
+        x = np.maximum(0.0, now - ts - cfg["rec_offset"])
+        score = score + cfg["w_rec"] * np.exp(
+            -0.5 * (x / cfg["rec_scale"]) ** 2)
+    return score
+
+
+# (doc_id, pos) pairs are packed into one int64 key for the flat phrase
+# chain: doc_id * 2^22 + pos. 2^22 positions per turn is far above any
+# real dl, and 10^12 docs * 2^22 still fits int64.
+POS_SHIFT = 1 << 22
+
+
+def phrase_docs(steps: list) -> np.ndarray:
+    """Sorted doc ids where a phrase occurs: ``steps[i]`` holds the sorted
+    packed (doc_id, pos) keys of the phrase's i-th term (for a phrase
+    prefix, the last step is every expansion's keys merged). A key
+    c = doc·POS_SHIFT + p of ``steps[0]`` survives step i iff c + i is in
+    ``steps[i]``; the pack keeps doc boundaries intact because positions
+    never reach the shift."""
+    cand = steps[0]
+    for i, keys in enumerate(steps[1:], start=1):
+        if cand.size == 0:
+            break
+        cand = cand[in_sorted(cand + i, keys)]
+    return np.unique(cand // POS_SHIFT)

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from .fuzzy import auto_fuzz
+
 
 @dataclass(frozen=True)
 class SearchParams:
@@ -38,5 +40,4 @@ class SearchParams:
     phrase_tiers: bool = False    # +12 exact keyword, +6 contained phrase
 
     def auto_fuzz(self, term: str) -> int:
-        n = len(term)
-        return 0 if n <= 2 else (1 if n <= 5 else 2)
+        return auto_fuzz(term)

@@ -5,17 +5,16 @@ templates serve): index segments are built distributed, then any number of
 stateless searchers memory-map them for millisecond point queries.
 
 No Spark session involved: pyarrow datasets with bucket/term predicate
-pushdown, then the engine's own numpy code — :func:`kernel.score_blocks`
-(witness θ, block-max WAND skipping, decode, score) over this searcher as
-a block source, :func:`kernel.rank` (accumulate, AND filter, dis_max,
-top-k), :func:`kernel.should_sum` (the BM25 part of ``search``) and
-:func:`scoring.bm25`, the functions the engine's per-shard Arrow task
-calls. Corpus statistics come from :func:`engine.open_index`. Results are
-EXACTLY the engine's (same blocks, same float64 math, same summation
-order, same tie-break) — asserted in tests. Bare BM25 and dis_max share
-one ranking path (:meth:`LocalSearcher._rank`); ``search`` combines its
-expansions through :func:`kernel.should_sum` like the engine's shard
-task.
+pushdown, then the code the engine's per-shard Arrow task runs —
+:func:`kernel.score_blocks` over this searcher as a block source,
+:func:`kernel.rank`, and for ``search`` the engine's expansions and
+pyarrow readers (behind this searcher's LRU caches),
+:func:`kernel.should_sum`, :func:`kernel.function_score` and
+:func:`kernel.phrase_docs`. Corpus statistics come from
+:func:`engine.open_index`, query-side tunables from
+``search_config.json``. Results are EXACTLY the engine's (same blocks,
+same float64 math, same summation order, same tie-break) — asserted in
+tests.
 
 At 100 TB this is the fan-out pattern: each searcher owns a subset of the
 live segments, which hold disjoint doc-id ranges, and scores with the
@@ -38,8 +37,9 @@ import pyarrow.dataset as ds
 from .. import analysis as A
 from .. import scoring as S
 from ..indexing.build import FIELDS, bucket_of
+from . import engine as E
 from . import kernel as K
-from .engine import MAX_EXPANSIONS, TEXT_FIELD, open_index, term_df
+from .engine import TEXT_FIELD, open_index, term_df
 
 
 class _LRU(OrderedDict):
@@ -106,11 +106,10 @@ class LocalSearcher:
         # reindex; absent file == code defaults (search_config.py)
         from .search_config import load_config
         self.cfg = load_config(out_dir)
-        self._postings = [ds.dataset(os.path.join(sd, "postings"),
-                                     partitioning="hive")
-                          for sd in self.seg_dirs]
-        self._stores = [ds.dataset(os.path.join(sd, "doc_store"))
-                        for sd in self.seg_dirs]
+        self._postings = E.datasets(self.seg_dirs, "postings")
+        self._stores = E.datasets(self.seg_dirs, "doc_store")
+        self._positions = (E.datasets(self.seg_dirs, "pos_partial")
+                           if meta.with_positions else None)
         # dictionary structures are GLOBAL (all live segments) even for a
         # doc shard: expansions and document frequencies are corpus-level
         # facts — a shard computing df from its own postings would score
@@ -119,9 +118,7 @@ class LocalSearcher:
         self._is_shard = segments is not None and set(
             segments) != set(live)
         self._live_seg_dirs = meta.seg_dirs
-        self._term_dicts = [ds.dataset(os.path.join(sd, "term_dict"),
-                                       partitioning="hive")
-                            for sd in meta.seg_dirs]
+        self._term_dicts = E.datasets(meta.seg_dirs, "term_dict")
         self._term_cache_cap = 4096
         # term -> decoded (ids, tfs, dls) / packed (doc_id, pos) keys —
         # true LRUs (not admission caps) so late-arriving hot terms are
@@ -419,64 +416,30 @@ class LocalSearcher:
                 for d, x in zip(ids, scores)]
         return self._hydrate(rows) if hydrate else rows
 
-    # (doc_id, pos) pairs are packed into one int64 key for the flat-numpy
-    # phrase chain: doc_id * 2^22 + pos. 2^22 positions per turn is far
-    # above any real dl, and 10^12 docs * 2^22 still fits int64.
-    _POS_SHIFT = 1 << 22
-
     def _pos_keys(self, terms: list[str]) -> dict:
-        """term -> sorted packed (doc_id, pos) keys, merged over segments —
-        one vectorized pass per segment, never per-doc Python. Hot phrase
-        terms are LRU-cached like the postings term cache."""
+        """term -> sorted packed (doc_id, pos) keys over this searcher's
+        segments (:func:`engine.pos_keys`). Hot phrase terms are
+        LRU-cached like the postings term cache."""
         out = {}
         for t in set(terms):
             hit = self._pos_cache.get(t)
             if hit is not None:
                 out[t] = hit
         uniq = sorted(set(terms) - out.keys())
-        if not uniq:
-            return out
-        buckets = sorted({bucket_of(t, self.n_buckets) for t in uniq})
-        filt = (ds.field("bucket").isin(buckets)
-                & (ds.field("field") == FIELDS["text"])
-                & ds.field("term").isin(uniq))
-        parts: dict[str, list] = {t: [] for t in uniq}
-        for sd in self.seg_dirs:
-            d = ds.dataset(os.path.join(sd, "pos_partial"),
-                           partitioning="hive")
-            tbl = d.to_table(columns=["doc_id", "term", "pos"], filter=filt)
-            docs = tbl.column("doc_id").to_numpy().astype(np.int64)
-            poss = tbl.column("pos").to_numpy().astype(np.int64)
-            # hard error, not assert: the packed-key invariant must survive
-            # `python -O` — a silently wrapped key would corrupt doc
-            # boundaries and return wrong phrase matches
-            if poss.size and int(poss.max()) >= self._POS_SHIFT - 64:
-                raise ValueError(
-                    f"token position {int(poss.max())} exceeds the packed-"
-                    f"key capacity ({self._POS_SHIFT - 64}); re-index with "
-                    "position capping for multi-million-token turns")
-            keys = docs * self._POS_SHIFT + poss
-            # per-term masks in Arrow compute — never materialize millions
-            # of Python string objects for the term column
-            import pyarrow.compute as pc
-            tcol = tbl.column("term")
-            for t in uniq:
-                m = pc.equal(tcol, t).combine_chunks() \
-                    .to_numpy(zero_copy_only=False)
-                parts[t].append(keys[m])
-        for t, p in parts.items():
-            out[t] = (np.sort(np.concatenate(p)) if p
-                      else np.empty(0, dtype=np.int64))
-            self._pos_cache.put(t, out[t])
+        if uniq:
+            if self._positions is None:
+                raise ValueError("index built without positions")
+            for t, keys in E.pos_keys(self._positions, self.n_buckets,
+                                      uniq).items():
+                out[t] = keys
+                self._pos_cache.put(t, keys)
         return out
 
     def phrase_match(self, phrase: str, *, hydrate: bool = False):
         """Positional phrase match over the same ``pos_partial`` table the
-        Spark engine reads — exact parity with ``engine.phrase_match``.
-        Flat sorted-key chain: candidate key k (= doc*S + p) survives step i
-        iff k + i is among term_i's keys; the pack keeps doc boundaries
-        intact because positions never reach the shift. Returns rows sorted
-        by doc_id asc."""
+        Spark engine reads — exact parity with ``engine.phrase_match``,
+        through the flat packed-key chain :func:`kernel.phrase_docs`.
+        Returns rows sorted by doc_id asc."""
         terms = A.py_tokens(phrase)
         if not terms:
             return []
@@ -487,12 +450,7 @@ class LocalSearcher:
         doc_ids = self._phrase_cache.get(ck)
         if doc_ids is None:
             keys = self._pos_keys(terms)
-            cand = keys[terms[0]]
-            for i, t in enumerate(terms[1:], start=1):
-                if cand.size == 0:
-                    break
-                cand = cand[K.in_sorted(cand + i, keys[t])]
-            doc_ids = np.unique(cand // self._POS_SHIFT)
+            doc_ids = K.phrase_docs([keys[t] for t in terms])
             self._phrase_cache.put(ck, doc_ids)
         out = [{"doc_id": int(d)} for d in doc_ids]
         return self._hydrate(out) if hydrate else out
@@ -516,20 +474,8 @@ class LocalSearcher:
         doc_ids = self._phrase_cache.get(ck)
         if doc_ids is None:
             keys = self._pos_keys(list(dict.fromkeys(exact)) + expansions)
-            last = np.sort(np.concatenate(
-                [keys[e] for e in expansions])) if expansions \
-                else np.empty(0, dtype=np.int64)
-            if not exact:     # single-term: any expansion occurrence
-                doc_ids = np.unique(last // self._POS_SHIFT)
-            else:
-                cand = keys[exact[0]]
-                for i, t in enumerate(exact[1:], start=1):
-                    if cand.size == 0:
-                        break
-                    cand = cand[K.in_sorted(cand + i, keys[t])]
-                if cand.size:
-                    cand = cand[K.in_sorted(cand + (len(terms) - 1), last)]
-                doc_ids = np.unique(cand // self._POS_SHIFT)
+            last = np.sort(np.concatenate([keys[e] for e in expansions]))
+            doc_ids = K.phrase_docs([keys[t] for t in exact] + [last])
             self._phrase_cache.put(ck, doc_ids)
         out = [{"doc_id": int(d)} for d in doc_ids]
         return self._hydrate(out) if hydrate else out
@@ -543,10 +489,10 @@ class LocalSearcher:
         serving surface (SearchTemplates.java:39-44,
         points_search.json:28-158), not just the bare BM25 core.
 
-        function_score reads the numeric doc values (prior, ts) of every
-        candidate in one vectorized gather; stored fields are read for
-        the k winners only — never the whole candidate set, never the
-        whole store.
+        function_score (:func:`kernel.function_score`) reads the numeric
+        doc values (prior, ts) of every candidate in one vectorized
+        gather; stored fields are read for the k winners only — never the
+        whole candidate set, never the whole store.
         """
         q_terms = A.py_tokens(params.query)
         q_kw = " ".join(q_terms)
@@ -556,8 +502,9 @@ class LocalSearcher:
             allowed = self._filter_ids(params.filter_role, params.filter_tool)
 
         if params.exact:
-            # keyword-equality constant score 12, prior tiebreak — the
-            # kw_hash filter row-group-prunes (doc_store is kw_hash-sorted)
+            # keyword-equality constant score tier_exact, prior tiebreak —
+            # the kw_hash filter row-group-prunes (doc_store is
+            # kw_hash-sorted)
             filt = ds.field("kw_hash") == q_kw_hash
             parts = [st.to_table(columns=["doc_id", "prior"], filter=filt)
                      for st in self._stores]
@@ -609,31 +556,22 @@ class LocalSearcher:
         if g_ids.size == 0:
             return []
 
-        exact_ids = self._kw_ids(q_kw_hash)
-        is_exact = K.in_sorted(g_ids, exact_ids)
-        cfg = self.cfg
+        in_phrase = None
         if params.phrase_tiers:
-            # constant_score tiers inside the bool score, pre-saturation
-            bm = bm + cfg["tier_exact"] * is_exact
             contained = np.fromiter(
                 (r["doc_id"] for r in self.phrase_match(params.query)),
                 dtype=np.int64)
-            bm = bm + cfg["tier_phrase"] * K.in_sorted(g_ids, contained)
-
-        base = (cfg["w_text"] * bm / (bm + cfg["k_text"])
-                + cfg["w_exact"] * is_exact)
+            in_phrase = K.in_sorted(g_ids, contained)
         # function_score add-ons from the numeric doc values — one
         # vectorized gather regardless of candidate-set size (the earlier
         # survivor-bound point reads degenerated on flat-scored hot queries
         # where prior/recency decide the ranking for ~every candidate)
         ix = (g_ids - dv_ids[0]) if self._dv_dense \
             else np.searchsorted(dv_ids, g_ids)
-        score = base + cfg["w_prior"] * dv_prior[ix]
-        if params.recency:
-            x = np.maximum(0.0, params.now_epoch - dv_ts[ix]
-                           - cfg["rec_offset"])
-            score = score + cfg["w_rec"] * np.exp(
-                -0.5 * (x / cfg["rec_scale"]) ** 2)
+        score = K.function_score(
+            bm, K.in_sorted(g_ids, self._kw_ids(q_kw_hash)), dv_prior[ix],
+            dv_ts[ix], self.cfg, in_phrase=in_phrase,
+            now=params.now_epoch if params.recency else None)
         rows = [{"doc_id": int(g_ids[i]), "score": float(score[i]),
                  "nmatch": int(nmatch[i])}
                 for i in K.topk(g_ids, score, params.k)]
@@ -650,20 +588,8 @@ class LocalSearcher:
 
     def _doc_values_locked(self):
         if self._doc_values_cache is None:
-            ids_p, pr_p, ts_p = [], [], []
-            for st in self._stores:
-                tbl = st.to_table(columns=["doc_id", "prior", "ts"])
-                unit = tbl.schema.field("ts").type.unit
-                div = {"s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9}[unit]
-                ids_p.append(tbl.column("doc_id").to_numpy())
-                pr_p.append(tbl.column("prior").to_numpy())
-                ts_p.append((tbl.column("ts").cast(pa.int64()).to_numpy()
-                             // div).astype(np.float64))
-            ids = np.concatenate(ids_p)
-            o = np.argsort(ids)
-            ids = ids[o]
-            self._doc_values_cache = (ids, np.concatenate(pr_p)[o],
-                                      np.concatenate(ts_p)[o])
+            self._doc_values_cache = E.doc_values(self._stores)
+            ids = self._doc_values_cache[0]
             self._dv_dense = bool(
                 ids.size > 0 and int(ids[-1]) - int(ids[0]) == ids.size - 1)
         return self._doc_values_cache
@@ -687,12 +613,7 @@ class LocalSearcher:
             filt = ds.field("doc_id").isin(missing)
             for st in self._stores:
                 tbl = st.to_table(columns=self._DOC_COLS, filter=filt)
-                # unit-aware epoch seconds, floor-truncated exactly like
-                # Spark's unix_timestamp()
-                unit = tbl.schema.field("ts").type.unit
-                div = {"s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9}[unit]
-                ts_epoch = (tbl.column("ts").cast(pa.int64()).to_numpy()
-                            // div).astype(np.float64)
+                ts_epoch = E.epoch_seconds(tbl.column("ts"))
                 rows = tbl.to_pylist()
                 for i, r in enumerate(rows):
                     r["ts_epoch"] = float(ts_epoch[i])
@@ -718,23 +639,13 @@ class LocalSearcher:
     def _ids_where(self, key: tuple, filt) -> np.ndarray:
         """Sorted doc_id array matching a doc_store predicate, cached."""
         hit = self._filter_cache.get(key)
-        if hit is not None:
-            return hit
-        parts = [st.to_table(columns=["doc_id"], filter=filt)
-                 .column("doc_id").to_numpy() for st in self._stores]
-        ids = np.sort(np.concatenate(parts)) if parts \
-            else np.empty(0, dtype=np.int64)
-        self._filter_cache.put(key, ids)
-        return ids
+        if hit is None:
+            hit = E.doc_ids_where(self._stores, filt)
+            self._filter_cache.put(key, hit)
+        return hit
 
     def _filter_ids(self, role: str | None, tool: str | None) -> np.ndarray:
-        filt = None
-        if role is not None:
-            filt = ds.field("role") == role
-        if tool is not None:
-            f2 = ds.field("tool") == tool
-            filt = f2 if filt is None else (filt & f2)
-        return self._ids_where(("rt", role, tool), filt)
+        return self._ids_where(("rt", role, tool), E.meta_filter(role, tool))
 
     def _kw_ids(self, kw_hash: str) -> np.ndarray:
         """doc_ids whose normalized keyword equals the query's (row-group
@@ -744,66 +655,27 @@ class LocalSearcher:
 
     # -- dictionary expansion (prefix / fuzzy), identical to the engine ------
 
-    def _dict_arrays(self, field_ids: tuple, filt) -> "pa.ChunkedArray":
-        """Term column slices matching a dataset filter, as Arrow arrays
-        (never materialized to Python until after all vectorized prunes)."""
-        parts = []
-        for td in self._term_dicts:
-            f = ds.field("field").isin(list(field_ids))
-            tbl = td.to_table(columns=["term"],
-                              filter=f if filt is None else (f & filt))
-            parts.append(tbl.column("term"))
-        return pa.chunked_array([c for p in parts for c in p.chunks]
-                                or [pa.array([], type=pa.string())])
-
     def expand_prefix(self, prefix: str,
                       field_ids: tuple = (0,)) -> list[str]:
-        """Prefix expansion over the queried fields' vocabulary — same
-        ordering + MAX_EXPANSIONS cap as ``engine.expand_prefix``. The term
-        RANGE filter row-group-prunes the dictionary scan (term_dict is
-        (field, term)-sorted with small row groups); results are cached."""
+        """Prefix expansion over the queried fields' vocabulary of every
+        live segment (:func:`engine.expand_prefix`), cached."""
         key = ("pfx", prefix, field_ids)
         hit = self._filter_cache.get(key)
-        if hit is not None:
-            return hit
-        hi = prefix[:-1] + chr(ord(prefix[-1]) + 1) if prefix else "￿"
-        filt = (ds.field("term") >= prefix) & (ds.field("term") < hi)
-        terms = self._dict_arrays(field_ids, filt).to_pylist()
-        out = sorted(set(terms))[:MAX_EXPANSIONS]
-        self._filter_cache.put(key, out)
-        return out
+        if hit is None:
+            hit = E.expand_prefix(self._term_dicts, prefix, field_ids)
+            self._filter_cache.put(key, hit)
+        return hit
 
     def expand_fuzzy(self, term: str, max_ed: int,
                      field_ids: tuple = (0,)) -> list[str]:
-        """AUTO fuzzy expansion with the same sound blocking as the engine
-        (length band + pigeonhole segments, then banded Levenshtein). All
-        pre-Levenshtein pruning runs vectorized in Arrow compute — the
-        Python edit-distance only ever sees the blocked candidate set."""
-        import pyarrow.compute as pc
-        from . import fuzzy as FZ
-        if max_ed == 0:
-            return [term]
+        """AUTO fuzzy expansion over the queried fields' vocabulary of every
+        live segment (:func:`engine.expand_fuzzy`), cached."""
         key = ("fz", term, max_ed, field_ids)
         hit = self._filter_cache.get(key)
-        if hit is not None:
-            return hit
-        arr = self._dict_arrays(field_ids, None)
-        n = len(term)
-        ln = pc.utf8_length(arr)
-        mask = pc.and_(pc.greater_equal(ln, n - max_ed),
-                       pc.less_equal(ln, n + max_ed))
-        segs = FZ.pigeonhole_segments(term, max_ed)
-        if len(segs) == max_ed + 1:
-            block = pc.starts_with(arr, pattern=segs[0])
-            block = pc.or_(block, pc.ends_with(arr, pattern=segs[-1]))
-            for s in segs[1:-1]:
-                block = pc.or_(block, pc.match_substring(arr, pattern=s))
-            mask = pc.and_(mask, block)
-        cands = sorted(set(pc.filter(arr, mask).to_pylist()))
-        out = [t for t in cands if FZ.lev_leq(t, term, max_ed)]
-        out = out[:MAX_EXPANSIONS] or [term]
-        self._filter_cache.put(key, out)
-        return out
+        if hit is None:
+            hit = E.expand_fuzzy(self._term_dicts, term, max_ed, field_ids)
+            self._filter_cache.put(key, hit)
+        return hit
 
 
 class ShardedSearcher:

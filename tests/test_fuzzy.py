@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import random
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 from pyspark.sql import functions as F
 
@@ -32,13 +34,31 @@ def test_pigeonhole_block_is_sound_randomized():
                 c.insert(rnd.randrange(len(c) + 1), rnd.choice(alphabet))
         cand = "".join(c)
         if cand and FZ.lev_leq(cand, t, ed):
-            assert FZ.py_block(t, ed)(cand), (t, cand, ed)
+            assert FZ.block_mask(pa.chunked_array([[cand]]), t,
+                                 ed)[0].as_py(), (t, cand, ed)
 
 
 def test_segments_cover_term():
     for t in ["spak", "executor", "ab", "abcdefg"]:
         for ed in (1, 2):
             assert "".join(FZ.pigeonhole_segments(t, ed)) == t
+
+
+def test_block_mask_cases():
+    """The length band always applies; the segment filter only when the
+    term has ed + 1 segments. "executor" at ed 2 splits into exe|cut|or:
+    a candidate passes on a kept prefix, a kept suffix or a kept middle
+    segment, and fails when every segment is edited."""
+    def passes(cands, term, ed):
+        return FZ.block_mask(pa.chunked_array([cands], pa.string()), term,
+                             ed).to_pylist()
+    assert passes(["exeXXXXX", "XXXXXXor", "XXcutXXX", "XXXXXXXX"],
+                  "executor", 2) == [True, True, True, False]
+    # outside the length band, whatever the segments
+    assert passes(["executorXXX", "exec"], "executor", 2) == [False, False]
+    # "ab" has too few characters for 3 segments: band only
+    assert passes(["zz", "zzzzz"], "ab", 2) == [True, False]
+    assert passes([], "spak", 1) == []
 
 
 @pytest.fixture(scope="module")
@@ -54,8 +74,8 @@ def test_engine_blocked_expansion_lossless(spark, index_dir, term):
     """Blocked expansion == unblocked expansion on a real vocabulary."""
     idx = E.open_index(index_dir)
     ed = FZ.auto_fuzz(term)
-    got = E.expand_fuzzy(spark, idx, term, ed)
-    td = E._term_dict_all(spark, idx).where(F.col("field") == 0)
+    got = E.expand_fuzzy(E.datasets(idx.seg_dirs, "term_dict"), term, ed)
+    td = E._union_read(spark, idx, "term_dict").where(F.col("field") == 0)
     want = sorted(
         r["term"] for r in
         td.where(F.levenshtein(F.col("term"), F.lit(term)) <= ed)
@@ -63,15 +83,14 @@ def test_engine_blocked_expansion_lossless(spark, index_dir, term):
     assert got == want
 
 
-def test_engine_blocking_prunes_dictionary(spark, index_dir):
+def test_engine_blocking_prunes_dictionary(index_dir):
     """The block filter must cut the scanned dictionary slice well below
     the plain length band (the ~20x claim, scaled to a small test vocab)."""
     idx = E.open_index(index_dir)
     term, ed = "spak", 1
-    td = (E._term_dict_all(spark, idx)
-          .where(F.col("field") == 0)
-          .where((F.length("term") >= len(term) - ed)
-                 & (F.length("term") <= len(term) + ed)))
-    banded = td.count()
-    blocked = td.where(FZ.block_col(term, ed, F.col("term"))).count()
+    vocab = E._dict_terms(E.datasets(idx.seg_dirs, "term_dict"), (0,))
+    ln = pc.utf8_length(vocab)
+    banded = pc.sum(pc.and_(pc.greater_equal(ln, len(term) - ed),
+                            pc.less_equal(ln, len(term) + ed))).as_py()
+    blocked = pc.sum(FZ.block_mask(vocab, term, ed)).as_py()
     assert blocked < banded / 3, (blocked, banded)

@@ -225,17 +225,36 @@ def test_pruned_topk_runs_no_extra_jobs(spark, skewed_index):
 
 def test_engine_query_job_floor(spark, skewed_index):
     """A query runs only the jobs its own plan needs: every table is read
-    with its declared schema (no inference job) and the global df is a
-    pyarrow lookup outside Spark, so a hydrated ``bm25_topk`` runs at most
-    4 jobs, an un-hydrated one at most 2, and reading a table's schema
-    none."""
+    with its declared schema (no inference job), the global df and the
+    prefix / fuzzy expansions are pyarrow lookups outside Spark, and
+    ``search`` ranks inside its shard tasks. So a hydrated ``bm25_topk``
+    runs at most 4 jobs and an un-hydrated one at most 2; a hydrated
+    ``search`` (multi-field with phrase tiers and recency, prefix or
+    fuzzy) and ``phrase_prefix_match`` at most 4; an expansion and reading
+    a table's schema none."""
+    from planet_search_spark.queries.params import SearchParams
+
     def topk(hydrate):
         return lambda: E.bm25_topk(spark, skewed_index, "the zz", k=5,
                                    hydrate=hydrate).collect()
-    for hydrate, most in ((True, 4), (False, 2)):
-        _jobs(spark, topk(hydrate))   # first-run costs out of the count
-        assert _jobs(spark, topk(hydrate)) <= most, hydrate
+
+    def search(**kw):
+        return lambda: E.search(spark, skewed_index,
+                                SearchParams(k=5, **kw)).collect()
+    for name, run, most in (
+            ("hydrated", topk(True), 4), ("bare", topk(False), 2),
+            ("tiers", search(query="the zz", multifield=True,
+                             phrase_tiers=True, recency=True), 4),
+            ("prefix", search(query="the w1", prefix=True), 4),
+            ("fuzzy", search(query="thx w10", fuzzy=True), 4),
+            ("phrase_prefix", lambda: E.phrase_prefix_match(
+                spark, skewed_index, "the z").collect(), 4)):
+        _jobs(spark, run)             # first-run costs out of the count
+        assert _jobs(spark, run) <= most, name
     idx = E.open_index(skewed_index)
+    term_dicts = E.datasets(idx.seg_dirs, "term_dict")
+    assert _jobs(spark, lambda: E.expand_prefix(term_dicts, "w1")) == 0
+    assert _jobs(spark, lambda: E.expand_fuzzy(term_dicts, "w10", 1)) == 0
     for table in ("postings", "term_dict", "doc_store", "pos_partial"):
         assert _jobs(spark, lambda: E._union_read(spark, idx, table).schema
                      ) == 0, table
@@ -267,7 +286,9 @@ MULTI_SHARD_CASES = {
         ("search", "out of memory", _TIERS),
         ("search", "spark merg", {"prefix": True}),
         ("search", "spak timout", {"fuzzy": True}),
-        ("search", "error timeout", {"operator": "and"})],
+        ("search", "error timeout", {"operator": "and"}),
+        ("search", "error timeout", {"filter_role": "user",
+                                     "phrase_tiers": True})],
 }
 
 
@@ -277,7 +298,8 @@ def test_multi_shard_matches_one_shard(spark, request, monkeypatch, which):
     ≥3 shards run, every query returns the one-shard doc ids and
     bit-identical scores — also pruned, where each shard takes its own θ
     and blocks straddling shards are ranked in both, and for ``search``,
-    whose shard tasks emit every candidate."""
+    whose shard tasks rank by function_score over their own doc values
+    and phrase positions."""
     from planet_search_spark.queries.params import SearchParams
     out = request.getfixturevalue(which)
 

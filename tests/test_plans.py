@@ -91,26 +91,29 @@ def _subtree(plan: str, marker: str) -> list[str]:
 
 
 def test_search_plan_is_one_shard_task(spark, small_index, monkeypatch):
-    """``search`` scores through the same per-shard Arrow task as the bare
-    BM25 paths: one ``MapInArrow`` over ONE block Exchange keyed by shard
-    (a single partition for a one-shard query), no JVM aggregation and no
-    driver-side Python-list relation of expansion pairs."""
+    """``search`` ranks inside the same per-shard Arrow task as the bare
+    BM25 paths, phrase tiers included: one ``MapInArrow`` over ONE block
+    Exchange keyed by shard (a single partition for a one-shard query), no
+    JVM aggregation, no driver-side Python-list relation of expansion
+    pairs, and no join but the hydration broadcast."""
     from planet_search_spark.queries.params import SearchParams
 
-    def plan():
+    def plan(tiers):
         return _plan(E.search(spark, small_index, SearchParams(
             query="error time", multifield=True, prefix=True,
-            phrase_tiers=False, k=5)))
-    one = plan()
+            phrase_tiers=tiers, recency=tiers, k=5)))
+    one = [plan(False), plan(True)]
     monkeypatch.setattr(E, "_SHARD_POSTINGS", 1)
-    many = plan()
-    for p, key in ((one, "Exchange SinglePartition"),
-                   (many, "Exchange hashpartitioning(shard")):
+    many = [plan(False), plan(True)]
+    for p, key in ([(p, "Exchange SinglePartition") for p in one]
+                   + [(p, "Exchange hashpartitioning(shard") for p in many]):
         assert p.count("MapInArrow") == 1, p
         assert "HashAggregate" not in p and "ExistingRDD" not in p, p
         exchanges = [ln for ln in _subtree(p, "MapInArrow")
                      if "Exchange" in ln]
         assert len(exchanges) == 1 and key in exchanges[0], p
+        joins = [ln for ln in p.splitlines() if "Join" in ln]
+        assert len(joins) == 1 and "BroadcastHashJoin" in joins[0], p
 
 
 def test_hydrated_plans_have_no_range_shuffle(spark, small_index):
@@ -182,10 +185,10 @@ def test_dismax_multifield_plan_shape(spark, small_index):
 
 def test_search_plan_hydrates_strings_above_topk_only(spark, small_index):
     """Round-3 VERDICT #1 done-criterion: below the top-k, the full
-    search() plan must touch NO stored string column except kw_hash — the
-    candidate-set join reads the narrow (doc_id, prior, ts, kw_hash)
-    doc-values projection; conv_id/role/tool hydrate only the k winners
-    via a broadcast join ABOVE the TakeOrderedAndProject."""
+    search() plan must touch NO stored string column — the shard tasks
+    read their doc values, filter sets and phrase positions themselves and
+    emit ≤ k (doc_id, score, nmatch) rows; conv_id/role/tool hydrate only
+    the k winners via a broadcast join ABOVE the TakeOrderedAndProject."""
     from planet_search_spark.queries.params import SearchParams
     df = E.search(spark, small_index,
                   SearchParams(query="error timeout", multifield=True,
@@ -193,7 +196,7 @@ def test_search_plan_hydrates_strings_above_topk_only(spark, small_index):
     plan = _plan(df)
     assert "TakeOrderedAndProject" in plan
     head, below = plan.split("TakeOrderedAndProject", 1)
-    # subtree below the top-k heap: scoring + narrow doc values only
+    # subtree below the top-k heap: the block scan and the shard tasks
     assert "conv_id" not in below
     # winners hydrate via a broadcast join above the heap
     assert "conv_id" in head

@@ -74,6 +74,47 @@ def test_update_templates_field_boosts_reach_dismax(idx):
         os.remove(os.path.join(idx, "search_config.json"))
 
 
+def test_engine_ranks_with_pushed_config_like_reader(spark, idx):
+    """The engine reads ``search_config.json`` wherever the reader does:
+    after a push of non-default weights, tiers, recency scale and field
+    boosts, engine ``search`` (also its exact path) and default-boost
+    ``dismax_topk`` return the reader's (doc_id, score) lists, in order
+    and bit for bit — and those differ from the default-config ranking."""
+    from planet_search_spark.queries import engine as E
+    text = synthesize_transcripts(spark, n_convs=20, seed=5).first()["text"]
+    cases = [SearchParams(query="merge window", recency=True),
+             SearchParams(query="merge window", multifield=True,
+                          phrase_tiers=True, recency=True),
+             SearchParams(query="assistant search", multifield=True),
+             SearchParams(query=text, exact=True)]
+
+    def engine():
+        out = [[(r.doc_id, r.score) for r in
+                E.search(spark, idx, p).collect()] for p in cases]
+        return out + [[(r.doc_id, r.score) for r in E.dismax_topk(
+            spark, idx, "assistant search", k=10).collect()]]
+
+    def reader():
+        srv = LocalSearcher(idx)
+        out = [[(r["doc_id"], r["score"]) for r in srv.search(p)]
+               for p in cases]
+        return out + [[(r["doc_id"], r["score"]) for r in
+                       srv.dismax_topk("assistant search", k=10)]]
+
+    before = engine()
+    update_templates(idx, {"w_prior": 100.0, "tier_exact": 20.0,
+                           "tier_phrase": 30.0, "rec_scale": 86400.0,
+                           "field_boosts": {"text": 1.0, "meta": 50.0}})
+    try:
+        got, want = engine(), reader()
+    finally:
+        os.remove(os.path.join(idx, "search_config.json"))
+    for case, g, w, b in zip(cases + ["dismax_topk"], got, want, before):
+        assert g == w and w, case
+        assert g != b, case
+    assert {s for _d, s in got[3]} == {20.0}
+
+
 def test_unknown_key_rejected(idx, tmp_path):
     with pytest.raises(ValueError, match="unknown search_config"):
         update_templates(idx, {"boost_typo": 2.0})
