@@ -20,6 +20,7 @@ import os as _os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import lazyzip
 from . import scoring as S
 from .queries.logical import _register
 from .queries.logical import with_global_rank as _with_rank
@@ -324,6 +325,7 @@ def _assign_batches(emb: DataFrame, cents_bc) -> DataFrame:
     spark = emb.sparkSession
 
     def assign(batches):
+        lazyzip.install()
         c = cents_bc.value                       # (k, D)
         cn = np.linalg.norm(c, axis=1)
         cn[cn == 0.0] = 1.0
@@ -349,6 +351,7 @@ def _lloyd_partials(emb: DataFrame, cents_bc) -> DataFrame:
     driver only ever sees the k*D aggregate."""
 
     def part(batches):
+        lazyzip.install()
         c = cents_bc.value                       # (k, D)
         k, d = c.shape
         cn = np.linalg.norm(c, axis=1)
@@ -467,6 +470,7 @@ def planted_embeddings(spark: SparkSession, n: int, *, dim: int = 32,
     centers_bc = spark.sparkContext.broadcast(centers)
 
     def gen(batches):
+        lazyzip.install()
         c = centers_bc.value
         for pdf in batches:
             ids = pdf["id"].to_numpy(dtype=np.int64)

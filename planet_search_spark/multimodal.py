@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import lazyzip
 from .queries.logical import _register
 
 META_SCHEMA = ("doc_id long, n_bytes long, width int, height int, "
@@ -60,6 +61,7 @@ def extract_metadata(df: DataFrame, payload_col: str = "payload",
     """Arrow-batched metadata extraction over a binary column (narrow map)."""
 
     def extract(batches):
+        lazyzip.install()
         for pdf in batches:
             payloads = pdf[payload_col]
             dims = [fake_dims(bytes(p)) for p in payloads]

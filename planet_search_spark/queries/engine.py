@@ -6,36 +6,38 @@ Read path (mirrors the ES search template execution, SURVEY.md §3.2):
 1. analyze the query string on the driver with the SAME frozen analyzer as
    the index side (``analysis.py_tokens`` — identity with the Spark-side
    expression is golden-tested);
-2. bucket-prune + term-filter the block table (partition pruning on
-   ``bucket=``, min/max row-group stats on ``term``), read with the
-   declared table schemas of :mod:`..indexing.layout` (no inference job).
-   The query terms' global df (:func:`term_df`; df is additive over
-   segments) and their prefix / fuzzy dictionary expansions
-   (:func:`expand_prefix`, :func:`expand_fuzzy`) are pyarrow lookups in
-   the calling process, the serving reader's own code, and run no Spark
-   job;
-3. tag each block with the doc-range shard(s) it overlaps and repartition
-   by shard — ES's shard-local top-k over doc ranges. The shard count
-   follows the query's posting mass (``_SHARD_POSTINGS``), so small
-   queries run one shard;
-4. one ``mapInArrow`` task per shard runs the serving reader's own code:
-   :func:`kernel.score_blocks` (witness θ, block skipping, the AND
-   doc-range skip, decode, :func:`scoring.bm25` under each field's corpus
-   stats and the global df), then one combinator. ``bm25_topk`` and
-   ``dismax_topk`` rank with :func:`kernel.rank` (accumulate, AND filter,
-   dis_max, top-k); ``search`` (:func:`_search_rank`) combines with
+2. look up the query terms' global df (:func:`term_df`; df is additive
+   over segments) and their prefix / fuzzy dictionary expansions
+   (:func:`expand_prefix`, :func:`expand_fuzzy`): pyarrow lookups in the
+   calling process, the serving reader's own code, and no Spark job;
+3. split the doc ids into doc-range shards — ES's shard-local top-k over
+   doc ranges. The shard count follows the query's posting mass
+   (``_SHARD_POSTINGS``), so small queries run one shard. The plan is
+   ``spark.range`` of the shard ids, one partition per shard, under one
+   ``mapInArrow``: nothing is scanned or exchanged in the JVM;
+4. each shard task reads its own blocks with pyarrow, opening only the
+   query terms' ``bucket=`` directories, in two phases
+   (:func:`block_source`): the metadata of the (field, term) blocks that
+   overlap its doc range, then the payloads of the blocks it keeps. It
+   runs the serving reader's own code: :func:`kernel.score_blocks`
+   (witness θ, block skipping, the AND doc-range skip, decode,
+   :func:`scoring.bm25` under each field's corpus stats and the global
+   df), then one combinator. ``bm25_topk`` and ``dismax_topk`` rank with
+   :func:`kernel.rank` (accumulate, AND filter, dis_max, top-k);
+   ``search`` (:func:`_search_rank`) combines with
    :func:`kernel.should_sum` (dis_max over each term's expansions, boosted
    should-sum, AND filter), reads the doc values, filter sets and phrase
    positions of its shard's doc range with the pyarrow readers below, and
    ranks by :func:`kernel.function_score` under the index's
-   ``search_config.json``. Every task emits ≤ k rows and one stats row;
-   dl ships inside the block, so scoring needs NO doc-stats join;
-5. the exact coordinator merge: ``orderBy(score desc, doc_id asc)
+   ``search_config.json``. dl ships inside the block, so scoring needs NO
+   doc-stats join;
+5. a hydrating task reads the stored fields of its ≤ k winners with one
+   doc_id point read (:func:`doc_fields`) and emits them in the hydrated
+   schema; every task emits ≤ k rows and one stats row;
+6. the exact coordinator merge: ``orderBy(score desc, doc_id asc)
    .limit(k)`` — Spark's TakeOrderedAndProject heap. It is exact for
    ``search`` too, because a doc's final score depends only on global
-   stats and the doc itself;
-6. a broadcast hydration join against doc_store for the k winners only,
-   ordered by one single-partition sort.
+   stats and the doc itself.
 
 Block-max WAND (the Lucene-side top-k pruning the reference gets for free,
 SURVEY.md §4 "Lucene-side (delegated)") runs inside each shard task; the
@@ -44,18 +46,18 @@ why θ is off under AND) are in :mod:`.kernel`. θ runs in every pruned
 shard task, on blocks the task already holds, so it costs no Spark job.
 Verified against the unpruned path in tests, also with several shards.
 
-A hydrated ``bm25_topk`` or ``search`` (prefix and fuzzy included) thus
-runs at most 4 Spark jobs (the ranking and hydration plan under AQE) and
-an un-hydrated ``bm25_topk`` at most 2; a test counts them.
+``bm25_topk`` (hydrated or not), ``dismax_topk`` and ``search`` (prefix
+and fuzzy included) thus run one Spark job each; a test counts them.
 """
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import math
 import os
 from dataclasses import dataclass
-from functools import partial
+from functools import cache, partial
 
 import numpy as np
 import pyarrow as pa
@@ -90,7 +92,7 @@ class IndexMeta:
     fields: dict         # field name -> {"n_docs": int, "sum_dl": int}
 
     @property
-    def seg_dir(self) -> str:  # single-segment convenience (tests, hydration)
+    def seg_dir(self) -> str:  # single-segment convenience (tests)
         return self.seg_dirs[0]
 
     def field_stats(self) -> dict:
@@ -150,15 +152,6 @@ def doc_store(spark: SparkSession, idx: IndexMeta) -> DataFrame:
     return _union_read(spark, idx, "doc_store")
 
 
-def _load_blocks(spark: SparkSession, idx: IndexMeta, terms: list[str],
-                 field_ids: tuple = (TEXT_FIELD,)) -> DataFrame:
-    buckets = sorted({bucket_of(t, idx.n_buckets) for t in terms})
-    return (_union_read(spark, idx, "postings")
-            .where(F.col("bucket").isin(buckets))   # directory pruning
-            .where(F.col("field").isin(list(field_ids)))
-            .where(F.col("term").isin(list(set(terms)))))
-
-
 def term_df(seg_dirs: list, n_buckets: int, terms, field_ids) -> dict:
     """(field_id, term) -> Σ df over the ``term_dict`` rows of ``seg_dirs``
     (df is additive over segments) of every term in ``terms`` that the
@@ -206,23 +199,161 @@ def _global_df(idx: IndexMeta, terms: list[str],
 MAX_EXPANSIONS = 200  # match_phrase_prefix cap, points_search.json:47
 
 
-def datasets(seg_dirs: list, table: str) -> list:
+def datasets(seg_dirs: list, table: str, buckets=None) -> list:
     """One pyarrow dataset per segment for ``table``, hive-partitioned
-    when its layout declares partition columns."""
-    part = "hive" if L.TABLES[table][1] else None
-    return [ds.dataset(os.path.join(sd, table), partitioning=part)
-            for sd in seg_dirs]
+    when its layout declares partition columns. With ``buckets``, each
+    dataset holds only the files of those ``bucket=`` directories (a query
+    opens just its terms' buckets, as :func:`term_df` does), and segments
+    with none are left out."""
+    parts = L.TABLES[table][1]
+    part = "hive" if parts else None
+    if buckets is None:
+        return [ds.dataset(os.path.join(sd, table), partitioning=part)
+                for sd in seg_dirs]
+    out = []
+    for sd in seg_dirs:
+        base = os.path.join(sd, table)
+        files = sorted(f for b in sorted(set(buckets)) for f in glob.glob(
+            os.path.join(base, *(f"{p}=*" for p in parts[:-1]),
+                         f"bucket={b}", "*.parquet")))
+        if files:
+            out.append(ds.dataset(files, partitioning=part,
+                                  partition_base_dir=base))
+    return out
 
 
 def _scan(tables: list, columns: list, filt=None,
           doc_range: tuple | None = None) -> list:
     """Per table, ``columns`` of the rows matching ``filt`` within
-    ``doc_range = (lo, hi)`` (doc_id row-group stats prune it)."""
+    ``doc_range = (lo, hi)``. doc_id row-group stats prune the range only
+    where a file's row groups hold narrow doc_id spans: ``pos_partial``'s
+    do, but every ``doc_store`` file spans almost its whole segment (see
+    :func:`doc_fields`)."""
     if doc_range is not None:
         rng = ((ds.field("doc_id") >= int(doc_range[0]))
                & (ds.field("doc_id") < int(doc_range[1])))
         filt = rng if filt is None else filt & rng
     return [t.to_table(columns=columns, filter=filt) for t in tables]
+
+
+def postings_filter(n_buckets: int, terms, field_id: int,
+                     doc_range: tuple | None = None):
+    """The terms' blocks of field ``field_id`` that overlap ``doc_range
+    = (lo, hi)``, directory-pruned on ``bucket``. pyarrow prunes no row
+    group on an ``isin``, so the read covers every row group of the
+    terms' bucket files."""
+    filt = (ds.field("bucket").isin(sorted({bucket_of(t, n_buckets)
+                                            for t in terms}))
+            & (ds.field("field") == int(field_id))
+            & ds.field("term").isin(sorted(set(terms))))
+    if doc_range is not None:
+        filt = (filt & (ds.field("last_doc") >= int(doc_range[0]))
+                & (ds.field("first_doc") < int(doc_range[1])))
+    return filt
+
+
+def block_meta(postings: list, n_buckets: int, terms, field_id: int,
+               doc_range: tuple | None = None) -> dict:
+    """term -> per-block METADATA (no payload bytes) of the ``terms`` that
+    have blocks of field ``field_id`` in the ``postings`` tables (overlapping
+    ``doc_range`` when given): numpy ``n`` (n_docs), ``max_tf`` /
+    ``min_dl`` (the ub pair), ``ms`` (stored max REAL score), ``first`` /
+    ``last`` (doc range), and the blocks' (table index, block_id) ``addr``
+    list. Phase 1 of the two-phase block read — the payload columns are
+    never read here (parquet is columnar), so the scan is KBs even for a
+    stopword."""
+    acc: dict[str, list] = {t: [] for t in terms}
+    cols = ["term", "n_docs", "max_tf", "min_dl", "max_score", "first_doc",
+            "last_doc", "block_id"]
+    filt = postings_filter(n_buckets, terms, field_id, doc_range)
+    for si, d in enumerate(postings):
+        tbl = d.to_table(columns=cols, filter=filt)
+        for t, *row in zip(*(tbl.column(c).to_pylist() for c in cols)):
+            acc[t].append((si, *row))
+    out = {}
+    for t, rows in acc.items():
+        if rows:
+            si, n, mt, md, ms, first, last, bid = zip(*rows)
+            out[t] = {"n": np.array(n, dtype=np.int64),
+                      "max_tf": np.array(mt, dtype=np.float64),
+                      "min_dl": np.array(md, dtype=np.float64),
+                      "ms": np.array(ms, dtype=np.float64),
+                      "first": np.array(first, dtype=np.int64),
+                      "last": np.array(last, dtype=np.int64),
+                      "addr": list(zip(si, bid))}
+    return out
+
+
+def fetch_payloads(postings: list, n_buckets: int, want: set, field_id: int,
+                   doc_range: tuple | None = None) -> dict:
+    """Phase 2: payload bytes for EXACTLY the requested block addresses —
+    {(table index, term, block_id) -> (docs_bin, tfs_bin, dls_bin)}. One
+    pushdown scan per involved table; the term×block_id isin cross
+    product may over-read a few blocks, filtered exactly client-side
+    (block_id is unique within a segment's (field, term) postings by
+    construction). ``doc_range`` is the one :func:`block_meta` read the
+    addresses under: it bounds the over-read to the range."""
+    by_seg: dict[int, tuple[set, set]] = {}
+    for (si, t, bid) in want:
+        ts, bids = by_seg.setdefault(si, (set(), set()))
+        ts.add(t)
+        bids.add(bid)
+    out = {}
+    for si, (ts, bids) in by_seg.items():
+        filt = (postings_filter(n_buckets, ts, field_id, doc_range)
+                & ds.field("block_id").isin(sorted(bids)))
+        tbl = postings[si].to_table(
+            columns=["term", "block_id", "docs_bin", "tfs_bin", "dls_bin"],
+            filter=filt)
+        for t, bid, db, tb, lb in zip(
+                tbl.column("term").to_pylist(),
+                tbl.column("block_id").to_pylist(),
+                tbl.column("docs_bin").to_pylist(),
+                tbl.column("tfs_bin").to_pylist(),
+                tbl.column("dls_bin").to_pylist()):
+            if (si, t, bid) in want:
+                out[(si, t, bid)] = (db, tb, lb)
+    return out
+
+
+def block_source(postings: list, n_buckets: int, terms, field_ids,
+                 doc_range: tuple | None = None) -> tuple:
+    """The ``postings`` tables as a :func:`kernel.score_blocks` block
+    source without its ``score``: ``(meta, fetch)`` over the fields
+    ``field_ids``. ``meta`` is :func:`block_meta` per (field, term);
+    ``fetch`` reads payloads with :func:`fetch_payloads` (one scan per
+    field and table per call) and keeps them, so a block fetched for θ is
+    not read again. The engine's shard task and the serving reader both
+    read their blocks through it."""
+    meta = {(fid, t): a for fid in field_ids
+            for t, a in block_meta(postings, n_buckets, terms, fid,
+                                   doc_range).items()}
+    pay: dict = {}
+
+    def fetch(sel: dict) -> dict:
+        addrs = {key: [meta[key]["addr"][i] for i in ix]
+                 for key, ix in sel.items()}
+        for fid in {f for f, _t in addrs}:
+            have = pay.setdefault(fid, {})
+            want = {(si, t, bid) for (f, t), ad in addrs.items()
+                    if f == fid for si, bid in ad}
+            have.update(fetch_payloads(postings, n_buckets,
+                                       want - have.keys(), fid, doc_range))
+        return {(fid, t): tuple(zip(*(pay[fid][(si, t, bid)]
+                                      for si, bid in ad)))
+                for (fid, t), ad in addrs.items()}
+
+    return meta, fetch
+
+
+def doc_fields(stores: list, doc_ids, columns: list) -> list:
+    """Per ``doc_store`` table, ``columns`` of the rows of ``doc_ids``:
+    the stored-fields point read. It reads the requested columns of every
+    file: the build coalesces its doc_id range partitions round-robin into
+    the write files, so each file spans almost its whole segment and no
+    doc_id statistic prunes one (a doc_id range filter measured slower)."""
+    return _scan(stores, columns,
+                 ds.field("doc_id").isin(sorted({int(d) for d in doc_ids})))
 
 
 def _dict_terms(term_dicts: list, field_ids, filt=None) -> pa.ChunkedArray:
@@ -329,139 +460,159 @@ def pos_keys(positions: list, n_buckets: int, terms,
             m = pc.equal(tbl.column("term"), t).combine_chunks() \
                 .to_numpy(zero_copy_only=False)
             parts[t].append(keys[m])
-    return {t: np.sort(np.concatenate(p)) for t, p in parts.items()}
+    return {t: np.sort(np.concatenate(p)) if p else np.empty(0, np.int64)
+            for t, p in parts.items()}
 
 
-# Postings per doc-range shard. The kernel decodes, scores and ranks ~8 M
-# postings/s on one core (4-core x86 box), so a full shard is ~0.25 s of
-# kernel work plus its Arrow intake — above the ~0.2 s every Python task
-# pays to start, which runs in parallel on the other cores. On a
-# 2M-turn index, 2 M-posting shards answered hot 1-6 term queries as fast
-# as or faster than 4 M (CHANGES.md). Smaller queries run as one shard.
-_SHARD_POSTINGS = 2_000_000
+# Postings per doc-range shard. A query is one Spark job at any shard
+# count, so an extra shard costs one more Python task on a free core, but
+# that task re-reads every postings row group its terms touch (a row
+# group holds all doc ranges of a term) and, hydrating, the whole
+# doc_store (its files are not doc_id-ranged). On a 1M-turn single-segment
+# index (4 cores, warm, reports/engine_one_job_probe.json) hydrated
+# top-10s ran fastest at ~0.4-1.2 M postings a shard: one 0.78 M-posting
+# word 0.35 s at 1 shard, 0.28 s at 2, 0.35 s at 4; a 2.33 M-posting
+# 3-word query 0.97 s at 1, 0.67 s at 2, 0.71 s at 4 (unpruned 0.78,
+# 0.63, 0.59 s); a df-1 word 0.24 s at 1 or 2 shards, 0.31 s at 4.
+_SHARD_POSTINGS = 500_000
 
-_RANKED_SCHEMA = ("doc_id long, score double, nmatch long, theta double, "
-                  "blocks_kept long, blocks_total long")
+# (doc_id, score, nmatch) rows and the stats row (doc_id NULL; θ and the
+# block counts) of a shard task; a hydrating task emits the stored fields
+# of _HIT_FIELDS in place of doc_id
+_RANKED = pa.schema([
+    ("doc_id", pa.int64()), ("score", pa.float64()), ("nmatch", pa.int64()),
+    ("theta", pa.float64()), ("blocks_kept", pa.int64()),
+    ("blocks_total", pa.int64())])
+_HIT_FIELDS = ("doc_id", "conv_id", "turn_idx", "role", "tool", "ts")
+_HITS = pa.schema([L.DOC_STORE.field(c) for c in _HIT_FIELDS]
+                  + list(_RANKED)[1:])
 
 
-def _shard_task(df_map: dict, field_stats: dict, boosts: dict,
-                k: int | None, prune: bool, and_skip: bool, width: int,
-                n_shards: int, rank):
-    """The ``mapInArrow`` body: score every doc-range shard in the task's
-    partition with :func:`kernel.score_blocks` and combine its lists with
-    ``rank(scored, boosts, space, doc_range)`` — :func:`_rank_by` or
-    :func:`_search_rank` with their other arguments bound. Shard s covers
-    doc ids [s·width, (s+1)·width), the last one everything above. Emits
-    rank's (doc_id, score, nmatch) rows, then one stats row (doc_id NULL;
-    θ and the block counts)."""
+def _batch(schema: pa.Schema, n: int, **cols) -> pa.RecordBatch:
+    """``n`` rows of ``schema``: the given columns, NULL elsewhere."""
+    def col(f):
+        v = cols.get(f.name)
+        if v is None:
+            return pa.nulls(n, f.type)
+        return v if isinstance(v, pa.Array) else pa.array(v, f.type)
+    return pa.RecordBatch.from_arrays([col(f) for f in schema],
+                                      schema=schema)
+
+
+def _hits(stores: list, ids: np.ndarray) -> tuple:
+    """(mask of the ``ids`` found, ``{column: values}`` of their stored
+    fields in ``ids`` order): one :func:`doc_fields` point read."""
+    want = pa.schema([L.DOC_STORE.field(c) for c in _HIT_FIELDS])
+    tbl = pa.concat_tables(
+        [t.select(list(_HIT_FIELDS)).cast(want)
+         for t in doc_fields(stores, ids, list(_HIT_FIELDS))]
+        or [want.empty_table()])
+    at = pc.index_in(pa.array(ids, pa.int64()),
+                     value_set=tbl.column("doc_id").combine_chunks())
+    return (at.is_valid().to_numpy(zero_copy_only=False),
+            {c: tbl.column(c).take(at.drop_null()).combine_chunks()
+             for c in _HIT_FIELDS})
+
+
+def _shard_task(seg_dirs: list, n_buckets: int, terms: list, df_map: dict,
+                field_stats: dict, boosts: dict, k: int | None, prune: bool,
+                and_skip: bool, width: int, n_shards: int, rank,
+                hydrate: bool):
+    """The ``mapInArrow`` body over the shard ids of ``spark.range``: shard
+    s covers doc ids [s·width, (s+1)·width), the last one everything
+    above. Its task reads the blocks of ``terms`` that overlap the range
+    with pyarrow (:func:`block_source`, only the terms' ``bucket=``
+    directories), scores them with :func:`kernel.score_blocks` and combines
+    the lists with ``rank(scored, boosts, space, doc_range, stores)`` —
+    :func:`_rank_by` or :func:`_search_rank` with their other arguments
+    bound; ``stores()`` opens the ``doc_store`` tables on first use, so a
+    task that neither hydrates nor reads doc values never opens them. It
+    emits rank's rows, with ``hydrate`` the stored fields of its ≤ k
+    winners read with one :func:`doc_fields` point read, then one stats
+    row."""
+    schema = _HITS if hydrate else _RANKED
+    buckets = sorted({bucket_of(t, n_buckets) for t in terms})
+
     def score(key, tfs, dls):
         return S.bm25(tfs, dls, df_map[key], *field_stats[key[0]])
 
+    def shard(s: int):
+        lo = s * width
+        hi = lo + width if s < n_shards - 1 else np.iinfo(np.int64).max
+        meta, fetch = block_source(datasets(seg_dirs, "postings", buckets),
+                                   n_buckets, terms, sorted(boosts),
+                                   (lo, hi))
+        scored, st = K.score_blocks(meta, fetch, score, boosts, k,
+                                    prune=prune, and_skip=and_skip,
+                                    doc_range=(lo, hi))
+        stores = cache(partial(datasets, seg_dirs, "doc_store"))
+        lists = [ids for ids, _s in scored.values()]
+        ids, scores, nmatch = rank(
+            scored, boosts, K.range_space(lists, lo) if lists else None,
+            (lo, hi), stores)
+        cols = {"doc_id": ids}
+        if hydrate and ids.size:
+            found, cols = _hits(stores(), ids)
+            scores, nmatch = scores[found], nmatch[found]
+        yield _batch(schema, scores.size, score=scores, nmatch=nmatch, **cols)
+        yield _batch(schema, 1, theta=[st["theta"]],
+                     blocks_kept=[st["blocks_kept"]],
+                     blocks_total=[st["blocks_total"]])
+
     def run(batches):
         lazyzip.install()
-        import pyarrow as pa
-        names = ["doc_id", "score", "nmatch", "theta", "blocks_kept",
-                 "blocks_total"]
-        batches = list(batches)
-        if not batches:
-            return
-        tbl = pa.Table.from_batches(batches)
-        col = {c: tbl.column(c).to_numpy() for c in (
-            "field", "n_docs", "first_doc", "last_doc", "max_tf", "min_dl",
-            "max_score", "shard")}
-        terms = tbl.column("term").to_pylist()
-        bins = [tbl.column(c).to_pylist()
-                for c in ("docs_bin", "tfs_bin", "dls_bin")]
-        for s in np.unique(col["shard"]):
-            rows: dict = {}
-            for i in np.flatnonzero(col["shard"] == s):
-                rows.setdefault((int(col["field"][i]), terms[i]), []).append(i)
-            rows = {key: np.array(ix) for key, ix in rows.items()}
-            meta = {key: {"n": col["n_docs"][ix], "max_tf": col["max_tf"][ix],
-                          "min_dl": col["min_dl"][ix],
-                          "ms": col["max_score"][ix],
-                          "first": col["first_doc"][ix],
-                          "last": col["last_doc"][ix]}
-                    for key, ix in rows.items()}
-
-            def fetch(sel, rows=rows):
-                return {key: tuple([b[i] for i in rows[key][ix]]
-                                   for b in bins)
-                        for key, ix in sel.items()}
-
-            lo = int(s) * width
-            hi = lo + width if s < n_shards - 1 else np.iinfo(np.int64).max
-            scored, st = K.score_blocks(meta, fetch, score, boosts, k,
-                                        prune=prune, and_skip=and_skip,
-                                        doc_range=(lo, hi))
-            lists = [ids for ids, _s in scored.values()]
-            ids, scores, nmatch = rank(
-                scored, boosts,
-                K.range_space(lists, lo) if lists else None, (lo, hi))
-            n = ids.size
-            yield pa.RecordBatch.from_arrays([
-                pa.array(ids, pa.int64()), pa.array(scores, pa.float64()),
-                pa.array(nmatch, pa.int64()), pa.nulls(n, pa.float64()),
-                pa.nulls(n, pa.int64()), pa.nulls(n, pa.int64())],
-                names=names)
-            yield pa.RecordBatch.from_arrays([
-                pa.nulls(1, pa.int64()), pa.nulls(1, pa.float64()),
-                pa.nulls(1, pa.int64()), pa.array([st["theta"]]),
-                pa.array([st["blocks_kept"]], pa.int64()),
-                pa.array([st["blocks_total"]], pa.int64())],
-                names=names)
+        for b in batches:
+            for s in b.column(0).to_pylist():
+                yield from shard(s)
 
     return run
 
 
 def _ranked(spark: SparkSession, idx: IndexMeta, terms: list[str],
             df_map: dict, rank, *, k: int | None = None,
-            field_ids: tuple = (TEXT_FIELD,), boosts: dict | None = None,
-            prune: bool = False, and_skip: bool = False) -> DataFrame:
-    """The one ranking plan of every engine BM25 query: tag each block of
-    the term-pruned scan with the doc-range shard(s) it overlaps,
-    repartition by shard, and score each shard in one ``mapInArrow`` task
-    (:func:`_shard_task`) that combines through ``rank``; ``k`` is the
-    top-k that θ targets under ``prune``. The shard count follows the
-    query's posting mass (Σ df / ``_SHARD_POSTINGS``, at most one shard
-    per core)."""
+            boosts: dict | None = None, prune: bool = False,
+            and_skip: bool = False, hydrate: bool = False) -> DataFrame:
+    """The one ranking plan of every engine BM25 query: one
+    ``mapInArrow`` task per doc-range shard over ``spark.range`` of the
+    shard ids (:func:`_shard_task`), which reads, scores, combines through
+    ``rank`` and, with ``hydrate``, hydrates its winners; ``k`` is the
+    top-k that θ targets under ``prune``. No Exchange: the only plan above
+    it is the exact top-k merge. The shard count follows the query's
+    posting mass (Σ df / ``_SHARD_POSTINGS``, at most one shard per
+    core)."""
+    from pyspark.sql.pandas.types import from_arrow_schema
     n_shards = max(1, min(math.ceil(sum(df_map.values())
                                     / _SHARD_POSTINGS),
                           spark.sparkContext.defaultParallelism))
     width = max(1, math.ceil(idx.n_docs / n_shards))
-    shard = F.explode(F.sequence(
-        *(F.expr(f"least({c} div {width}, {n_shards - 1})")
-          for c in ("first_doc", "last_doc"))))
-    task = _shard_task(df_map, idx.field_stats(),
-                       boosts or {TEXT_FIELD: 1.0}, k, prune, and_skip,
-                       width, n_shards, rank)
-    return (_load_blocks(spark, idx, terms, field_ids)
-            .select("field", "term", "n_docs", "first_doc", "last_doc",
-                    "max_tf", "min_dl", "max_score", "docs_bin", "tfs_bin",
-                    "dls_bin", shard.alias("shard"))
-            .repartition(n_shards, "shard")
-            .mapInArrow(task, _RANKED_SCHEMA))
+    boosts = boosts or {TEXT_FIELD: 1.0}
+    task = _shard_task(idx.seg_dirs, idx.n_buckets, terms, df_map,
+                       idx.field_stats(), boosts, k, prune, and_skip, width,
+                       n_shards, rank, hydrate)
+    return spark.range(0, n_shards, 1, n_shards).mapInArrow(
+        task, from_arrow_schema(_HITS if hydrate else _RANKED))
 
 
 def _rank_by(k: int | None, need: int = 1):
     """:func:`kernel.rank` as a shard combinator (the bare BM25 paths need
-    no doc-local reads, so the doc range goes unused)."""
-    def rank(scored, boosts, space, doc_range):
+    no doc-local reads, so the doc range and the stores go unused)."""
+    def rank(scored, boosts, space, doc_range, stores):
         return K.rank(scored, boosts, k, need=need, space=space)
     return rank
 
 
-def _search_rank(scored, boosts, space, doc_range, *, seg_dirs: list,
-                 n_buckets: int, origs: dict, need: int, params, cfg: dict,
-                 kw_hash: str, terms: list) -> tuple:
+def _search_rank(scored, boosts, space, doc_range, stores, *,
+                 seg_dirs: list, n_buckets: int, origs: dict, need: int,
+                 params, cfg: dict, kw_hash: str, terms: list) -> tuple:
     """The ``search`` shard combinator: :func:`kernel.should_sum`, the
     role / tool filter, the phrase tiers and :func:`kernel.function_score`
     over the shard's candidates, then its top ``params.k``. The doc-local
-    inputs are read for ``doc_range`` only; ``terms`` is the analyzed
-    query."""
+    inputs are read from the ``doc_store`` tables ``stores()`` and the
+    query's ``pos_partial`` buckets for ``doc_range`` only; ``terms`` is
+    the analyzed query."""
     ids, bm, nmatch = K.should_sum(scored, boosts, origs, need=need,
                                    space=space)
-    stores = datasets(seg_dirs, "doc_store")
+    stores = stores()
     if params.filter_role or params.filter_tool:
         m = K.in_sorted(ids, doc_ids_where(
             stores, meta_filter(params.filter_role, params.filter_tool),
@@ -471,8 +622,9 @@ def _search_rank(scored, boosts, space, doc_range, *, seg_dirs: list,
         return ids, bm, nmatch
     in_phrase = None
     if params.phrase_tiers:
-        keys = pos_keys(datasets(seg_dirs, "pos_partial"), n_buckets, terms,
-                        doc_range)
+        positions = datasets(seg_dirs, "pos_partial",
+                             [bucket_of(t, n_buckets) for t in terms])
+        keys = pos_keys(positions, n_buckets, terms, doc_range)
         in_phrase = K.in_sorted(ids, K.phrase_docs([keys[t] for t in terms]))
     dv_ids, prior, ts = doc_values(stores, doc_range)
     ix = np.searchsorted(dv_ids, ids)
@@ -485,27 +637,18 @@ def _search_rank(scored, boosts, space, doc_range, *, seg_dirs: list,
     return ids[o], score[o], nmatch[o]
 
 
-def _matches(ranked: DataFrame) -> DataFrame:
-    return (ranked.where(F.col("doc_id").isNotNull())
-            .select("doc_id", "score", "nmatch"))
+def _matches(ranked: DataFrame, cols=("doc_id", "score", "nmatch")
+             ) -> DataFrame:
+    return ranked.where(F.col("doc_id").isNotNull()).select(*cols)
 
 
-def _top(ranked: DataFrame, k: int) -> DataFrame:
-    return _matches(ranked).orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-def _hydrate(spark: SparkSession, idx: IndexMeta, top: DataFrame) -> DataFrame:
-    """The k winners with their stored strings: ``top``'s columns after
-    (doc_id, conv_id, turn_idx, role, tool, ts), in (score desc, doc_id
-    asc) order. The k-row side is broadcast, so the doc_store is scanned
-    once and never shuffled."""
-    store = doc_store(spark, idx).select(
-        "doc_id", "conv_id", "turn_idx", "role", "tool", "ts")
-    return (store.join(F.broadcast(top), "doc_id")
-            .select(*store.columns, *[c for c in top.columns
-                                      if c != "doc_id"])
-            .repartition(1)
-            .sortWithinPartitions(F.desc("score"), F.asc("doc_id")))
+def _top(ranked: DataFrame, k: int, cols=("score", "nmatch")) -> DataFrame:
+    """The exact top-k merge of the shard tasks' rows — one
+    TakeOrderedAndProject — with the hydrated stored fields when ``ranked``
+    carries them, then ``cols``."""
+    keys = _HIT_FIELDS if "conv_id" in ranked.columns else ("doc_id",)
+    return (_matches(ranked, keys + tuple(cols))
+            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
 
 
 def _empty_top(spark: SparkSession) -> DataFrame:
@@ -553,15 +696,14 @@ def bm25_topk(spark: SparkSession, out_dir: str, query: str, k: int = 20, *,
     need = len(terms) if require_all else 1
     ranked = _ranked(spark, idx, terms, df_map, _rank_by(k, need), k=k,
                      prune=prune and not require_all,
-                     and_skip=prune and require_all)
+                     and_skip=prune and require_all, hydrate=hydrate)
     if prune_stats is not None:
         st = (ranked.where(F.col("doc_id").isNull())
               .agg(F.max("theta"), F.sum("blocks_kept"),
                    F.sum("blocks_total")).collect()[0])
         prune_stats.update(theta=st[0] or 0.0, blocks_kept=st[1] or 0,
                            blocks_total=st[2] or 0)
-    top = _top(ranked, k)
-    return _hydrate(spark, idx, top) if hydrate else top
+    return _top(ranked, k)
 
 
 def dismax_topk(spark: SparkSession, out_dir: str, query: str, k: int = 20, *,
@@ -582,10 +724,9 @@ def dismax_topk(spark: SparkSession, out_dir: str, query: str, k: int = 20, *,
         return _empty_top(spark)
     df_map = _global_df(idx, terms, field_ids)
     ranked = _ranked(spark, idx, terms, df_map, _rank_by(k),
-                     field_ids=field_ids,
-                     boosts={FIELDS[f]: float(b) for f, b in boosts.items()})
-    top = _top(ranked, k).select("doc_id", "score")
-    return _hydrate(spark, idx, top) if hydrate else top
+                     boosts={FIELDS[f]: float(b) for f, b in boosts.items()},
+                     hydrate=hydrate)
+    return _top(ranked, k, ("score",))
 
 
 def _pos_rows(spark: SparkSession, idx: IndexMeta,
@@ -747,5 +888,5 @@ def search(spark: SparkSession, out_dir: str, params) -> DataFrame:
                    params=params, cfg=cfg, kw_hash=q_kw_hash, terms=q_terms)
     ranked = _ranked(spark, idx, exp_terms,
                      _global_df(idx, exp_terms, field_ids), rank,
-                     field_ids=field_ids, boosts=boosts)
-    return _hydrate(spark, idx, _top(ranked, params.k))
+                     boosts=boosts, hydrate=True)
+    return _top(ranked, params.k)

@@ -36,9 +36,12 @@ Block-max WAND, and why it is exact
 A block source holds, for each query (field f, term t), blocks with stored
 metadata: doc count, the (max_tf, min_dl) pair whose BM25 ``ub`` bounds
 every posting of the block, the stored max REAL score, and the doc range
-[first_doc, last_doc]. The engine's source is one doc-range shard
-[lo, hi): every block of the query terms that overlaps the range. The
-reader's source is its whole index (lo, hi unbounded).
+[first_doc, last_doc]. Both readers get theirs from one two-phase
+pyarrow block reader (:func:`engine.block_source`: block metadata first,
+payloads only for the blocks kept). The engine's source is one doc-range
+shard [lo, hi), read inside its shard task: every block of the query
+terms that overlaps the range. The reader's source is its whole index
+(lo, hi unbounded), over the postings tables it keeps open.
 
 * θ_ft is the k-th largest REAL score among the postings of t's witness
   blocks (:func:`theta_blocks`: best stored max score first, until ≥ k

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .. import analysis as A
+from .. import lazyzip
 
 TRANSCRIPT_SCHEMA = ("conv_id string, turn_idx int, role string, "
                      "text string, tool string, ts timestamp")
@@ -62,6 +63,7 @@ def _make_dedup_fn(ttl_ms: int | None):
         count, O(1) per key). With a TTL, an idle key's state expires and
         is REMOVED — a duplicate arriving past the horizon is readmitted
         (the documented bounded-horizon trade)."""
+        lazyzip.install()
         if ttl_ms is not None and state.hasTimedOut:
             state.remove()
             return

@@ -226,12 +226,12 @@ def test_pruned_topk_runs_no_extra_jobs(spark, skewed_index):
 def test_engine_query_job_floor(spark, skewed_index):
     """A query runs only the jobs its own plan needs: every table is read
     with its declared schema (no inference job), the global df and the
-    prefix / fuzzy expansions are pyarrow lookups outside Spark, and
-    ``search`` ranks inside its shard tasks. So a hydrated ``bm25_topk``
-    runs at most 4 jobs and an un-hydrated one at most 2; a hydrated
-    ``search`` (multi-field with phrase tiers and recency, prefix or
-    fuzzy) and ``phrase_prefix_match`` at most 4; an expansion and reading
-    a table's schema none."""
+    prefix / fuzzy expansions are pyarrow lookups outside Spark, and each
+    shard task reads its own blocks and hydrates its own winners. So a
+    ``bm25_topk`` (hydrated or not), a hydrated ``dismax_topk`` and a
+    hydrated ``search`` (multi-field with phrase tiers and recency, prefix
+    or fuzzy) run exactly 1 job; ``phrase_prefix_match`` (JVM chain) at
+    most 4; an expansion and reading a table's schema none."""
     from planet_search_spark.queries.params import SearchParams
 
     def topk(hydrate):
@@ -241,16 +241,20 @@ def test_engine_query_job_floor(spark, skewed_index):
     def search(**kw):
         return lambda: E.search(spark, skewed_index,
                                 SearchParams(k=5, **kw)).collect()
-    for name, run, most in (
-            ("hydrated", topk(True), 4), ("bare", topk(False), 2),
+    for name, run, want in (
+            ("hydrated", topk(True), 1), ("bare", topk(False), 1),
+            ("dismax", lambda: E.dismax_topk(spark, skewed_index, "the zz",
+                                             k=5).collect(), 1),
             ("tiers", search(query="the zz", multifield=True,
-                             phrase_tiers=True, recency=True), 4),
-            ("prefix", search(query="the w1", prefix=True), 4),
-            ("fuzzy", search(query="thx w10", fuzzy=True), 4),
-            ("phrase_prefix", lambda: E.phrase_prefix_match(
-                spark, skewed_index, "the z").collect(), 4)):
+                             phrase_tiers=True, recency=True), 1),
+            ("prefix", search(query="the w1", prefix=True), 1),
+            ("fuzzy", search(query="thx w10", fuzzy=True), 1)):
         _jobs(spark, run)             # first-run costs out of the count
-        assert _jobs(spark, run) <= most, name
+        assert _jobs(spark, run) == want, name
+    def phrase_prefix():
+        E.phrase_prefix_match(spark, skewed_index, "the z").collect()
+    _jobs(spark, phrase_prefix)
+    assert _jobs(spark, phrase_prefix) <= 4
     idx = E.open_index(skewed_index)
     term_dicts = E.datasets(idx.seg_dirs, "term_dict")
     assert _jobs(spark, lambda: E.expand_prefix(term_dicts, "w1")) == 0
@@ -261,11 +265,12 @@ def test_engine_query_job_floor(spark, skewed_index):
 
 
 def _shards(df) -> int:
-    """Shard count of an engine ranking plan (its one Exchange)."""
+    """Shard count of an engine ranking plan: the splits of its
+    ``Range`` of shard ids."""
     import re
     plan = df._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"Exchange hashpartitioning\(shard#\d+L?, (\d+)\)", plan)
-    return int(m.group(1)) if m else int("Exchange SinglePartition" in plan)
+    return int(re.search(r"Range \(0, (\d+), step=1, splits=\1\)",
+                         plan).group(1))
 
 
 _TIERS = {"multifield": True, "phrase_tiers": True, "recency": True}
