@@ -23,7 +23,8 @@ reference's Elasticsearch analyzer chain (planet-search
 Two equivalent implementations, golden-tested against each other:
 
 1. :func:`py_tokens` / :func:`py_keyword` — pure Python, used on the driver
-   for query-string analysis (tiny input).
+   for query-string analysis (tiny input); :func:`py_kw_hash` is the
+   exact-match hash both query paths look up.
 2. :func:`tokens_col` / :func:`keyword_col` — native Spark Column
    expressions (JVM-side, whole-stage-codegen; the fast path for the index
    build — zero Python in the hot loop).
@@ -36,6 +37,7 @@ identical semantics in Spark SQL and DuckDB (``regexp_replace``, ``replace``,
 """
 from __future__ import annotations
 
+import hashlib
 import re
 import unicodedata
 
@@ -131,6 +133,12 @@ def py_tokens(text: str) -> list[str]:
 def py_keyword(text: str) -> str:
     """Normalized keyword: space-join of tokens (exact-match surface)."""
     return " ".join(py_tokens(text))
+
+
+def py_kw_hash(text: str) -> str:
+    """md5 hex of :func:`py_keyword`: the ``kw_hash`` a query matches in
+    ``doc_store`` (the build hashes the same space-join of its tokens)."""
+    return hashlib.md5(py_keyword(text).encode()).hexdigest()
 
 
 def py_edge_ngrams(token: str) -> list[str]:

@@ -46,13 +46,20 @@ why θ is off under AND) are in :mod:`.kernel`. θ runs in every pruned
 shard task, on blocks the task already holds, so it costs no Spark job.
 Verified against the unpruned path in tests, also with several shards.
 
-``bm25_topk`` (hydrated or not), ``dismax_topk`` and ``search`` (prefix
-and fuzzy included) thus run one Spark job each; a test counts them.
+``phrase_match`` and ``phrase_prefix_match`` run the same plan with no
+terms to score: their combinator (:func:`_phrase_rank`) reads the phrase
+vocabulary's positions in its doc range and chains them with
+:func:`kernel.phrase_docs`, the serving reader's code.
+
+``bm25_topk`` (hydrated or not), ``dismax_topk``, ``search`` (prefix and
+fuzzy included), ``phrase_match`` and ``phrase_prefix_match`` thus run one
+Spark job each; a test counts them. Only ``search(exact=True)`` keeps a
+JVM plan: one kw_hash-pushed ``doc_store`` scan, ordered by its ``prior``
+tie-break.
 """
 from __future__ import annotations
 
 import glob
-import hashlib
 import json
 import math
 import os
@@ -140,16 +147,9 @@ def open_index(out_dir: str) -> IndexMeta:
                      n_buckets, with_positions, fields)
 
 
-def _union_read(spark: SparkSession, idx: IndexMeta, sub: str) -> DataFrame:
-    """Table ``sub`` of every live segment, read with its declared schema
-    (:mod:`..indexing.layout`): no schema-inference job. Readers select
-    only declared columns, so segments whose files carry columns later
-    builds dropped still read."""
-    return L.read_segments(spark, idx.seg_dirs, sub)
-
-
 def doc_store(spark: SparkSession, idx: IndexMeta) -> DataFrame:
-    return _union_read(spark, idx, "doc_store")
+    """``doc_store`` of every live segment, with its declared schema."""
+    return L.read_segments(spark, idx.seg_dirs, "doc_store")
 
 
 def term_df(seg_dirs: list, n_buckets: int, terms, field_ids) -> dict:
@@ -622,10 +622,8 @@ def _search_rank(scored, boosts, space, doc_range, stores, *,
         return ids, bm, nmatch
     in_phrase = None
     if params.phrase_tiers:
-        positions = datasets(seg_dirs, "pos_partial",
-                             [bucket_of(t, n_buckets) for t in terms])
-        keys = pos_keys(positions, n_buckets, terms, doc_range)
-        in_phrase = K.in_sorted(ids, K.phrase_docs([keys[t] for t in terms]))
+        in_phrase = K.in_sorted(ids, _phrase_ids(seg_dirs, n_buckets,
+                                                 doc_range, terms))
     dv_ids, prior, ts = doc_values(stores, doc_range)
     ix = np.searchsorted(dv_ids, ids)
     exact = doc_ids_where(stores, ds.field("kw_hash") == kw_hash, doc_range)
@@ -635,6 +633,26 @@ def _search_rank(scored, boosts, space, doc_range, stores, *,
         now=params.now_epoch if params.recency else None)
     o = K.topk(ids, score, params.k)
     return ids[o], score[o], nmatch[o]
+
+
+def _phrase_ids(seg_dirs: list, n_buckets: int, doc_range: tuple,
+                terms: list, expansions: list | None = None) -> np.ndarray:
+    """:func:`kernel.phrase_docs` over the positions in ``doc_range`` of
+    the phrase vocabulary, read with :func:`pos_keys` from only its
+    ``bucket=`` directories of ``pos_partial``."""
+    vocab = sorted(set(terms).union(expansions or ()))
+    positions = datasets(seg_dirs, "pos_partial",
+                         [bucket_of(t, n_buckets) for t in vocab])
+    return K.phrase_docs(pos_keys(positions, n_buckets, vocab, doc_range),
+                         terms, expansions)
+
+
+def _phrase_rank(scored, boosts, space, doc_range, stores, **phrase) -> tuple:
+    """The phrase-query shard combinator: the plan scores no postings (it
+    runs with no terms), so this emits the shard's phrase docs
+    (:func:`_phrase_ids` over ``phrase``) with zero scores."""
+    ids = _phrase_ids(doc_range=doc_range, **phrase)
+    return ids, np.zeros(ids.size), np.zeros(ids.size, dtype=np.int64)
 
 
 def _matches(ranked: DataFrame, cols=("doc_id", "score", "nmatch")
@@ -729,49 +747,40 @@ def dismax_topk(spark: SparkSession, out_dir: str, query: str, k: int = 20, *,
     return _top(ranked, k, ("score",))
 
 
-def _pos_rows(spark: SparkSession, idx: IndexMeta,
-              terms: list[str]) -> DataFrame:
-    """Bucket- and term-pruned (doc_id, term, pos) rows of the phrase's
-    vocabulary (the only slice of ``pos_partial`` any phrase query reads)."""
-    buckets = sorted({bucket_of(t, idx.n_buckets) for t in terms})
-    return (_union_read(spark, idx, "pos_partial")
-            .where(F.col("bucket").isin(buckets))
-            .where(F.col("field") == TEXT_FIELD)
-            .where(F.col("term").isin(sorted(set(terms))))
-            .select("doc_id", "term", "pos"))
-
-
-def _phrase_chain(raw: DataFrame, terms: list[str]) -> DataFrame:
-    """(doc_id, pos) rows where terms[0..n-1] occur adjacently starting at
-    pos — a pure-JVM positional self-join: candidate (doc_id, p) survives
-    step i iff (doc_id, term_i, p + i) exists. Each step is an all-int
-    equi-join (shuffle hash / whole-stage codegen); round 2's per-doc
-    Python ``itertuples`` loop (flagged as the anti-pattern the north rule
-    bans — O(N) docs for a stopword bigram) is gone entirely."""
-    cand = raw.where(F.col("term") == terms[0]).select("doc_id", "pos")
-    for i, t in enumerate(terms[1:], start=1):
-        nxt = (raw.where(F.col("term") == t)
-               .select("doc_id", (F.col("pos") - i).alias("pos")))
-        cand = cand.join(nxt, ["doc_id", "pos"], "left_semi")
-    return cand
+def _phrase(spark: SparkSession, out_dir: str, phrase: str,
+            prefix: bool) -> DataFrame:
+    """Doc ids of ``phrase`` (its last token a prefix with ``prefix``):
+    the one ranking plan of :func:`_ranked` with no terms and the phrase
+    combinator :func:`_phrase_rank`, one task per doc-range shard sized
+    by the vocabulary's global df. Shards are doc-disjoint, so the ids
+    are distinct."""
+    idx = open_index(out_dir)
+    terms = A.py_tokens(phrase)
+    empty = spark.range(0).select(F.col("id").alias("doc_id"))
+    if not terms:
+        return empty
+    if not idx.with_positions:
+        raise ValueError("index built without positions")
+    expansions = None
+    if prefix:
+        *terms, last = terms
+        expansions = expand_prefix(datasets(idx.seg_dirs, "term_dict"), last)
+        if not expansions:
+            return empty
+    rank = partial(_phrase_rank, seg_dirs=idx.seg_dirs,
+                   n_buckets=idx.n_buckets, terms=terms,
+                   expansions=expansions)
+    df_map = _global_df(idx, terms + (expansions or []))
+    return _matches(_ranked(spark, idx, [], df_map, rank), ("doc_id",))
 
 
 def phrase_match(spark: SparkSession, out_dir: str, phrase: str) -> DataFrame:
-    """Positional phrase match (B11-B13 positional form).
-
-    Positions live in the segment's raw ``pos_partial`` table (bucket-
-    partitioned; the hot scoring path never reads it). Query plan: prune to
-    the phrase's terms, then a JVM-only positional self-join chain
-    (:func:`_phrase_chain`) and a distinct over surviving doc_ids.
-    """
-    idx = open_index(out_dir)
-    terms = A.py_tokens(phrase)
-    if not terms:
-        return spark.range(0).select(F.col("id").alias("doc_id"))
-    if not idx.with_positions:
-        raise ValueError("index built without positions")
-    raw = _pos_rows(spark, idx, terms)
-    return _phrase_chain(raw, terms).select("doc_id").distinct()
+    """Positional phrase match (B11-B13 positional form) over the
+    segments' ``pos_partial`` table (bucket-partitioned; the hot scoring
+    path never reads it), through the serving reader's code: each shard
+    task chains the phrase's packed position keys of its doc range
+    (:func:`kernel.phrase_docs`)."""
+    return _phrase(spark, out_dir, phrase, prefix=False)
 
 
 def phrase_prefix_match(spark: SparkSession, out_dir: str,
@@ -780,33 +789,10 @@ def phrase_prefix_match(spark: SparkSession, out_dir: str,
     positionally like :func:`phrase_match`, and the LAST term matches any
     dictionary term with the given prefix (capped at MAX_EXPANSIONS like
     ES's ``max_expansions: 200``) at position p + n - 1
-    (points_search.json:47,61; bbox_container.json:38-43).
-
-    Plan: prefix-expand against the term dictionary with pyarrow
-    (:func:`expand_prefix`, no Spark job), then the same JVM-only
-    positional self-join chain as
-    :func:`phrase_match` with the LAST join's right side being the union of
-    all expansions' positions (shifted by n-1).
-    """
-    idx = open_index(out_dir)
-    terms = A.py_tokens(phrase)
-    if not terms:
-        return spark.range(0).select(F.col("id").alias("doc_id"))
-    if not idx.with_positions:
-        raise ValueError("index built without positions")
-    exact, prefix = terms[:-1], terms[-1]
-    expansions = expand_prefix(datasets(idx.seg_dirs, "term_dict"), prefix)
-    if not expansions:
-        return spark.range(0).select(F.col("id").alias("doc_id"))
-    raw = _pos_rows(spark, idx, list(exact) + expansions)
-    exp_rows = raw.where(F.col("term").isin(expansions))
-    if not exact:  # single-term phrase: any expansion occurrence matches
-        return exp_rows.select("doc_id").distinct()
-    cand = _phrase_chain(raw, list(exact))
-    last = exp_rows.select(
-        "doc_id", (F.col("pos") - (len(terms) - 1)).alias("pos"))
-    return (cand.join(last, ["doc_id", "pos"], "left_semi")
-            .select("doc_id").distinct())
+    (points_search.json:47,61; bbox_container.json:38-43). The prefix is
+    expanded with pyarrow (:func:`expand_prefix`, no Spark job); a prefix
+    with no expansions matches nothing."""
+    return _phrase(spark, out_dir, phrase, prefix=True)
 
 
 # ---------------------------------------------------------------------------
@@ -839,7 +825,7 @@ def search(spark: SparkSession, out_dir: str, params) -> DataFrame:
     idx = open_index(out_dir)
     cfg = load_config(out_dir)
     q_terms = A.py_tokens(params.query)
-    q_kw_hash = hashlib.md5(" ".join(q_terms).encode("utf-8")).hexdigest()
+    q_kw_hash = A.py_kw_hash(params.query)
 
     if params.exact:
         # points_search_exact: keyword equality (by md5), constant score

@@ -21,7 +21,7 @@ stats) and the search-template config as a dict
 * :func:`function_score` — ``search``'s phrase tiers, saturation, static
   prior, exact bonus and recency over its candidates' doc values;
 * :func:`phrase_docs` — the positional phrase chain over packed
-  (doc_id, pos) keys (:data:`POS_SHIFT`);
+  (doc_id, pos) keys (:data:`POS_SHIFT`), phrase prefixes included;
 * :func:`decode_blocks` — a term's block payloads -> (doc_ids, tfs, dls);
 * :func:`theta_blocks` / :func:`kth_score` — the θ-witness blocks of a term
   and its θ_t;
@@ -393,16 +393,21 @@ def function_score(bm: np.ndarray, is_exact: np.ndarray, prior: np.ndarray,
 POS_SHIFT = 1 << 22
 
 
-def phrase_docs(steps: list) -> np.ndarray:
-    """Sorted doc ids where a phrase occurs: ``steps[i]`` holds the sorted
-    packed (doc_id, pos) keys of the phrase's i-th term (for a phrase
-    prefix, the last step is every expansion's keys merged). A key
-    c = doc·POS_SHIFT + p of ``steps[0]`` survives step i iff c + i is in
-    ``steps[i]``; the pack keeps doc boundaries intact because positions
-    never reach the shift."""
+def phrase_docs(keys: dict, terms: list,
+                expansions: list | None = None) -> np.ndarray:
+    """Sorted doc ids where a phrase occurs. ``keys`` maps every term to
+    its sorted packed (doc_id, pos) keys; the phrase is ``terms`` and, for
+    a phrase prefix, one last term that is any of ``expansions`` (their
+    keys merged into one step). A key c = doc·POS_SHIFT + p of the first
+    step survives step i iff c + i is in step i; the pack keeps doc
+    boundaries intact because positions never reach the shift."""
+    steps = [keys[t] for t in terms]
+    if expansions is not None:
+        steps.append(np.sort(np.concatenate(
+            [keys[e] for e in expansions] or [np.empty(0, np.int64)])))
     cand = steps[0]
-    for i, keys in enumerate(steps[1:], start=1):
+    for i, step in enumerate(steps[1:], start=1):
         if cand.size == 0:
             break
-        cand = cand[in_sorted(cand + i, keys)]
+        cand = cand[in_sorted(cand + i, step)]
     return np.unique(cand // POS_SHIFT)

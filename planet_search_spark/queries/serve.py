@@ -25,7 +25,6 @@ over open parquet segments instead of Lucene files.
 """
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import threading
@@ -358,9 +357,9 @@ class LocalSearcher:
 
     def phrase_match(self, phrase: str, *, hydrate: bool = False):
         """Positional phrase match over the same ``pos_partial`` table the
-        Spark engine reads — exact parity with ``engine.phrase_match``,
-        through the flat packed-key chain :func:`kernel.phrase_docs`.
-        Returns rows sorted by doc_id asc."""
+        Spark engine reads, through the same code as
+        ``engine.phrase_match``: the flat packed-key chain
+        :func:`kernel.phrase_docs`. Returns rows sorted by doc_id asc."""
         terms = A.py_tokens(phrase)
         if not terms:
             return []
@@ -370,20 +369,18 @@ class LocalSearcher:
         ck = tuple(terms)
         doc_ids = self._phrase_cache.get(ck)
         if doc_ids is None:
-            keys = self._pos_keys(terms)
-            doc_ids = K.phrase_docs([keys[t] for t in terms])
+            doc_ids = K.phrase_docs(self._pos_keys(terms), terms)
             self._phrase_cache.put(ck, doc_ids)
         out = [{"doc_id": int(d)} for d in doc_ids]
         return self._hydrate(out) if hydrate else out
 
     def phrase_prefix_match(self, phrase: str, *, hydrate: bool = False):
-        """Positional ``match_phrase_prefix`` (B13) — exact parity with
-        ``engine.phrase_prefix_match``: the first n-1 terms chain
+        """Positional ``match_phrase_prefix`` (B13), through the same code
+        as ``engine.phrase_prefix_match``: the first n-1 terms chain
         positionally, the LAST term matches ANY dictionary expansion of the
         prefix (same MAX_EXPANSIONS cap and ordering) at position
-        p + n - 1. The expansions' key sets are merged once (sorted
-        concat), so the final step is a single binary-search membership —
-        not one chain per expansion."""
+        p + n - 1 — :func:`kernel.phrase_docs` merges the expansions' keys
+        into that one last step."""
         terms = A.py_tokens(phrase)
         if not terms:
             return []
@@ -395,8 +392,7 @@ class LocalSearcher:
         doc_ids = self._phrase_cache.get(ck)
         if doc_ids is None:
             keys = self._pos_keys(list(dict.fromkeys(exact)) + expansions)
-            last = np.sort(np.concatenate([keys[e] for e in expansions]))
-            doc_ids = K.phrase_docs([keys[t] for t in exact] + [last])
+            doc_ids = K.phrase_docs(keys, exact, expansions)
             self._phrase_cache.put(ck, doc_ids)
         out = [{"doc_id": int(d)} for d in doc_ids]
         return self._hydrate(out) if hydrate else out
@@ -416,8 +412,7 @@ class LocalSearcher:
         whole candidate set, never the whole store.
         """
         q_terms = A.py_tokens(params.query)
-        q_kw = " ".join(q_terms)
-        q_kw_hash = hashlib.md5(q_kw.encode("utf-8")).hexdigest()
+        q_kw_hash = A.py_kw_hash(params.query)
         allowed = None
         if params.filter_role or params.filter_tool:
             allowed = self._filter_ids(params.filter_role, params.filter_tool)

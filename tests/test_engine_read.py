@@ -2,7 +2,9 @@
 own encoder and written with pyarrow, read back by the two-phase block
 reader (:func:`engine.block_source`) over 1 and 3 doc ranges, scored by
 :func:`kernel.score_blocks` and ranked by :func:`kernel.rank`. The merged
-top-k must equal brute-force BM25 bit for bit, pruned and unpruned.
+top-k must equal brute-force BM25 bit for bit, pruned and unpruned. The
+phrase read path (:func:`engine.pos_keys` + :func:`kernel.phrase_docs`)
+over a pyarrow-written ``pos_partial`` must equal brute-force adjacency.
 These tests start no JVM."""
 from __future__ import annotations
 
@@ -15,6 +17,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from planet_search_spark import scoring as S
+from planet_search_spark.indexing import layout as L
 from planet_search_spark.indexing.build import _encoder_core, bucket_of
 from planet_search_spark.queries import engine as E
 from planet_search_spark.queries import kernel as K
@@ -147,3 +150,68 @@ def test_block_meta_keeps_only_overlapping_blocks(corpus):
     want = {(si, "the", bid) for si, bid in part["the"]["addr"][::2]}
     got = E.fetch_payloads(postings, N_BUCKETS, want, 0, (lo, hi))
     assert set(got) == want
+
+
+PHRASE_VOCAB = ["a", "b", "ba", "bb", "c"]
+
+
+@pytest.fixture(scope="module")
+def positions(tmp_path_factory):
+    """(segment dir, per-doc text-field token lists): ``pos_partial``
+    rows of both fields in ``pos_partial/bucket=<b>``, (field, term)-sorted
+    like the build writes them, in several row groups. The meta field
+    (1) holds other tokens, which a text-field phrase must not see."""
+    rng = np.random.default_rng(5)
+    docs = [list(rng.choice(PHRASE_VOCAB, rng.integers(1, 12)))
+            for _ in range(N_DOCS)]
+    meta = [list(rng.choice(PHRASE_VOCAB, 3)) for _ in range(N_DOCS)]
+    rows = [(d, f, len(toks), p, t)
+            for f, lists in ((0, docs), (1, meta))
+            for d, toks in enumerate(lists) for p, t in enumerate(toks)]
+    seg = str(tmp_path_factory.mktemp("posseg"))
+    for b in sorted({bucket_of(t, N_BUCKETS) for t in PHRASE_VOCAB}):
+        part = sorted((r for r in rows if bucket_of(r[4], N_BUCKETS) == b),
+                      key=lambda r: (r[1], r[4], r[0], r[3]))
+        d = os.path.join(seg, "pos_partial", f"bucket={b}")
+        os.makedirs(d)
+        pq.write_table(pa.Table.from_pylist(
+            [dict(zip(L.POS_PARTIAL.names, r)) for r in part],
+            schema=L.POS_PARTIAL), os.path.join(d, "part-0.parquet"),
+            row_group_size=256)
+    return seg, docs
+
+
+def _brute_phrase(docs, terms, expansions):
+    """Docs whose tokens hold ``terms`` adjacently, followed (for a
+    phrase prefix) by any of ``expansions``."""
+    steps = [{t} for t in terms]
+    if expansions is not None:
+        steps.append(set(expansions))
+    n = len(steps)
+    return [d for d, toks in enumerate(docs)
+            if any(all(toks[i + j] in steps[j] for j in range(n))
+                   for i in range(len(toks) - n + 1))]
+
+
+@pytest.mark.parametrize("terms,expansions", [
+    (["a", "b"], None), (["a", "a"], None), (["b", "a", "c"], None),
+    (["c"], None), (["a", "zz"], None),              # zz: absent term
+    (["a"], ["ba", "bb"]), (["a", "a"], ["b", "zzq"]),
+    ([], ["ba", "bb"])])                              # one-term prefix
+@pytest.mark.parametrize("n_ranges", [1, 3])
+def test_phrase_read_matches_brute_force(positions, terms, expansions,
+                                         n_ranges):
+    """Each doc range is one engine phrase task's read and chain; the
+    ranges' doc ids concatenate to the brute-force adjacency result."""
+    seg, docs = positions
+    width = math.ceil(N_DOCS / n_ranges)
+    got = []
+    for s in range(n_ranges):
+        lo = s * width
+        hi = lo + width if s < n_ranges - 1 else np.iinfo(np.int64).max
+        ids = E._phrase_ids([seg], N_BUCKETS, (lo, hi), terms, expansions)
+        assert ((ids >= lo) & (ids < hi)).all()
+        got += ids.tolist()
+    want = _brute_phrase(docs, terms, expansions)
+    assert got == want
+    assert want or "zz" in terms

@@ -9,6 +9,7 @@ import pyarrow.compute as pc
 import pytest
 from pyspark.sql import functions as F
 
+from planet_search_spark.indexing import layout as L
 from planet_search_spark.indexing.build import build_index
 from planet_search_spark.queries import engine as E
 from planet_search_spark.queries import fuzzy as FZ
@@ -75,7 +76,8 @@ def test_engine_blocked_expansion_lossless(spark, index_dir, term):
     idx = E.open_index(index_dir)
     ed = FZ.auto_fuzz(term)
     got = E.expand_fuzzy(E.datasets(idx.seg_dirs, "term_dict"), term, ed)
-    td = E._union_read(spark, idx, "term_dict").where(F.col("field") == 0)
+    td = L.read_segments(spark, idx.seg_dirs, "term_dict").where(
+        F.col("field") == 0)
     want = sorted(
         r["term"] for r in
         td.where(F.levenshtein(F.col("term"), F.lit(term)) <= ed)

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from planet_search_spark import analysis as A
 from planet_search_spark import scoring as S
+from planet_search_spark.indexing import layout as L
 from planet_search_spark.indexing.build import build_index
 from planet_search_spark.queries import engine as E
 from planet_search_spark.queries.logical import (_bm25_scores, tokenized_docs)
@@ -230,8 +231,9 @@ def test_engine_query_job_floor(spark, skewed_index):
     shard task reads its own blocks and hydrates its own winners. So a
     ``bm25_topk`` (hydrated or not), a hydrated ``dismax_topk`` and a
     hydrated ``search`` (multi-field with phrase tiers and recency, prefix
-    or fuzzy) run exactly 1 job; ``phrase_prefix_match`` (JVM chain) at
-    most 4; an expansion and reading a table's schema none."""
+    or fuzzy, and the exact path's JVM ``doc_store`` scan), ``phrase_match``
+    and ``phrase_prefix_match`` (several terms or one) run exactly 1 job;
+    an expansion and reading a table's schema none."""
     from planet_search_spark.queries.params import SearchParams
 
     def topk(hydrate):
@@ -248,20 +250,23 @@ def test_engine_query_job_floor(spark, skewed_index):
             ("tiers", search(query="the zz", multifield=True,
                              phrase_tiers=True, recency=True), 1),
             ("prefix", search(query="the w1", prefix=True), 1),
-            ("fuzzy", search(query="thx w10", fuzzy=True), 1)):
+            ("fuzzy", search(query="thx w10", fuzzy=True), 1),
+            ("exact", search(query="the zz", exact=True), 1),
+            ("phrase", lambda: E.phrase_match(spark, skewed_index,
+                                              "the zz").collect(), 1),
+            ("phrase_prefix", lambda: E.phrase_prefix_match(
+                spark, skewed_index, "the z").collect(), 1),
+            ("phrase_prefix_one", lambda: E.phrase_prefix_match(
+                spark, skewed_index, "w1").collect(), 1)):
         _jobs(spark, run)             # first-run costs out of the count
         assert _jobs(spark, run) == want, name
-    def phrase_prefix():
-        E.phrase_prefix_match(spark, skewed_index, "the z").collect()
-    _jobs(spark, phrase_prefix)
-    assert _jobs(spark, phrase_prefix) <= 4
     idx = E.open_index(skewed_index)
     term_dicts = E.datasets(idx.seg_dirs, "term_dict")
     assert _jobs(spark, lambda: E.expand_prefix(term_dicts, "w1")) == 0
     assert _jobs(spark, lambda: E.expand_fuzzy(term_dicts, "w10", 1)) == 0
     for table in ("postings", "term_dict", "doc_store", "pos_partial"):
-        assert _jobs(spark, lambda: E._union_read(spark, idx, table).schema
-                     ) == 0, table
+        assert _jobs(spark, lambda: L.read_segments(spark, idx.seg_dirs,
+                                                    table).schema) == 0, table
 
 
 def _shards(df) -> int:
@@ -282,7 +287,10 @@ MULTI_SHARD_CASES = {
                      ("search", "the zz", _TIERS),
                      ("search", "the w1", {"prefix": True}),
                      ("search", "thx w10", {"fuzzy": True}),
-                     ("search", "zz the", {"operator": "and", "k": 40})],
+                     ("search", "zz the", {"operator": "and", "k": 40}),
+                     ("phrase_match", "the zz", {}),
+                     ("phrase_prefix_match", "the z", {}),
+                     ("phrase_prefix_match", "w1", {})],
     "impact_index_dir": [
         ("bm25_topk", "error timeout retry", {"k": 10, "prune": True}),
         ("bm25_topk", "error timeout retry", {"k": 10, "prune": False}),
@@ -293,7 +301,9 @@ MULTI_SHARD_CASES = {
         ("search", "spak timout", {"fuzzy": True}),
         ("search", "error timeout", {"operator": "and"}),
         ("search", "error timeout", {"filter_role": "user",
-                                     "phrase_tiers": True})],
+                                     "phrase_tiers": True}),
+        ("phrase_match", "out of memory", {}),
+        ("phrase_prefix_match", "null pointer exc", {})],
 }
 
 
@@ -304,7 +314,7 @@ def test_multi_shard_matches_one_shard(spark, request, monkeypatch, which):
     bit-identical scores — also pruned, where each shard takes its own θ
     and blocks straddling shards are ranked in both, and for ``search``,
     whose shard tasks rank by function_score over their own doc values
-    and phrase positions."""
+    and phrase positions. Phrase queries return the one-shard doc ids."""
     from planet_search_spark.queries.params import SearchParams
     out = request.getfixturevalue(which)
 
@@ -313,6 +323,9 @@ def test_multi_shard_matches_one_shard(spark, request, monkeypatch, which):
         for fn, q, kw in MULTI_SHARD_CASES[which]:
             if fn == "search":
                 df = E.search(spark, out, SearchParams(query=q, **kw))
+            elif fn.startswith("phrase"):
+                df = getattr(E, fn)(spark, out, q).select(
+                    "doc_id", F.lit(0.0).alias("score")).orderBy("doc_id")
             else:
                 df = getattr(E, fn)(spark, out, q, hydrate=False, **kw)
             res.append((_shards(df), [(r.doc_id, r.score)
@@ -502,7 +515,6 @@ def test_table_footers_match_declared_layout(request, which):
     the tf source, and after an append plus compaction. The encoder's
     pyarrow files match the Arrow declaration itself."""
     import pyarrow.parquet as pq
-    from planet_search_spark.indexing import layout as L
     outs = request.getfixturevalue(which)
     seen = set()
     for out in outs if isinstance(outs, list) else [outs]:
@@ -622,6 +634,25 @@ def test_phrase_prefix_single_term(spark, corpus, index_dir):
     key = ["conv_id", "turn_idx"]
     assert sorted(map(tuple, got[key].values.tolist())) == \
            sorted(map(tuple, want[key].values.tolist()))
+
+
+def test_phrase_degenerate_inputs(spark, index_dir, tf_index):
+    """A phrase with no tokens and a prefix with no expansions return an
+    empty ``doc_id bigint`` frame; an index built without positions
+    raises ValueError in the engine and in the serving reader."""
+    from planet_search_spark.queries.serve import LocalSearcher
+    for fn, phrase in ((E.phrase_match, "!!!"),
+                       (E.phrase_prefix_match, "!!!"),
+                       (E.phrase_prefix_match, "out of zzzq")):
+        df = fn(spark, index_dir, phrase)
+        assert df.dtypes == [("doc_id", "bigint")], phrase
+        assert df.collect() == [], phrase
+    srv = LocalSearcher(tf_index)
+    for fn in ("phrase_match", "phrase_prefix_match"):
+        with pytest.raises(ValueError, match="without positions"):
+            getattr(E, fn)(spark, tf_index, "the zz")
+        with pytest.raises(ValueError, match="without positions"):
+            getattr(srv, fn)("the zz")
 
 
 def test_doc_ids_stable_and_dense(spark, corpus):

@@ -159,26 +159,34 @@ def test_exact_path_pushes_kw_hash_to_scan(spark, small_index):
     assert "kw_hash" in pushed
 
 
-def test_phrase_plan_is_jvm_only(spark, small_index):
-    """Round-3 guard: the positional phrase chain must compile to pure JVM
-    joins — no Python evaluation stage anywhere in the plan (round 2's
-    per-doc itertuples loop was the banned row-at-a-time pattern)."""
-    df = E.phrase_match(spark, small_index, "out of memory")
-    plan = _plan(df)
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
-                   "FlatMapGroupsInPandas"):
-        assert marker not in plan, marker
-    assert "Join LeftSemi" in plan or "LeftSemi" in plan
-    # positions scan pushes term + field filters down
-    pushed = plan.split("PushedFilters", 1)[1][:300]
-    assert "term" in pushed
+def _phrase_shape(spark, small_index, monkeypatch, run) -> None:
+    """An engine phrase plan, at one shard and at several: one
+    ``MapInArrow`` over ``Range`` (the shard ids) and nothing else — no
+    Exchange, no Join, no JVM file scan."""
+    one = _plan(run())
+    monkeypatch.setattr(E, "_SHARD_POSTINGS", 1)
+    many = _plan(run())
+    assert "splits=1)" in one and "splits=1)" not in many, (one, many)
+    for plan in (one, many):
+        assert plan.count("MapInArrow") == 1 and "Range (0, " in plan, plan
+        for marker in ("Exchange", "Join", "FileScan"):
+            assert marker not in plan, (marker, plan)
 
 
-def test_phrase_prefix_plan_is_jvm_only(spark, small_index):
-    df = E.phrase_prefix_match(spark, small_index, "out of mem")
-    plan = _plan(df)
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert marker not in plan, marker
+def test_phrase_plan_is_one_shard_task(spark, small_index, monkeypatch):
+    """Engine phrase queries run the one ranking plan. The task body is
+    :func:`engine.pos_keys` and :func:`kernel.phrase_docs` in numpy over
+    the shard's doc range: the positional chain stays vectorized, never a
+    per-doc Python loop."""
+    _phrase_shape(spark, small_index, monkeypatch, lambda: E.phrase_match(
+        spark, small_index, "out of memory"))
+
+
+def test_phrase_prefix_plan_is_one_shard_task(spark, small_index,
+                                              monkeypatch):
+    _phrase_shape(spark, small_index, monkeypatch,
+                  lambda: E.phrase_prefix_match(spark, small_index,
+                                                "out of mem"))
 
 
 def test_dismax_multifield_plan_shape(spark, small_index):
